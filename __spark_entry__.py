@@ -41,43 +41,6 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # usually inherit the driver cwd on sys.path anyway
 
 
-def _extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NReadability extraction over the raw documents table (rows-only
-    check: the extraction core is the pure-Python port, not SQL).
-
-    The synthetic documents are plain text, and the reference extracts
-    nothing from body-less fragments (its candidate scan skips
-    html-parented paragraphs, NRT:869-880) — so ``extracted=false``
-    rows here are correct parity, not a failure."""
-    from nreadability_spark.operators.extract import extract_columns
-
-    _ship_package(spark)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-    docs = _salted(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    out = extract_columns(
-        docs.select("doc_id", "text"), include_html=False
-    )
-    return _ordered_small(
-        out.select(
-            "doc_id",
-            "extracted",
-            "title",
-            F.length("content_text").cast("long").alias("content_len"),
-            F.size("spans").cast("long").alias("n_spans"),
-            "error",
-        ),
-        "doc_id",
-    )
-
-
-def _ordered_small(df: DataFrame, *cols: str) -> DataFrame:
-    """Deterministic global order for a small result WITHOUT a range
-    exchange: orderBy directly above a Python stage makes the
-    RangePartitioner's sampling pass execute that stage twice; a
-    single-partition shuffle materializes it once and sorts in place."""
-    return df.repartition(1).sortWithinPartitions(*cols)
-
-
 def _salted(df: DataFrame) -> DataFrame:
     """Spread rows across the cluster before a Python-UDF stage: a
     single parquet file arrives as one split, which would serialize the
@@ -102,91 +65,88 @@ def _page_shell() -> F.Column:
     )
 
 
-def _extract_doc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extraction over documents wrapped in a deterministic page shell
-    (header/sidebar/footer boilerplate around a content div) — the
-    real readability exercise: junk must be stripped, content kept."""
-    from nreadability_spark.operators.extract import extract_columns
-
-    _ship_package(spark)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-    docs = _salted(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    out = extract_columns(
-        docs.select("doc_id", _page_shell().alias("text")), include_html=False
-    )
-    return _ordered_small(
-        out.select(
-            "doc_id",
-            "extracted",
-            "title",
-            F.length("content_text").cast("long").alias("content_len"),
-            F.size("spans").cast("long").alias("n_spans"),
-            "error",
-        ),
-        "doc_id",
-    )
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The raw documents table (rows-only check: the extraction core is
+    the pure-Python port, not SQL). The synthetic documents are plain
+    text, and the reference extracts nothing from body-less fragments
+    (its candidate scan skips html-parented paragraphs, NRT:869-880) —
+    so ``extracted=false`` rows here are correct parity, not a failure."""
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
 
-def _extract_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The north-rule's content-type dispatch end-to-end: even doc_ids
-    rendered as web pages, odd doc_ids as synthetic PDFs (FlateDecode
-    for every 4th doc) — one extraction UDF sniffs the payload and
-    routes HTML to the NReadability core, PDF to the layout parser
-    (``core/pdf.py``). The mixed corpus is materialized ONCE to a cache
-    parquet (``sources.synth.materialize_mixed``): the measured query
-    is a scan + extraction, not input synthesis."""
-    from nreadability_spark.operators.extract import extract_columns
-    from nreadability_spark.sources.synth import materialize_mixed
-
-    _ship_package(spark)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-    mixed = _salted(spark.read.parquet(materialize_mixed(spark, sf_dir)))
-    out = extract_columns(mixed, include_html=False)
-    return _ordered_small(
-        out.select(
-            "doc_id",
-            "kind",
-            "extracted",
-            "title",
-            F.length("content_text").cast("long").alias("content_len"),
-            F.size("spans").cast("long").alias("n_spans"),
-            "error",
-        ),
-        "doc_id",
-    )
+def _doc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents wrapped in a deterministic page shell (header/sidebar/
+    footer boilerplate around a content div) — the real readability
+    exercise: junk must be stripped, content kept."""
+    return _documents(spark, sf_dir).select("doc_id", _page_shell().alias("text"))
 
 
-def _extract_warc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crawl-transport path end-to-end: the same shelled pages as
-    ``extract_doc_pages``, but rendered into WARC/1.0 archives (the
-    Common Crawl at-rest format), read back through the distributed
-    WARC reader (binaryFile scan -> Arrow-batched record parse), and
-    extracted. Oracle: the ``extract_doc_pages`` golden — a lossy WARC
-    writer, a record-walk bug, or an HTTP-split error all surface as a
-    hash mismatch against the independently-computed expectation."""
-    from nreadability_spark.operators.extract import extract_columns
+def _warc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The crawl-transport path: the same shelled pages as
+    ``_doc_pages``, rendered into WARC/1.0 archives (the Common Crawl
+    at-rest format) and read back through the distributed WARC reader
+    (binaryFile scan -> Arrow-batched record parse). Oracle: the
+    ``extract_doc_pages`` golden — a lossy WARC writer, a record-walk
+    bug, or an HTTP-split error all surface as a hash mismatch."""
     from nreadability_spark.sources.synth import materialize_warc
     from nreadability_spark.sources.warc import read_warc
 
-    _ship_package(spark)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
     rows = read_warc(spark, materialize_warc(spark, sf_dir) + "/*.warc*")
-    docs = rows.where(F.col("warc_type") == "response").select(
+    return rows.where(F.col("warc_type") == "response").select(
         F.regexp_extract("target_uri", r"/doc/(\d+)$", 1).cast("long").alias("doc_id"),
         F.col("payload").alias("text"),
     )
-    out = extract_columns(_salted(docs), include_html=False)
-    return _ordered_small(
-        out.select(
+
+
+def _mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The north-rule's content-type dispatch: even doc_ids rendered as
+    web pages, odd doc_ids as synthetic PDFs (FlateDecode for every 4th
+    doc) — one extraction UDF sniffs the payload and routes HTML to the
+    NReadability core, PDF to the layout parser (``core/pdf.py``). The
+    mixed corpus is materialized ONCE to a cache parquet
+    (``sources.synth.materialize_mixed``): the measured query is a scan
+    + extraction, not input synthesis. Carries a ``kind`` column."""
+    from nreadability_spark.sources.synth import materialize_mixed
+
+    return spark.read.parquet(materialize_mixed(spark, sf_dir))
+
+
+# doc-keyed extraction queries: name -> source of (doc_id, text[, kind])
+_EXTRACT_SOURCES = {
+    "extract_documents": _documents,
+    "extract_doc_pages": _doc_pages,
+    "extract_warc_pages": _warc_pages,
+    "extract_mixed_media": _mixed_media,
+}
+
+
+def _extract_query(source: Callable[[SparkSession, str], DataFrame]) -> Callable:
+    """NReadability extraction over ``source``'s documents: salted
+    across the cluster, one Arrow-batched UDF pass, per-document
+    summary columns in doc_id order."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from nreadability_spark.functions.ordering import ordered_small
+        from nreadability_spark.operators.extract import extract_columns
+
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
+        docs = source(spark, sf_dir)
+        out = extract_columns(_salted(docs), include_html=False)
+        kind = ["kind"] if "kind" in docs.columns else []
+        return ordered_small(
+            out.select(
+                "doc_id",
+                *kind,
+                "extracted",
+                "title",
+                F.length("content_text").cast("long").alias("content_len"),
+                F.size("spans").cast("long").alias("n_spans"),
+                "error",
+            ),
             "doc_id",
-            "extracted",
-            "title",
-            F.length("content_text").cast("long").alias("content_len"),
-            F.size("spans").cast("long").alias("n_spans"),
-            "error",
-        ),
-        "doc_id",
-    )
+        )
+
+    return build
 
 
 def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,7 +156,6 @@ def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nreadability_spark.plans.extract_job import extract_transcripts
     from nreadability_spark.sources.synth import transcripts_df
 
-    _ship_package(spark)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
     n_convs = 60 if "0.001" in sf_dir else 200
     src = transcripts_df(spark, n_convs=n_convs)
@@ -242,6 +201,9 @@ def _with_shipping(fn: Callable) -> Callable:
     return wrapped
 
 
+_extract_doc_pages = _with_shipping(_extract_query(_doc_pages))
+
+
 # Registry order is check order: the driver's correctness run caps at
 # 50 rows per round, so the queries it checked LEAST recently are
 # pinned FIRST each round. The r04 run covered 50 entries; these are
@@ -272,12 +234,9 @@ _CHECK_FIRST = (
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q, _ = _registries()
-    q = {name: _with_shipping(fn) for name, fn in q.items()}
-    q["extract_documents"] = _extract_documents
-    q["extract_doc_pages"] = _extract_doc_pages
-    q["extract_warc_pages"] = _extract_warc_pages
+    q.update((name, _extract_query(src)) for name, src in _EXTRACT_SOURCES.items())
     q["extract_transcripts"] = _extract_transcripts
-    q["extract_mixed_media"] = _extract_mixed_media
+    q = {name: _with_shipping(fn) for name, fn in q.items()}
     first = {n: q[n] for n in _CHECK_FIRST if n in q}
     first.update((n, f) for n, f in q.items() if n not in first)
     return first

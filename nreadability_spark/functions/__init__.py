@@ -5,4 +5,11 @@ JVM-side `pyspark.sql.functions` compositions, no Python UDFs — plus,
 for each construct, a DuckDB-SQL twin used by the correctness oracles.
 Keeping the Spark expression and its SQL twin side by side in one
 module is what keeps them in lockstep.
+
+``ordering.ordered_small`` is the one ordered tail for a small result
+above a Python stage (the multimodal decode queries, the doc-keyed
+``extract_*`` queries, the stitched conversations). A global
+``orderBy`` there would put a range exchange directly above the Python
+node, and its RangePartitioner's sampling pass would run every decode
+a second time; a single-partition sort runs it once.
 """

@@ -20,11 +20,18 @@ amplitude statistics); only compressed codecs (mp3/aac/opus) remain
 gated, raising at the exact ``soundfile``/``av`` call site a real
 cluster would run.
 
-The batch iterator shape (``Iterator[pd.DataFrame] ->
-Iterator[pd.DataFrame]``) is the real production signature: one Arrow
-batch in, one out, no per-row Python dispatch; memory is bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch`` (binary payloads are
-large — same tuning as the HTML extraction UDF).
+Every decode runs through one stage, ``_decode_stage``: a
+``mapInPandas`` over ``(doc_id, payload)`` whose batch iterator
+(``Iterator[pd.DataFrame] -> Iterator[pd.DataFrame]``, one Arrow batch
+in, one out) calls a per-row function and frames its tuples. Memory is
+bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (binary
+payloads are large — same tuning as the HTML extraction UDF). Each
+operator below supplies only its per-row logic.
+
+The registry queries order their output with
+``functions.ordering.ordered_small``, never ``orderBy``: a range
+exchange directly above the decode stage makes its RangePartitioner's
+sampling pass run every decode a second time.
 """
 
 from __future__ import annotations
@@ -33,7 +40,28 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql import functions as F
+
+from nreadability_spark.functions.ordering import ordered_small
+
+
+def _decode_stage(df: DataFrame, row_fn, schema: T.StructType) -> DataFrame:
+    """``(doc_id, payload)`` rows -> ``schema`` rows through one
+    Arrow-batched Python stage. ``row_fn(doc_id, data)`` returns zero
+    or more tuples in ``schema.names`` order."""
+    names = schema.names
+
+    def batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            rows = [
+                row
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+                for row in row_fn(int(doc_id), bytes(payload))
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select("doc_id", "payload").mapInPandas(batches, schema=schema)
 
 META_SCHEMA = T.StructType(
     [
@@ -90,26 +118,15 @@ def decode_image_meta(data: bytes) -> tuple[str, int | None, int | None]:
     return "unknown", None, None
 
 
-def decode_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """binary image payloads -> typed metadata rows via mapInPandas
-    (real header parse; audio metadata is ``decode_audio_metadata``,
-    the codec-needing sample/pixel decode is the gated
-    ``decode_samples``)."""
+def _image_meta_rows(doc_id: int, data: bytes):
+    return [(doc_id, len(data), *decode_image_meta(data))]
 
-    def batches(it):
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload)
-                fmt, width, height = decode_image_meta(data)
-                rows.append((int(doc_id), len(data), fmt, width, height))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_bytes", "format", "width", "height"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(batches, schema=META_SCHEMA)
+def decode_metadata(df: DataFrame) -> DataFrame:
+    """binary image payloads -> typed metadata rows (real header parse;
+    audio metadata is ``decode_audio_metadata``, the codec-needing
+    sample decode is ``decode_samples``)."""
+    return _decode_stage(df, _image_meta_rows, META_SCHEMA)
 
 
 def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,7 +139,7 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = materialize_images(spark, sf_dir)
     payloads = spark.read.parquet(path)
-    return decode_metadata(payloads).orderBy("doc_id")
+    return ordered_small(decode_metadata(payloads), "doc_id")
 
 
 def multimodal_metadata_sql() -> str:
@@ -195,28 +212,15 @@ def decode_audio_meta(data: bytes):
         return _AUDIO_UNKNOWN
 
 
-def decode_audio_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """binary audio payloads -> typed metadata rows via mapInPandas."""
+def _audio_meta_rows(doc_id: int, data: bytes):
+    fmt, sr, ch, bits, ns = decode_audio_meta(data)
+    dur = (ns * 1000) // sr if sr and ns is not None else None
+    return [(doc_id, len(data), fmt, sr, ch, bits, ns, dur)]
 
-    def batches(it):
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload)
-                fmt, sr, ch, bits, ns = decode_audio_meta(data)
-                dur = (ns * 1000) // sr if sr and ns is not None else None
-                rows.append((int(doc_id), len(data), fmt, sr, ch, bits, ns, dur))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "format", "sample_rate",
-                    "n_channels", "bits", "n_samples", "duration_ms",
-                ],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+def decode_audio_metadata(df: DataFrame) -> DataFrame:
+    """binary audio payloads -> typed metadata rows."""
+    return _decode_stage(df, _audio_meta_rows, AUDIO_META_SCHEMA)
 
 
 SAMPLES_SCHEMA = T.StructType(
@@ -404,7 +408,32 @@ def decode_g711_samples(data: bytes) -> list[int] | None:
         return None
 
 
-def decode_samples(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def _sample_stats_rows(doc_id: int, data: bytes):
+    vals = decode_pcm_samples(data)
+    if vals is None:
+        vals = decode_ima_adpcm_samples(data)
+    if vals is None:
+        vals = decode_g711_samples(data)
+    if vals is None:
+        raise NotImplementedError(
+            "sample decode for perceptual codecs requires "
+            "libraries not present in this sandbox; 16-bit PCM, "
+            "mono IMA ADPCM and G.711 mu-law/A-law WAV decode "
+            "for real"
+        )
+    return [
+        (
+            doc_id,
+            len(vals),
+            min(vals) if vals else None,
+            max(vals) if vals else None,
+            sum(vals),
+            sum(v * v for v in vals),
+        )
+    ]
+
+
+def decode_samples(df: DataFrame) -> DataFrame:
     """Amplitude statistics from ACTUAL decoded samples: uncompressed
     16-bit PCM decodes with stdlib ``struct`` (one unpack per payload,
     Arrow-batched) and mono IMA ADPCM (format tag 0x11) decodes for
@@ -417,42 +446,7 @@ def decode_samples(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     at the exact call site ``soundfile``/``av`` would run on a real
     cluster; the gated surface is now ONLY the genuinely impossible
     paths."""
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(payload)
-                vals = decode_pcm_samples(raw)
-                if vals is None:
-                    vals = decode_ima_adpcm_samples(raw)
-                if vals is None:
-                    vals = decode_g711_samples(raw)
-                if vals is None:
-                    raise NotImplementedError(
-                        "sample decode for perceptual codecs requires "
-                        "libraries not present in this sandbox; 16-bit PCM, "
-                        "mono IMA ADPCM and G.711 mu-law/A-law WAV decode "
-                        "for real"
-                    )
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(vals),
-                        min(vals) if vals else None,
-                        max(vals) if vals else None,
-                        sum(vals),
-                        sum(v * v for v in vals),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_values", "min_amp", "max_amp", "sum_amp", "sum_sq"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(batches, schema=SAMPLES_SCHEMA)
+    return _decode_stage(df, _sample_stats_rows, SAMPLES_SCHEMA)
 
 
 def multimodal_audio_samples_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,7 +462,7 @@ def multimodal_audio_samples_adpcm(spark: SparkSession, sf_dir: str) -> DataFram
     from nreadability_spark.sources.synth import materialize_adpcm_wavs
 
     payloads = spark.read.parquet(materialize_adpcm_wavs(spark, sf_dir))
-    return decode_samples(payloads).orderBy("doc_id")
+    return ordered_small(decode_samples(payloads), "doc_id")
 
 
 def multimodal_audio_samples_adpcm_sql() -> str:
@@ -526,7 +520,7 @@ def multimodal_audio_samples_g711(spark: SparkSession, sf_dir: str) -> DataFrame
     from nreadability_spark.sources.synth import materialize_g711_wavs
 
     payloads = spark.read.parquet(materialize_g711_wavs(spark, sf_dir))
-    return decode_samples(payloads).orderBy("doc_id")
+    return ordered_small(decode_samples(payloads), "doc_id")
 
 
 def multimodal_audio_samples_g711_sql() -> str:
@@ -568,7 +562,7 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nreadability_spark.sources.synth import materialize_wavs
 
     payloads = spark.read.parquet(materialize_wavs(spark, sf_dir))
-    return decode_audio_metadata(payloads).orderBy("doc_id")
+    return ordered_small(decode_audio_metadata(payloads), "doc_id")
 
 
 def multimodal_audio_sql() -> str:
@@ -606,7 +600,7 @@ def multimodal_audio_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nreadability_spark.sources.synth import materialize_wavs
 
     payloads = spark.read.parquet(materialize_wavs(spark, sf_dir))
-    return decode_samples(payloads).orderBy("doc_id")
+    return ordered_small(decode_samples(payloads), "doc_id")
 
 
 def multimodal_audio_samples_sql() -> str:
@@ -823,11 +817,13 @@ def mp4_frame_info(data: bytes) -> list[tuple[int, int, int]]:
                     durs.extend([delta] * cnt)
                 frames: list[tuple[int, int, int]] = []
                 s = 0
+                k = spc = 0  # stsc cursor; samples per chunk of the current run
                 for ci in range(len(stco)):
-                    spc = 0  # samples in chunk ci+1: last stsc entry at/before it
-                    for fc, n_spc in stsc:
-                        if fc <= ci + 1:
-                            spc = n_spc
+                    # stsc is sorted by first_chunk: advance to the last
+                    # entry at/before chunk ci+1 (one pass over the table)
+                    while k < len(stsc) and stsc[k][0] <= ci + 1:
+                        spc = stsc[k][1]
+                        k += 1
                     off = stco[ci]
                     for _ in range(spc):
                         if s >= len(sizes):
@@ -920,22 +916,12 @@ def multimodal_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nreadability_spark.sources.synth import materialize_mp3s
 
     payloads = spark.read.parquet(materialize_mp3s(spark, sf_dir))
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for fr in mp3_frame_info(bytes(payload)):
-                    rows.append((int(doc_id),) + fr)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MP3_FRAME_SCHEMA.fields]
-            )
-
-    return payloads.mapInPandas(batches, schema=MP3_FRAME_SCHEMA).orderBy(
-        "doc_id", "frame_idx"
+    frames = _decode_stage(
+        payloads,
+        lambda doc_id, data: [(doc_id, *fr) for fr in mp3_frame_info(data)],
+        MP3_FRAME_SCHEMA,
     )
+    return ordered_small(frames, "doc_id", "frame_idx")
 
 
 def multimodal_mp3_frames_sql() -> str:
@@ -1138,42 +1124,24 @@ _FRAME_PARSERS = {
 }
 
 
-def sample_frames(
-    df: DataFrame, payload_col: str = "payload", container: str = "gif"
-) -> DataFrame:
+def sample_frames(df: DataFrame, container: str = "gif") -> DataFrame:
     """binary payload -> one row per frame (offset + delay). GIF, mp4
     (ISO BMFF) and mkv (Matroska/EBML) parse for REAL (container/box
     walks, stdlib only); codec entropy decode and any other container
     raise at the exact call site where av/ffmpeg would run on a real
     cluster."""
     parser = _FRAME_PARSERS.get(container)
-    if parser is None:
-        def gated(it):
+
+    def rows(doc_id: int, data: bytes):
+        if parser is None:
             raise NotImplementedError(
                 f"{container} frame sampling requires a media container "
                 "parser not present in this sandbox; GIF, mp4 and mkv "
                 "parse for real (codec entropy decode stays out of scope)"
             )
-            yield  # pragma: no cover
+        return [(doc_id, *fr) for fr in parser(data)]
 
-        return df.select("doc_id", payload_col).mapInPandas(gated, schema=FRAME_SCHEMA)
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            ids, idxs, offs, dels = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for k, off, delay in parser(bytes(payload)):
-                    ids.append(int(doc_id))
-                    idxs.append(k)
-                    offs.append(off)
-                    dels.append(delay)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "byte_offset": offs, "delay_cs": dels}
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(batches, schema=FRAME_SCHEMA)
+    return _decode_stage(df, rows, FRAME_SCHEMA)
 
 
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1184,7 +1152,9 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nreadability_spark.sources.synth import materialize_gifs
 
     payloads = spark.read.parquet(materialize_gifs(spark, sf_dir))
-    return sample_frames(payloads, container="gif").orderBy("doc_id", "frame_idx")
+    return ordered_small(
+        sample_frames(payloads, container="gif"), "doc_id", "frame_idx"
+    )
 
 
 def multimodal_frames_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1197,7 +1167,9 @@ def multimodal_frames_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nreadability_spark.sources.synth import materialize_mp4s
 
     payloads = spark.read.parquet(materialize_mp4s(spark, sf_dir))
-    return sample_frames(payloads, container="mp4").orderBy("doc_id", "frame_idx")
+    return ordered_small(
+        sample_frames(payloads, container="mp4"), "doc_id", "frame_idx"
+    )
 
 
 def multimodal_frames_mkv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,7 +1183,9 @@ def multimodal_frames_mkv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nreadability_spark.sources.synth import materialize_mkvs
 
     payloads = spark.read.parquet(materialize_mkvs(spark, sf_dir))
-    return sample_frames(payloads, container="mkv").orderBy("doc_id", "frame_idx")
+    return ordered_small(
+        sample_frames(payloads, container="mkv"), "doc_id", "frame_idx"
+    )
 
 
 def multimodal_frames_mkv_sql() -> str:
@@ -1414,24 +1388,13 @@ def multimodal_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame leave the worker."""
     from nreadability_spark.sources.synth import materialize_gifs
 
-    path = materialize_gifs(spark, sf_dir)
-    payloads = spark.read.parquet(path)
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, n_px, idx, r, g, b in gif_frame_pixels(bytes(payload)):
-                    rows.append((int(doc_id), fi, n_px, idx, r, g, b))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_PIXEL_SCHEMA.fields]
-            )
-
-    return payloads.mapInPandas(batches, schema=FRAME_PIXEL_SCHEMA).orderBy(
-        "doc_id", "frame_idx"
+    payloads = spark.read.parquet(materialize_gifs(spark, sf_dir))
+    frames = _decode_stage(
+        payloads,
+        lambda doc_id, data: [(doc_id, *fr) for fr in gif_frame_pixels(data)],
+        FRAME_PIXEL_SCHEMA,
     )
+    return ordered_small(frames, "doc_id", "frame_idx")
 
 
 def multimodal_frame_pixels_sql() -> str:
@@ -1552,6 +1515,17 @@ def decode_png_rgb8(data: bytes):
         return None
 
 
+def _png_pixels(data: bytes):
+    """``decode_png_rgb8`` as an (H, W, 3) uint8 array, or None."""
+    import numpy as np
+
+    decoded = decode_png_rgb8(data)
+    if decoded is None:
+        return None
+    w, h, lines = decoded
+    return np.frombuffer(b"".join(lines), dtype=np.uint8).reshape(h, w, 3)
+
+
 def image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over REAL decoded bitmaps: exact integer
     channel sums and min/max per image. Scale shape: pure map-side
@@ -1561,36 +1535,26 @@ def image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HTML extraction UDF."""
     from nreadability_spark.sources.synth import materialize_rgb_images
 
-    path = materialize_rgb_images(spark, sf_dir)
-    payloads = spark.read.parquet(path)
+    def rows(doc_id: int, data: bytes):
+        px = _png_pixels(data)
+        if px is None:
+            return []
+        h, w, _ = px.shape
+        sums = px.sum(axis=(0, 1), dtype="int64")
+        mins = px.min(axis=(0, 1))
+        maxs = px.max(axis=(0, 1))
+        return [
+            (
+                doc_id, w, h, w * h,
+                int(sums[0]), int(sums[1]), int(sums[2]),
+                int(mins[0]), int(maxs[0]),
+                int(mins[1]), int(maxs[1]),
+                int(mins[2]), int(maxs[2]),
+            )
+        ]
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                decoded = decode_png_rgb8(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, lines = decoded
-                px = np.frombuffer(b"".join(lines), dtype=np.uint8).reshape(h, w, 3)
-                sums = px.sum(axis=(0, 1), dtype=np.int64)
-                mins = px.min(axis=(0, 1))
-                maxs = px.max(axis=(0, 1))
-                rows.append(
-                    (
-                        int(doc_id), w, h, w * h,
-                        int(sums[0]), int(sums[1]), int(sums[2]),
-                        int(mins[0]), int(maxs[0]),
-                        int(mins[1]), int(maxs[1]),
-                        int(mins[2]), int(maxs[2]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PIXEL_SCHEMA.fields])
-
-    return payloads.mapInPandas(batches, schema=PIXEL_SCHEMA).orderBy("doc_id")
+    payloads = spark.read.parquet(materialize_rgb_images(spark, sf_dir))
+    return ordered_small(_decode_stage(payloads, rows, PIXEL_SCHEMA), "doc_id")
 
 
 def image_pixel_stats_sql() -> str:
@@ -1643,48 +1607,39 @@ THUMB_SCHEMA = T.StructType(
 )
 
 
-def image_resize_thumb(
-    spark: SparkSession, sf_dir: str, t: int = THUMB_SIZE
-) -> DataFrame:
-    """REAL nearest-neighbor resize to a t x t thumbnail (the
-    downsample every vision-data pipeline runs before featurizing):
-    decode the bitmap, gather the sample grid src = (idx * dim) // t
-    with one numpy fancy-index, and emit the thumbnail's exact channel
-    sums plus its top-left pixel. Map-side like the stats op."""
+def image_resize_thumb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL nearest-neighbor resize to a THUMB_SIZE x THUMB_SIZE
+    thumbnail (the downsample every vision-data pipeline runs before
+    featurizing): decode the bitmap, gather the sample grid
+    src = (idx * dim) // THUMB_SIZE with one numpy fancy-index, and emit
+    the thumbnail's exact channel sums plus its top-left pixel.
+    Map-side like the stats op."""
     from nreadability_spark.sources.synth import materialize_rgb_images
 
-    path = materialize_rgb_images(spark, sf_dir)
-    payloads = spark.read.parquet(path)
-
-    def batches(it):
+    def rows(doc_id: int, data: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                decoded = decode_png_rgb8(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, lines = decoded
-                px = np.frombuffer(b"".join(lines), dtype=np.uint8).reshape(h, w, 3)
-                ys = (np.arange(t) * h) // t
-                xs = (np.arange(t) * w) // t
-                thumb = px[np.ix_(ys, xs)]
-                sums = thumb.sum(axis=(0, 1), dtype=np.int64)
-                rows.append(
-                    (
-                        int(doc_id), t,
-                        int(sums[0]), int(sums[1]), int(sums[2]),
-                        int(thumb[0, 0, 0]), int(thumb[0, 0, 1]), int(thumb[0, 0, 2]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in THUMB_SCHEMA.fields])
+        px = _png_pixels(data)
+        if px is None:
+            return []
+        h, w, _ = px.shape
+        t = THUMB_SIZE
+        thumb = px[np.ix_((np.arange(t) * h) // t, (np.arange(t) * w) // t)]
+        sums = thumb.sum(axis=(0, 1), dtype=np.int64)
+        return [
+            (
+                doc_id, t,
+                int(sums[0]), int(sums[1]), int(sums[2]),
+                int(thumb[0, 0, 0]), int(thumb[0, 0, 1]), int(thumb[0, 0, 2]),
+            )
+        ]
 
-    return payloads.mapInPandas(batches, schema=THUMB_SCHEMA).orderBy("doc_id")
+    payloads = spark.read.parquet(materialize_rgb_images(spark, sf_dir))
+    return ordered_small(_decode_stage(payloads, rows, THUMB_SCHEMA), "doc_id")
 
 
-def image_resize_thumb_sql(t: int = THUMB_SIZE) -> str:
+def image_resize_thumb_sql() -> str:
+    t = THUMB_SIZE
     # nearest-neighbor sample rows src_y = (j*h)//t; columns are
     # constant so each sampled row contributes t identical pixels
     return f"""
@@ -1731,6 +1686,7 @@ _ZIGZAG = sorted(
 )
 
 _IDCT_A = None
+_JPEG_MAX_PIXELS = 1 << 22  # bomb bound, same idea as lzw max_pixels
 
 
 def _idct_matrix():
@@ -1831,7 +1787,8 @@ def decode_jpeg_gray(data: bytes):
     + bit realign), dequantization in zigzag order, float 2D IDCT,
     +128 level shift, clamp, and edge-block crop. Returns
     (width, height, uint8 ndarray HxW), or None for anything outside
-    the claimed subset (progressive/multi-component/12-bit) — a
+    the claimed subset (progressive/multi-component/12-bit) or above
+    ``_JPEG_MAX_PIXELS`` (a SOF0 may declare up to 65535x65535) — a
     documented subset, complete for what it claims, like
     ``decode_png_rgb8`` above."""
     import numpy as np
@@ -1904,6 +1861,8 @@ def decode_jpeg_gray(data: bytes):
         q = qt[qtab_id]
         a = _idct_matrix()
         bw, bh = (width + 7) // 8, (height + 7) // 8
+        if bw * bh * 64 > _JPEG_MAX_PIXELS:
+            return None
         img = np.empty((bh * 8, bw * 8), dtype=np.uint8)
         reader = _JpegBitReader(data, scan_start)
         prev = 0
@@ -1982,30 +1941,17 @@ def jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit roundtrip against an independent numpy IDCT."""
     from nreadability_spark.sources.synth import materialize_jpegs
 
+    def rows(doc_id: int, data: bytes):
+        decoded = decode_jpeg_gray(data)
+        if decoded is None:
+            return []
+        w, h, px = decoded
+        return [
+            (doc_id, w, h, w * h, int(px.sum(dtype="int64")), int(px.min()), int(px.max()))
+        ]
+
     payloads = spark.read.parquet(materialize_jpegs(spark, sf_dir))
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                decoded = decode_jpeg_gray(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, px = decoded
-                rows.append(
-                    (
-                        int(doc_id), w, h, w * h,
-                        int(px.sum(dtype=np.int64)), int(px.min()), int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GRAY_PIXEL_SCHEMA.fields]
-            )
-
-    return payloads.mapInPandas(batches, schema=GRAY_PIXEL_SCHEMA).orderBy("doc_id")
+    return ordered_small(_decode_stage(payloads, rows, GRAY_PIXEL_SCHEMA), "doc_id")
 
 
 def jpeg_pixel_stats_sql() -> str:

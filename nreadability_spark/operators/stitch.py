@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nreadability_spark.functions.ordering import ordered_small
 from nreadability_spark.operators.textops import load_documents
 
 STITCH_RESULT_SCHEMA = T.StructType(
@@ -147,12 +148,8 @@ def stitched_documents(spark: SparkSession, sf_dir: str, pages_per_conv: int = 3
         page_html.alias("text"),
     )
     out = stitch_conversations(crawl, include_html=False)
-    # single-partition sort, not orderBy: a range exchange above the
-    # Python stage would re-execute it for partition-bound sampling
-    return (
-        out.select("conv_id", "extracted", "n_pages_visited", "content_len")
-        .repartition(1)
-        .sortWithinPartitions("conv_id")
+    return ordered_small(
+        out.select("conv_id", "extracted", "n_pages_visited", "content_len"), "conv_id"
     )
 
 

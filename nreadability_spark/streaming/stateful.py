@@ -102,7 +102,12 @@ def stream_conv_offsets(stream_df: DataFrame, options=None, idle_timeout_ms=None
 
     ``idle_timeout_ms``: optional state TTL. When set, a conversation
     idle that long has its state evicted (bounding the state store); if
-    it later resumes, offsets restart from 0."""
+    it later resumes, offsets restart from 0. The TTL is a
+    processing-time timeout, for which Spark runs a no-data micro-batch
+    on every trigger to look for expired groups, so an ``availableNow``
+    query never finishes unless
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` is false when it
+    starts (timeouts then fire only on batches that carry data)."""
     extracted = extract_stream(stream_df, options=options, include_html=False)
     timeout_conf = (
         GroupStateTimeout.NoTimeout

@@ -284,18 +284,28 @@ _media_junk = st.one_of(
     st.binary(max_size=150).map(lambda b: b"RIFF\x00\x01\x00\x00WAVE" + b),
     st.binary(max_size=150).map(lambda b: b"ID3\x03\x00\x00" + b),
     st.binary(max_size=150).map(lambda b: b"\xff\xfb" + b),
+    st.binary(max_size=150).map(lambda b: b"\xff\xd8\xff\xc0\x00\x0b\x08" + b),  # SOF0
 )
+
+
+def _comparable(result):
+    """decode_jpeg_gray returns (w, h, ndarray); arrays compare by bytes."""
+    if isinstance(result, tuple):
+        w, h, px = result
+        return w, h, px.tobytes()
+    return result
 
 
 @settings(max_examples=200, deadline=None)
 @given(_media_junk)
 def test_media_parsers_are_total(data):
-    """The container walks and the ADPCM decoder must never raise on
-    hostile bytes — malformed varints, lying sizes, truncated headers
-    all return []/None, deterministically."""
+    """The container walks and the sample/pixel decoders must never
+    raise on hostile bytes — malformed varints, lying sizes, truncated
+    headers, bomb dimensions all return []/None, deterministically."""
     from nreadability_spark.operators.multimodal import (
         decode_g711_samples,
         decode_ima_adpcm_samples,
+        decode_jpeg_gray,
         mkv_frame_info,
         mp3_frame_info,
         mp4_frame_info,
@@ -307,11 +317,12 @@ def test_media_parsers_are_total(data):
         mp3_frame_info,
         decode_ima_adpcm_samples,
         decode_g711_samples,
+        decode_jpeg_gray,
     ):
-        r1 = fn(data)
-        r2 = fn(data)
+        r1 = _comparable(fn(data))
+        r2 = _comparable(fn(data))
         assert r1 == r2
-        assert r1 is None or isinstance(r1, list)
+        assert r1 is None or isinstance(r1, (list, tuple))
 
 
 @settings(max_examples=120, deadline=None)

@@ -5,6 +5,8 @@ comparison goes red. Samples rows (full regeneration is the tool's job);
 no Spark involved.
 """
 
+import os
+
 import duckdb
 import pytest
 
@@ -16,7 +18,8 @@ from tools.make_extract_golden import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-GOLD = "/root/repo/golden/sf0.001"
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+GOLD = os.path.join(REPO_DIR, "golden", "sf0.001")
 SAMPLE_EVERY = 29  # ~17 of 500 docs
 
 

@@ -628,6 +628,43 @@ def test_jpeg_decode_rejects_out_of_subset():
     assert decode_jpeg_gray(synth.build_png(8, 8)) is None
 
 
+def test_jpeg_decode_caps_declared_dimensions():
+    """A hand-built baseline JPEG whose SOF0 declares 65535x65535 must
+    return None before allocating the 4 GiB frame; the same stream
+    declaring 8x8 decodes, so the cap is what rejects it."""
+    import struct
+    import tracemalloc
+
+    from nreadability_spark.operators.multimodal import decode_jpeg_gray
+
+    def jpeg(w, h):
+        def seg(marker, body):
+            return b"\xff" + bytes([marker]) + struct.pack(">H", 2 + len(body)) + body
+
+        one_code = bytes([1]) + bytes(15) + b"\x00"  # a single 1-bit code -> symbol 0
+        return (
+            b"\xff\xd8"
+            + seg(0xDB, b"\x00" + bytes([1]) * 64)
+            + seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
+            + seg(0xC4, b"\x00" + one_code + b"\x10" + one_code)
+            + seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")
+            + b"\x3f"  # DC diff 0, AC EOB, pad bits
+            + b"\xff\xd9"
+        )
+
+    small = decode_jpeg_gray(jpeg(8, 8))
+    assert small is not None
+    assert (small[0], small[1]) == (8, 8) and (small[2] == 128).all()
+
+    tracemalloc.start()
+    try:
+        assert decode_jpeg_gray(jpeg(65535, 65535)) is None
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 24
+
+
 def test_jpeg_pixel_stats_match_oracle(spark, duck):
     from nreadability_spark.operators import multimodal
 
@@ -1645,6 +1682,35 @@ def test_mp4_frame_parse_structural_variants():
     moov = _mp4_box(b"moov", _mp4_trak(1, b"vide", 1000, 600, stbl, vmhd))
     # timescale 1000: 200 ticks -> 20 cs; samples contiguous in one chunk
     assert mp4_frame_info(mdat + moov) == [(0, 16, 20), (1, 26, 20), (2, 36, 20)]
+
+
+def test_mp4_frame_parse_multi_entry_stsc():
+    """A sample-to-chunk table with three runs (3, 1, then 2 samples
+    per chunk) over five scattered chunks and two stts runs: every
+    frame's offset and duration is written out by hand."""
+    import struct
+
+    from nreadability_spark.operators.multimodal import mp4_frame_info
+    from nreadability_spark.sources.synth import _mp4_box, _mp4_stbl, _mp4_trak
+
+    stbl = _mp4_stbl(
+        stts_runs=[(4, 100), (7, 30)],
+        stsc_entries=[(1, 3), (3, 1), (4, 2)],
+        sizes=[10 + k for k in range(11)],
+        chunk_offsets=[100, 200, 300, 400, 500],
+        use_co64=False,
+        sample_entry_type=b"raw ",
+    )
+    vmhd = struct.pack(">I", 20) + b"vmhd" + bytes([0, 0, 0, 1]) + b"\x00" * 8
+    moov = _mp4_box(b"moov", _mp4_trak(1, b"vide", 1000, 0, stbl, vmhd))
+    # timescale 1000: 100 ticks -> 10 cs, 30 ticks -> 3 cs
+    assert mp4_frame_info(moov) == [
+        (0, 100, 10), (1, 110, 10), (2, 121, 10),  # chunk 1: sizes 10, 11, 12
+        (3, 200, 10), (4, 213, 3), (5, 227, 3),  # chunk 2: sizes 13, 14, 15
+        (6, 300, 3),  # chunk 3: one sample
+        (7, 400, 3), (8, 417, 3),  # chunk 4: sizes 17, 18
+        (9, 500, 3), (10, 519, 3),  # chunk 5: sizes 19, 20
+    ]
 
 
 def test_mkv_frame_parse_is_real():

@@ -7,6 +7,8 @@ import pytest
 
 pytestmark = pytest.mark.spark
 
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
 
 @pytest.fixture()
 def transcript_files(spark, tmp_path):
@@ -245,19 +247,29 @@ def test_stateful_offsets_large_group_multi_chunk(spark, tmp_path):
     spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA).coalesce(1).write.parquet(src)
 
     stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(src)
-    q = (
-        stream_conv_offsets(stream, idle_timeout_ms=120_000)
-        .writeStream.format("memory")
-        .queryName("big_conv_offsets")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["turn_idx"]: r["conv_offset"]
-        for r in spark.sql("select * from big_conv_offsets").collect()
-    }
+    # the idle TTL is a processing-time state timeout, which requests a
+    # no-data micro-batch on every trigger: availableNow would never run
+    # out of batches (see stream_conv_offsets)
+    spark.conf.set(NO_DATA_BATCHES, "false")
+    q = None
+    try:
+        q = (
+            stream_conv_offsets(stream, idle_timeout_ms=120_000)
+            .writeStream.format("memory")
+            .queryName("big_conv_offsets")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(60), "availableNow query did not terminate"
+        got = {
+            r["turn_idx"]: r["conv_offset"]
+            for r in spark.sql("select * from big_conv_offsets").collect()
+        }
+    finally:
+        if q is not None:
+            q.stop()
+        spark.conf.unset(NO_DATA_BATCHES)
     want = {
         r["turn_idx"]: r["conv_offset"]
         for r in extract_transcripts(spark.read.parquet(src), include_html=False).collect()

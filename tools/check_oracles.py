@@ -14,6 +14,7 @@ import time
 
 import duckdb
 
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -63,7 +64,7 @@ def main():
     # point the extract_* golden-parquet oracles at this scale factor
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_DIR)
     import __spark_entry__ as entrymod
     from nreadability_spark.session import get_spark
 

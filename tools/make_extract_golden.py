@@ -16,7 +16,7 @@ Usage: python tools/make_extract_golden.py [sf_dir ...]
 
 Inputs replicated here, bit-for-bit with the Spark-side builders:
 - documents.parquet text payloads (extract_documents);
-- the page shell of ``__spark_entry__._extract_doc_pages`` (F.concat ->
+- the page shell of ``__spark_entry__._doc_pages`` (F.concat ->
   f-string);
 - ``sources.synth.generate_conversation`` (already pure Python; the
   Spark query only distributes it);
@@ -54,7 +54,7 @@ def _read_documents(sf_dir):
 
 
 def _doc_page_shell(doc_id, text):
-    """Pure-Python twin of __spark_entry__._extract_doc_pages's F.concat
+    """Pure-Python twin of __spark_entry__._doc_pages's F.concat
     (single-sourced in synth; byte parity with the Spark concat is
     checked by the extract_doc_pages CORRECTNESS row itself)."""
     from nreadability_spark.sources.synth import doc_page_shell
