@@ -9,7 +9,8 @@ Reads parquet paths by default; with --iceberg the source/out are
 catalog table names (requires the Iceberg runtime on the cluster
 classpath — see nreadability_spark/sources/iceberg.py).
 
-Prints one JSON line of run metrics (rows, wall sec, buckets written).
+Prints one JSON line of run metrics (rows, wall sec, buckets written,
+and the observed extracted_rows, chars and errors).
 """
 
 from __future__ import annotations

@@ -112,8 +112,8 @@ class ExtractionOptions:
 
 @dataclass
 class ExtractResult:
-    html: str                 # full transcoded page (Transcode output)
-    content_html: str         # serialized article content div
+    html: str                 # full transcoded page (Transcode output); "" unless requested
+    content_html: str         # serialized article content div; "" unless requested
     content_text: str         # normalized article inner text (equality target)
     title: str | None
     extracted: bool
@@ -123,10 +123,24 @@ class ExtractResult:
 
 DEFAULT_OPTIONS = ExtractionOptions()
 
+# the serialized outputs ``extract`` can build; everything else in an
+# ExtractResult comes from the article tree and costs nothing extra
+SERIALIZED_OUTPUTS = frozenset({"html", "content_html"})
 
-def extract(html_content, url=None, options=None):
-    """HTML string -> ExtractResult. Pure and deterministic."""
+
+def extract(html_content, url=None, options=None, outputs=SERIALIZED_OUTPUTS):
+    """HTML string -> ExtractResult. Pure and deterministic.
+
+    ``outputs`` selects the serialized outputs to build, any subset of
+    ``SERIALIZED_OUTPUTS``; an output left out is ``""``. ``"html"``
+    costs the glue of the reading page (NRT:707-770) and its
+    serialization, ``"content_html"`` the article's serialization.
+    Neither changes any other field: glue only attaches the article and
+    title elements to the page, and serialization reads the tree."""
     opts = options or DEFAULT_OPTIONS
+    unknown = set(outputs) - SERIALIZED_OUTPUTS
+    if unknown:
+        raise ValueError(f"unknown outputs: {sorted(unknown)}")
 
     if html_content is None or html_content == "":
         return ExtractResult(
@@ -134,61 +148,70 @@ def extract(html_content, url=None, options=None):
             extracted=False, next_page_url=None, spans=[],
         )
 
-    document = build_document(html_content)
+    run, document, article, title_element, next_page_url, content_text = transcode(
+        html_content, url, opts
+    )
 
-    # Guaranteed-fallback short-circuit: the fallback (NRT:313-326)
-    # triggers when the pass-1 article text is shorter than 250 chars.
-    # The article's text is drawn from the document's Text nodes (Value
-    # semantics exclude comments), every pipeline mutation only removes
-    # or preserves text (double-<br> collapse, <font> rename, break
-    # killing, strip/clean removals), and get_inner_text only trims and
-    # collapses — so the pristine document's total Text length is an
-    # upper bound on any pass-1 article length. Below the threshold,
-    # pass 1 provably cannot avoid the fallback; run ONLY the fallback
-    # pass, on the already-parsed tree. Pass 2 never reads pass-1 state
-    # (it re-derives everything from a fresh parse of the same string,
-    # and build_document is pure), so skipping pass 1 is observationally
-    # identical.
-    if (
-        not opts.dont_strip_unlikelys
-        and _document_text_upper_bound(document) < MIN_ARTICLE_LENGTH_FOR_NO_FALLBACK
-    ):
-        run = _Run(opts, dont_strip_unlikelys=True)
-        document, article, title_text, next_page_url = run.transcode_to_xml(
-            html_content, url, document=document
-        )
-    else:
-        run = _Run(opts, dont_strip_unlikelys=opts.dont_strip_unlikelys)
-        document, article, title_text, next_page_url = run.transcode_to_xml(
-            html_content, url, document=document
-        )
-
-        # fallback: rerun once with unlikely-stripping disabled when the
-        # extracted text is too short (NRT:313-326)
-        if not opts.dont_strip_unlikelys and len(run.get_inner_text(article)) < MIN_ARTICLE_LENGTH_FOR_NO_FALLBACK:
-            run = _Run(opts, dont_strip_unlikelys=True)
-            document, article, title_text, next_page_url = run.transcode_to_xml(html_content, url)
-
-    extracted = bool(article.children)
-    content_text = run.get_inner_text(article)
-    spans = _article_spans(article)
-    html = serialize_document(document, opts.serialization)
+    html = ""
+    if "html" in outputs:
+        run.glue_document(document, title_element, article)
+        html = serialize_document(document, opts.serialization)
 
     return ExtractResult(
         html=html,
-        content_html=article.to_html(),
+        content_html=article.to_html() if "content_html" in outputs else "",
         content_text=content_text,
-        title=title_text,
-        extracted=extracted,
+        title=title_element.value if title_element is not None else None,
+        extracted=bool(article.children),
         next_page_url=next_page_url,
-        spans=spans,
+        spans=_article_spans(article),
     )
+
+
+def transcode(html_content, url, opts):
+    """TranscodeToXml with its <250-char fallback pass (NRT:313-326),
+    short of the glue. Returns ``(run, document, article, title_element,
+    next_page_url, content_text)``. ``content_text`` is the article's
+    inner text, computed once: when pass 1 is kept, the fallback check's
+    text is reused."""
+    document = build_document(html_content)
+
+    # Guaranteed-fallback short-circuit: the fallback triggers when the
+    # pass-1 article text is shorter than 250 chars. The article's text
+    # is drawn from the document's Text nodes (Value semantics exclude
+    # comments), every pipeline mutation only removes or preserves text
+    # (double-<br> collapse, <font> rename, break killing, strip/clean
+    # removals), and get_inner_text only trims and collapses — so the
+    # pristine document's total Text length is an upper bound on any
+    # pass-1 article length. Below the threshold, pass 1 provably cannot
+    # avoid the fallback; run ONLY the fallback pass, on the
+    # already-parsed tree. Pass 2 never reads pass-1 state (it
+    # re-derives everything from a fresh parse of the same string, and
+    # build_document is pure), so skipping pass 1 is observationally
+    # identical.
+    fallback_certain = (
+        not opts.dont_strip_unlikelys
+        and _document_text_upper_bound(document) < MIN_ARTICLE_LENGTH_FOR_NO_FALLBACK
+    )
+    run = _Run(opts, dont_strip_unlikelys=opts.dont_strip_unlikelys or fallback_certain)
+    document, article, title_element, next_page_url = run.transcode_to_xml(
+        html_content, url, document=document
+    )
+    content_text = run.get_inner_text(article)
+
+    # fallback: rerun once with unlikely-stripping disabled when the
+    # extracted text is too short
+    if not run.dont_strip_unlikelys and len(content_text) < MIN_ARTICLE_LENGTH_FOR_NO_FALLBACK:
+        run = _Run(opts, dont_strip_unlikelys=True)
+        document, article, title_element, next_page_url = run.transcode_to_xml(html_content, url)
+        content_text = run.get_inner_text(article)
+    return run, document, article, title_element, next_page_url, content_text
 
 
 def _document_text_upper_bound(document):
     """Total length of every Text node in the document — an upper bound
     on the text length of any article pass 1 could produce (see the
-    guaranteed-fallback short-circuit in ``extract``). Comments are
+    guaranteed-fallback short-circuit in ``transcode``). Comments are
     excluded to mirror Value semantics; a comment body can never become
     element text (parsed comment values cannot contain ``-->``, and no
     regex stage introduces one)."""
@@ -229,6 +252,9 @@ class _Run:
     # -- lifecycle (NRT:284-333) --------------------------------------------
 
     def transcode_to_xml(self, html_content, url, document=None):
+        """One pass up to, not including, the glue (NRT:707-770): the
+        caller that serializes the page glues ``article_title_element``
+        and the article into it."""
         if document is None:
             document = build_document(html_content)
 
@@ -242,12 +268,10 @@ class _Run:
         if url is not None:
             next_page_url = self.find_next_page_link(document.get_body(), url)
 
-        title_element, title_text = self.extract_article_title(document)
+        title_element = self.extract_article_title(document)
         article_content_element = self.extract_article_content(document)
 
-        self.glue_document(document, title_element, article_content_element)
-
-        return document, article_content_element, title_text, next_page_url
+        return document, article_content_element, title_element, next_page_url
 
     # -- document preparation (NRT:590-638) -----------------------------------
 
@@ -328,12 +352,12 @@ class _Run:
             current_title = document_title
 
         if not current_title:
-            return None, None
+            return None
 
         article_title_element = Element("h1")
         article_title_element.set_inner_html(current_title)
 
-        return article_title_element, article_title_element.value
+        return article_title_element
 
     # -- content (NRT:693-705) -----------------------------------------------------
 

@@ -32,9 +32,8 @@ from nreadability_spark.core.dom import Element, build_document
 from nreadability_spark.core.transcoder import (
     DEFAULT_OPTIONS,
     INNER_DIV_ID,
-    MIN_ARTICLE_LENGTH_FOR_NO_FALLBACK,
-    _Run,
     serialize_document,
+    transcode,
 )
 
 MAX_PAGES = 30  # WT:34
@@ -49,15 +48,12 @@ def default_page_separator(page_number):
 
 def _transcode_page(html_content, url, options):
     """TranscodeToXml incl. the internal short-article fallback
-    (NRT:313-326): returns (document, article_element, extracted)."""
-    run = _Run(options, dont_strip_unlikelys=options.dont_strip_unlikelys)
-    document, article, _title, next_page_url = run.transcode_to_xml(html_content, url)
-    if (
-        not options.dont_strip_unlikelys
-        and len(run.get_inner_text(article)) < MIN_ARTICLE_LENGTH_FOR_NO_FALLBACK
-    ):
-        run = _Run(options, dont_strip_unlikelys=True)
-        document, article, _title, next_page_url = run.transcode_to_xml(html_content, url)
+    (NRT:313-326) and the glue: returns (document, article_element,
+    next_page_url, extracted)."""
+    run, document, article, title_element, next_page_url, _text = transcode(
+        html_content, url, options
+    )
+    run.glue_document(document, title_element, article)
     return document, article, next_page_url, bool(article.children)
 
 

@@ -13,7 +13,32 @@ constraints it satisfies:
   or speculate tasks without changing results;
 - worker memory bounded: callers should cap
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (see
-  ``plans.extract_job.tune_session``) because HTML payloads are large.
+  ``plans.extract_job.tune_session``) because HTML payloads are large;
+- only read outputs are computed: the core never builds the reading
+  page (``ExtractResult.html``), and builds ``content_html`` only under
+  ``include_html``.
+
+Row dispatch, first match wins:
+
+1. null or empty text: the empty row;
+2. markup-free text, i.e. no ``<``, no ``&`` and no ``%PDF-`` prefix:
+   the constant row, without calling the core — ``title=None``,
+   ``content_text=""``, ``extracted=False``, ``next_page_url=None``,
+   ``spans=[]``, ``error=None`` and ``content_html="<div />"`` (``""``
+   without ``include_html``);
+3. a ``%PDF-`` prefix: the layout parser in ``core.pdf``;
+4. anything else: the NReadability HTML core.
+
+Why row 2 is the core's row: without ``<`` the parser sees no tag, and
+without ``&`` there is no entity, so the document is at most one
+implied ``<html>`` root holding the text directly. There is no element,
+so there is no body, no ``<title>`` or ``<h1>`` and no candidate: the
+core creates an empty body, the top candidate falls back to it, and the
+article is an empty ``<div />`` with no text and no spans. The prefix
+test keeps PDF payloads on their own parser. ``tests/test_fuzz.py``
+checks the row against the full core over arbitrary markup-free text,
+on both sides of the 250-char fallback threshold and under every
+option flag.
 """
 
 from __future__ import annotations
@@ -58,34 +83,32 @@ _EMPTY_ROW = {
     "error": None,
 }
 
+# the core's row for every markup-free text (module docstring)
+_MARKUP_FREE_ROW = dict(_EMPTY_ROW, content_html="<div />")
 
-def _extract_one(text, options):
-    """One payload -> result row. Content-type dispatch happens here —
-    the single Python stage of the job: PDF payloads (sniffed by magic
-    header, the content-type column being optional upstream metadata)
-    route to the layout parser in ``core.pdf``; everything else runs the
-    NReadability HTML core. Both emit the same struct."""
+
+def _extract_one(text, options, include_html=True):
+    """One payload -> result row, in the dispatch order of the module
+    docstring. Both parsers emit the same struct; ``content_html`` is
+    built only when ``include_html`` is set."""
     if text is None or text == "":
         return dict(_EMPTY_ROW)
+    if "<" not in text and "&" not in text and not looks_like_pdf(text):
+        return dict(_MARKUP_FREE_ROW if include_html else _EMPTY_ROW)
     try:
         if looks_like_pdf(text):
-            pdf = extract_pdf(text)
-            return {
-                "title": pdf.title,
-                "content_html": pdf.content_html,
-                "content_text": pdf.content_text,
-                "extracted": pdf.extracted,
-                "next_page_url": None,
-                "spans": [{"start": s, "end": e} for s, e in pdf.spans],
-                "error": None,
-            }
-        result = extract(text, None, options)
+            result = extract_pdf(text)
+            next_page_url = None
+        else:
+            outputs = ("content_html",) if include_html else ()
+            result = extract(text, None, options, outputs=outputs)
+            next_page_url = result.next_page_url
         return {
             "title": result.title,
-            "content_html": result.content_html,
+            "content_html": result.content_html if include_html else "",
             "content_text": result.content_text,
             "extracted": result.extracted,
-            "next_page_url": result.next_page_url,
+            "next_page_url": next_page_url,
             "spans": [{"start": s, "end": e} for s, e in result.spans],
             "error": None,
         }
@@ -100,7 +123,7 @@ def make_extract_udf(options=None, include_html=True):
 
     ``include_html=False`` drops the (large) ``content_html`` payload at
     the source — Catalyst cannot prune struct fields produced inside a
-    Python UDF, so not materializing them is the pruning.
+    Python UDF, so not serializing it is the pruning.
     """
     opts = options or DEFAULT_OPTIONS
 
@@ -118,9 +141,7 @@ def make_extract_udf(options=None, include_html=True):
         names = list(EXTRACT_RESULT_SCHEMA.names)
         cols = {name: [] for name in names}
         for text in texts:
-            row = _extract_one(text, opts)
-            if not include_html:
-                row["content_html"] = ""
+            row = _extract_one(text, opts, include_html)
             for name in names:
                 cols[name].append(row[name])
         return pd.DataFrame(cols, columns=names)

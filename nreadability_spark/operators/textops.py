@@ -2154,7 +2154,8 @@ def sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     end markers and non-assistant turns masked out). The events table
     stands in as conversations (conv = user_id, stable order =
     (ts, event_id), role planted by event_id % 3, text =
-    event_type ':' props); emits one row per assistant turn with its
+    event_type ':' props, a NULL part rendering as '' as in the
+    streaming twin); emits one row per assistant turn with its
     absolute [span_start, span_end) character offsets in the rendered
     example plus the example's total length — the (offsets, text)
     contract downstream packing/tokenization consumes.
@@ -2171,7 +2172,9 @@ def sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 3 + 1).cast("int"),
     )
     text = F.concat(
-        F.col("event_type"), F.lit(":"), F.coalesce(F.col("props"), F.lit(""))
+        F.coalesce(F.col("event_type"), F.lit("")),
+        F.lit(":"),
+        F.coalesce(F.col("props"), F.lit("")),
     )
     turns = ev.select(
         F.col("user_id").alias("conv_id"),
@@ -2217,7 +2220,7 @@ WITH turns AS (
          ['user','assistant','tool'][CAST(event_id % 3 AS INT) + 1] AS role,
          4 + length(['user','assistant','tool'][CAST(event_id % 3 AS INT) + 1])
            AS header_len,
-         length(event_type || ':' || COALESCE(props, '')) AS text_len
+         length(COALESCE(event_type, '') || ':' || COALESCE(props, '')) AS text_len
   FROM events
 ),
 sized AS (

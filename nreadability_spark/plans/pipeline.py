@@ -354,7 +354,11 @@ def sft_packed(
         F.length(role)
         + F.lit(4)
         + F.length(
-            F.concat(F.col("event_type"), F.lit(":"), F.coalesce(F.col("props"), F.lit("")))
+            F.concat(
+                F.coalesce(F.col("event_type"), F.lit("")),
+                F.lit(":"),
+                F.coalesce(F.col("props"), F.lit("")),
+            )
         )
         + F.lit(len(SFT_END))
     )
@@ -410,7 +414,7 @@ WITH conv AS (
   SELECT user_id AS conv_id,
          CAST(SUM(
            4 + length(['user','assistant','tool'][CAST(event_id % 3 AS INT) + 1])
-             + length(event_type || ':' || COALESCE(props, ''))
+             + length(COALESCE(event_type, '') || ':' || COALESCE(props, ''))
              + {end_len}
          ) AS BIGINT) AS example_len
   FROM events

@@ -11,7 +11,7 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from nreadability_spark.core import extract
+from nreadability_spark.core import ExtractionOptions, extract
 from nreadability_spark.core.dom import build_document
 
 # HTML-ish soup: tags (balanced or not), entities, attribute junk, text
@@ -215,6 +215,106 @@ def test_reparse_elision_matches_always_reparse(soup):
     assert fast.content_text == slow.content_text
     assert fast.html == slow.html
     assert fast.spans == slow.spans
+
+
+# --- computing only the outputs a caller reads ----------------------------
+
+_PAGE_URL = "http://synth.example/conv00000001/page/1"
+_OUTPUT_SETS = ((), ("content_html",), ("html",))
+
+
+def _assert_lean_matches_full(text):
+    """extract() with page or article serialization skipped must return
+    the same fields as full extract(); a skipped output is ''."""
+    full = extract(text, _PAGE_URL)
+    for outputs in _OUTPUT_SETS:
+        lean = extract(text, _PAGE_URL, outputs=outputs)
+        assert lean.content_text == full.content_text
+        assert lean.title == full.title
+        assert lean.extracted == full.extracted
+        assert lean.spans == full.spans
+        assert lean.next_page_url == full.next_page_url
+        assert lean.content_html == (full.content_html if "content_html" in outputs else "")
+        assert lean.html == (full.html if "html" in outputs else "")
+
+
+@settings(max_examples=150, deadline=None)
+@given(_html_soup)
+def test_skipped_outputs_keep_article_fields(soup):
+    _assert_lean_matches_full(soup)
+
+
+def test_skipped_outputs_keep_article_fields_on_transcripts():
+    """The same over the generator's transcripts: chat turns, article
+    pages (pass 1 kept), micro-HTML and long conversations."""
+    from nreadability_spark.sources.synth import generate_conversation
+
+    texts = [row[3] for conv in range(8) for row in generate_conversation(conv, []) if row[3]]
+    assert len(texts) > 50
+    for text in texts:
+        _assert_lean_matches_full(text)
+
+
+_FLAG_OPTIONS = [
+    ExtractionOptions(
+        dont_strip_unlikelys=strip, dont_normalize_spaces=spaces, dont_weight_classes=weights
+    )
+    for strip in (False, True)
+    for spaces in (False, True)
+    for weights in (False, True)
+]
+_free_chars = st.characters(blacklist_characters="<&", blacklist_categories=("Cs",))
+_free_words = st.lists(
+    st.sampled_from(["word", "more words,", " ", "\n\n", "\t", "Title - Site", ": ",
+                     "%PDF-", ">", "/>", ";", "#60", "amp", "\x00", "\u00a0"]),
+    max_size=150,
+).map("".join)
+# lengths on both sides of the 250-char fallback threshold
+_markup_free_text = st.one_of(
+    st.text(_free_chars, min_size=1, max_size=240),
+    st.text(_free_chars, min_size=260, max_size=900),
+    _free_words,
+).filter(bool)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    _markup_free_text,
+    st.sampled_from(["", "&", "&amp;", "&lt;p&gt;", "&#60;h1&#62;", "&nbsp;"]),
+    st.booleans(),
+)
+def test_markup_free_row_is_the_core_row(text, entity, pdf_prefix):
+    """The UDF's markup-free constant row must be exactly the row the
+    core gives, for every include_html and option-flag combination; and
+    the shortcut must fire on exactly that class — a text with an
+    ``&`` reaches the core, a ``%PDF-`` text the PDF parser."""
+    from unittest import mock
+
+    import nreadability_spark.operators.extract as X
+    from nreadability_spark.core.pdf import extract_pdf, looks_like_pdf
+
+    half = len(text) // 2
+    text = ("%PDF-" if pdf_prefix else "") + text[:half] + entity + text[half:]
+    is_pdf = looks_like_pdf(text)
+    with mock.patch.object(X, "extract", wraps=X.extract) as core, mock.patch.object(
+        X, "extract_pdf", wraps=X.extract_pdf
+    ) as pdf:
+        for options in _FLAG_OPTIONS:
+            full = extract_pdf(text) if is_pdf else extract(text, None, options)
+            for include_html in (False, True):
+                want = {
+                    "title": full.title,
+                    "content_html": full.content_html if include_html else "",
+                    "content_text": full.content_text,
+                    "extracted": full.extracted,
+                    "next_page_url": None if is_pdf else full.next_page_url,
+                    "spans": [{"start": s, "end": e} for s, e in full.spans],
+                    "error": None,
+                }
+                assert X._extract_one(text, options, include_html) == want
+    runs = 2 * len(_FLAG_OPTIONS)
+    assert pdf.call_count == (runs if is_pdf else 0)
+    assert core.call_count == (runs if entity and not is_pdf else 0)
 
 
 # --- PNG pixel decoder (round 4) ---------------------------------------

@@ -385,12 +385,25 @@ def test_mp3_frame_walk_is_real():
     assert mp3_frame_info(g[:-3]) == whole[:-1]
 
 
+# sha256 of each law's 256 decoded samples (bytes 0..255 in order,
+# int16 little-endian) as stdlib ``audioop.ulaw2lin`` / ``alaw2lin``
+# produce them on CPython 3.11; pinned here so the check still holds on
+# Python >= 3.13, where ``audioop`` is gone
+_G711_REFERENCE_SHA256 = {
+    "ulaw": "3dab54339e520bb2c924826e3b72a917a2b612e9fd12fc867500f1d983a75827",
+    "alaw": "e04788d110e58ff8c70c93b8480190d973e3b67876b6119abbaec766cc75c174",
+}
+
+
 def test_g711_tables_match_independent_implementation():
     """Both G.711 decode tables must match an independent reference
-    implementation (stdlib ``audioop``, present through Python 3.12)
-    on all 256 bytes of each law, and the decoder must recover the
+    implementation (stdlib ``audioop``) on all 256 bytes of each law —
+    through the embedded digests of its output, and against the module
+    itself where it still exists — and the decoder must recover the
     planted corpus bytes through the right law per document."""
+    import hashlib
     import struct
+    import warnings
 
     from nreadability_spark.operators.multimodal import (
         _ALAW_TABLE,
@@ -399,17 +412,23 @@ def test_g711_tables_match_independent_implementation():
     )
     from nreadability_spark.sources import synth
 
-    audioop = pytest.importorskip("audioop")
+    tables = {"ulaw": _ULAW_TABLE, "alaw": _ALAW_TABLE}
+    pcm = {law: struct.pack("<256h", *[t[b] for b in range(256)]) for law, t in tables.items()}
+    for law, digest in _G711_REFERENCE_SHA256.items():
+        assert hashlib.sha256(pcm[law]).hexdigest() == digest, law
+    # readable anchors of the same tables (ITU-T G.711 end points)
+    assert (_ULAW_TABLE[0x00], _ULAW_TABLE[0x7F], _ULAW_TABLE[0xFF]) == (-32124, 0, 0)
+    assert (_ALAW_TABLE[0x55], _ALAW_TABLE[0xD5], _ALAW_TABLE[0x2A]) == (-8, 8, -32256)
 
-    def ref(fn, b):
-        return struct.unpack("<h", fn(bytes([b]), 2))[0]
-
-    assert [_ULAW_TABLE[b] for b in range(256)] == [
-        ref(audioop.ulaw2lin, b) for b in range(256)
-    ]
-    assert [_ALAW_TABLE[b] for b in range(256)] == [
-        ref(audioop.alaw2lin, b) for b in range(256)
-    ]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", DeprecationWarning)
+        try:
+            import audioop
+        except ImportError:
+            audioop = None
+    if audioop is not None:
+        assert pcm["ulaw"] == audioop.ulaw2lin(bytes(range(256)), 2)
+        assert pcm["alaw"] == audioop.alaw2lin(bytes(range(256)), 2)
 
     for d in range(8):
         tag, n = synth.g711_meta_for(d)

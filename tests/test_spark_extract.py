@@ -96,6 +96,32 @@ def test_rerun_over_committed_output_is_noop(spark, tmp_path):
     assert before == after
 
 
+def test_extract_job_reports_observed_counts(spark, tmp_path):
+    """The counters observed during the write must match the table it
+    wrote, and a rerun over the committed output must count nothing."""
+    from pyspark.sql import functions as F
+
+    source = transcripts_df(spark, 12, long_every=5)
+    out = str(tmp_path / "out")
+    metrics = run_extract_job(spark, source, out, n_buckets=4, include_html=False)
+    table = (
+        spark.read.parquet(out)
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col("extracted").cast("long")).alias("extracted_rows"),
+            F.sum(F.length("content_text")).alias("chars"),
+            F.count("error").alias("errors"),
+        )
+        .first()
+        .asDict()
+    )
+    assert {k: metrics[k] for k in table} == table
+    assert 0 < table["extracted_rows"] < table["rows"]
+
+    again = run_extract_job(spark, source, out, n_buckets=4, include_html=False)
+    assert {k: again[k] for k in table} == dict.fromkeys(table, 0)
+
+
 def test_hostile_rows_set_error_not_fail(spark):
     import pandas as pd
 

@@ -597,7 +597,9 @@ def test_stream_sft_spans_equals_batch(spark, tmp_path):
     """Loss-mask spans computed with applyInPandasWithState over a
     stream (every conversation split across two micro-batches at a
     global ts cutoff — the running render offset must carry across
-    the batch boundary) must equal the batch operator's spans."""
+    the batch boundary) must equal the batch operator's spans. One
+    planted assistant turn has a NULL event_type: both paths must render
+    it as '' and carry its length into the later offsets."""
     from nreadability_spark.operators.textops import sft_spans
     from nreadability_spark.streaming.sft_stream import (
         EVENTS_SCHEMA,
@@ -608,7 +610,17 @@ def test_stream_sft_spans_equals_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     sf_dir = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    base = spark.read.parquet(f"{sf_dir}/events.parquet")
+    first = base.orderBy("user_id", "ts", "event_id").first()
+    next_id = base.agg(F.max("event_id")).first()[0] + 1
+    null_id = next_id + (1 - next_id % 3) % 3  # event_id % 3 == 1: assistant
+    null_row = spark.createDataFrame(
+        [(null_id, first["ts"], first["user_id"], None, 0.0, None)],
+        base.schema,
+    )
+    planted_dir = str(tmp_path / "planted")
+    base.unionByName(null_row).write.parquet(f"{planted_dir}/events.parquet")
+    ev = spark.read.parquet(f"{planted_dir}/events.parquet")
     # split every conversation at its own midpoint in (ts, event_id)
     # order: per conversation every file-1 row precedes every file-2
     # row — the monotone-arrival contract
@@ -643,9 +655,10 @@ def test_stream_sft_spans_equals_batch(spark, tmp_path):
     }
     want = {
         (r["conv_id"], r["turn_id"]): (r["span_start"], r["span_end"])
-        for r in sft_spans(spark, sf_dir).collect()
+        for r in sft_spans(spark, planted_dir).collect()
     }
     assert got == want and len(got) > 0
+    assert want[(first["user_id"], null_id)][1] is not None
 
 
 def test_sft_fn_state_carries_across_batches():

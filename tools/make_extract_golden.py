@@ -39,7 +39,8 @@ _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
-from nreadability_spark.operators.extract import _extract_one  # noqa: E402
+from nreadability_spark.core.pdf import extract_pdf, looks_like_pdf  # noqa: E402
+from nreadability_spark.core.transcoder import extract  # noqa: E402
 
 PAGES_PER_CONV = 3  # operators/stitch.py stitched_documents default
 
@@ -62,17 +63,25 @@ def _doc_page_shell(doc_id, text):
     return doc_page_shell(doc_id, text)
 
 
+def _extract_fields(text):
+    """(extracted, title, content_len, n_spans, error) of one payload.
+
+    A dispatch of its own, not the UDF's ``_extract_one``: the goldens
+    must not share the UDF's shortcuts (the markup-free constant row,
+    the skipped serializations) with the query they check. Errors are
+    caught and formatted as the UDF does."""
+    try:
+        if not text:
+            return False, None, 0, 0, None
+        r = extract_pdf(text) if looks_like_pdf(text) else extract(text)
+        return bool(r.extracted), r.title, len(r.content_text), len(r.spans), None
+    except Exception as exc:  # noqa: BLE001 — the UDF's error column
+        return False, None, 0, 0, f"{type(exc).__name__}: {exc}"[:500]
+
+
 def _extract_row(args):
     doc_id, text = args
-    r = _extract_one(text, None)
-    return (
-        doc_id,
-        bool(r["extracted"]),
-        r["title"],
-        len(r["content_text"]),
-        len(r["spans"]),
-        r["error"],
-    )
+    return (doc_id, *_extract_fields(text))
 
 
 _DOC_SCHEMA = pa.schema(
@@ -109,16 +118,7 @@ def _mixed_payload(doc_id, text):
 def _mixed_row(args):
     doc_id, text = args
     kind, payload = _mixed_payload(doc_id, text)
-    r = _extract_one(payload, None)
-    return (
-        doc_id,
-        kind,
-        bool(r["extracted"]),
-        r["title"],
-        len(r["content_text"]),
-        len(r["spans"]),
-        r["error"],
-    )
+    return (doc_id, kind, *_extract_fields(payload))
 
 
 _MIXED_SCHEMA = pa.schema(
@@ -154,9 +154,8 @@ def _conv_rows(args):
     ):
         if text is None or text == "":
             continue  # extract_transcripts prefilters these rows out
-        r = _extract_one(text, None)
-        n = len(r["content_text"])
-        out.append((conv_id, turn_idx, bool(r["extracted"]), n, cum))
+        extracted, _title, n, _spans, _error = _extract_fields(text)
+        out.append((conv_id, turn_idx, extracted, n, cum))
         cum += n
     return out
 
