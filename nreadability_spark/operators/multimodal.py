@@ -14,11 +14,17 @@ metadata extraction — with a REAL stdlib image-header decoder:
   (multi-frame container, block-structure walk in ``gif_frame_info``).
 
 Unrecognized bytes yield ``unknown``/NULL rows — total, never a crash
-on a hostile row. ``decode_samples`` decodes uncompressed 16-bit PCM
-for REAL (stdlib ``struct`` unpack of the data chunk -> exact integer
-amplitude statistics); only compressed codecs (mp3/aac/opus) remain
-gated, raising at the exact ``soundfile``/``av`` call site a real
-cluster would run.
+on a hostile row; the parsers share one bomb budget (``_MAX_ITEMS``
+table entries, ``_MAX_PIXELS`` decoded pixels). ``decode_samples``
+decodes 16-bit PCM, mono IMA ADPCM and G.711 mu-law/A-law WAV for REAL
+(exact integer amplitude statistics); only perceptual codecs
+(mp3/aac/opus) remain gated, raising at the exact ``soundfile``/``av``
+call site a real cluster would run. Every WAV reader goes through one
+chunk walk, ``_wave_chunks``: the LAST ``fmt `` body of at least 16
+bytes, the last ``fact`` body of at least 4 bytes and the last
+``data`` body (cut to the bytes present) are the only chunks read, so
+every field of the format — IMA's ``wSamplesPerBlock`` included —
+comes from one ``fmt `` chunk.
 
 Every decode runs through one stage, ``_decode_stage``: a
 ``mapInPandas`` over ``(doc_id, payload)`` whose batch iterator
@@ -42,6 +48,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from nreadability_spark.functions.ordering import ordered_small
+
+# The one bomb budget the binary parsers share: a few hostile bytes may
+# declare any count or size, so item tables (mp4 samples, mp3 frames, mkv
+# blocks) stop at _MAX_ITEMS entries and decoded bitmaps (PNG, JPEG, GIF
+# LZW output) at _MAX_PIXELS pixels.
+_MAX_ITEMS = 1 << 20
+_MAX_PIXELS = 1 << 22
 
 
 def _decode_stage(df: DataFrame, row_fn, schema: T.StructType) -> DataFrame:
@@ -135,10 +148,9 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet — input synthesis stays outside the measured query). The
     oracle restates the synthesizer's closed-form parameters, so a
     decoder that misreads any header field hash-mismatches."""
-    from nreadability_spark.sources.synth import materialize_images
+    from nreadability_spark.sources import synth
 
-    path = materialize_images(spark, sf_dir)
-    payloads = spark.read.parquet(path)
+    payloads = synth.payload_corpus(spark, sf_dir, synth.image_payload_for)
     return ordered_small(decode_metadata(payloads), "doc_id")
 
 
@@ -180,36 +192,43 @@ AUDIO_META_SCHEMA = T.StructType(
 _AUDIO_UNKNOWN = ("unknown", None, None, None, None)
 
 
+def _wave_chunks(data: bytes):
+    """The one RIFF/WAVE chunk walk (word-aligned chunks: an odd size
+    skips a pad byte). None unless ``data`` is RIFF/WAVE; otherwise
+    ``(fmt, fact, pcm)``: the LAST ``fmt `` body of >= 16 bytes, the
+    last ``fact`` body of >= 4 bytes and the last ``data`` body cut to
+    the bytes present, each None when absent."""
+    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+        return None
+    fmt = fact = pcm = None
+    i, n = 12, len(data)
+    while i + 8 <= n:
+        cid = data[i : i + 4]
+        size = int.from_bytes(data[i + 4 : i + 8], "little")
+        body = data[i + 8 : i + 8 + size]
+        if cid == b"fmt " and len(body) >= 16:
+            fmt = body
+        elif cid == b"fact" and len(body) >= 4:
+            fact = body
+        elif cid == b"data":
+            pcm = body
+        i += 8 + size + (size & 1)
+    return fmt, fact, pcm
+
+
 def decode_audio_meta(data: bytes):
-    """(format, sample_rate, n_channels, bits, n_samples) parsed from a
-    real RIFF/WAVE chunk walk (fmt + data chunks, word-aligned);
+    """(format, sample_rate, n_channels, bits, n_samples) from the
+    RIFF/WAVE fmt and data chunks (``_wave_chunks``);
     ``("unknown", None, ...)`` for anything unparseable — including
     compressed audio (mp3/aac), whose SAMPLE decode is the genuinely
     gated path (``decode_samples``)."""
-    try:
-        if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return _AUDIO_UNKNOWN
-        i, n = 12, len(data)
-        fmt = None
-        data_len = None
-        while i + 8 <= n:
-            cid = data[i : i + 4]
-            size = struct.unpack("<I", data[i + 4 : i + 8])[0]
-            body = data[i + 8 : i + 8 + size]
-            if cid == b"fmt " and len(body) >= 16:
-                _afmt, ch, sr, _br, block, bits = struct.unpack("<HHIIHH", body[:16])
-                fmt = (ch, sr, block, bits)
-            elif cid == b"data":
-                data_len = min(size, n - i - 8)  # truncated files: actual bytes
-            i += 8 + size + (size & 1)  # RIFF chunks are word-aligned
-        if fmt is None or data_len is None:
-            return _AUDIO_UNKNOWN
-        ch, sr, block, bits = fmt
-        if not block:
-            return _AUDIO_UNKNOWN
-        return "wav", sr, ch, bits, data_len // block
-    except (struct.error, IndexError):
+    fmt, _fact, pcm = _wave_chunks(data) or (None, None, None)
+    if fmt is None or pcm is None:
         return _AUDIO_UNKNOWN
+    _tag, ch, sr, _byte_rate, block, bits = struct.unpack("<HHIIHH", fmt[:16])
+    if not block:
+        return _AUDIO_UNKNOWN
+    return "wav", sr, ch, bits, len(pcm) // block
 
 
 def _audio_meta_rows(doc_id: int, data: bytes):
@@ -240,27 +259,14 @@ def decode_pcm_samples(data: bytes) -> list[int] | None:
     stdlib ``struct`` — no codec library needed for uncompressed PCM
     (audio format tag 1). Returns None when the payload is not
     PCM WAV (compressed codecs are the genuinely gated path)."""
-    try:
-        if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return None
-        i, n = 12, len(data)
-        fmt_tag = bits = None
-        pcm: bytes | None = None
-        while i + 8 <= n:
-            cid = data[i : i + 4]
-            size = struct.unpack("<I", data[i + 4 : i + 8])[0]
-            body = data[i + 8 : i + 8 + size]
-            if cid == b"fmt " and len(body) >= 16:
-                fmt_tag, _ch, _sr, _br, _block, bits = struct.unpack("<HHIIHH", body[:16])
-            elif cid == b"data":
-                pcm = body
-            i += 8 + size + (size & 1)
-        if fmt_tag != 1 or bits != 16 or pcm is None:
-            return None
-        usable = len(pcm) - (len(pcm) % 2)
-        return list(struct.unpack(f"<{usable // 2}h", pcm[:usable]))
-    except (struct.error, IndexError):
+    fmt, _fact, pcm = _wave_chunks(data) or (None, None, None)
+    if fmt is None or pcm is None:
         return None
+    tag, _ch, _sr, _byte_rate, _block, bits = struct.unpack("<HHIIHH", fmt[:16])
+    if tag != 1 or bits != 16:
+        return None
+    usable = len(pcm) - (len(pcm) % 2)
+    return list(struct.unpack(f"<{usable // 2}h", pcm[:usable]))
 
 
 # IMA/DVI ADPCM constants (public spec: IMA "Recommended Practices for
@@ -290,66 +296,45 @@ def decode_ima_adpcm_samples(data: bytes) -> list[int] | None:
     frames (trailing partial blocks). Returns None when the payload is
     not mono 4-bit IMA ADPCM (stereo interleave and perceptual codecs
     stay out of scope)."""
-    try:
-        if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return None
-        i, n = 12, len(data)
-        fmt = None
-        spb_ext = None
-        total_cap = None
-        pcm: bytes | None = None
-        while i + 8 <= n:
-            cid = data[i : i + 4]
-            size = struct.unpack("<I", data[i + 4 : i + 8])[0]
-            body = data[i + 8 : i + 8 + size]
-            if cid == b"fmt " and len(body) >= 16:
-                fmt = struct.unpack("<HHIIHH", body[:16])
-                if len(body) >= 20:
-                    spb_ext = struct.unpack("<H", body[18:20])[0]
-            elif cid == b"fact" and len(body) >= 4:
-                total_cap = struct.unpack("<I", body[:4])[0]
-            elif cid == b"data":
-                pcm = body
-            i += 8 + size + (size & 1)
-        if fmt is None or pcm is None:
-            return None
-        tag, ch, _sr, _br, block_align, bits = fmt
-        if tag != 0x11 or ch != 1 or bits != 4 or block_align < 5:
-            return None
-        spb = spb_ext if spb_ext else 1 + 2 * (block_align - 4)
-        out: list[int] = []
-        for bs in range(0, len(pcm), block_align):
-            blk = pcm[bs : bs + block_align]
-            if len(blk) < 4:
-                break
-            pred = struct.unpack("<h", blk[:2])[0]
-            idx = blk[2]
-            if idx > 88:
-                return None
-            out.append(pred)
-            emitted = 1
-            for byte in blk[4:]:
-                for nib in (byte & 0x0F, byte >> 4):
-                    if emitted >= spb:
-                        break
-                    step = _IMA_STEPS[idx]
-                    diff = step >> 3
-                    if nib & 1:
-                        diff += step >> 2
-                    if nib & 2:
-                        diff += step >> 1
-                    if nib & 4:
-                        diff += step
-                    pred = pred - diff if nib & 8 else pred + diff
-                    pred = max(-32768, min(32767, pred))
-                    idx = max(0, min(88, idx + _IMA_INDEX_DELTA[nib & 7]))
-                    out.append(pred)
-                    emitted += 1
-        if total_cap is not None:
-            out = out[:total_cap]
-        return out
-    except (struct.error, IndexError):
+    fmt, fact, pcm = _wave_chunks(data) or (None, None, None)
+    if fmt is None or pcm is None:
         return None
+    tag, ch, _sr, _byte_rate, block_align, bits = struct.unpack("<HHIIHH", fmt[:16])
+    if tag != 0x11 or ch != 1 or bits != 4 or block_align < 5:
+        return None
+    spb_ext = int.from_bytes(fmt[18:20], "little") if len(fmt) >= 20 else 0
+    spb = spb_ext or 1 + 2 * (block_align - 4)
+    out: list[int] = []
+    for bs in range(0, len(pcm), block_align):
+        blk = pcm[bs : bs + block_align]
+        if len(blk) < 4:
+            break
+        pred = struct.unpack("<h", blk[:2])[0]
+        idx = blk[2]
+        if idx > 88:
+            return None
+        out.append(pred)
+        emitted = 1
+        for byte in blk[4:]:
+            for nib in (byte & 0x0F, byte >> 4):
+                if emitted >= spb:
+                    break
+                step = _IMA_STEPS[idx]
+                diff = step >> 3
+                if nib & 1:
+                    diff += step >> 2
+                if nib & 2:
+                    diff += step >> 1
+                if nib & 4:
+                    diff += step
+                pred = pred - diff if nib & 8 else pred + diff
+                pred = max(-32768, min(32767, pred))
+                idx = max(0, min(88, idx + _IMA_INDEX_DELTA[nib & 7]))
+                out.append(pred)
+                emitted += 1
+    if fact is not None:
+        out = out[: int.from_bytes(fact[:4], "little")]
+    return out
 
 
 # ITU-T G.711 companding (public spec): decode is a pure per-byte
@@ -385,27 +370,14 @@ def decode_g711_samples(data: bytes) -> list[int] | None:
     6 = A-law, 8 bits/sample, one byte per sample) through the
     256-entry decode tables built from the ITU-T formulas. Returns
     None for anything else."""
-    try:
-        if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return None
-        i, n = 12, len(data)
-        tag = bits = None
-        raw: bytes | None = None
-        while i + 8 <= n:
-            cid = data[i : i + 4]
-            size = struct.unpack("<I", data[i + 4 : i + 8])[0]
-            body = data[i + 8 : i + 8 + size]
-            if cid == b"fmt " and len(body) >= 16:
-                tag, _ch, _sr, _br, _block, bits = struct.unpack("<HHIIHH", body[:16])
-            elif cid == b"data":
-                raw = body
-            i += 8 + size + (size & 1)
-        if tag not in (6, 7) or bits != 8 or raw is None:
-            return None
-        table = _ULAW_TABLE if tag == 7 else _ALAW_TABLE
-        return [table[b] for b in raw]
-    except (struct.error, IndexError):
+    fmt, _fact, raw = _wave_chunks(data) or (None, None, None)
+    if fmt is None or raw is None:
         return None
+    tag, _ch, _sr, _byte_rate, _block, bits = struct.unpack("<HHIIHH", fmt[:16])
+    if tag not in (6, 7) or bits != 8:
+        return None
+    table = _ULAW_TABLE if tag == 7 else _ALAW_TABLE
+    return [table[b] for b in raw]
 
 
 def _sample_stats_rows(doc_id: int, data: bytes):
@@ -459,9 +431,9 @@ def multimodal_audio_samples_adpcm(spark: SparkSession, sf_dir: str) -> DataFram
     nibble/magnitude/sign/clamp paths are proven by the
     independent-implementation roundtrip test, the same dual-proof
     pattern as the JPEG AC path."""
-    from nreadability_spark.sources.synth import materialize_adpcm_wavs
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_adpcm_wavs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.adpcm_payload_for)
     return ordered_small(decode_samples(payloads), "doc_id")
 
 
@@ -517,9 +489,9 @@ def multimodal_audio_samples_g711(spark: SparkSession, sf_dir: str) -> DataFrame
     one wrong table entry in either law hash-mismatches; the tables
     themselves are pinned to an independent implementation
     (``audioop``) by a unit test."""
-    from nreadability_spark.sources.synth import materialize_g711_wavs
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_g711_wavs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.g711_payload_for)
     return ordered_small(decode_samples(payloads), "doc_id")
 
 
@@ -559,9 +531,9 @@ ORDER BY doc_id
 def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real RIFF/WAVE metadata decode over the materialized PCM corpus;
     the oracle restates the synthesizer's closed-form parameters."""
-    from nreadability_spark.sources.synth import materialize_wavs
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_wavs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.wav_payload_for)
     return ordered_small(decode_audio_metadata(payloads), "doc_id")
 
 
@@ -597,9 +569,9 @@ def multimodal_audio_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``synth.wav_sample_value`` in closed form — a byte-order slip, an
     off-by-one in the chunk walk, or a lost trailing sample all
     hash-mismatch."""
-    from nreadability_spark.sources.synth import materialize_wavs
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_wavs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.wav_payload_for)
     return ordered_small(decode_samples(payloads), "doc_id")
 
 
@@ -688,7 +660,6 @@ def gif_frame_info(data: bytes) -> list[tuple[int, int, int]]:
 # ISO-BMFF container boxes the walk recurses into (moov -> trak ->
 # mdia -> minf -> stbl); everything else is a leaf
 _MP4_CONTAINERS = frozenset((b"moov", b"trak", b"mdia", b"minf", b"stbl"))
-_MP4_MAX_SAMPLES = 1 << 20  # bomb bound, same idea as lzw max_pixels
 
 
 def _mp4_boxes(data: bytes, start: int, end: int):
@@ -741,7 +712,7 @@ def _mp4_trak_tables(data: bytes, start: int, end: int) -> dict:
                 n = min(
                     int.from_bytes(data[bs + 4 : bs + 8], "big"),
                     (be - bs - 8) // 8,
-                    _MP4_MAX_SAMPLES,
+                    _MAX_ITEMS,
                 )
                 vals = _mp4_read_u32s(data, bs + 8, 2 * n)
                 info["stts"] = list(zip(vals[0::2], vals[1::2]))
@@ -755,7 +726,7 @@ def _mp4_trak_tables(data: bytes, start: int, end: int) -> dict:
             elif typ == b"stsz" and be - bs >= 12:
                 fixed = int.from_bytes(data[bs + 4 : bs + 8], "big")
                 n = min(
-                    int.from_bytes(data[bs + 8 : bs + 12], "big"), _MP4_MAX_SAMPLES
+                    int.from_bytes(data[bs + 8 : bs + 12], "big"), _MAX_ITEMS
                 )
                 if fixed:
                     info["stsz"] = [fixed] * n
@@ -812,7 +783,7 @@ def mp4_frame_info(data: bytes) -> list[tuple[int, int, int]]:
                     return []
                 durs: list[int] = []
                 for cnt, delta in t.get("stts", []):
-                    if len(durs) + cnt > _MP4_MAX_SAMPLES:
+                    if len(durs) + cnt > _MAX_ITEMS:
                         return []
                     durs.extend([delta] * cnt)
                 frames: list[tuple[int, int, int]] = []
@@ -844,7 +815,6 @@ _MP3_BITRATES = (
     None, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320,
 )
 _MP3_RATES = (44100, 48000, 32000)
-_MP3_MAX_FRAMES = 1 << 20
 
 
 def mp3_frame_info(data: bytes) -> list[tuple[int, int, int, int, int]]:
@@ -884,7 +854,7 @@ def mp3_frame_info(data: bytes) -> list[tuple[int, int, int, int, int]]:
             kbps = _MP3_BITRATES[b_idx]
             sr = _MP3_RATES[sr_idx]
             flen = 144_000 * kbps // sr + pad
-            if flen < 4 or i + flen > n or len(out) >= _MP3_MAX_FRAMES:
+            if flen < 4 or i + flen > n or len(out) >= _MAX_ITEMS:
                 break
             out.append((k, i, flen, kbps, 1152 * 1_000_000 // sr))
             i += flen
@@ -913,9 +883,9 @@ def multimodal_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame-length arithmetic and the tag-skip in closed form, so a walk
     that misreads the syncsafe size, any table entry or the padding
     bit hash-mismatches."""
-    from nreadability_spark.sources.synth import materialize_mp3s
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_mp3s(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.mp3_payload_for)
     frames = _decode_stage(
         payloads,
         lambda doc_id, data: [(doc_id, *fr) for fr in mp3_frame_info(data)],
@@ -960,7 +930,6 @@ ORDER BY doc_id, frame_idx
 
 # --- Matroska (mkv) container walk -------------------------------------
 
-_MKV_MAX_BLOCKS = 1 << 20  # bomb bound, same idea as _MP4_MAX_SAMPLES
 _MKV_SEGMENT = b"\x18\x53\x80\x67"
 _MKV_INFO = b"\x15\x49\xa9\x66"
 _MKV_TIMESTAMP_SCALE = b"\x2a\xd7\xb1"
@@ -1098,7 +1067,7 @@ def mkv_frame_info(data: bytes) -> list[tuple[int, int, int]]:
                     if data[p + 2] & 0x06:  # laced block: out of scope
                         continue
                     if track == video_track:
-                        if len(blocks) >= _MKV_MAX_BLOCKS:
+                        if len(blocks) >= _MAX_ITEMS:
                             return []
                         blocks.append((cluster_ts + rel, p + 3, dur_ticks))
         if video_track is None:
@@ -1149,9 +1118,9 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1-4 frames per doc). The oracle restates the builder's closed-form
     layout (fixed-width blocks), so a parser that miscounts any block
     length or misreads a delay hash-mismatches."""
-    from nreadability_spark.sources.synth import materialize_gifs
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_gifs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.gif_payload_for)
     return ordered_small(
         sample_frames(payloads, container="gif"), "doc_id", "frame_idx"
     )
@@ -1164,9 +1133,9 @@ def multimodal_frames_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form layout (frame sizes -> prefix-sum offsets, paired
     durations), so a walk that misreads any sample table — or fails to
     skip the audio trak — hash-mismatches."""
-    from nreadability_spark.sources.synth import materialize_mp4s
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_mp4s(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.mp4_payload_for)
     return ordered_small(
         sample_frames(payloads, container="mp4"), "doc_id", "frame_idx"
     )
@@ -1180,9 +1149,9 @@ def multimodal_frames_mkv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-frame cluster overhead + prefix-sum sizes), so a walk that
     misreads any varint, timestamp scale or duration source
     hash-mismatches."""
-    from nreadability_spark.sources.synth import materialize_mkvs
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_mkvs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.mkv_payload_for)
     return ordered_small(
         sample_frames(payloads, container="mkv"), "doc_id", "frame_idx"
     )
@@ -1276,12 +1245,16 @@ ORDER BY doc_id, frame_idx
 # --- GIF LZW pixel decode ----------------------------------------------
 
 
-def lzw_decode(min_code_size: int, data: bytes, max_pixels: int = 1 << 22):
+def lzw_decode(min_code_size: int, data: bytes):
     """General GIF-variant LZW decode (public spec): LSB-first bit
     stream, clear/EOI codes, growing code width, 12-bit dictionary
     cap. Returns the pixel index list, or None on a malformed stream.
-    ``max_pixels`` bounds output on hostile inputs (an LZW bomb is a
-    few bytes that expand without limit)."""
+    The minimum code size must be the spec's 2-8 bits per pixel (the
+    initial table has one entry per color), and output stops at
+    ``_MAX_PIXELS`` (an LZW bomb is a few bytes that expand without
+    limit)."""
+    if not 2 <= min_code_size <= 8:
+        return None
     try:
         clear = 1 << min_code_size
         eoi = clear + 1
@@ -1311,7 +1284,7 @@ def lzw_decode(min_code_size: int, data: bytes, max_pixels: int = 1 << 22):
                 else:
                     return None
                 out.extend(entry)
-                if len(out) > max_pixels:
+                if len(out) > _MAX_PIXELS:
                     return None
                 if prev is not None and len(table) < 4096:
                     table.append(prev + [entry[0]])
@@ -1386,9 +1359,9 @@ def multimodal_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just our single-pixel streams), indices resolved through the
     color table. Map-side like every decode stage; 7 integers per
     frame leave the worker."""
-    from nreadability_spark.sources.synth import materialize_gifs
+    from nreadability_spark.sources import synth
 
-    payloads = spark.read.parquet(materialize_gifs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.gif_payload_for)
     frames = _decode_stage(
         payloads,
         lambda doc_id, data: [(doc_id, *fr) for fr in gif_frame_pixels(data)],
@@ -1479,11 +1452,15 @@ def decode_png_rgb8(data: bytes):
             elif ctype == b"IEND":
                 break
             i += 12 + length
-        if not width or not height or not idat:
+        if not width or not height or not idat or width * height > _MAX_PIXELS:
             return None
-        raw = zlib.decompress(bytes(idat))
         stride = 3 * width
-        if len(raw) != height * (1 + stride):
+        expected = height * (1 + stride)
+        # inflate at most one byte past the declared size: a small IDAT
+        # may expand without limit, and a longer output is rejected anyway
+        inflater = zlib.decompressobj()
+        raw = inflater.decompress(bytes(idat), expected + 1)
+        if not inflater.eof or len(raw) != expected:
             return None
         rows: list[bytes] = []
         prev = bytes(stride)
@@ -1533,7 +1510,7 @@ def image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     never leaves the worker, only 13 integers per image shuffle to the
     final sort); memory bounded by the Arrow batch cap exactly like
     the HTML extraction UDF."""
-    from nreadability_spark.sources.synth import materialize_rgb_images
+    from nreadability_spark.sources import synth
 
     def rows(doc_id: int, data: bytes):
         px = _png_pixels(data)
@@ -1553,7 +1530,7 @@ def image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
 
-    payloads = spark.read.parquet(materialize_rgb_images(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.rgb_image_payload_for)
     return ordered_small(_decode_stage(payloads, rows, PIXEL_SCHEMA), "doc_id")
 
 
@@ -1614,7 +1591,7 @@ def image_resize_thumb(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (idx * dim) // THUMB_SIZE with one numpy fancy-index, and emit
     the thumbnail's exact channel sums plus its top-left pixel.
     Map-side like the stats op."""
-    from nreadability_spark.sources.synth import materialize_rgb_images
+    from nreadability_spark.sources import synth
 
     def rows(doc_id: int, data: bytes):
         import numpy as np
@@ -1634,7 +1611,7 @@ def image_resize_thumb(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
 
-    payloads = spark.read.parquet(materialize_rgb_images(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.rgb_image_payload_for)
     return ordered_small(_decode_stage(payloads, rows, THUMB_SCHEMA), "doc_id")
 
 
@@ -1686,7 +1663,6 @@ _ZIGZAG = sorted(
 )
 
 _IDCT_A = None
-_JPEG_MAX_PIXELS = 1 << 22  # bomb bound, same idea as lzw max_pixels
 
 
 def _idct_matrix():
@@ -1788,7 +1764,7 @@ def decode_jpeg_gray(data: bytes):
     +128 level shift, clamp, and edge-block crop. Returns
     (width, height, uint8 ndarray HxW), or None for anything outside
     the claimed subset (progressive/multi-component/12-bit) or above
-    ``_JPEG_MAX_PIXELS`` (a SOF0 may declare up to 65535x65535) — a
+    ``_MAX_PIXELS`` (a SOF0 may declare up to 65535x65535) — a
     documented subset, complete for what it claims, like
     ``decode_png_rgb8`` above."""
     import numpy as np
@@ -1861,7 +1837,7 @@ def decode_jpeg_gray(data: bytes):
         q = qt[qtab_id]
         a = _idct_matrix()
         bw, bh = (width + 7) // 8, (height + 7) // 8
-        if bw * bh * 64 > _JPEG_MAX_PIXELS:
+        if bw * bh * 64 > _MAX_PIXELS:
             return None
         img = np.empty((bh * 8, bw * 8), dtype=np.uint8)
         reader = _JpegBitReader(data, scan_start)
@@ -1939,7 +1915,7 @@ def jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly flat per block (lossless by construction), so the stats
     stay SQL-restatable; AC and restart-marker paths are proven by the
     unit roundtrip against an independent numpy IDCT."""
-    from nreadability_spark.sources.synth import materialize_jpegs
+    from nreadability_spark.sources import synth
 
     def rows(doc_id: int, data: bytes):
         decoded = decode_jpeg_gray(data)
@@ -1950,7 +1926,7 @@ def jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             (doc_id, w, h, w * h, int(px.sum(dtype="int64")), int(px.min()), int(px.max()))
         ]
 
-    payloads = spark.read.parquet(materialize_jpegs(spark, sf_dir))
+    payloads = synth.payload_corpus(spark, sf_dir, synth.jpeg_gray_payload_for)
     return ordered_small(_decode_stage(payloads, rows, GRAY_PIXEL_SCHEMA), "doc_id")
 
 

@@ -26,6 +26,7 @@ import struct
 import zlib
 from pathlib import Path
 
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 TRANSCRIPTS_SCHEMA = T.StructType(
@@ -306,13 +307,6 @@ def build_png_rgb(width: int, height: int, seed: int = 0) -> bytes:
         + _png_chunk(b"IDAT", _zlib_stored(bytes(rows)))
         + _png_chunk(b"IEND", b"")
     )
-
-
-def rgb_png_n_bytes(width: int, height: int) -> int:
-    """Closed-form byte length of ``build_png_rgb`` output."""
-    raw = height * (1 + 3 * width)
-    idat = 2 + 5 * ((raw + 65534) // 65535) + raw + 4
-    return 8 + (12 + 13) + (12 + idat) + 12
 
 
 def rgb_image_payload_for(doc_id: int) -> bytes:
@@ -1147,10 +1141,13 @@ def image_payload_for(doc_id: int) -> bytes:
 # --- materialized synthetic corpora ------------------------------------
 #
 # Input synthesis must not sit inside measured queries (it dominated the
-# mixed-media bench entry): these helpers write each deterministic
-# corpus to a cache parquet ONCE (atomic rename; concurrent builders
+# mixed-media bench entry): ``_materialize`` writes each deterministic
+# corpus ONCE to _CACHE_ROOT/<basename(sf_dir)>/<_synth_version()>/<name>
+# (built at a per-process tmp path, then renamed; concurrent builders
 # race harmlessly) and the queries just scan it — the shape a real
-# pipeline has, where the input table already exists.
+# pipeline has, where the input table already exists. Every
+# (doc_id, payload) media corpus is one ``payload_corpus`` call, named
+# after its ``*_payload_for`` builder.
 
 _CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -1167,15 +1164,18 @@ def _synth_version() -> str:
         return hashlib.md5(f.read()).hexdigest()[:10]
 
 
-def _materialize(spark, sf_dir, fname, build_df, cache_root=None):
-    root = cache_root or _CACHE_ROOT
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(root, sf_name, _synth_version(), fname)
+def _materialize(scope: str, name: str, write) -> str:
+    """Path of the cached corpus ``name`` under ``scope`` (an sf_dir,
+    keyed by its basename, or a bare key); on a miss ``write(tmp)``
+    builds it at a tmp path that is then renamed into place."""
+    path = os.path.join(
+        _CACHE_ROOT, os.path.basename(scope.rstrip("/")), _synth_version(), name
+    )
     if os.path.isdir(path):
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp-{os.getpid()}"
-    build_df().write.mode("overwrite").parquet(tmp)
+    write(tmp)
     try:
         os.rename(tmp, path)
     except OSError:
@@ -1183,190 +1183,26 @@ def _materialize(spark, sf_dir, fname, build_df, cache_root=None):
     return path
 
 
-def materialize_images(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) image corpus for the documents at
-    ``sf_dir``; returns the cached parquet path."""
+def payload_corpus(spark, sf_dir, payload_for) -> DataFrame:
+    """(doc_id, payload binary) rows, ``payload_for(doc_id)`` for each
+    document at ``sf_dir``, scanned from a parquet cached under
+    ``payload_for.__name__``."""
     import pandas as pd
 
-    def build():
+    def gen(batches):
+        for b in batches:
+            ids = [int(i) for i in b["doc_id"]]
+            yield pd.DataFrame({"doc_id": ids, "payload": [payload_for(i) for i in ids]})
+
+    def write(tmp):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+        payloads = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+        payloads.write.mode("overwrite").parquet(tmp)
 
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [image_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "images.parquet", build, cache_root)
+    return spark.read.parquet(_materialize(sf_dir, payload_for.__name__, write))
 
 
-def materialize_rgb_images(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) fully-decodable RGB PNG corpus for the
-    documents at ``sf_dir``; returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [rgb_image_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "rgb_images", build, cache_root=cache_root)
-
-
-def materialize_gifs(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) animated-GIF corpus (1-4 frames each)
-    for the documents at ``sf_dir``; returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [gif_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "gifs.parquet", build, cache_root)
-
-
-def materialize_mp4s(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) fragmentless-mp4 corpus (1-4 video
-    frames each, decoy audio trak) for the documents at ``sf_dir``;
-    returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [mp4_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "mp4s.parquet", build, cache_root)
-
-
-def materialize_adpcm_wavs(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) IMA-ADPCM WAV corpus for the documents
-    at ``sf_dir``; returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [adpcm_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "adpcm.parquet", build, cache_root)
-
-
-def materialize_g711_wavs(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) G.711 mu-law/A-law WAV corpus for the
-    documents at ``sf_dir``; returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [g711_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "g711.parquet", build, cache_root)
-
-
-def materialize_mp3s(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) mp3 frame-stream corpus for the
-    documents at ``sf_dir``; returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [mp3_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "mp3s.parquet", build, cache_root)
-
-
-def materialize_mkvs(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) Matroska corpus (1-4 video frames each
-    as SimpleBlock/BlockGroup clusters, decoy audio track) for the
-    documents at ``sf_dir``; returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [mkv_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "mkvs.parquet", build, cache_root)
-
-
-def materialize_jpegs(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) fully-decodable baseline grayscale
-    JPEG corpus for the documents at ``sf_dir``; returns the cached
-    parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [jpeg_gray_payload_for(i) for i in ids]}
-                )
-
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
-
-    return _materialize(spark, sf_dir, "jpegs.parquet", build, cache_root)
-
-
-def materialize_warc(spark, sf_dir, n_files=8, cache_root=None) -> str:
+def materialize_warc(spark, sf_dir, n_files=8) -> str:
     """Render the documents (in their page shells) as ``n_files``
     uncompressed WARC/1.0 archives under the cache dir; returns the
     directory. Each doc_id-bucket group writes one file from its worker
@@ -1376,68 +1212,39 @@ def materialize_warc(spark, sf_dir, n_files=8, cache_root=None) -> str:
     import pandas as pd
     from pyspark.sql import functions as F
 
-    root = cache_root or _CACHE_ROOT
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(root, sf_name, _synth_version(), "warc")
-    if os.path.isdir(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
+    def write(tmp):
+        os.makedirs(tmp, exist_ok=True)
 
-    def write_group(key, pdf):
-        from nreadability_spark.sources.warc import build_warc
+        def write_group(key, pdf):
+            from nreadability_spark.sources.warc import build_warc
 
-        (bucket,) = key
-        pdf = pdf.sort_values("doc_id")
-        records = [
-            (
-                f"http://synth.example/doc/{int(d)}",
-                doc_page_shell(int(d), t),
-                f"doc-{int(d)}",
-            )
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        # every other file in the at-rest gzip-member form: the reader
-        # must handle both transparently (real crawls are .warc.gz)
-        gz = int(bucket) % 2 == 1
-        ext = "warc.gz" if gz else "warc"
-        with open(os.path.join(tmp, f"part-{int(bucket):03d}.{ext}"), "wb") as f:
-            f.write(build_warc(records, compress=gz))
-        return pd.DataFrame({"bucket": [int(bucket)]})
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    (
-        docs.withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(n_files)))
-        .groupBy("bucket")
-        .applyInPandas(write_group, "bucket long")
-        .collect()
-    )
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # concurrent builder won
-    return path
-
-
-def materialize_wavs(spark, sf_dir, cache_root=None) -> str:
-    """(doc_id, payload binary) PCM WAV corpus for the documents at
-    ``sf_dir``; returns the cached parquet path."""
-    import pandas as pd
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def gen(batches):
-            for b in batches:
-                ids = [int(i) for i in b["doc_id"]]
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [wav_payload_for(i) for i in ids]}
+            (bucket,) = key
+            pdf = pdf.sort_values("doc_id")
+            records = [
+                (
+                    f"http://synth.example/doc/{int(d)}",
+                    doc_page_shell(int(d), t),
+                    f"doc-{int(d)}",
                 )
+                for d, t in zip(pdf["doc_id"], pdf["text"])
+            ]
+            # every other file in the at-rest gzip-member form: the reader
+            # must handle both transparently (real crawls are .warc.gz)
+            gz = int(bucket) % 2 == 1
+            ext = "warc.gz" if gz else "warc"
+            with open(os.path.join(tmp, f"part-{int(bucket):03d}.{ext}"), "wb") as f:
+                f.write(build_warc(records, compress=gz))
+            return pd.DataFrame({"bucket": [int(bucket)]})
 
-        return docs.mapInPandas(gen, schema="doc_id long, payload binary")
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+        (
+            docs.withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(n_files)))
+            .groupBy("bucket")
+            .applyInPandas(write_group, "bucket long")
+            .collect()
+        )
 
-    return _materialize(spark, sf_dir, "wavs.parquet", build, cache_root)
+    return _materialize(sf_dir, "warc", write)
 
 
 def doc_page_shell(doc_id, text) -> str:
@@ -1467,25 +1274,25 @@ def mixed_payload_for(doc_id: int, text: str) -> tuple[str, str]:
     )
 
 
-def materialize_mixed(spark, sf_dir, cache_root=None) -> str:
+def materialize_mixed(spark, sf_dir) -> str:
     """(doc_id, kind, text) mixed html/pdf corpus; returns the cached
     parquet path."""
     import pandas as pd
 
-    def build():
+    def gen(batches):
+        for b in batches:
+            rows = [
+                (int(i), *mixed_payload_for(int(i), t))
+                for i, t in zip(b["doc_id"], b["text"])
+            ]
+            yield pd.DataFrame(rows, columns=["doc_id", "kind", "text"])
+
+    def write(tmp):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+        mixed = docs.mapInPandas(gen, schema="doc_id long, kind string, text string")
+        mixed.write.mode("overwrite").parquet(tmp)
 
-        def gen(batches):
-            for b in batches:
-                rows = [
-                    (int(i), *mixed_payload_for(int(i), t))
-                    for i, t in zip(b["doc_id"], b["text"])
-                ]
-                yield pd.DataFrame(rows, columns=["doc_id", "kind", "text"])
-
-        return docs.mapInPandas(gen, schema="doc_id long, kind string, text string")
-
-    return _materialize(spark, sf_dir, "mixed.parquet", build, cache_root)
+    return _materialize(sf_dir, "mixed.parquet", write)
 
 
 def _turn_count(conv_idx, long_every=97, short_min=2, short_max=12, long_factor=50):
@@ -1586,7 +1393,7 @@ def transcripts_skewed_df(spark, n_convs, giant_turns=7000, num_partitions=None)
 
 
 def materialize_skewed_transcripts(
-    spark, n_convs, giant_turns=7000, num_partitions=None, cache_root=None
+    spark, n_convs, giant_turns=7000, num_partitions=None
 ) -> str:
     """Materialized (cached) skewed-transcripts parquet for the skew
     benchmark. Written with the generator's range partitioning, so the
@@ -1597,25 +1404,10 @@ def materialize_skewed_transcripts(
     arrive clustered (same crawl shard, same upstream partition), which
     is exactly what the job's ``xxhash64(conv_id, turn_idx)`` salting
     shuffle exists to undo."""
-    root = cache_root or _CACHE_ROOT
-    path = os.path.join(
-        root, "skew", _synth_version(), f"t{n_convs}_g{giant_turns}"
-    )
-    if os.path.isdir(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    transcripts_skewed_df(
-        spark, n_convs, giant_turns=giant_turns, num_partitions=num_partitions
-    ).write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # concurrent builder won
-    return path
 
+    def write(tmp):
+        transcripts_skewed_df(
+            spark, n_convs, giant_turns=giant_turns, num_partitions=num_partitions
+        ).write.mode("overwrite").parquet(tmp)
 
-def write_transcripts(spark, n_convs, path, long_every=97, num_partitions=None):
-    df = transcripts_df(spark, n_convs, long_every=long_every, num_partitions=num_partitions)
-    df.write.mode("overwrite").parquet(path)
-    return path
+    return _materialize("skew", f"t{n_convs}_g{giant_turns}", write)

@@ -7,6 +7,7 @@ under reparse.
 """
 
 import string
+import struct
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -374,6 +375,72 @@ def test_png_roundtrip_random_bitmaps(w, h, seed):
 
 # --- mp4 / mkv container walks + ADPCM decode (round 5) ------------------
 
+
+def _riff_file(chunks, cut):
+    """RIFF/WAVE framing around (id, body, size, pad) chunks: ``size``
+    None writes the true body length, an int writes a lying one; an odd
+    body gets its pad byte only when ``pad``; ``cut`` truncates."""
+    out = b"RIFF\x00\x00\x00\x00WAVE"
+    for cid, body, size, pad in chunks:
+        size = len(body) if size is None else size
+        out += cid + struct.pack("<I", size) + body + b"\x00" * (pad and len(body) & 1)
+    return out if cut is None else out[:cut]
+
+
+_wav_fmt = st.builds(
+    lambda tag_bits, ch, block, ext: (
+        struct.pack("<HHIIHH", tag_bits[0], ch, 8000, 8000 * block, block, tag_bits[1]) + ext
+    ),
+    st.sampled_from([(1, 16), (1, 8), (0x11, 4), (6, 8), (7, 8), (0xFFFE, 24)]),
+    st.sampled_from([1, 1, 2, 0]),
+    st.integers(min_value=0, max_value=40),
+    st.binary(max_size=6),  # cbSize / wSamplesPerBlock extension, or a short one
+)
+_chunk_size = st.one_of(
+    st.none(),  # the true body length
+    st.none(),
+    st.integers(min_value=0, max_value=80),
+    st.integers(min_value=0, max_value=2**32 - 1),
+)
+_fmt_chunk = st.tuples(
+    st.just(b"fmt "), st.one_of(_wav_fmt, st.binary(max_size=20)), _chunk_size, st.booleans()
+)
+_any_chunk = st.tuples(
+    st.sampled_from([b"fmt ", b"fact", b"data", b"LIST"]),
+    st.one_of(_wav_fmt, st.binary(max_size=64)),
+    _chunk_size,
+    st.booleans(),
+)
+_framed_riff = st.builds(
+    _riff_file,
+    st.tuples(_fmt_chunk, st.lists(_any_chunk, max_size=4)).map(lambda t: [t[0], *t[1]]),
+    st.one_of(st.none(), st.none(), st.integers(min_value=0, max_value=300)),
+)
+# GIF header, optional global color table, one image descriptor whose
+# LZW minimum code size is any byte, one data sub-block, then junk
+_gif_junk = st.builds(
+    lambda packed, colors, mcs, lzw, tail: (
+        b"GIF89a\x02\x00\x02\x00"
+        + bytes([packed, 0, 0])
+        + colors[: 3 * (2 << (packed & 7)) if packed & 0x80 else 0]
+        + b"\x2c\x00\x00\x00\x00\x02\x00\x02\x00\x00"
+        + bytes([mcs, len(lzw)])
+        + lzw
+        + tail
+    ),
+    st.sampled_from([0x00, 0x80, 0x81]),
+    st.binary(min_size=12, max_size=12),
+    st.one_of(st.just(2), st.integers(min_value=0, max_value=255)),
+    st.one_of(
+        # [clear, index, eoi] as 3-bit codes: a valid stream at size 2
+        st.integers(min_value=0, max_value=3).map(
+            lambda i: (4 + 8 * i + 320).to_bytes(2, "little")
+        ),
+        st.binary(max_size=40),
+    ),
+    st.binary(max_size=20).map(lambda b: b"\x00" + b),
+)
+
 _media_junk = st.one_of(
     st.binary(max_size=200),
     st.binary(max_size=150).map(lambda b: b"\x1a\x45\xdf\xa3" + b),  # EBML magic
@@ -382,6 +449,8 @@ _media_junk = st.one_of(
     ),
     st.binary(max_size=150).map(lambda b: b"\x00\x00\x00\x14ftypisom" + b),
     st.binary(max_size=150).map(lambda b: b"RIFF\x00\x01\x00\x00WAVE" + b),
+    _framed_riff,
+    _gif_junk,
     st.binary(max_size=150).map(lambda b: b"ID3\x03\x00\x00" + b),
     st.binary(max_size=150).map(lambda b: b"\xff\xfb" + b),
     st.binary(max_size=150).map(lambda b: b"\xff\xd8\xff\xc0\x00\x0b\x08" + b),  # SOF0
@@ -390,7 +459,7 @@ _media_junk = st.one_of(
 
 def _comparable(result):
     """decode_jpeg_gray returns (w, h, ndarray); arrays compare by bytes."""
-    if isinstance(result, tuple):
+    if isinstance(result, tuple) and hasattr(result[-1], "tobytes"):
         w, h, px = result
         return w, h, px.tobytes()
     return result
@@ -403,9 +472,15 @@ def test_media_parsers_are_total(data):
     raise on hostile bytes — malformed varints, lying sizes, truncated
     headers, bomb dimensions all return []/None, deterministically."""
     from nreadability_spark.operators.multimodal import (
+        decode_audio_meta,
         decode_g711_samples,
         decode_ima_adpcm_samples,
+        decode_image_meta,
         decode_jpeg_gray,
+        decode_pcm_samples,
+        decode_png_rgb8,
+        gif_frame_info,
+        gif_frame_pixels,
         mkv_frame_info,
         mp3_frame_info,
         mp4_frame_info,
@@ -415,9 +490,15 @@ def test_media_parsers_are_total(data):
         mkv_frame_info,
         mp4_frame_info,
         mp3_frame_info,
+        decode_audio_meta,
+        decode_pcm_samples,
         decode_ima_adpcm_samples,
         decode_g711_samples,
+        decode_image_meta,
+        decode_png_rgb8,
         decode_jpeg_gray,
+        gif_frame_info,
+        gif_frame_pixels,
     ):
         r1 = _comparable(fn(data))
         r2 = _comparable(fn(data))

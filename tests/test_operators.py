@@ -684,6 +684,46 @@ def test_jpeg_decode_caps_declared_dimensions():
     assert peak < 1 << 24
 
 
+def test_png_decode_bounds_inflate():
+    """A 1x1 PNG whose IDAT inflates to 64 MiB of zeros must return
+    None after inflating one byte past its declared size, and the same
+    IDAT under a 65535x65535 IHDR (above the pixel budget) without
+    inflating at all; a 1x1 PNG with a 1x1 IDAT decodes."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    from nreadability_spark.operators.multimodal import decode_png_rgb8
+
+    def png(w, h, idat):
+        def chunk(t, b):
+            return struct.pack(">I", len(b)) + t + b + struct.pack(">I", zlib.crc32(t + b))
+
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", idat)
+            + chunk(b"IEND", b"")
+        )
+
+    assert decode_png_rgb8(png(1, 1, zlib.compress(b"\x00\x01\x02\x03"))) == (
+        1, 1, [b"\x01\x02\x03"],
+    )
+    deflater = zlib.compressobj(9)
+    bomb = b"".join(deflater.compress(bytes(1 << 20)) for _ in range(64)) + deflater.flush()
+    assert len(bomb) < 1 << 17
+
+    tracemalloc.start()
+    try:
+        assert decode_png_rgb8(png(1, 1, bomb)) is None
+        assert decode_png_rgb8(png(65535, 65535, bomb)) is None
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 22
+
+
 def test_jpeg_pixel_stats_match_oracle(spark, duck):
     from nreadability_spark.operators import multimodal
 
@@ -752,6 +792,30 @@ def test_gif_lzw_decode_roundtrips_independent_encoder():
     # totality on junk (None or a truncated-but-valid prefix, no raise)
     for junk in (b"", b"\xff" * 8, b"\x00\x01\x02"):
         lzw_decode(2, junk)
+
+
+def test_gif_lzw_rejects_min_code_size_outside_spec():
+    """The LZW minimum code size is a byte from the file; the GIF spec
+    allows 2-8. A larger one must return None before the initial table
+    (one entry per color, 2**24 for a size of 24) is built."""
+    from nreadability_spark.operators.multimodal import (
+        gif_frame_info,
+        gif_frame_pixels,
+        lzw_decode,
+    )
+    from nreadability_spark.sources import synth
+
+    # clear code, then EOI, at the 10-bit width a min code size of 9 uses
+    assert lzw_decode(9, bytes([0x00, 0x06, 0x08])) is None
+    assert lzw_decode(1, b"\x00") is None
+
+    gif = bytearray(synth.gif_payload_for(4))
+    decoded = gif_frame_pixels(bytes(gif))
+    assert decoded
+    for _frame_idx, off, _delay in gif_frame_info(bytes(gif)):
+        assert not gif[off + 9] & 0x80  # no local color table: the LZW byte follows
+        gif[off + 10] = 24
+    assert gif_frame_pixels(bytes(gif)) == []
 
 
 def test_frame_pixels_match_oracle(spark, duck):
