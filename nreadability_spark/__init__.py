@@ -21,3 +21,9 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+# Every Python stage of the package imports it first, while a task's UDF
+# is being unpickled: one call site covers them all (session docstring).
+from nreadability_spark.session import install_zip_invalidation
+
+install_zip_invalidation()

@@ -141,13 +141,16 @@ def extract_transcripts(
     Arrow/runner overhead dominates). Pass None to disable when the
     input is already hash-distributed.
 
-    Each Python task also pays a fixed cost, measured at about
-    0.13-0.22 s per task on a 4-core box under Python 3.11: PySpark's
-    worker calls ``importlib.invalidate_caches()`` on every task, and on
-    Python 3.11 that makes zipimport re-read the 3.5 MB ``pyspark.zip``
-    directory once per cached importer (a dozen once ``pyspark.sql`` is
-    imported). That cost is why the second wave of tasks under the 2x
-    salt shows up in wall time on small inputs.
+    Each Python worker process pays a fixed cost once, about 0.11-0.21 s
+    on a 4-core box under Python 3.11: PySpark's worker calls
+    ``importlib.invalidate_caches()`` before every task, and on Python
+    < 3.13 that makes every cached zip importer re-read its archive's
+    directory. A pandas-UDF worker holds 16 over Spark's own archives:
+    twelve over ``pyspark.zip`` (about 10 ms each), two over the 15 MB
+    spark-core jar (about 42 ms each, half the cost) and two over py4j.
+    Importing this package in a worker makes those calls stat-keyed
+    (``session.install_zip_invalidation``), so only a worker's first
+    task pays, and the second wave of tasks under the 2x salt does not.
     """
     out = df.select("conv_id", "turn_idx", "role", "tool", "ts", "text")
     # native prefilter (reaches the scan); null/empty rows short-circuit

@@ -4,6 +4,7 @@ with the single-process core, and resume must be idempotent
 
 import pytest
 
+from nreadability_spark import session
 from nreadability_spark.core import extract
 from nreadability_spark.plans.extract_job import extract_transcripts, run_extract_job
 from nreadability_spark.sources import lineage
@@ -55,6 +56,49 @@ def test_spark_output_equals_local_core_per_turn(spark):
             conv_offset += len(got["content_text"])
             checked += 1
     assert checked > 100
+
+
+def test_workers_keep_zip_directories_across_tasks(spark):
+    """After extraction, a worker's zip importers re-read nothing on an
+    unchanged archive; the driver keeps the stdlib method."""
+    import importlib
+    import sys
+    import zipimport
+
+    import pandas as pd
+
+    extract_transcripts(transcripts_df(spark, 6, long_every=5)).collect()
+
+    def probe(batches):
+        # referencing ``session`` imports the package here, as a UDF does
+        stat_keyed = zipimport.zipimporter.invalidate_caches is session._stat_keyed_invalidate
+        importlib.invalidate_caches()  # stamps importers made during this task
+        seen = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda a: seen.append(a) or real(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        importers = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        for _ in batches:
+            yield pd.DataFrame(
+                {"stat_keyed": [stat_keyed], "reads": [len(seen)], "importers": [importers]}
+            )
+
+    rows = (
+        spark.range(4, numPartitions=4)
+        .mapInPandas(probe, "stat_keyed boolean, reads int, importers int")
+        .collect()
+    )
+    assert len(rows) == 4
+    for row in rows:
+        assert row["importers"] > 0  # Spark's jar and zips are on the worker's path
+        assert row["stat_keyed"] == (sys.version_info < (3, 13))
+        assert row["reads"] == 0
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
 
 
 def test_extract_job_write_and_resume_idempotent(spark, tmp_path):
