@@ -26,13 +26,38 @@ From-scratch equivalent of the reference's DOM layer, which is
     ``NReadabilityTranscoder.cs:768``, which is observable in the output
     (e.g. the glued ``<body>`` and ``<style>`` carry no attributes).
 
+Tokenization is pinned to this file. ``Tokenizer`` is a single-shot
+tokenizer for complete input whose event stream is that of CPython
+3.11.7's ``html.parser.HTMLParser(convert_charrefs=True)`` after
+``feed(s)`` + ``close()``, whatever the interpreter:
+
+- text and attribute values are unescaped with ``html.unescape`` (so
+  ``&copy=`` in an href becomes ``©=``); script/style content is raw
+  text up to ``</script>``/``</style>``, and an unterminated one is
+  dropped; title, textarea, iframe, xmp, noembed and noframes content
+  is ordinary markup;
+- comments end at the first ``--`` + optional whitespace + ``>``, so
+  ``<!-- c --!>`` is text; ``<!...>`` other than a doctype or a marked
+  section is a comment; ``<?...>`` and doctypes are dropped;
+- ``<![CDATA[x]]>`` yields the text ``x``, ``<![if x]>``-style marked
+  sections yield nothing, and any other status keyword (``<![foo[``)
+  raises the stdlib's ``AssertionError``;
+- an unterminated construct (``<!--``, ``<a``, ``</a``) becomes text up
+  to the next ``>`` or ``<``; ``</ p>`` closes ``p``; a NUL ends a tag
+  name.
+
+``tests/test_tokenizer.py`` checks the event stream against the stdlib
+where the interpreter carries the 3.11.7 sources, and pins the trees of
+these constructs on every interpreter.
+
 This file contains no Spark imports: it is shipped to Python workers and
 must import fast (all tables are module-level constants).
 """
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
+import re
+from html import unescape
 
 XML_WHITESPACE = " \t\r\n"
 
@@ -188,7 +213,10 @@ class Text(Node):
     __slots__ = ("value",)
 
     def __init__(self, value):
-        super().__init__()
+        # base initializer inlined here and in Element: node construction
+        # is the parser's hot path
+        self.parent = None
+        self._pos = -1
         self.value = value
 
     def to_html(self):
@@ -307,6 +335,38 @@ class _Container(Node):
                     stack.extend(node.children[::-1])
         return out
 
+    def first_element_by_tag_name(self, tag_name):
+        """The first of ``get_elements_by_tag_name(tag_name)``, or None,
+        without walking past it."""
+        tag_name = tag_name.lower()
+        stack = self.children[::-1]
+        while stack:
+            node = stack.pop()
+            if type(node) is Element:
+                if node.name == tag_name:
+                    return node
+                if node.children:
+                    stack.extend(node.children[::-1])
+        return None
+
+    def elements_by_tag_name(self):
+        """Every descendant element bucketed by name, each bucket in
+        document order: one walk that answers ``get_elements_by_tag_name``
+        for every name while the subtree does not change."""
+        index = {}
+        stack = self.children[::-1]
+        while stack:
+            node = stack.pop()
+            if type(node) is Element:
+                bucket = index.get(node.name)
+                if bucket is None:
+                    index[node.name] = [node]
+                else:
+                    bucket.append(node)
+                if node.children:
+                    stack.extend(node.children[::-1])
+        return index
+
     def get_children_by_tag_name(self, tag_name):
         tag_name = tag_name.lower()
         return [e for e in self.children if isinstance(e, Element) and e.name == tag_name]
@@ -318,19 +378,14 @@ class _Container(Node):
         """Concatenated descendant text (XElement.Value semantics:
         comments excluded)."""
         parts = []
-        stack = [iter(self.children)]
+        stack = self.children[::-1]
         while stack:
-            it = stack[-1]
-            advanced = False
-            for node in it:
-                if isinstance(node, Text):
-                    parts.append(node.value)
-                elif isinstance(node, Element):
-                    stack.append(iter(node.children))
-                    advanced = True
-                    break
-            if not advanced:
-                stack.pop()
+            node = stack.pop()
+            kind = type(node)
+            if kind is Text:
+                parts.append(node.value)
+            elif kind is Element and node.children:
+                stack.extend(node.children[::-1])
         return "".join(parts)
 
     # -- HTML fragments -------------------------------------------------------
@@ -345,7 +400,9 @@ class Element(_Container):
     __slots__ = ("name", "attrs")
 
     def __init__(self, name, attrs=None):
-        super().__init__()
+        self.parent = None
+        self._pos = -1
+        self.children = []
         self.name = name
         self.attrs = dict(attrs) if attrs else {}
 
@@ -402,7 +459,7 @@ class Element(_Container):
         run and produces exactly one Text node (or nothing if
         whitespace-only). The sibling-merge stage (NRT:985) funnels
         every merged paragraph's raw text through here, so skipping the
-        full HTMLParser for plain text is a major win on article-heavy
+        full tokenizer for plain text is a major win on article-heavy
         payloads."""
         self.remove_all()
         if html and "<" not in html and "&" not in html:
@@ -458,9 +515,17 @@ class Element(_Container):
 
 
 class Document(_Container):
-    """Document node; at most one Element child (the root), plus comments."""
+    """Document node; at most one Element child (the root), plus comments.
 
-    __slots__ = ()
+    ``parsed_text_length`` is the total length of the Text nodes the
+    parser built (0 for a document built any other way); later mutations
+    do not update it."""
+
+    __slots__ = ("parsed_text_length",)
+
+    def __init__(self):
+        super().__init__()
+        self.parsed_text_length = 0
 
     @property
     def root(self):
@@ -470,11 +535,11 @@ class Document(_Container):
         return None
 
     def get_body(self):
+        """The first ``body`` element in document order, or None."""
         root = self.root
         if root is None:
             return None
-        body_elements = root.get_elements_by_tag_name("body")
-        return body_elements[0] if body_elements else None
+        return root.first_element_by_tag_name("body")
 
     def get_title(self):
         """Document title (DomExtensions.cs:50-79): None when rootless,
@@ -482,17 +547,18 @@ class Document(_Container):
         root = self.root
         if root is None:
             return None
-        heads = root.get_elements_by_tag_name("head")
-        if not heads:
+        head = root.first_element_by_tag_name("head")
+        if head is None:
             return ""
-        titles = heads[0].get_children_by_tag_name("title")
+        titles = head.get_children_by_tag_name("title")
         if not titles:
             return ""
         return (titles[0].value or "").strip()
 
     def get_element_by_id(self, element_id):
-        matches = [e for e in self.descendants() if e.attrs.get("id") == element_id]
-        return matches[0] if len(matches) == 1 else (matches[0] if matches else None)
+        """The first element in document order whose id is
+        ``element_id``, or None."""
+        return next((e for e in self.descendants() if e.attrs.get("id") == element_id), None)
 
     def to_html(self):
         return self.inner_html()
@@ -614,29 +680,308 @@ def escape_attr(value):
     )
 
 
-# --- parser -------------------------------------------------------------------
+# --- tokenizer ------------------------------------------------------------------
+#
+# The patterns of CPython 3.11.7's ``html.parser`` and ``_markupbase``,
+# pinned here: tokenization is a function of this file, not of the
+# interpreter's patch level (later versions changed comment, RCDATA and
+# attribute-value handling).
+
+_STARTTAG_OPEN = re.compile(r"<[a-zA-Z]")
+_COMMENT_CLOSE = re.compile(r"--\s*>")
+_TAGFIND = re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
+_ATTRFIND = re.compile(
+    r"((?<=[\'\"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"
+    r"(\'[^\']*\'|\"[^\"]*\"|(?![\'\"])[^>\s]*))?(?:\s|/(?!>))*"
+)
+_LOCATE_STARTTAG_END = re.compile(
+    r"""
+  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
+  (?:[\s/]*                          # optional whitespace before attribute name
+    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
+      (?:\s*=+\s*                    # value indicator
+        (?:'[^']*'                   # LITA-enclosed value
+          |"[^"]*"                   # LIT-enclosed value
+          |(?!['"])[^>\s]*           # bare value
+         )
+        \s*                          # possibly followed by a space
+       )?(?:\s|/(?!>))*
+     )*
+   )?
+  \s*                                # trailing whitespace
+""",
+    re.VERBOSE,
+)
+_ENDTAGFIND = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+_DECLNAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_MARKED_SECTION_CLOSE = re.compile(r"]\s*]\s*>")
+_MS_MARKED_SECTION_CLOSE = re.compile(r"]\s*>")
+# script/style content is raw text up to the matching end tag
+_CDATA_CLOSE = {
+    name: re.compile(r"</\s*%s\s*>" % name, re.I) for name in ("script", "style")
+}
+# the fast path: an attribute-free start tag or a plain end tag, which
+# every general path above tokenizes to exactly this event
+_PLAIN_TAG = re.compile(r"<(?:([a-zA-Z][^\t\n\r\f />\x00]*)|/([a-zA-Z][-.a-zA-Z0-9:_]*))>")
+_LETTERS_EQ_SLASH = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
 
-class _TreeBuilder(HTMLParser):
+class Tokenizer:
+    """Single-shot HTML tokenizer for complete input.
+
+    The event stream is that of ``html.parser.HTMLParser(
+    convert_charrefs=True)`` under CPython 3.11.7 after ``feed(s)`` and
+    ``close()``, i.e. its ``goahead(end=1)``: the same callbacks with the
+    same arguments in the same order, including the recovery that turns
+    an unterminated construct into text and the ``AssertionError`` a
+    malformed marked section (``<![foo[``) raises. No line/offset
+    bookkeeping is kept.
+
+    Subclasses define every callback, with HTMLParser's names and
+    signatures: ``handle_starttag(tag, attrs)``,
+    ``handle_startendtag(tag, attrs)``, ``handle_endtag(tag)``,
+    ``handle_data(data)``, ``handle_comment(data)``, ``handle_decl(decl)``,
+    ``handle_pi(data)`` and ``unknown_decl(data)``.
+    """
+
+    def tokenize(self, rawdata):
+        self.rawdata = rawdata
+        self.cdata_elem = None  # "script"/"style" while inside its raw text
+        handle_data = self.handle_data
+        handle_starttag = self.handle_starttag
+        handle_endtag = self.handle_endtag
+        plain_tag = _PLAIN_TAG.match
+        find = rawdata.find
+        startswith = rawdata.startswith
+        n = len(rawdata)
+        i = 0
+        while i < n:
+            cdata_elem = self.cdata_elem
+            if cdata_elem is None:
+                j = find("<", i)
+                if j < 0:
+                    break  # trailing text, after the loop
+                if i < j:
+                    handle_data(unescape(rawdata[i:j]))
+                m = plain_tag(rawdata, j)
+                if m is not None:
+                    tag = m.group(1)
+                    if tag is None:
+                        handle_endtag(m.group(2).lower())
+                    else:
+                        tag = tag.lower()
+                        handle_starttag(tag, [])
+                        if tag in _CDATA_CLOSE:
+                            self.cdata_elem = tag
+                    i = m.end()
+                    continue
+            else:
+                m = _CDATA_CLOSE[cdata_elem].search(rawdata, i)
+                if m is None:
+                    break  # unterminated raw text is dropped
+                j = m.start()
+                if i < j:
+                    handle_data(rawdata[i:j])
+            i = j
+            if _STARTTAG_OPEN.match(rawdata, i):
+                k = self._parse_starttag(i)
+            elif startswith("</", i):
+                k = self._parse_endtag(i)
+            elif startswith("<!--", i):
+                k = self._parse_comment(i)
+            elif startswith("<?", i):
+                k = self._parse_pi(i)
+            elif startswith("<!", i):
+                k = self._parse_html_declaration(i)
+            elif i + 1 < n:
+                handle_data("<")
+                k = i + 1
+            else:
+                break
+            if k < 0:
+                # unterminated construct: text up to the next ">" (or "<")
+                k = find(">", i + 1)
+                if k < 0:
+                    k = find("<", i + 1)
+                    if k < 0:
+                        k = i + 1
+                else:
+                    k += 1
+                if self.cdata_elem is None:
+                    handle_data(unescape(rawdata[i:k]))
+                else:
+                    handle_data(rawdata[i:k])
+            i = k
+        if i < n and self.cdata_elem is None:
+            handle_data(unescape(rawdata[i:n]))
+
+    # -- the general paths; each returns the end of the construct, or -1
+    # when it is unterminated --------------------------------------------------
+
+    def _parse_starttag(self, i):
+        rawdata = self.rawdata
+        endpos = self._check_for_whole_start_tag(i)
+        if endpos < 0:
+            return endpos
+        attrs = []
+        match = _TAGFIND.match(rawdata, i + 1)
+        k = match.end()
+        tag = match.group(1).lower()
+        while k < endpos:
+            m = _ATTRFIND.match(rawdata, k)
+            if not m:
+                break
+            attrname, rest, attrvalue = m.group(1, 2, 3)
+            if not rest:
+                attrvalue = None
+            elif (
+                attrvalue[:1] == "'" == attrvalue[-1:]
+                or attrvalue[:1] == '"' == attrvalue[-1:]
+            ):
+                attrvalue = attrvalue[1:-1]
+            if attrvalue:
+                attrvalue = unescape(attrvalue)
+            attrs.append((attrname.lower(), attrvalue))
+            k = m.end()
+        end = rawdata[k:endpos].strip()
+        if end not in (">", "/>"):
+            self.handle_data(rawdata[i:endpos])
+            return endpos
+        if end.endswith("/>"):
+            self.handle_startendtag(tag, attrs)
+        else:
+            self.handle_starttag(tag, attrs)
+            if tag in _CDATA_CLOSE:
+                self.cdata_elem = tag
+        return endpos
+
+    def _check_for_whole_start_tag(self, i):
+        rawdata = self.rawdata
+        j = _LOCATE_STARTTAG_END.match(rawdata, i).end()
+        nxt = rawdata[j : j + 1]
+        if nxt == ">":
+            return j + 1
+        if nxt == "/":
+            return j + 2 if rawdata.startswith("/>", j) else -1
+        if nxt == "" or nxt in _LETTERS_EQ_SLASH:
+            return -1
+        return j if j > i else i + 1
+
+    def _parse_endtag(self, i):
+        rawdata = self.rawdata
+        gtpos = rawdata.find(">", i + 1)
+        if gtpos < 0:
+            return -1
+        gtpos += 1
+        match = _ENDTAGFIND.match(rawdata, i)
+        if not match:
+            if self.cdata_elem is not None:
+                self.handle_data(rawdata[i:gtpos])
+                return gtpos
+            namematch = _TAGFIND.match(rawdata, i + 2)
+            if not namematch:
+                if rawdata[i : i + 3] == "</>":
+                    return i + 3
+                return self._parse_bogus_comment(i)
+            # anything between the name and the ">" is ignored
+            self.handle_endtag(namematch.group(1).lower())
+            return rawdata.find(">", namematch.end()) + 1
+        elem = match.group(1).lower()
+        if self.cdata_elem is not None and elem != self.cdata_elem:
+            self.handle_data(rawdata[i:gtpos])
+            return gtpos
+        self.handle_endtag(elem)
+        self.cdata_elem = None
+        return gtpos
+
+    def _parse_comment(self, i):
+        match = _COMMENT_CLOSE.search(self.rawdata, i + 4)
+        if not match:
+            return -1
+        self.handle_comment(self.rawdata[i + 4 : match.start()])
+        return match.end()
+
+    def _parse_pi(self, i):
+        j = self.rawdata.find(">", i + 2)
+        if j < 0:
+            return -1
+        self.handle_pi(self.rawdata[i + 2 : j])
+        return j + 1
+
+    def _parse_html_declaration(self, i):
+        rawdata = self.rawdata
+        if rawdata[i : i + 3] == "<![":
+            return self._parse_marked_section(i)
+        if rawdata[i : i + 9].lower() == "<!doctype":
+            gtpos = rawdata.find(">", i + 9)
+            if gtpos == -1:
+                return -1
+            self.handle_decl(rawdata[i + 2 : gtpos])
+            return gtpos + 1
+        return self._parse_bogus_comment(i)
+
+    def _parse_bogus_comment(self, i):
+        pos = self.rawdata.find(">", i + 2)
+        if pos == -1:
+            return -1
+        self.handle_comment(self.rawdata[i + 2 : pos])
+        return pos + 1
+
+    def _parse_marked_section(self, i):
+        rawdata = self.rawdata
+        sect_name, j = self._scan_name(i + 3, i)
+        if j < 0:
+            return j
+        if sect_name in {"temp", "cdata", "ignore", "include", "rcdata"}:
+            match = _MARKED_SECTION_CLOSE.search(rawdata, i + 3)
+        elif sect_name in {"if", "else", "endif"}:
+            match = _MS_MARKED_SECTION_CLOSE.search(rawdata, i + 3)
+        else:
+            raise AssertionError(
+                "unknown status keyword %r in marked section" % rawdata[i + 3 : j]
+            )
+        if not match:
+            return -1
+        self.unknown_decl(rawdata[i + 3 : match.start()])
+        return match.end()
+
+    def _scan_name(self, i, declstartpos):
+        rawdata = self.rawdata
+        n = len(rawdata)
+        if i == n:
+            return None, -1
+        m = _DECLNAME.match(rawdata, i)
+        if m:
+            s = m.group()
+            if i + len(s) == n:
+                return None, -1  # the name runs to the end of the input
+            return s.strip().lower(), m.end()
+        raise AssertionError(
+            "expected name token at %r" % rawdata[declstartpos : declstartpos + 20]
+        )
+
+
+# --- tree builder -------------------------------------------------------------------
+
+
+class _TreeBuilder(Tokenizer):
     """Builds the Node tree with SGML-style implied-end-tag recovery."""
 
     def __init__(self):
-        super().__init__(convert_charrefs=True)
         self.document = Document()
         self.stack = [self.document]
         self._text_buf = []
-        self._found_root = False
 
     # -- text buffering (a contiguous run is one node; whitespace-only runs
     # are dropped, mirroring WhitespaceHandling.None) -------------------------
 
     def _flush_text(self):
-        if not self._text_buf:
-            return
-        data = "".join(self._text_buf)
-        self._text_buf.clear()
+        buf = self._text_buf
+        data = "".join(buf)
+        buf.clear()
         if not data.strip(XML_WHITESPACE):
             return  # whitespace-only text node: dropped
+        self.document.parsed_text_length += len(data)
         self._ensure_root()
         top = self.stack[-1]
         kids = top.children
@@ -666,7 +1011,6 @@ class _TreeBuilder(HTMLParser):
         root = Element("html")
         document.append(root)
         self.stack.append(root)
-        self._found_root = True
 
     # -- implied end tags -----------------------------------------------------------
 
@@ -700,47 +1044,53 @@ class _TreeBuilder(HTMLParser):
         if 0 < i < top:
             del stack[i + 1 :]  # nodes stay attached; only the open stack shrinks
 
-    # -- HTMLParser callbacks ------------------------------------------------------
+    # -- tokenizer callbacks ---------------------------------------------------------
 
-    def handle_starttag(self, tag, attrs):
-        self._flush_text()
-        if self.stack[-1] is self.document and tag == "html" and self.document.root is None:
+    def _open_root(self, tag, attrs):
+        """At document level: an <html> start tag before any root becomes
+        the root (True); any other tag opens or re-enters the root."""
+        if tag == "html" and self.document.root is None:
             element = Element(tag, _dedupe_attrs(attrs))
             self.document.append(element)
             self.stack.append(element)
-            self._found_root = True
-            return
+            return True
         self._ensure_root()
+        return False
+
+    def handle_starttag(self, tag, attrs):
+        if self._text_buf:
+            self._flush_text()
+        stack = self.stack
+        if len(stack) == 1 and self._open_root(tag, attrs):
+            return
         self._validate_content(tag)
-        element = Element(tag, _dedupe_attrs(attrs))
-        top = self.stack[-1]
+        element = Element(tag)
+        if attrs:
+            element.attrs = _dedupe_attrs(attrs)
+        top = stack[-1]
         element.parent = top
         element._pos = len(top.children)
         top.children.append(element)
         if tag not in VOID_ELEMENTS:
-            self.stack.append(element)
+            stack.append(element)
 
     def handle_startendtag(self, tag, attrs):
         # XML-style <tag/>: empty element, never pushed (SgmlReader IsEmpty)
-        self._flush_text()
-        if self.stack[-1] is self.document and tag == "html" and self.document.root is None:
-            element = Element(tag, _dedupe_attrs(attrs))
-            self.document.append(element)
-            self.stack.append(element)
-            self._found_root = True
+        if self._text_buf:
+            self._flush_text()
+        if len(self.stack) == 1 and self._open_root(tag, attrs):
             return
-        self._ensure_root()
         self._validate_content(tag)
         self.stack[-1].append(Element(tag, _dedupe_attrs(attrs)))
 
     def handle_endtag(self, tag):
-        self._flush_text()
+        if self._text_buf:
+            self._flush_text()
         if tag in VOID_ELEMENTS:
             return
         stack = self.stack
         for i in range(len(stack) - 1, 0, -1):
-            node = stack[i]
-            if isinstance(node, Element) and node.name == tag:
+            if stack[i].name == tag:
                 del stack[i:]
                 return
         # no matching open element: stray end tag, ignored
@@ -750,16 +1100,18 @@ class _TreeBuilder(HTMLParser):
             self._text_buf.append(data)
 
     def handle_comment(self, data):
-        self._flush_text()
+        if self._text_buf:
+            self._flush_text()
         # comments may appear at document level (before any root)
-        target = self.stack[-1]
-        target.append(Comment(data))
+        self.stack[-1].append(Comment(data))
 
     def handle_decl(self, decl):
-        self._flush_text()  # DOCTYPE etc.: dropped
+        if self._text_buf:
+            self._flush_text()  # DOCTYPE etc.: dropped
 
     def handle_pi(self, data):
-        self._flush_text()  # processing instructions: dropped
+        if self._text_buf:
+            self._flush_text()  # processing instructions: dropped
 
     def unknown_decl(self, data):
         # CDATA sections -> text content
@@ -767,8 +1119,8 @@ class _TreeBuilder(HTMLParser):
             self._text_buf.append(data[6:])
 
     def finish(self):
-        self.close()
-        self._flush_text()
+        if self._text_buf:
+            self._flush_text()
         del self.stack[1:]  # EOF auto-close
         return self.document
 
@@ -800,7 +1152,7 @@ def build_document(html_content):
             html_content = html_content[: bracket + 1]
 
     builder = _TreeBuilder()
-    builder.feed(html_content)
+    builder.tokenize(html_content)
     return builder.finish()
 
 

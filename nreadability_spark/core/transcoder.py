@@ -209,17 +209,14 @@ def transcode(html_content, url, opts):
 
 
 def _document_text_upper_bound(document):
-    """Total length of every Text node in the document — an upper bound
-    on the text length of any article pass 1 could produce (see the
+    """Total length of every Text node in the freshly parsed document,
+    counted by the parser as it built them — an upper bound on the text
+    length of any article pass 1 could produce (see the
     guaranteed-fallback short-circuit in ``transcode``). Comments are
     excluded to mirror Value semantics; a comment body can never become
     element text (parsed comment values cannot contain ``-->``, and no
     regex stage introduces one)."""
-    total = 0
-    for node in document.descendant_nodes():
-        if isinstance(node, Text):
-            total += len(node.value)
-    return total
+    return document.parsed_text_length
 
 
 def _article_spans(article):
@@ -284,15 +281,10 @@ class _Run:
         # style tags NRT:625-628). Removals can't nest inside each
         # other in any order-observable way: all three target sets are
         # disjoint by element name.
-        scripts, links, styles = [], [], []
-        for el in root_element.descendants():
-            name = el.name
-            if name == "script":
-                scripts.append(el)
-            elif name == "link":
-                links.append(el)
-            elif name == "style":
-                styles.append(el)
+        by_name = root_element.elements_by_tag_name()
+        scripts = by_name.get("script", ())
+        links = by_name.get("link", ())
+        styles = by_name.get("style", ())
 
         to_remove = []
         for script in scripts:
@@ -531,35 +523,32 @@ class _Run:
         self.clean_styles(article)
         self.kill_breaks(article)
 
-        self.clean(article, "form")
-        self.clean(article, "object")
-        self.clean(article, "h1")
+        # every stage below only removes, and reads its elements off one
+        # name index of the article, rebuilt after a stage removed some
+        index = _NameIndex(article)
+        self.clean(index, "form")
+        self.clean(index, "object")
+        self.clean(index, "h1")
 
         # a single h2 is probably a header, not a subheader (NRT:1035-1040)
-        if len(article.get_elements_by_tag_name("h2")) == 1:
-            self.clean(article, "h2")
+        if len(index.get("h2")) == 1:
+            self.clean(index, "h2")
 
-        self.clean(article, "iframe")
-        self.clean_headers(article)
+        self.clean(index, "iframe")
+        self.clean_headers(index)
 
         # order is semantics here (NRT:1045 comment)
-        self.clean_conditionally(article, "table")
-        self.clean_conditionally(article, "ul")
-        self.clean_conditionally(article, "div")
+        self.clean_conditionally(index, "table")
+        self.clean_conditionally(index, "ul")
+        self.clean_conditionally(index, "div")
 
         # remove empty paragraphs (NRT:1050-1073)
-        to_remove = []
-        for para in article.get_elements_by_tag_name("p"):
-            if len(self.get_inner_text(para, dont_normalize_spaces=False)) > 0:
-                continue
-            if para.get_elements_by_tag_name("img"):
-                continue
-            if para.get_elements_by_tag_name("embed"):
-                continue
-            if para.get_elements_by_tag_name("object"):
-                continue
-            to_remove.append(para)
-        _remove_elements(to_remove)
+        index.remove([
+            para
+            for para in index.get("p")
+            if not self.get_inner_text(para, dont_normalize_spaces=False)
+            and not _has_descendant_named(para, ("img", "embed", "object"))
+        ])
 
         # remove br's directly before paragraphs (NRT:1076)
         _serialized_regex_pass(
@@ -570,15 +559,17 @@ class _Run:
 
     def get_links_density(self, element):
         """NRT:1079-1095."""
-        inner_text = self.get_inner_text(element)
+        return self._links_density(self.get_inner_text(element), element, None)
+
+    def _links_density(self, inner_text, element, anchors):
+        """Links density of ``element`` given its inner text; ``anchors``
+        are its ``a`` descendants, found here when None."""
         length = len(inner_text)
         if length == 0:
             return 0.0
-        links_length = sum(
-            len(self.get_inner_text(anchor))
-            for anchor in element.get_elements_by_tag_name("a")
-        )
-        return links_length / length
+        if anchors is None:
+            anchors = element.get_elements_by_tag_name("a")
+        return sum(len(self.get_inner_text(anchor)) for anchor in anchors) / length
 
     def get_class_weight(self, element):
         """NRT:1105-1147: +-25 per positive/negative class and id match."""
@@ -621,27 +612,27 @@ class _Run:
         """NRT:1189-1192."""
         _serialized_regex_pass(element, [(regexes.KILL_BREAKS_RE, "<br />")], ("br",))
 
-    def clean(self, root_element, element_name):
+    def clean(self, index, element_name):
         """Remove descendants by tag, sparing youtube/vimeo embeds
         (NRT:1198-1219)."""
-        elements = list(root_element.get_elements_by_tag_name(element_name))
-        is_embed = element_name.lower() in ("object", "embed")
-        to_remove = []
-        for element in elements:
-            if is_embed and (
-                regexes.VIDEO_RE.search(element.get_attributes_string("|"))
-                or regexes.VIDEO_RE.search(element.inner_html())
-            ):
-                continue
-            to_remove.append(element)
-        _remove_elements(to_remove)
+        is_embed = element_name in ("object", "embed")
+        index.remove([
+            element
+            for element in index.get(element_name)
+            if not (
+                is_embed
+                and (
+                    regexes.VIDEO_RE.search(element.get_attributes_string("|"))
+                    or regexes.VIDEO_RE.search(element.inner_html())
+                )
+            )
+        ])
 
-    def clean_conditionally(self, root_element, element_name):
+    def clean_conditionally(self, index, element_name):
         """Remove 'fishy-looking' instances of a tag (NRT:1225-1283)."""
-        elements = list(root_element.get_elements_by_tag_name(element_name))
         to_remove = []
 
-        for element in elements:
+        for element in index.get(element_name):
             weight = self.get_class_weight(element)
             score = self._get_score(element)
 
@@ -652,25 +643,18 @@ class _Run:
             inner_text = self.get_inner_text(element)
 
             if get_segments_count(inner_text, ",") < MIN_COMMA_SEGMENTS:
-                ps_count = len(element.get_elements_by_tag_name("p"))
-                imgs_count = len(element.get_elements_by_tag_name("img"))
-                lis_count = len(element.get_elements_by_tag_name("li"))
-                inputs_count = len(element.get_elements_by_tag_name("input"))
-                embeds_count = sum(
-                    1
-                    for embed in element.get_elements_by_tag_name("embed")
-                    if not regexes.VIDEO_RE.search(embed.get_attribute_value("src", ""))
+                ps_count, imgs_count, lis_count, inputs_count, embeds_count, anchors = (
+                    _census(element)
                 )
-                links_density = self.get_links_density(element)
+                links_density = self._links_density(inner_text, element, anchors)
                 inner_text_length = len(inner_text)
-                name_lower = element_name.strip().lower()
 
                 remove = (
                     (imgs_count > ps_count)
                     or (
                         lis_count - LIS_COUNT_THRESHOLD > ps_count
-                        and name_lower != "ul"
-                        and name_lower != "ol"
+                        and element_name != "ul"
+                        and element_name != "ol"
                     )
                     or (inputs_count > ps_count // 3)
                     or (
@@ -697,37 +681,35 @@ class _Run:
                 if remove:
                     to_remove.append(element)
 
-        _remove_elements(to_remove)
+        index.remove(to_remove)
 
-    def clean_headers(self, element):
+    def clean_headers(self, index):
         """NRT:1288-1307."""
-        to_remove = []
-        for header_level in range(1, 7):
-            for header in element.get_elements_by_tag_name(f"h{header_level}"):
-                if (
-                    self.get_class_weight(header) < 0
-                    or self.get_links_density(header) > MAX_HEADER_LINKS_DENSITY
-                ):
-                    to_remove.append(header)
-        _remove_elements(to_remove)
+        index.remove([
+            header
+            for header_level in range(1, 7)
+            for header in index.get(f"h{header_level}")
+            if self.get_class_weight(header) < 0
+            or self.get_links_density(header) > MAX_HEADER_LINKS_DENSITY
+        ])
 
     def clean_styles(self, root_element):
-        """NRT:1312-1327: strip style attrs except on readability-styled."""
-
-        def visitor(element):
-            if READABILITY_STYLED_CSS_CLASS in element.get_class():
-                return
-            element.set_style(None)
-
-        traverse_elements(root_element, visitor)
+        """NRT:1312-1327: strip style attrs except on readability-styled.
+        Removing an attribute never changes the tree's shape, so a plain
+        walk serves."""
+        stack = [root_element]
+        while stack:
+            element = stack.pop()
+            if READABILITY_STYLED_CSS_CLASS not in element.get_class():
+                element.attrs.pop("style", None)
+            stack.extend(child for child in element.children if type(child) is Element)
 
     # -- glue (NRT:707-770) ----------------------------------------------------------------------------
 
     def glue_document(self, document, article_title_element, article_content_element):
         document_body = get_or_create_body(document)
 
-        heads = list(document.get_elements_by_tag_name("head"))
-        head_element = heads[0] if heads else None
+        head_element = document.first_element_by_tag_name("head")
         if head_element is None:
             head_element = Element("head")
             document_body.add_before_self(head_element)
@@ -877,7 +859,7 @@ class _Run:
 # --- module-level pure helpers ------------------------------------------------------
 
 
-def _parse_stable(element):
+def _parse_stable(element, regex_repl_pairs=(), trigger_prefixes=()):
     """True iff reparsing ``element``'s serialized inner HTML provably
     reproduces the subtree unchanged, i.e. ``parse(serialize(T)) == T``
     for the child forest T — the precondition for eliding the reference's
@@ -901,6 +883,11 @@ def _parse_stable(element):
       attaches pre-root comments to the temp Document, and
       ``set_inner_html`` copies only ``tmp.root.children`` — a real
       reparse drops them, so the elided path must not keep them.
+
+    Given a regex stage (``regex_repl_pairs``, ``trigger_prefixes``),
+    the same walk also answers False when the stage's regexes may match
+    (``_may_trigger`` on some node), so True means the whole serialize ->
+    substitute -> reparse stage is elidable.
     """
     for node in element.children:
         if isinstance(node, Comment):
@@ -912,14 +899,18 @@ def _parse_stable(element):
         parent = stack.pop()
         prev_was_text = False
         for node in parent.children:
-            if isinstance(node, Element):
+            if regex_repl_pairs and _may_trigger(node, regex_repl_pairs, trigger_prefixes):
+                return False
+            if type(node) is Element:
                 prev_was_text = False
-                if node.name in ("script", "style"):
+                name = node.name
+                if name in ("script", "style"):
                     return False
-                if parent is not element and not parse_preserves(parent.name, node.name):
+                if parent is not element and not parse_preserves(parent.name, name):
                     return False
-                stack.append(node)
-            elif isinstance(node, Text):
+                if node.children:
+                    stack.append(node)
+            elif type(node) is Text:
                 if prev_was_text or not node.value.strip(XML_WHITESPACE):
                     return False
                 prev_was_text = True
@@ -928,41 +919,49 @@ def _parse_stable(element):
     return True
 
 
-def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
-    """Run serialize -> regex-substitute -> SetInnerHtml, with both the
-    serialization and the reparse elided when they provably change
-    nothing.
+def _may_trigger(node, regex_repl_pairs, trigger_prefixes):
+    """True when ``node``'s own serialized form may hold a match of the
+    stage's regexes.
 
     Every regex in these stages requires a literal ``<br``/``<font``
     (etc.) in the serialized form. Text and attribute values serialize
     with ``<`` escaped, so only (a) elements whose name starts with a
-    trigger prefix and (b) raw comment bodies can produce a match; when
-    neither exists, the substitution is a no-op. Eliding still requires
-    the subtree to be a parser fixed point (``_parse_stable``) — the
-    reference's reparse itself can restructure (rawtext re-escaping,
-    implied end tags) even when the regexes match nothing. On the elided
-    path only RemoveAll's attribute clearing remains observable. Prefix
-    matching (not exact names) keeps the trigger scan a conservative
-    superset: an unknown ``<brx>`` element also matches ``<br[^>]*>``
-    and takes the slow path.
+    trigger prefix and (b) raw comment bodies can produce a match. Prefix
+    matching (not exact names) keeps the scan a conservative superset:
+    an unknown ``<brx>`` element also matches ``<br[^>]*>``."""
+    if type(node) is Element:
+        return node.name.startswith(trigger_prefixes)
+    if type(node) is Comment:
+        raw = node.to_html()
+        return any(rx.search(raw) for rx, _repl in regex_repl_pairs)
+    return False
+
+
+def _regex_may_match(element, regex_repl_pairs, trigger_prefixes):
+    """False when the stage's regexes provably match nothing in the
+    serialized subtree (``_may_trigger`` on every descendant)."""
+    return any(
+        _may_trigger(node, regex_repl_pairs, trigger_prefixes)
+        for node in element.descendant_nodes()
+    )
+
+
+def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
+    """Run serialize -> regex-substitute -> SetInnerHtml, with both the
+    serialization and the reparse elided when they provably change
+    nothing: the regexes cannot match (``_regex_may_match``) and the
+    subtree is a parser fixed point — the reference's reparse itself can
+    restructure (rawtext re-escaping, implied end tags) even when the
+    regexes match nothing. One walk (``_parse_stable`` given the stage)
+    decides both; on the elided path only RemoveAll's attribute clearing
+    remains observable.
     """
-    needs_pass = False
-    for node in element.descendant_nodes():
-        if isinstance(node, Element):
-            if node.name.startswith(trigger_prefixes):
-                needs_pass = True
-                break
-        elif isinstance(node, Comment):
-            raw = node.to_html()
-            if any(rx.search(raw) for rx, _repl in regex_repl_pairs):
-                needs_pass = True
-                break
-    if not needs_pass and _parse_stable(element):
+    if _parse_stable(element, regex_repl_pairs, trigger_prefixes):
         element.attrs.clear()
         return
     inner = element.inner_html()
     new_inner = inner
-    if needs_pass:
+    if _regex_may_match(element, regex_repl_pairs, trigger_prefixes):
         for rx, repl in regex_repl_pairs:
             new_inner = rx.sub(repl, new_inner)
     _rewrite_inner_html(element, inner, new_inner)
@@ -1045,6 +1044,70 @@ def get_or_create_body(document):
 def _remove_elements(elements):
     for element in elements:
         element.remove()
+
+
+class _NameIndex:
+    """``get(name)`` is ``root.get_elements_by_tag_name(name)`` for a run
+    of stages that change the subtree only through ``remove``: one walk
+    indexes every name, and a removal drops the index (the removed
+    subtrees' elements are in it), so the next ``get`` walks again."""
+
+    __slots__ = ("root", "_index")
+
+    def __init__(self, root):
+        self.root = root
+        self._index = None
+
+    def get(self, name):
+        if self._index is None:
+            self._index = self.root.elements_by_tag_name()
+        return self._index.get(name, ())
+
+    def remove(self, elements):
+        if elements:
+            _remove_elements(elements)
+            self._index = None
+
+
+def _census(element):
+    """What ``clean_conditionally`` counts below ``element``
+    (NRT:1247-1252), in one walk: the numbers of p, img, li and input
+    elements and of embeds whose src is not a video, and the anchors."""
+    ps = imgs = lis = inputs = embeds = 0
+    anchors = []
+    stack = element.children[::-1]
+    while stack:
+        node = stack.pop()
+        if type(node) is not Element:
+            continue
+        name = node.name
+        if name == "p":
+            ps += 1
+        elif name == "img":
+            imgs += 1
+        elif name == "li":
+            lis += 1
+        elif name == "input":
+            inputs += 1
+        elif name == "embed":
+            if not regexes.VIDEO_RE.search(node.attrs.get("src", "")):
+                embeds += 1
+        elif name == "a":
+            anchors.append(node)
+        if node.children:
+            stack.extend(node.children[::-1])
+    return ps, imgs, lis, inputs, embeds, anchors
+
+
+def _has_descendant_named(element, names):
+    stack = list(element.children)
+    while stack:
+        node = stack.pop()
+        if type(node) is Element:
+            if node.name in names:
+                return True
+            stack.extend(node.children)
+    return False
 
 
 def resolve_elements_urls(document, tag_name, attribute_name, url, transformer):

@@ -14,10 +14,13 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   UDF stage is decorrelated from conversation length by repartitioning
   on ``xxhash64(conv_id, turn_idx)`` — a 10k-turn conversation spreads
   over the whole cluster instead of pinning one task;
-- **one keyed shuffle**: only the conversation-offset window shuffles by
-  ``conv_id``; it runs on a *narrow* projection (key + ordering + one
-  length) and rejoins nothing — the wide payload travels once, into the
-  bucketed write (which needs conv_id partitioning anyway);
+- **one keyed shuffle before the write**: only the conversation-offset
+  window shuffles by ``conv_id``. It runs on the full extracted frame,
+  not a narrow projection, so the wide payload (``content_html``,
+  ``content_text``, ``spans``) crosses this exchange and then the
+  write's ``repartition(bucket)`` too: it travels twice. Since
+  ``bucket`` is a function of ``conv_id``, one exchange could serve
+  both; that is not done yet;
 - **AQE on**: runtime coalescing + skew splitting for both shuffles;
 - **Arrow batch cap**: large HTML rows x default 10k-row batches would
   be GiB-scale per worker; ``tune_session`` caps records per batch.

@@ -128,13 +128,39 @@ def test_leading_comment_elision_matches_reparse():
     ):
         fast = extract(soup)
         orig = T._parse_stable
-        T._parse_stable = lambda e: False
+        T._parse_stable = lambda *args: False
         try:
             slow = extract(soup)
         finally:
             T._parse_stable = orig
         assert fast.content_html == slow.content_html, soup
         assert fast.html == slow.html, soup
+
+
+def test_regex_stage_elision_matches_reparse():
+    """Deterministic shapes on which each serialized regex stage has
+    work to do (double <br> and <font> in the body, <br> runs and a <br>
+    before a <p> in the article, a <br> inside a comment): the one-walk
+    elision predicate must send every one of them down the reference's
+    serialize -> substitute -> reparse path."""
+    import nreadability_spark.core.transcoder as T
+
+    body = "Readable sentence, with commas, that scores well in the pass. " * 10
+    for soup in (
+        f"<html><body><div><p>{body}<br><br>{body}</p></div></body></html>",
+        f"<html><body><div><p>{body}<font color=red>{body}</font></p></div></body></html>",
+        f"<div><p>{body}<br> <br/>&nbsp;<br>{body}</p><br><p>{body}</p></div>",
+        f"<div><p>{body}<!--<br><br>--></p></div>",
+    ):
+        fast = extract(soup)
+        orig = T._parse_stable
+        T._parse_stable = lambda *args: False
+        try:
+            slow = extract(soup)
+        finally:
+            T._parse_stable = orig
+        assert fast.content_html == slow.content_html, soup[-80:]
+        assert fast.html == slow.html, soup[-80:]
 
 
 def _extract_without_shortcircuit(soup):
@@ -186,6 +212,9 @@ def test_fallback_shortcircuit_threshold_boundary():
             # unlikely-candidate class: pass 1 strips it, pass 2 keeps it
             f"<html><body><div class='sidebar comment'>{body}</div></body></html>",
             f"<html><head><title>T - t</title></head><body><p>{body}</p></body></html>",
+            # pass 1 is kept above the threshold and strips an unlikely
+            # candidate inside the article, which pass 2 would keep
+            f"<div><p>{body}</p><p class='sidebar'>{base}</p></div>",
         ):
             fast = extract(soup)
             slow = _extract_without_shortcircuit(soup)
@@ -194,6 +223,20 @@ def test_fallback_shortcircuit_threshold_boundary():
             assert fast.html == slow.html, soup[:80]
             assert fast.title == slow.title, soup[:80]
             assert fast.spans == slow.spans, soup[:80]
+
+
+@settings(max_examples=150, deadline=None)
+@given(_html_soup)
+def test_fallback_bound_is_the_parsed_text_length(soup):
+    """The short-circuit's bound is counted by the parser as it builds
+    Text nodes; it must equal the total Text length of the built tree."""
+    import nreadability_spark.core.transcoder as T
+    from nreadability_spark.core.dom import Text
+
+    document = build_document(soup)
+    assert T._document_text_upper_bound(document) == sum(
+        len(node.value) for node in document.descendant_nodes() if isinstance(node, Text)
+    )
 
 
 @settings(max_examples=150, deadline=None)
@@ -207,7 +250,7 @@ def test_reparse_elision_matches_always_reparse(soup):
 
     fast = extract(soup)
     orig = T._parse_stable
-    T._parse_stable = lambda e: False  # reference behaviour: always reparse
+    T._parse_stable = lambda *args: False  # reference behaviour: always reparse
     try:
         slow = extract(soup)
     finally:
