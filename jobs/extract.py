@@ -69,6 +69,7 @@ def main():
             n_buckets=args.buckets,
             include_html=not args.no_html,
             resume=not args.no_resume,
+            conv_offset_strategy=args.offset_strategy,
         )
     print(json.dumps(metrics))
     spark.stop()

@@ -62,11 +62,6 @@ def h60_sql(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 1, {_H60_HEX_CHARS})) AS BIGINT)"
 
 
-def minhash_term_sql(expr: str, i: int) -> str:
-    a, b = _mh_params(i)
-    return f"(({a} * ({h60_sql(expr)} % {P}) + {b}) % {P})"
-
-
 def minhash_term_from_h_sql(h_expr: str, i: int) -> str:
     a, b = _mh_params(i)
     return f"(({a} * {h_expr} + {b}) % {P})"

@@ -14,14 +14,13 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   UDF stage is decorrelated from conversation length by repartitioning
   on ``xxhash64(conv_id, turn_idx)`` — a 10k-turn conversation spreads
   over the whole cluster instead of pinning one task;
-- **one keyed shuffle before the write**: only the conversation-offset
-  window shuffles by ``conv_id``. It runs on the full extracted frame,
-  not a narrow projection, so the wide payload (``content_html``,
-  ``content_text``, ``spans``) crosses this exchange and then the
-  write's ``repartition(bucket)`` too: it travels twice. Since
-  ``bucket`` is a function of ``conv_id``, one exchange could serve
-  both; that is not done yet;
-- **AQE on**: runtime coalescing + skew splitting for both shuffles;
+- **one keyed shuffle after the UDF**: ``bucket`` is a function of
+  ``conv_id``, so ``run_extract_job`` runs the conversation-offset
+  window partitioned by ``(bucket, conv_id)`` right after the write's
+  ``repartition(bucket)``. The wide payload (``content_html``,
+  ``content_text``, ``spans``) crosses one exchange after the UDF, and
+  the window's sort is the one the write needs;
+- **AQE on**: runtime coalescing + skew splitting for both exchanges;
 - **Arrow batch cap**: large HTML rows x default 10k-row batches would
   be GiB-scale per worker; ``tune_session`` caps records per batch.
 """
@@ -31,7 +30,7 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import Observation, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nreadability_spark.operators.extract import extract_columns
@@ -62,6 +61,22 @@ def tune_session(spark, arrow_batch_rows=512):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark
+
+
+def with_conv_offsets(df, partition_cols=("conv_id",)):
+    """Cumulative char offset of each turn within its conversation: a
+    window over ``partition_cols``, which must hold ``conv_id``. A column
+    that is a function of ``conv_id`` may lead them, as the write's
+    ``bucket`` does, so the window reuses an exchange on that column."""
+    w = (
+        Window.partitionBy(*partition_cols)
+        .orderBy("turn_idx")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return df.withColumn(
+        "conv_offset",
+        F.coalesce(F.sum(F.length("content_text")).over(w), F.lit(0)).cast("long"),
+    )
 
 
 def with_conv_offsets_two_phase(df, block_size=1024, length_col="content_text"):
@@ -135,6 +150,11 @@ def extract_transcripts(
 ):
     """Transcripts DataFrame -> extracted DataFrame (lazy; no action).
 
+    ``with_conv_offset=False`` returns ``OUTPUT_COLUMNS`` without
+    ``conv_offset``: the front that ``run_extract_job`` windows on its
+    own exchange and that streams use as is (with ``salt_partitions``
+    None).
+
     ``salt_partitions``: explicit shuffle decorrelating payload skew
     before the UDF stage — long conversations and heavy payloads (150 KB
     pages cost ~50x a chat turn) otherwise pin whole tasks, and AQE
@@ -168,24 +188,14 @@ def extract_transcripts(
     out = extract_columns(out, options=options, include_html=include_html)
     out = out.drop("text")
 
-    if with_conv_offset and conv_offset_strategy == "two_phase":
+    if not with_conv_offset:
+        return out.select(*(c for c in OUTPUT_COLUMNS if c != "conv_offset"))
+    if conv_offset_strategy == "two_phase":
         # skew-proof offsets for pathological conversations (§4.3.2)
         out = with_conv_offsets_two_phase(out)
-    elif with_conv_offset:
-        # cumulative char offset of each turn within its conversation:
-        # the only conv_id-keyed shuffle in the job
-        w = (
-            Window.partitionBy("conv_id")
-            .orderBy("turn_idx")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        out = out.withColumn(
-            "conv_offset",
-            F.coalesce(F.sum(F.length("content_text")).over(w), F.lit(0)).cast("long"),
-        )
     else:
-        out = out.withColumn("conv_offset", F.lit(0).cast("long"))
-
+        # the only conv_id-keyed shuffle in the query
+        out = with_conv_offsets(out)
     return out.select(*OUTPUT_COLUMNS)
 
 
@@ -199,57 +209,61 @@ def run_extract_job(
     include_html=True,
     salt_partitions="auto",
     resume=True,
-    observe=True,
+    conv_offset_strategy="window",
 ):
     """Full job with lineage commits and optional resume.
 
+    After the UDF the rows take one exchange, ``repartition(bucket)``;
+    the conversation window runs over ``(bucket, conv_id)`` on top of
+    it, and its sort is the one the write needs. ``"two_phase"`` swaps
+    the window for ``with_conv_offsets_two_phase``, whose own exchanges
+    then come before the bucket repartition.
+
     Returns a dict with run metrics: ``rows`` written, wall seconds,
-    buckets written and, with ``observe``, counters observed on the rows
-    this run extracted: ``extracted_rows``, ``chars`` of content text
-    and ``errors``.
+    buckets written and counters observed on the rows this run
+    extracted: ``extracted_rows``, ``chars`` of content text and
+    ``errors``. They and the bucket manifests come from one observation
+    on the write's own pass.
     """
     tune_session(spark)
     run_id = run_id or uuid.uuid4().hex
 
-    df = source_df
-    skip_buckets = ()
-    if resume:
-        skip_buckets = tuple(sorted(lineage.committed_buckets(out_path)))
-        df = lineage.filter_uncommitted(df, out_path, n_buckets)
-        df = df.drop(lineage.BUCKET_COL)
-
+    df = lineage.filter_uncommitted(source_df, out_path, n_buckets) if resume else source_df
     extracted = extract_transcripts(
         df,
         options=options,
         include_html=include_html,
         salt_partitions=salt_partitions,
+        with_conv_offset=False,
     )
-
-    if observe:
-        # counted in the write's own pass, no second action; ``rows``
-        # comes from the committed manifests
-        observation = Observation("extract_metrics")
-        extracted = extracted.observe(
-            observation,
-            F.coalesce(F.sum(F.col("extracted").cast("long")), F.lit(0)).alias("extracted_rows"),
-            F.coalesce(F.sum(F.length("content_text").cast("long")), F.lit(0)).alias("chars"),
-            F.count(F.col("error")).alias("errors"),
+    out = lineage.with_bucket(extracted, n_buckets)
+    if conv_offset_strategy == "two_phase":
+        out = with_conv_offsets_two_phase(out).repartition(lineage.BUCKET_COL)
+    else:
+        out = with_conv_offsets(
+            out.repartition(lineage.BUCKET_COL), (lineage.BUCKET_COL, "conv_id")
         )
 
     t0 = time.monotonic()
-    stats = lineage.write_partitioned(
-        extracted, out_path, run_id, n_buckets, skip_buckets=skip_buckets
+    manifests, counters = lineage.write_partitioned(
+        out.select(*OUTPUT_COLUMNS, lineage.BUCKET_COL),
+        out_path,
+        run_id,
+        n_buckets,
+        counters=(
+            F.coalesce(F.sum(F.col("extracted").cast("long")), F.lit(0)).alias("extracted_rows"),
+            F.coalesce(F.sum(F.length("content_text").cast("long")), F.lit(0)).alias("chars"),
+            F.count(F.col("error")).alias("errors"),
+        ),
     )
     wall = time.monotonic() - t0
 
-    total_rows = sum(m["rows"] for m in stats.values())
-    metrics = {
+    total_rows = sum(m["rows"] for m in manifests.values())
+    return {
         "run_id": run_id,
-        "buckets_written": len(stats),
+        "buckets_written": len(manifests),
         "rows": total_rows,
         "wall_sec": round(wall, 3),
         "rows_per_sec": round(total_rows / wall, 1) if wall > 0 else None,
+        **counters,
     }
-    if observe:
-        metrics.update(observation.get)
-    return metrics

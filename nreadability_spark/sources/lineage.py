@@ -10,7 +10,9 @@ the same contract is implemented over partitioned Parquet:
   writes — the ``overwritePartitions`` analogue);
 - after each successful run, a manifest row per bucket is committed via
   atomic rename into ``_lineage/``, recording run_id / rows / chars /
-  wall time;
+  wall time. Rows and chars come from an ``observe`` on the written
+  frame, collected by the write's own pass: nothing reads the output
+  back;
 - resume = anti-join of source buckets against committed manifests: a
   restarted run recomputes only missing buckets, and re-executing a
   bucket is idempotent because extraction is deterministic and the
@@ -28,6 +30,7 @@ import tempfile
 import time
 from pathlib import Path
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 BUCKET_COL = "bucket"
@@ -63,50 +66,53 @@ def commit_bucket(out_path, bucket_id, manifest):
     os.replace(tmp, lineage / f"bucket={bucket_id}.json")
 
 
-def write_partitioned(
-    df, out_path, run_id, n_buckets, order_cols=("conv_id", "turn_idx"), skip_buckets=()
-):
-    """Write bucketed output with per-bucket lineage commits.
+def write_partitioned(df, out_path, run_id, n_buckets, counters=()):
+    """Write ``df``, which holds ``BUCKET_COL`` and should be partitioned
+    by it (one file per bucket), with a manifest commit per bucket.
 
-    Returns the per-bucket stats dict for the buckets THIS run produced
-    (``skip_buckets`` = buckets committed by earlier runs; their data and
-    manifests are left untouched). The write uses dynamic partition
-    overwrite, so re-running any subset of buckets is idempotent.
+    One observation on ``df`` counts each bucket's rows and content
+    chars, plus the aggregate columns ``counters``. Its metrics are
+    collected in the write's result stage, where Spark applies a task's
+    accumulator update once even if the task is retried. Returns the
+    manifests of the buckets this write produced, keyed by bucket, and
+    the observed ``counters``. Dynamic partition overwrite leaves every
+    other bucket's data and manifest untouched, so re-running any subset
+    of buckets is idempotent.
     """
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
+    observation = Observation("lineage")
+    per_bucket = []
+    for b in range(n_buckets):
+        in_b = F.col(BUCKET_COL) == b
+        per_bucket += [
+            F.sum(F.when(in_b, 1)).alias(f"_rows{b}"),
+            F.sum(F.when(in_b, F.length("content_text"))).alias(f"_chars{b}"),
+        ]
     t0 = time.monotonic()
-    bucketed = with_bucket(df, n_buckets)
     (
-        bucketed.repartition(F.col(BUCKET_COL))
-        .sortWithinPartitions(*order_cols)
+        df.observe(observation, *counters, *per_bucket)
+        .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx")
         .write.mode("overwrite")
         .partitionBy(BUCKET_COL)
         .parquet(str(out_path))
     )
     wall = time.monotonic() - t0
 
-    # stats of the freshly written buckets, from the committed files
-    back = spark.read.parquet(str(out_path))
-    if skip_buckets:
-        back = back.where(~F.col(BUCKET_COL).isin(list(skip_buckets)))
-    stats = (
-        back.groupBy(BUCKET_COL)
-        .agg(F.count("*").alias("rows"), F.sum(F.length("content_text")).alias("chars"))
-        .collect()
-    )
+    observed = dict(observation.get)
     out = {}
-    for row in stats:
-        manifest = {
-            "run_id": run_id,
-            "rows": row["rows"],
-            "chars": row["chars"],
-            "wall_sec_total_run": round(wall, 3),
-        }
-        commit_bucket(out_path, row[BUCKET_COL], manifest)
-        out[row[BUCKET_COL]] = manifest
-    return out
+    for b in range(n_buckets):
+        rows, chars = observed.pop(f"_rows{b}"), observed.pop(f"_chars{b}")
+        if rows:
+            out[b] = {
+                "run_id": run_id,
+                "rows": rows,
+                "chars": chars,
+                "wall_sec_total_run": round(wall, 3),
+            }
+            commit_bucket(out_path, b, out[b])
+    return out, observed
 
 
 def filter_uncommitted(df, out_path, n_buckets, conv_col="conv_id"):

@@ -27,10 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from nreadability_spark.functions import hashing
 from nreadability_spark.operators.textops import _norm_text
+from nreadability_spark.streaming.stateful import apply_with_state
 
 DEDUP_OUTPUT_SCHEMA = T.StructType(
     [
@@ -103,15 +103,10 @@ def dedup_stream(stream_df: DataFrame, idle_timeout_ms=None) -> DataFrame:
             "turn_idx",
         )
     )
-    timeout_conf = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return fp.groupBy("fp60").applyInPandasWithState(
+    return apply_with_state(
+        fp.groupBy("fp60"),
         _make_dedup_fn(idle_timeout_ms),
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
+        DEDUP_OUTPUT_SCHEMA,
+        DEDUP_STATE_SCHEMA,
+        idle_timeout_ms,
     )

@@ -6,10 +6,10 @@ into Structured Streaming unchanged:
     spark.readStream... -> extract_columns(...) -> writeStream
 
 Pieces:
-- ``extract_stream``: transcripts stream -> extracted stream. Identical
-  column contract to the batch job minus the conversation-offset window
-  (cumulative offsets over an unbounded stream require keyed state; see
-  note below).
+- ``extract_stream``: transcripts stream -> extracted stream. It is the
+  batch front, ``extract_transcripts`` without the salt and without the
+  conversation-offset window (cumulative offsets over an unbounded
+  stream require keyed state; see note below).
 - ``windowed_turn_metrics``: event-time windowed aggregation with a
   watermark — the late-data-tolerant operational metrics stream
   (turns/minute, extraction rate, error rate).
@@ -30,30 +30,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nreadability_spark.operators.extract import extract_columns
-
-STREAM_OUTPUT_COLUMNS = [
-    "conv_id",
-    "turn_idx",
-    "role",
-    "tool",
-    "ts",
-    "title",
-    "content_html",
-    "content_text",
-    "extracted",
-    "next_page_url",
-    "spans",
-    "error",
-]
+from nreadability_spark.plans.extract_job import extract_transcripts
 
 
 def extract_stream(stream_df: DataFrame, options=None, include_html=True) -> DataFrame:
     """Streaming transcripts -> streaming extraction results (lazy)."""
-    out = stream_df.select("conv_id", "turn_idx", "role", "tool", "ts", "text")
-    out = out.where(F.col("text").isNotNull() & (F.length("text") > 0))
-    out = extract_columns(out, options=options, include_html=include_html)
-    return out.drop("text").select(*STREAM_OUTPUT_COLUMNS)
+    return extract_transcripts(
+        stream_df,
+        options=options,
+        include_html=include_html,
+        salt_partitions=None,
+        with_conv_offset=False,
+    )
 
 
 def windowed_turn_metrics(

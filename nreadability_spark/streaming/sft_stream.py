@@ -26,9 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from nreadability_spark.operators.textops import SFT_END, SFT_ROLES
+from nreadability_spark.streaming.stateful import apply_with_state
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -112,19 +112,10 @@ def stream_sft_spans(stream_df: DataFrame, idle_timeout_ms=None) -> DataFrame:
     offset state is evicted after that period (bounding the store); a
     conversation resuming after eviction restarts at offset 0, the
     same documented trade-off as ``stream_conv_offsets``."""
-    timeout_conf = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return (
-        stream_df.select("user_id", "event_id", "ts", "event_type", "props")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_sft_fn(idle_timeout_ms),
-            outputStructType=SFT_OUTPUT_SCHEMA,
-            stateStructType=SFT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
+    return apply_with_state(
+        stream_df.select("user_id", "event_id", "ts", "event_type", "props").groupBy("user_id"),
+        _make_sft_fn(idle_timeout_ms),
+        SFT_OUTPUT_SCHEMA,
+        SFT_STATE_SCHEMA,
+        idle_timeout_ms,
     )

@@ -32,6 +32,24 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from nreadability_spark.streaming.extract_stream import extract_stream
 
+
+def apply_with_state(grouped, fn, output_schema, state_schema, idle_timeout_ms):
+    """``applyInPandasWithState`` in append mode, the shape every keyed
+    stream here uses: no state timeout, or with ``idle_timeout_ms`` a
+    processing-time timeout that ``fn`` sets on each group it touches."""
+    return grouped.applyInPandasWithState(
+        fn,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if idle_timeout_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
+    )
+
+
 OFFSET_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
@@ -109,21 +127,13 @@ def stream_conv_offsets(stream_df: DataFrame, options=None, idle_timeout_ms=None
     ``spark.sql.streaming.noDataMicroBatches.enabled`` is false when it
     starts (timeouts then fire only on batches that carry data)."""
     extracted = extract_stream(stream_df, options=options, include_html=False)
-    timeout_conf = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return (
+    return apply_with_state(
         extracted.select("conv_id", "turn_idx", "content_text", "extracted")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _make_offsets_fn(idle_timeout_ms),
-            outputStructType=OFFSET_OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
+        .groupBy("conv_id"),
+        _make_offsets_fn(idle_timeout_ms),
+        OFFSET_OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -245,19 +255,11 @@ def stream_conv_offsets_ordered(
     still ship exactly once.
     """
     extracted = extract_stream(stream_df, options=options, include_html=False)
-    timeout_conf = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return (
+    return apply_with_state(
         extracted.select("conv_id", "turn_idx", "content_text", "extracted")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _make_ordered_fn(max_disorder, idle_timeout_ms, flush_on_timeout),
-            outputStructType=OFFSET_OUTPUT_SCHEMA,
-            stateStructType=ORDERED_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
+        .groupBy("conv_id"),
+        _make_ordered_fn(max_disorder, idle_timeout_ms, flush_on_timeout),
+        OFFSET_OUTPUT_SCHEMA,
+        ORDERED_STATE_SCHEMA,
+        idle_timeout_ms,
     )

@@ -2,6 +2,8 @@
 with the single-process core, and resume must be idempotent
 (BASELINE.md per-turn invariant + resume rows)."""
 
+import re
+
 import pytest
 
 from nreadability_spark import session
@@ -164,6 +166,124 @@ def test_extract_job_reports_observed_counts(spark, tmp_path):
 
     again = run_extract_job(spark, source, out, n_buckets=4, include_html=False)
     assert {k: again[k] for k in table} == dict.fromkeys(table, 0)
+
+
+def _plans_of(spark, action):
+    """Run ``action``; return the physical plan description of each SQL
+    execution it started, as the SQL status store holds it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(30000)
+    before = store.executionsList().size()
+    action()
+    bus.waitUntilEmpty(30000)
+    executions = store.executionsList()
+    return [executions.apply(i).physicalPlanDescription() for i in range(before, executions.size())]
+
+
+def _plan_nodes(plan):
+    """(name, id) of each node in the plan's tree, top down; under AQE,
+    the current plan's tree, not the initial one."""
+    tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
+    nodes = []
+    for line in tree.splitlines()[1:]:
+        m = re.match(r"^[\s+\-*:|]*(\S.*?)\s+\((\d+)\)", line)
+        if m and not m.group(1).startswith("=="):
+            nodes.append((m.group(1), m.group(2)))
+    return nodes
+
+
+def test_extract_job_write_runs_one_exchange_after_the_udf(spark, tmp_path):
+    """The job's write plan: the salt and the bucket exchange, the
+    window's sort serving the write, the observation above the bucket
+    exchange and no job reading the output back."""
+    source = transcripts_df(spark, 8, long_every=5)
+    out = str(tmp_path / "out")
+    plans = _plans_of(
+        spark, lambda: run_extract_job(spark, source, out, n_buckets=4, include_html=False)
+    )
+    assert len(plans) == 1 and "InsertIntoHadoopFsRelationCommand" in plans[0]
+    assert "Scan parquet" not in plans[0]
+    nodes = _plan_nodes(plans[0])
+    names = [name for name, _ in nodes]
+    assert names.count("Exchange") == 2
+    assert names.count("Sort") == 1
+    top_exchange = nodes[names.index("Exchange")][1]
+    args = re.search(rf"\n\({top_exchange}\) Exchange\n(?:.*\n)*?Arguments: (.*)", plans[0])
+    assert args.group(1).startswith("hashpartitioning(bucket#")
+    assert names.index("CollectMetrics") < names.index("Window") < names.index("Exchange")
+
+    # the registry query keeps its own window exchange
+    plans = _plans_of(
+        spark,
+        lambda: extract_transcripts(source, include_html=False)
+        .write.format("noop")
+        .mode("overwrite")
+        .save(),
+    )
+    names = [name for name, _ in _plan_nodes(plans[-1])]
+    assert names.count("Exchange") == 2 and names.count("Window") == 1
+
+
+def _bucket_read_back(spark, out):
+    from pyspark.sql import functions as F
+
+    return {
+        r[lineage.BUCKET_COL]: {"rows": r["rows"], "chars": r["chars"]}
+        for r in spark.read.parquet(out)
+        .groupBy(lineage.BUCKET_COL)
+        .agg(F.count(F.lit(1)).alias("rows"), F.sum(F.length("content_text")).alias("chars"))
+        .collect()
+    }
+
+
+def _manifest_stats(out):
+    return {
+        b: {"rows": m["rows"], "chars": m["chars"]}
+        for b, m in lineage.committed_buckets(out).items()
+    }
+
+
+def test_manifests_equal_a_read_back_of_each_bucket(spark, tmp_path):
+    """Manifest rows and chars come from the write's observation; each
+    must equal its bucket directory read back, after a fresh run and
+    after a partial run plus a resume that commits only the rest."""
+    source = transcripts_df(spark, 12, long_every=5)
+    full = str(tmp_path / "full")
+    run_extract_job(spark, source, full, run_id="full", n_buckets=8, include_html=False)
+    assert _manifest_stats(full) == _bucket_read_back(spark, full)
+    assert {m["run_id"] for m in lineage.committed_buckets(full).values()} == {"full"}
+
+    resumed = str(tmp_path / "resumed")
+    partial = lineage.with_bucket(source, 8).where("bucket < 4").drop("bucket")
+    run_extract_job(spark, partial, resumed, run_id="partial", n_buckets=8, include_html=False)
+    first = lineage.committed_buckets(resumed)
+    run_extract_job(spark, source, resumed, run_id="resume", n_buckets=8, include_html=False)
+    manifests = lineage.committed_buckets(resumed)
+    assert {b: m for b, m in manifests.items() if m["run_id"] == "partial"} == first
+    new = {b for b, m in manifests.items() if m["run_id"] == "resume"}
+    assert new and new == set(manifests) - set(first)
+    assert _manifest_stats(resumed) == _bucket_read_back(spark, resumed) == _manifest_stats(full)
+
+
+def test_extract_job_two_phase_writes_the_same_table(spark, tmp_path):
+    """``conv_offset_strategy="two_phase"`` replaces the job's window and
+    writes the same rows, manifests, counters and one file per bucket."""
+    source = transcripts_df(spark, 12, long_every=5)
+    written = {}
+    for strategy in ("window", "two_phase"):
+        out = tmp_path / strategy
+        metrics = run_extract_job(
+            spark, source, str(out), n_buckets=4, include_html=False, conv_offset_strategy=strategy
+        )
+        written[strategy] = (
+            spark.read.parquet(str(out)).orderBy("conv_id", "turn_idx").collect(),
+            _manifest_stats(out),
+            {k: metrics[k] for k in ("rows", "buckets_written", "extracted_rows", "chars", "errors")},
+            sorted(f.parent.name for f in out.glob("bucket=*/*.parquet")),
+        )
+    assert written["two_phase"] == written["window"]
+    assert len(set(written["window"][3])) == len(written["window"][3]) == 4
 
 
 def test_hostile_rows_set_error_not_fail(spark):
