@@ -151,7 +151,8 @@ def _extract_query(source: Callable[[SparkSession, str], DataFrame]) -> Callable
 
 def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule pipeline end-to-end on a synthesized transcripts
-    table: deterministic generator -> Arrow-batched extraction UDF ->
+    table: deterministic generator (no fixture pages, so the corpus is
+    the same on every machine) -> Arrow-batched extraction UDF ->
     conversation window offsets (rows-only check; sf_dir sets scale)."""
     from nreadability_spark.plans.extract_job import extract_transcripts
     from nreadability_spark.sources.synth import transcripts_df

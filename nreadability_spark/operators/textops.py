@@ -1514,7 +1514,7 @@ def line_dedup(
     partial dedup) then one count per line_h. The tag-back join runs
     against only the BOILERPLATE keys (``doc_freq >= min_docs``), not
     the full frequency table — downstream needs just the boolean. That
-    changes the skew story materially (bench/skew_bench.py measured the
+    changes the skew story materially (docs/SKEW.md section B measured the
     previous shape's claim and found it false):
 
     - While the boiler-key table fits, AQE converts the join to a
@@ -1527,7 +1527,7 @@ def line_dedup(
       whose children are bare ENSURE_REQUIREMENTS shuffle stages, and
       the boiler side is ``filter(agg(...))`` running co-partitioned
       with no exchange under the join at all (measured in
-      bench/skew_bench.py: 0 skew splits at any threshold; an explicit
+      docs/SKEW.md section B: 0 skew splits at any threshold; an explicit
       ``repartition(line_h)`` doesn't help either — AQE exempts
       user-specified repartitions from skew/coalesce rewriting). The
       deterministic mitigation is ``boiler_salt=S``: the boiler side
@@ -2165,7 +2165,7 @@ def sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRECEDING..1 PRECEDING frame, total length via the partition
     frame), no UDF, no collect. A conversation that outgrows a single
     window task takes the same two-phase blocked-offsets escape hatch
-    the extraction job measures in bench/SKEW.md section C."""
+    the extraction job measures in docs/SKEW.md section C."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     role = F.element_at(
         F.array(*[F.lit(r) for r in SFT_ROLES]),

@@ -1166,7 +1166,7 @@ def _synth_version() -> str:
 
 def _materialize(scope: str, name: str, write) -> str:
     """Path of the cached corpus ``name`` under ``scope`` (an sf_dir,
-    keyed by its basename, or a bare key); on a miss ``write(tmp)``
+    keyed by its basename); on a miss ``write(tmp)``
     builds it at a tmp path that is then renamed into place."""
     path = os.path.join(
         _CACHE_ROOT, os.path.basename(scope.rstrip("/")), _synth_version(), name
@@ -1319,13 +1319,11 @@ def payload_for(conv_idx, turn_idx, fixtures):
     return _chat_text(conv_idx, turn_idx)
 
 
-def generate_conversation(conv_idx, fixtures, long_every=97, n_turns=None):
+def generate_conversation(conv_idx, fixtures, long_every=97):
     """All rows of one conversation, as plain tuples."""
     rows = []
-    if n_turns is None:
-        n_turns = _turn_count(conv_idx, long_every=long_every)
     conv_id = f"conv{conv_idx:08d}"
-    for turn_idx in range(n_turns):
+    for turn_idx in range(_turn_count(conv_idx, long_every=long_every)):
         role = _ROLES[turn_idx % 3]
         rows.append(
             (
@@ -1340,18 +1338,20 @@ def generate_conversation(conv_idx, fixtures, long_every=97, n_turns=None):
     return rows
 
 
-def transcripts_df(spark, n_convs, long_every=97, num_partitions=None):
+def transcripts_df(spark, n_convs, long_every=97, num_partitions=None, fixtures=()):
     """Distributed deterministic transcripts DataFrame.
 
     ``spark.range(n_convs)`` -> ``mapInPandas`` keeps generation parallel
     and memory-bounded (one conversation at a time per iterator step).
+    ``fixtures`` is the page set of the fixture payload class (e.g.
+    ``load_fixture_payloads()``); the default, none, keeps the corpus
+    the same on every machine.
     """
     import pandas as pd  # local import: keep module importable w/o pandas
 
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
     def gen(batches):
-        fixtures = load_fixture_payloads()
         columns = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
         for batch in batches:
             for conv_idx in batch["id"]:
@@ -1362,52 +1362,3 @@ def transcripts_df(spark, n_convs, long_every=97, num_partitions=None):
         spark.range(0, n_convs, numPartitions=num_partitions)
         .mapInPandas(gen, schema=TRANSCRIPTS_SCHEMA)
     )
-
-
-def transcripts_skewed_df(spark, n_convs, giant_turns=7000, num_partitions=None):
-    """DELIBERATELY skewed transcripts: conversation 0 carries
-    ``giant_turns`` turns (10^2-10^3x the ~7-turn median) while every
-    other conversation stays short — the planted hot key for the skew
-    benchmark (``bench/skew_bench.py``). Same deterministic payload mix
-    as ``transcripts_df``."""
-    import pandas as pd
-
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-
-    def gen(batches):
-        fixtures = load_fixture_payloads()
-        columns = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        for batch in batches:
-            for conv_idx in batch["id"]:
-                idx = int(conv_idx)
-                rows = generate_conversation(
-                    idx, fixtures, long_every=0,
-                    n_turns=giant_turns if idx == 0 else None,
-                )
-                yield pd.DataFrame(rows, columns=columns)
-
-    return (
-        spark.range(0, n_convs, numPartitions=num_partitions)
-        .mapInPandas(gen, schema=TRANSCRIPTS_SCHEMA)
-    )
-
-
-def materialize_skewed_transcripts(
-    spark, n_convs, giant_turns=7000, num_partitions=None
-) -> str:
-    """Materialized (cached) skewed-transcripts parquet for the skew
-    benchmark. Written with the generator's range partitioning, so the
-    giant conversation's rows land in ONE output file — a few MB, below
-    ``spark.sql.files.maxPartitionBytes``, hence ONE scan task on
-    re-read. That concentration is the point: it reproduces at bench
-    scale the hot-key layout a 100 TB crawl shows when one key's rows
-    arrive clustered (same crawl shard, same upstream partition), which
-    is exactly what the job's ``xxhash64(conv_id, turn_idx)`` salting
-    shuffle exists to undo."""
-
-    def write(tmp):
-        transcripts_skewed_df(
-            spark, n_convs, giant_turns=giant_turns, num_partitions=num_partitions
-        ).write.mode("overwrite").parquet(tmp)
-
-    return _materialize("skew", f"t{n_convs}_g{giant_turns}", write)

@@ -14,7 +14,7 @@ Pieces:
   watermark — the late-data-tolerant operational metrics stream
   (turns/minute, extraction rate, error rate).
 - ``run_stream_to_parquet``: ``foreachBatch`` sink writing each
-  micro-batch through the same bucketed-parquet path as the batch job;
+  micro-batch through the batch job's bucketed, manifested write;
   ``foreachBatch`` + deterministic extraction + per-bucket dynamic
   overwrite keeps restarts idempotent (the Iceberg MERGE analogue).
 
@@ -85,30 +85,22 @@ def run_stream_to_parquet(
     """Start the streaming extraction into bucketed parquet via
     foreachBatch; returns the StreamingQuery.
 
-    Output partitions are keyed by (batch, bucket): dynamic partition
-    overwrite then replaces exactly the partitions a micro-batch owns,
-    so a crashed-and-restarted stream (checkpoint + deterministic UDF)
-    rewrites its own partitions idempotently and never clobbers earlier
-    batches sharing a bucket — the sandbox analogue of foreachBatch +
-    Iceberg MERGE.
+    Micro-batch ``id`` goes to ``out_path/batch=<id>/`` through the batch
+    job's ``lineage.write_partitioned``: one file per bucket, ordered by
+    ``(conv_id, turn_idx)``, with a manifest per bucket. Dynamic
+    partition overwrite then replaces exactly the buckets a micro-batch
+    owns, so a crashed-and-restarted stream (checkpoint + deterministic
+    UDF) rewrites its own partitions idempotently and never clobbers
+    earlier batches sharing a bucket — the sandbox analogue of
+    foreachBatch + Iceberg MERGE.
     """
     from nreadability_spark.sources import lineage
 
     extracted = extract_stream(stream_df, options=options, include_html=include_html)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        bucketed = lineage.with_bucket(batch_df, n_buckets).withColumn(
-            "batch", F.lit(int(batch_id))
-        )
-        (
-            bucketed.repartition(F.col(lineage.BUCKET_COL))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy("batch", lineage.BUCKET_COL)
-            .parquet(str(out_path))
-        )
+        bucketed = lineage.with_bucket(batch_df, n_buckets).repartition(lineage.BUCKET_COL)
+        lineage.write_partitioned(bucketed, f"{out_path}/batch={batch_id}", run_id, n_buckets)
 
     writer = extracted.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

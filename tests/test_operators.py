@@ -2255,7 +2255,7 @@ def test_line_dedup_salted_equals_plain(spark):
     paths must produce identical rows (the salt spreads the hot key's
     probe rows over S join partitions by construction — the
     deterministic fallback where the AQE skew rule structurally cannot
-    fire, see bench/skew_bench.py)."""
+    fire, see docs/SKEW.md section B)."""
     from nreadability_spark.operators import textops
 
     plain = textops.line_dedup(spark, SF_DIR).collect()

@@ -27,15 +27,24 @@ def test_synth_generator_deterministic(spark):
     ]
 
 
+def test_load_fixture_payloads_reads_the_fixture_dir(monkeypatch, tmp_path):
+    from nreadability_spark.sources import synth
+
+    page = "<html><body><p>fixture page</p></body></html>"
+    (tmp_path / "SampleInput_01.html").write_text(page, encoding="utf-8")
+    monkeypatch.setattr(synth, "_FIXTURE_DIR", tmp_path)
+    assert load_fixture_payloads() == [page]
+
+
 def test_spark_output_equals_local_core_per_turn(spark):
-    source = transcripts_df(spark, N_CONVS, long_every=37)
+    fixtures = load_fixture_payloads()
+    source = transcripts_df(spark, N_CONVS, long_every=37, fixtures=fixtures)
     result = extract_transcripts(source, include_html=True)
     spark_rows = {
         (r["conv_id"], r["turn_idx"]): r
         for r in result.collect()
     }
 
-    fixtures = load_fixture_payloads()
     checked = 0
     offsets = {}
     for conv_idx in range(N_CONVS):

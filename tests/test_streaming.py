@@ -84,6 +84,41 @@ def test_stream_restart_is_idempotent(spark, tmp_path, transcript_files):
     assert first == second
 
 
+def test_stream_bucket_files_are_ordered_and_manifested(spark, tmp_path):
+    """Each micro-batch bucket file holds its rows in (conv_id, turn_idx)
+    order, and each batch commits a manifest per bucket it wrote. One
+    micro-batch over a multi-file source: its rows reach each bucket
+    from several scan tasks, interleaved."""
+    import pyarrow.parquet as pq
+
+    from nreadability_spark.sources import lineage
+    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA, transcripts_df
+    from nreadability_spark.streaming import run_stream_to_parquet
+
+    src = str(tmp_path / "src3")
+    transcripts_df(spark, 60, long_every=37).write.parquet(src)
+    out = tmp_path / "out3"
+    stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(src)
+    q = run_stream_to_parquet(
+        stream, str(out), str(tmp_path / "ckpt3"), include_html=False, n_buckets=4
+    )
+    q.awaitTermination(300)
+
+    files = sorted(out.glob("batch=*/bucket=*/*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t.column("conv_id").to_pylist(), t.column("turn_idx").to_pylist()))
+        assert keys == sorted(keys), f
+    for batch_dir in sorted(out.glob("batch=*")):
+        rows = {
+            int(d.name.split("=")[1]): sum(pq.read_metadata(f).num_rows for f in d.glob("*.parquet"))
+            for d in batch_dir.glob("bucket=*")
+        }
+        manifests = lineage.committed_buckets(batch_dir)
+        assert {b: m["rows"] for b, m in manifests.items()} == rows, batch_dir
+
+
 def test_windowed_metrics_by_event_time(spark, tmp_path, transcript_files):
     from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
     from nreadability_spark.streaming import windowed_turn_metrics

@@ -2,11 +2,16 @@
 and its oracle_sql() twin on DuckDB, compare row count, schema (column
 names) and exact values (columns sorted by name, rows sorted).
 
+Each query's line gives its Spark seconds (build + collect) and its
+DuckDB seconds apart; the last line is one JSON object with ``sf_dir``,
+the passed count, the failed names and the Spark seconds per query.
+
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import sys
@@ -28,19 +33,15 @@ def _canon(v):
     return repr(v)
 
 
-def compare(name, sdf, sql, con):
-    spark_rows = sdf.collect()
-    cols = sorted(sdf.columns)
-    duck = con.sql(sql)
-    duck_cols = sorted(duck.columns)
-    duck_rows = duck.fetchall()
+def compare(spark_cols, spark_rows, duck_cols, duck_rows):
     status = []
+    cols = sorted(spark_cols)
     if len(spark_rows) != len(duck_rows):
         status.append(f"ROWS {len(spark_rows)} vs {len(duck_rows)}")
-    if cols != duck_cols:
-        status.append(f"COLS {cols} vs {duck_cols}")
+    if cols != sorted(duck_cols):
+        status.append(f"COLS {cols} vs {sorted(duck_cols)}")
     if not status:
-        dmap = {c: i for i, c in enumerate(duck.columns)}
+        dmap = {c: i for i, c in enumerate(duck_cols)}
         s_sorted = sorted(
             tuple(_canon(r[c]) for c in cols) for r in spark_rows
         )
@@ -55,6 +56,24 @@ def compare(name, sdf, sql, con):
                     print(f"    spark={a}\n    duck ={b}")
                     break
     return status
+
+
+def check(fn, sql, spark, sf_dir, con):
+    """Run one query on Spark (build + collect, or count when it has no
+    oracle) and its oracle on DuckDB; returns (status, spark_s, duck_s,
+    note)."""
+    t0 = time.monotonic()
+    sdf = fn(spark, sf_dir)
+    if sql is None:
+        n = sdf.count()
+        return [], time.monotonic() - t0, 0.0, f"(rows-only: {n} rows)"
+    spark_rows = sdf.collect()
+    spark_s = time.monotonic() - t0
+    t0 = time.monotonic()
+    duck = con.sql(sql)
+    duck_cols, duck_rows = duck.columns, duck.fetchall()
+    duck_s = time.monotonic() - t0
+    return compare(sdf.columns, spark_rows, duck_cols, duck_rows), spark_s, duck_s, ""
 
 
 def main():
@@ -76,30 +95,28 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    failed = []
+    failed, spark_s = [], {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.monotonic()
         try:
-            sdf = fn(spark, sf_dir)
-            if name in oracles:
-                status = compare(name, sdf, oracles[name], con)
-            else:
-                n = sdf.count()
-                status = [] if n >= 0 else ["NEGATIVE ROWS?"]
-                status_info = f"(rows-only: {n} rows)"
+            status, s_s, d_s, note = check(fn, oracles.get(name), spark, sf_dir, con)
         except Exception as exc:  # noqa: BLE001
-            status = [f"EXCEPTION {type(exc).__name__}: {exc}"]
-        dt = time.monotonic() - t0
+            status, s_s, d_s, note = [f"EXCEPTION {type(exc).__name__}: {exc}"], 0.0, 0.0, ""
+        spark_s[name] = round(s_s, 3)
+        timing = f"[spark {s_s:.2f}s duckdb {d_s:.2f}s]"
         if status:
             failed.append(name)
-            print(f"FAIL {name} [{dt:.1f}s]: {'; '.join(status)[:2000]}")
+            print(f"FAIL {name} {timing}: {'; '.join(status)[:2000]}")
         else:
-            extra = status_info if name not in oracles else ""
-            print(f"ok   {name} [{dt:.1f}s] {extra}")
-    n_run = len(only) if only else len(qs)
-    print("\n%d/%d passed" % (n_run - len(failed), n_run))
+            print(f"ok   {name} {timing} {note}")
+    print("\n%d/%d passed" % (len(spark_s) - len(failed), len(spark_s)))
+    print(json.dumps({
+        "sf_dir": sf_dir,
+        "passed": len(spark_s) - len(failed),
+        "failed": failed,
+        "spark_s": spark_s,
+    }))
     spark.stop()
     sys.exit(1 if failed else 0)
 

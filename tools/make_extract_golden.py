@@ -141,16 +141,16 @@ def golden_mixed_media(pool, docs, out_dir):
 
 # --- transcripts -------------------------------------------------------
 
-def _conv_rows(args):
-    """One conversation end-to-end: generate -> filter empty/null (the
+def _conv_rows(conv_idx):
+    """One conversation end-to-end: generate (no fixture pages, as
+    ``__spark_entry__._extract_transcripts``) -> filter empty/null (the
     Spark job's native prefilter) -> extract -> running conv_offset."""
-    conv_idx, fixtures = args
     from nreadability_spark.sources.synth import generate_conversation
 
     out = []
     cum = 0
     for conv_id, turn_idx, _role, text, _tool, _ts in generate_conversation(
-        conv_idx, fixtures
+        conv_idx, ()
     ):
         if text is None or text == "":
             continue  # extract_transcripts prefilters these rows out
@@ -172,11 +172,8 @@ _TRANSCRIPT_SCHEMA = pa.schema(
 
 
 def golden_transcripts(pool, sf_dir, out_dir):
-    from nreadability_spark.sources.synth import load_fixture_payloads
-
     n_convs = 60 if "0.001" in sf_dir else 200  # __spark_entry__ rule
-    fixtures = load_fixture_payloads()
-    per_conv = pool.map(_conv_rows, [(i, fixtures) for i in range(n_convs)], chunksize=4)
+    per_conv = pool.map(_conv_rows, range(n_convs), chunksize=4)
     rows = [r for conv in per_conv for r in conv]
     _write(out_dir, "expected_extract_transcripts.parquet", rows, _TRANSCRIPT_SCHEMA)
 
