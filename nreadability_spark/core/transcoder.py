@@ -82,6 +82,16 @@ DOCTYPE = (
 
 _INT_RE = re.compile(r"^[+-]?\d+$")
 
+# ``\s`` in a str pattern matches exactly the 29 code points for which
+# ``str.isspace()`` holds: the space, the 9 other ASCII ones below and
+# the 19 outside ASCII (see ``normalize_spaces``)
+ASCII_SPACES_BUT_SPACE = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f"
+NON_ASCII_SPACES = (
+    "\x85\xa0\u1680\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009"
+    "\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+_OTHER_SPACES = ASCII_SPACES_BUT_SPACE + NON_ASCII_SPACES
+
 
 @dataclass(frozen=True)
 class SerializationOptions:
@@ -392,7 +402,7 @@ class _Run:
                 else:
                     # wrap stray text nodes in styled paragraphs (NRT:817-836)
                     def child_visitor(child_node):
-                        if not isinstance(child_node, Text) or len(self.get_inner_text(child_node)) == 0:
+                        if not isinstance(child_node, Text) or not (child_node.value or "").strip():
                             return
                         para = Element("p")
                         para.set_inner_html(child_node.value)  # raw value, ws preserved
@@ -546,7 +556,7 @@ class _Run:
         index.remove([
             para
             for para in index.get("p")
-            if not self.get_inner_text(para, dont_normalize_spaces=False)
+            if not (para.value or "").strip()
             and not _has_descendant_named(para, ("img", "embed", "object"))
         ])
 
@@ -591,8 +601,17 @@ class _Run:
         return weight
 
     def get_inner_text(self, node, dont_normalize_spaces=None):
-        """NRT:1149-1184: element/text value, trimmed; runs of whitespace
-        collapsed unless normalization is off."""
+        r"""NRT:1149-1184: element/text value, trimmed; runs of whitespace
+        collapsed unless normalization is off.
+
+        The collapse is ``NORMALIZE_SPACES_RE.sub(" ", text)`` with the
+        regex scan skipped when it cannot match (``normalize_spaces``).
+        ``\s{2,}`` needs two adjacent code points with ``isspace()``
+        (``\s`` of a str pattern is exactly that set), so a text in which
+        no two spaces are adjacent and no other whitespace character
+        occurs holds no match and comes back unchanged. Collapsing also
+        cannot empty a trimmed non-empty text, so a test for emptiness
+        needs only the trim."""
         if dont_normalize_spaces is None:
             dont_normalize_spaces = self.opts.dont_normalize_spaces
         if isinstance(node, (Element, Document)):
@@ -603,7 +622,7 @@ class _Run:
             raise TypeError(f"nodes of type {type(node).__name__} are not supported")
         result = (result or "").strip()
         if not dont_normalize_spaces:
-            return regexes.NORMALIZE_SPACES_RE.sub(" ", result)
+            return normalize_spaces(result)
         return result
 
     # -- cleaning ----------------------------------------------------------------------------------
@@ -1003,6 +1022,20 @@ def _div_inner_html_has_block_element(element):
             if regexes.DIV_TO_P_ELEMENTS_RE.search(node.to_html()):
                 return True
     return False
+
+
+def normalize_spaces(text):
+    """``NORMALIZE_SPACES_RE.sub(" ", text)``, returning ``text`` itself
+    without the scan when it holds neither two adjacent spaces nor any
+    other whitespace character (see ``_Run.get_inner_text``). ASCII text
+    is checked against the 9 other ASCII whitespace characters only;
+    ``isascii()`` reads a flag of the string."""
+    if "  " in text:
+        return regexes.NORMALIZE_SPACES_RE.sub(" ", text)
+    for ch in ASCII_SPACES_BUT_SPACE if text.isascii() else _OTHER_SPACES:
+        if ch in text:
+            return regexes.NORMALIZE_SPACES_RE.sub(" ", text)
+    return text
 
 
 def get_segments_count(s, ch):

@@ -1,14 +1,23 @@
 """Ports of NReadabilityTranscoderTests.cs unit tests (TT references)."""
 
+import re
+import sys
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from nreadability_spark.core.dom import Element, Text, build_document
+from nreadability_spark.core.regexes import NORMALIZE_SPACES_RE
 from nreadability_spark.core.transcoder import (
+    ASCII_SPACES_BUT_SPACE,
+    NON_ASCII_SPACES,
     ExtractionOptions,
     SerializationOptions,
     _Run,
     extract,
     get_user_style_class,
+    normalize_spaces,
     serialize_document,
 )
 
@@ -438,3 +447,43 @@ def test_div_li_rename_matches_reference_reparse():
     assert fast.html == ref.html
     # and the restructuring actually happened: no li left directly inside a p
     assert "<p><li>" not in fast.content_html
+
+
+# --- inner-text whitespace normalization without the regex scan ----------------------
+
+_ALL_CHARS = [chr(c) for c in range(sys.maxunicode + 1)]
+_SPACES = [c for c in _ALL_CHARS if c.isspace()]
+
+
+def test_regex_whitespace_class_is_exactly_isspace():
+    r"""``normalize_spaces`` skips the scan on the premise that ``\s`` of
+    a str pattern matches exactly the code points with ``isspace()``."""
+    ws = re.compile(r"\s")
+    assert [c for c in _ALL_CHARS if bool(ws.match(c)) != c.isspace()] == []
+    assert len(_SPACES) == 29
+
+
+def test_whitespace_constants_are_the_isspace_sets():
+    ascii_spaces = [c for c in _SPACES if c.isascii() and c != " "]
+    non_ascii_spaces = [c for c in _SPACES if not c.isascii()]
+    assert sorted(ASCII_SPACES_BUT_SPACE) == ascii_spaces
+    assert sorted(NON_ASCII_SPACES) == non_ascii_spaces
+    assert (len(ASCII_SPACES_BUT_SPACE), len(NON_ASCII_SPACES)) == (9, 19)
+
+
+_words = st.sampled_from(["a", "word", ".", ",", "<", "&", "\u00e9t\u00e9", "\u65e5\u672c", "\U0001f600"])
+_text_pieces = st.one_of(_words, st.sampled_from(_SPACES))
+_ascii_pieces = st.one_of(
+    st.sampled_from(["a", "word", ".", ",", "<", "&"]),
+    st.sampled_from([c for c in _SPACES if c.isascii()]),
+)
+
+
+@settings(max_examples=600, deadline=None)
+@given(st.one_of(st.lists(_text_pieces, max_size=30), st.lists(_ascii_pieces, max_size=30)))
+def test_normalize_spaces_matches_the_regex(pieces):
+    """Whitespace-heavy text, ASCII and not: the fast path returns what
+    the reference's collapse returns, trimmed or not."""
+    text = "".join(pieces)
+    for s in (text, text.strip()):
+        assert normalize_spaces(s) == NORMALIZE_SPACES_RE.sub(" ", s)

@@ -51,8 +51,10 @@ SOUPS = 6000
 ROUNDS = 12
 
 # the constructs on which tokenizers differ across Python versions, the
-# stdlib's error and recovery cases, and enough prose to pass the
-# 250-character fallback threshold
+# stdlib's error and recovery cases, every kind of whitespace the
+# inner-text normalization tells apart (ASCII and not, literal and as a
+# character reference), and enough prose to pass the 250-character
+# fallback threshold
 SOUP_PIECES = (
     "<p>", "</p>", "<div>", "</div>", "<div class='sidebar' id=x>", "<span>", "</span>",
     "<a href=\"/p?a=1&copy=2\">", "<a href='x'>", "</a>", "<b/>", "<br>", "<br/>", "<br><br>",
@@ -63,7 +65,8 @@ SOUP_PIECES = (
     "<html>", "</html>", "<head>", "<body>", "</body>", "<!-- c -->", "<!-- c --!>", "<!--",
     "<!>", "<!doctype html>", "<?pi>", "<![CDATA[x]]>", "<![if x]>", "<![endif]>", "<![foo[",
     "<a", "</a", "</ p>", "</>", "< p>", "<a/b>", "<a\x00b>", "\x00", "&amp;", "&copy", "&#65;",
-    "&bogus;", "&", "<", ">", "='", '"', " ", "\n",
+    "&bogus;", "&", "<", ">", "='", '"', " ", "\n", "\t", "\r\n", "\x0b", "\x0c", "\x1c", "\xa0",
+    "\u3000", "&nbsp;", "&#9;", "Größe",
     "Readable sentence, with commas, that scores well in the candidate pass. ",
     "More article text, plenty of commas, excellent content quality here. ",
 )
