@@ -157,6 +157,9 @@ def extract_columns(df, text_col="text", options=None, include_html=True, result
     """
     udf = make_extract_udf(options=options, include_html=include_html)
     out = df.withColumn(result_col, udf(F.col(text_col)))
-    for field in EXTRACT_RESULT_SCHEMA.names:
-        out = out.withColumn(field, F.col(f"{result_col}.{field}"))
+    # one analysis for all fields; like withColumn, a field named after
+    # an existing column replaces it
+    out = out.withColumns(
+        {field: F.col(f"{result_col}.{field}") for field in EXTRACT_RESULT_SCHEMA.names}
+    )
     return out.drop(result_col)

@@ -20,7 +20,11 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   ``repartition(bucket)``. The wide payload (``content_html``,
   ``content_text``, ``spans``) crosses one exchange after the UDF, and
   the window's sort is the one the write needs;
-- **AQE on**: runtime coalescing + skew splitting for both exchanges;
+- **AQE on**: it coalesces the small partitions of the bucket
+  exchange (a ``repartition`` by column, no count); the salt exchange
+  has an explicit count, which AQE keeps. AQE splits skewed partitions
+  only for joins and ``rebalance``, never for a ``repartition``, so the
+  salt above stays the skew remedy;
 - **Arrow batch cap**: large HTML rows x default 10k-row batches would
   be GiB-scale per worker; ``tune_session`` caps records per batch.
 """
