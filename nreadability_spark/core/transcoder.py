@@ -878,7 +878,7 @@ class _Run:
 # --- module-level pure helpers ------------------------------------------------------
 
 
-def _parse_stable(element, regex_repl_pairs=(), trigger_prefixes=()):
+def _parse_stable(element, trigger_prefixes=()):
     """True iff reparsing ``element``'s serialized inner HTML provably
     reproduces the subtree unchanged, i.e. ``parse(serialize(T)) == T``
     for the child forest T — the precondition for eliding the reference's
@@ -903,10 +903,10 @@ def _parse_stable(element, regex_repl_pairs=(), trigger_prefixes=()):
       ``set_inner_html`` copies only ``tmp.root.children`` — a real
       reparse drops them, so the elided path must not keep them.
 
-    Given a regex stage (``regex_repl_pairs``, ``trigger_prefixes``),
-    the same walk also answers False when the stage's regexes may match
-    (``_may_trigger`` on some node), so True means the whole serialize ->
-    substitute -> reparse stage is elidable.
+    Given a regex stage's ``trigger_prefixes``, the same walk also
+    answers False when the stage's regexes may match (``_may_trigger`` on
+    some node), so True means the whole serialize -> substitute ->
+    reparse stage is elidable.
     """
     for node in element.children:
         if isinstance(node, Comment):
@@ -918,7 +918,7 @@ def _parse_stable(element, regex_repl_pairs=(), trigger_prefixes=()):
         parent = stack.pop()
         prev_was_text = False
         for node in parent.children:
-            if regex_repl_pairs and _may_trigger(node, regex_repl_pairs, trigger_prefixes):
+            if trigger_prefixes and _may_trigger(node, trigger_prefixes):
                 return False
             if type(node) is Element:
                 prev_was_text = False
@@ -938,29 +938,34 @@ def _parse_stable(element, regex_repl_pairs=(), trigger_prefixes=()):
     return True
 
 
-def _may_trigger(node, regex_repl_pairs, trigger_prefixes):
-    """True when ``node``'s own serialized form may hold a match of the
-    stage's regexes.
+def _may_trigger(node, trigger_prefixes):
+    """True when a match of the stage's regexes may start in ``node``'s
+    own serialized form.
 
-    Every regex in these stages requires a literal ``<br``/``<font``
-    (etc.) in the serialized form. Text and attribute values serialize
-    with ``<`` escaped, so only (a) elements whose name starts with a
-    trigger prefix and (b) raw comment bodies can produce a match. Prefix
+    Every match of these stages starts with ``<`` or ``</`` and a
+    trigger prefix (``<br``, ``<font``, ``</font``; two of the regexes
+    ignore case, and for these letters only ASCII case folds). Text and
+    attribute values serialize with
+    ``<`` escaped, so a match can start only (a) at an element whose
+    name starts with a trigger prefix or (b) inside a raw comment. Prefix
     matching (not exact names) keeps the scan a conservative superset:
-    an unknown ``<brx>`` element also matches ``<br[^>]*>``."""
+    an unknown ``<brx>`` element also matches ``<br[^>]*>``. A comment is
+    tested for the prefixes, not against the regexes, because the match
+    may end past it: ``<!--<br--><p>`` holds ``<br--><p``, a
+    ``BREAK_BEFORE_PARAGRAPH_RE`` match."""
     if type(node) is Element:
         return node.name.startswith(trigger_prefixes)
     if type(node) is Comment:
-        raw = node.to_html()
-        return any(rx.search(raw) for rx, _repl in regex_repl_pairs)
+        raw = node.to_html().lower()
+        return any("<" + p in raw or "</" + p in raw for p in trigger_prefixes)
     return False
 
 
-def _regex_may_match(element, regex_repl_pairs, trigger_prefixes):
+def _regex_may_match(element, trigger_prefixes):
     """False when the stage's regexes provably match nothing in the
     serialized subtree (``_may_trigger`` on every descendant)."""
     return any(
-        _may_trigger(node, regex_repl_pairs, trigger_prefixes)
+        _may_trigger(node, trigger_prefixes)
         for node in element.descendant_nodes()
     )
 
@@ -975,12 +980,12 @@ def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
     decides both; on the elided path only RemoveAll's attribute clearing
     remains observable.
     """
-    if _parse_stable(element, regex_repl_pairs, trigger_prefixes):
+    if _parse_stable(element, trigger_prefixes):
         element.attrs.clear()
         return
     inner = element.inner_html()
     new_inner = inner
-    if _regex_may_match(element, regex_repl_pairs, trigger_prefixes):
+    if _regex_may_match(element, trigger_prefixes):
         for rx, repl in regex_repl_pairs:
             new_inner = rx.sub(repl, new_inner)
     _rewrite_inner_html(element, inner, new_inner)

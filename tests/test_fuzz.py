@@ -163,6 +163,37 @@ def test_regex_stage_elision_matches_reparse():
         assert fast.html == slow.html, soup[-80:]
 
 
+def test_comment_that_starts_a_regex_match_triggers_the_stage():
+    """A match may start in a comment and end past it: in
+    ``<!--<br--><p>`` the comment's ``<br-->`` and the next ``<p`` form a
+    ``BREAK_BEFORE_PARAGRAPH_RE`` match. A match may also start at an end
+    tag in any letter case (``<!--</FONT>-->``). The elided path must
+    agree with the reference's serialize -> substitute -> reparse, taken
+    here for every stage."""
+    import nreadability_spark.core.transcoder as T
+
+    def unelided(soup):
+        orig = T._parse_stable, T._regex_may_match
+        T._parse_stable = lambda *args: False
+        T._regex_may_match = lambda *args: True
+        try:
+            return extract(soup)
+        finally:
+            T._parse_stable, T._regex_may_match = orig
+
+    words = "word, " * 60
+    body = "Readable sentence, with commas, that scores well in the pass. " * 10
+    for soup in (
+        f"<html><body><div><p>{words}</p><!--<br--><p>tail text here.</p></div></body></html>",
+        f"<html><body><p>{body}<!--</font>-->{body}</p></body></html>",
+        f"<html><body><p>{body}<!--</FONT>-->{body}</p></body></html>",
+    ):
+        assert extract(soup) == unelided(soup), soup[-80:]
+    # the reference's reparse turns the unterminated <!--<p> into text
+    soup = f"<html><body><div><p>{words}</p><!--<br--><p>tail text here.</p></div></body></html>"
+    assert extract(soup).content_text.endswith("word, <!--<p>tail text here.")
+
+
 def _extract_without_shortcircuit(soup):
     """Run extract with the guaranteed-fallback short-circuit disabled,
     i.e. the literal NRT:313-326 two-pass algorithm."""
