@@ -945,14 +945,14 @@ def _may_trigger(node, trigger_prefixes):
     Every match of these stages starts with ``<`` or ``</`` and a
     trigger prefix (``<br``, ``<font``, ``</font``; two of the regexes
     ignore case, and for these letters only ASCII case folds). Text and
-    attribute values serialize with
-    ``<`` escaped, so a match can start only (a) at an element whose
-    name starts with a trigger prefix or (b) inside a raw comment. Prefix
-    matching (not exact names) keeps the scan a conservative superset:
-    an unknown ``<brx>`` element also matches ``<br[^>]*>``. A comment is
-    tested for the prefixes, not against the regexes, because the match
-    may end past it: ``<!--<br--><p>`` holds ``<br--><p``, a
-    ``BREAK_BEFORE_PARAGRAPH_RE`` match."""
+    attribute values serialize with ``<`` escaped, so a match can start
+    only (a) at an element whose name starts with a trigger prefix or
+    (b) inside a raw comment. Prefix matching (not exact names) keeps the
+    scan a conservative superset: an unknown ``<brx>`` element also
+    matches ``<br[^>]*>``. A comment is tested for the prefixes, not
+    against the regexes, because the match may end past it:
+    ``<!--<br--><p>`` holds ``<br--><p``, a ``BREAK_BEFORE_PARAGRAPH_RE``
+    match."""
     if type(node) is Element:
         return node.name.startswith(trigger_prefixes)
     if type(node) is Comment:
