@@ -104,11 +104,11 @@ def _mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc) — one extraction UDF sniffs the payload and routes HTML to the
     NReadability core, PDF to the layout parser (``core/pdf.py``). The
     mixed corpus is materialized ONCE to a cache parquet
-    (``sources.synth.materialize_mixed``): the measured query is a scan
+    (``sources.synth.mixed_corpus``): the measured query is a scan
     + extraction, not input synthesis. Carries a ``kind`` column."""
-    from nreadability_spark.sources.synth import materialize_mixed
+    from nreadability_spark.sources.synth import mixed_corpus
 
-    return spark.read.parquet(materialize_mixed(spark, sf_dir))
+    return mixed_corpus(spark, sf_dir)
 
 
 # doc-keyed extraction queries: name -> source of (doc_id, text[, kind])

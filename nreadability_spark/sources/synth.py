@@ -1148,6 +1148,28 @@ def image_payload_for(doc_id: int) -> bytes:
 # pipeline has, where the input table already exists. Every
 # (doc_id, payload) media corpus is one ``payload_corpus`` call, named
 # after its ``*_payload_for`` builder.
+#
+# Each parquet cache has one schema constant that its writer and its
+# reader both use, so a query that scans a cache launches no
+# footer-reading schema-discovery job. This is exact: the cache path is
+# keyed on ``_synth_version()``, the hash of this file, so editing a
+# constant moves every cache and a reader never meets a file written
+# under another schema; and parquet columns resolve by name.
+
+PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
+MIXED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("kind", T.StringType(), True),
+        T.StructField("text", T.StringType(), True),
+    ]
+)
 
 _CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -1186,7 +1208,14 @@ def _materialize(scope: str, name: str, write) -> str:
 def payload_corpus(spark, sf_dir, payload_for) -> DataFrame:
     """(doc_id, payload binary) rows, ``payload_for(doc_id)`` for each
     document at ``sf_dir``, scanned from a parquet cached under
-    ``payload_for.__name__``."""
+    ``payload_for.__name__``.
+
+    The cache is written and read with ``PAYLOAD_SCHEMA``, so the scan
+    skips schema inference and building a query over it launches no
+    Spark job. Skipping is exact: the cache path moves with any edit to
+    this file (``_synth_version``), the constant included, so the file
+    read was written with this schema, and parquet resolves columns by
+    name."""
     import pandas as pd
 
     def gen(batches):
@@ -1196,10 +1225,11 @@ def payload_corpus(spark, sf_dir, payload_for) -> DataFrame:
 
     def write(tmp):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-        payloads = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+        payloads = docs.mapInPandas(gen, schema=PAYLOAD_SCHEMA)
         payloads.write.mode("overwrite").parquet(tmp)
 
-    return spark.read.parquet(_materialize(sf_dir, payload_for.__name__, write))
+    path = _materialize(sf_dir, payload_for.__name__, write)
+    return spark.read.schema(PAYLOAD_SCHEMA).parquet(path)
 
 
 def materialize_warc(spark, sf_dir, n_files=8) -> str:
@@ -1274,9 +1304,13 @@ def mixed_payload_for(doc_id: int, text: str) -> tuple[str, str]:
     )
 
 
-def materialize_mixed(spark, sf_dir) -> str:
-    """(doc_id, kind, text) mixed html/pdf corpus; returns the cached
-    parquet path."""
+def mixed_corpus(spark, sf_dir) -> DataFrame:
+    """(doc_id, kind, text) mixed html/pdf corpus, ``mixed_payload_for``
+    of each document at ``sf_dir``, scanned from a cached parquet.
+
+    Written and read with ``MIXED_SCHEMA``, so the scan launches no
+    schema-discovery job; exact for the same reason as in
+    ``payload_corpus``."""
     import pandas as pd
 
     def gen(batches):
@@ -1289,10 +1323,10 @@ def materialize_mixed(spark, sf_dir) -> str:
 
     def write(tmp):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-        mixed = docs.mapInPandas(gen, schema="doc_id long, kind string, text string")
+        mixed = docs.mapInPandas(gen, schema=MIXED_SCHEMA)
         mixed.write.mode("overwrite").parquet(tmp)
 
-    return _materialize(sf_dir, "mixed.parquet", write)
+    return spark.read.schema(MIXED_SCHEMA).parquet(_materialize(sf_dir, "mixed.parquet", write))
 
 
 def _turn_count(conv_idx, long_every=97, short_min=2, short_max=12, long_factor=50):

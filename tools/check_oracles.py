@@ -2,15 +2,18 @@
 and its oracle_sql() twin on DuckDB, compare row count, schema (column
 names) and exact values (columns sorted by name, rows sorted).
 
-Each query's line gives its Spark seconds (build + collect) and its
-DuckDB seconds apart; the last line is one JSON object with ``sf_dir``,
-the passed count, the failed names and the Spark seconds per query.
+Each query's line gives its Spark seconds (build + collect), its
+DuckDB seconds and the number of Spark jobs its build alone launched
+(schema discovery, model fits); the last line is one JSON object with
+``sf_dir``, the passed count, the failed names, and the Spark seconds
+and build jobs per query.
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 import os
@@ -58,22 +61,44 @@ def compare(spark_cols, spark_rows, duck_cols, duck_rows):
     return status
 
 
+_GROUPS = itertools.count()
+_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+def build_jobs(spark, fn, sf_dir):
+    """``(fn(spark, sf_dir), the number of Spark jobs that call launched)``,
+    counted through a job group of its own; the thread's previous group
+    is restored afterwards."""
+    sc = spark.sparkContext
+    group = f"check-oracles-build-{next(_GROUPS)}"
+    saved = {k: sc.getLocalProperty(k) for k in _GROUP_KEYS}
+    sc.setJobGroup(group, "query build")
+    try:
+        sdf = fn(spark, sf_dir)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    # the status tracker is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sdf, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def check(fn, sql, spark, sf_dir, con):
     """Run one query on Spark (build + collect, or count when it has no
     oracle) and its oracle on DuckDB; returns (status, spark_s, duck_s,
-    note)."""
+    build_jobs, note)."""
     t0 = time.monotonic()
-    sdf = fn(spark, sf_dir)
+    sdf, jobs = build_jobs(spark, fn, sf_dir)
     if sql is None:
         n = sdf.count()
-        return [], time.monotonic() - t0, 0.0, f"(rows-only: {n} rows)"
+        return [], time.monotonic() - t0, 0.0, jobs, f"(rows-only: {n} rows)"
     spark_rows = sdf.collect()
     spark_s = time.monotonic() - t0
     t0 = time.monotonic()
     duck = con.sql(sql)
     duck_cols, duck_rows = duck.columns, duck.fetchall()
     duck_s = time.monotonic() - t0
-    return compare(sdf.columns, spark_rows, duck_cols, duck_rows), spark_s, duck_s, ""
+    return compare(sdf.columns, spark_rows, duck_cols, duck_rows), spark_s, duck_s, jobs, ""
 
 
 def main():
@@ -95,16 +120,18 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    failed, spark_s = [], {}
+    failed, spark_s, jobs_per_query = [], {}, {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
         try:
-            status, s_s, d_s, note = check(fn, oracles.get(name), spark, sf_dir, con)
+            status, s_s, d_s, jobs, note = check(fn, oracles.get(name), spark, sf_dir, con)
         except Exception as exc:  # noqa: BLE001
-            status, s_s, d_s, note = [f"EXCEPTION {type(exc).__name__}: {exc}"], 0.0, 0.0, ""
+            status, s_s, d_s, jobs, note = (
+                [f"EXCEPTION {type(exc).__name__}: {exc}"], 0.0, 0.0, None, "")
         spark_s[name] = round(s_s, 3)
-        timing = f"[spark {s_s:.2f}s duckdb {d_s:.2f}s]"
+        jobs_per_query[name] = jobs
+        timing = f"[spark {s_s:.2f}s duckdb {d_s:.2f}s jobs {jobs}]"
         if status:
             failed.append(name)
             print(f"FAIL {name} {timing}: {'; '.join(status)[:2000]}")
@@ -116,6 +143,7 @@ def main():
         "passed": len(spark_s) - len(failed),
         "failed": failed,
         "spark_s": spark_s,
+        "build_jobs": jobs_per_query,
     }))
     spark.stop()
     sys.exit(1 if failed else 0)

@@ -21,6 +21,14 @@ directory as a renamed package, so both cores live in one process:
    same minutes, so the per-round ratio (working tree / REV) cancels the
    host-speed swing that single timings carry. The median ratio, its
    quartiles and the rounds the working tree won are printed.
+3. *Phase split.* ``ROUNDS`` more interleaved rounds of the same
+   ``extract`` call, with the phases of ``PHASES`` timed by wrappers
+   this tool installs on each core's functions for the round (the core
+   carries no timer). A phase counts the time from entering its
+   outermost function to leaving it; a phase function called inside
+   another phase counts toward the outer one, and ``other`` is the time
+   outside every phase. Per phase, the working tree's median share of
+   core time is printed beside the per-round ratio (working tree / REV).
 
 Exit status is 1 when any output differs.
 """
@@ -37,6 +45,8 @@ import subprocess
 import sys
 import tempfile
 import time
+from collections import defaultdict
+from contextlib import contextmanager
 
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 for _path in (_REPO_DIR, os.path.join(_REPO_DIR, "perfbench")):
@@ -49,6 +59,23 @@ PAGE_URL = "http://synth.example/conv00000001/page/1"
 SEEDS = (7001, 7002, 7003)
 SOUPS = 6000
 ROUNDS = 12
+
+# the phases of one core pass, in the order a pass runs them: a name and
+# the transcoder attribute ("_Run.x" for a method) whose outermost calls
+# make up the phase; "text+spans" is the article's inner text that
+# ``transcode`` takes and the spans ``extract`` cuts from it
+PHASES = (
+    ("parse", "build_document"),
+    ("prepare_document", "_Run.prepare_document"),
+    ("title", "_Run.extract_article_title"),
+    ("strip_unlikely_candidates", "_Run.strip_unlikely_candidates"),
+    ("candidates", "_Run.find_candidates_for_article_content"),
+    ("top candidate", "_Run.determine_top_candidate_element"),
+    ("article build", "_Run.create_article_content_element"),
+    ("post-clean", "_Run.prepare_article_content_element"),
+    ("text+spans", "_Run.get_inner_text"),
+    ("text+spans", "_article_spans"),
+)
 
 # the constructs on which tokenizers differ across Python versions, the
 # stdlib's error and recovery cases, every kind of whitespace the
@@ -159,6 +186,74 @@ def core_time_ratios(base, work, rows, rounds):
     return ratios
 
 
+def _phase_owner(transcoder, attr):
+    """(object holding ``attr``, its name there), or None when this core
+    has no such attribute."""
+    owner, _, name = attr.rpartition(".")
+    holder = getattr(transcoder, owner, None) if owner else transcoder
+    return (holder, name) if hasattr(holder, name) else None
+
+
+@contextmanager
+def phase_timers(transcoder, totals):
+    """Time ``PHASES`` of ``transcoder`` into ``totals`` (phase -> s)
+    while the block runs; the originals are back afterwards."""
+    active = []
+
+    def wrap(phase, fn):
+        def timed(*args, **kwargs):
+            if active:
+                return fn(*args, **kwargs)
+            active.append(phase)
+            t = time.perf_counter()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                totals[phase] += time.perf_counter() - t
+                active.pop()
+        return timed
+
+    saved = []
+    for phase, attr in PHASES:
+        holder, name = _phase_owner(transcoder, attr)
+        original = holder.__dict__[name]
+        saved.append((holder, name, original))
+        setattr(holder, name, wrap(phase, original))
+    try:
+        yield
+    finally:
+        for holder, name, original in reversed(saved):
+            setattr(holder, name, original)
+
+
+def phase_split(base, work, rows, rounds):
+    """Per-round phase seconds of ``extract(..., outputs=())`` over
+    ``rows`` for both cores, alternating which runs first; returns
+    ``{"base": [...], "work": [...]}`` of phase -> seconds dicts, each
+    with an ``other`` entry and the round's ``total``."""
+    runs = {"base": [], "work": []}
+    for r in range(rounds):
+        order = (("work", work), ("base", base)) if r % 2 else (("base", base), ("work", work))
+        for side, transcoder in order:
+            totals = defaultdict(float)
+            with phase_timers(transcoder, totals):
+                total = timed(lambda t: transcoder.extract(t, None, None, outputs=()), rows)
+            totals["other"] = total - sum(totals.values())
+            totals["total"] = total
+            runs[side].append(totals)
+    return runs
+
+
+def print_phase_split(runs, rev):
+    phases = list(dict.fromkeys(name for name, _ in PHASES)) + ["other"]
+    print(f"phase split, share of the working tree's core time and working tree / {rev}:")
+    for phase in phases:
+        share = statistics.median(w[phase] / w["total"] for w in runs["work"])
+        ratios = [w[phase] / b[phase] for w, b in zip(runs["work"], runs["base"]) if b[phase] > 0]
+        ratio = summarize(ratios) if len(ratios) >= 2 else "n/a"
+        print(f"  {phase:<26} {share:6.1%}  {ratio}")
+
+
 def summarize(ratios):
     q1, med, q3 = statistics.quantiles(ratios, n=4)
     wins = sum(1 for x in ratios if x < 1.0)
@@ -195,6 +290,12 @@ def main(argv=None):
               f"working tree / {args.rev}:")
         for name, values in ratios.items():
             print(f"  {name}: {summarize(values)}")
+
+        missing = [attr for _, attr in PHASES if _phase_owner(base[1], attr) is None]
+        if missing:
+            print(f"phase split skipped: {args.rev} has no {', '.join(missing)}")
+        else:
+            print_phase_split(phase_split(base[1], work[1], rows, ROUNDS), args.rev)
     return 1 if differ else 0
 
 
