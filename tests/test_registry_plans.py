@@ -121,6 +121,8 @@ def test_cached_corpora_have_their_declared_schema(spark, registry, monkeypatch)
 
 @needs_sf
 def test_cached_corpus_queries_build_without_a_job(spark, registry):
+    """At a warm cache, building a query over a cached corpus launches
+    no Spark job."""
     from tools.check_oracles import build_jobs
 
     queries = _cached_corpus_queries(registry)
