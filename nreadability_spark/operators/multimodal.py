@@ -421,6 +421,30 @@ def decode_samples(df: DataFrame) -> DataFrame:
     return _decode_stage(df, _sample_stats_rows, SAMPLES_SCHEMA)
 
 
+def _sample_stats(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
+    """``decode_samples`` over the materialized ``{codec}_payload_for``
+    corpus, by doc_id."""
+    from nreadability_spark.sources import synth
+
+    payloads = synth.payload_corpus(spark, sf_dir, getattr(synth, f"{codec}_payload_for"))
+    return ordered_small(decode_samples(payloads), "doc_id")
+
+
+def _amplitude_stats_sql(src: str) -> str:
+    """The shared tail of the sample-decode oracles: exact amplitude
+    statistics of ``src`` (doc_id, v) per doc_id."""
+    return f"""SELECT doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_values,
+       CAST(MIN(v) AS BIGINT) AS min_amp,
+       CAST(MAX(v) AS BIGINT) AS max_amp,
+       CAST(SUM(v) AS BIGINT) AS sum_amp,
+       CAST(SUM(v * v) AS BIGINT) AS sum_sq
+FROM {src}
+GROUP BY doc_id
+ORDER BY doc_id
+"""
+
+
 def multimodal_audio_samples_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real compressed-audio decode over the materialized IMA-ADPCM
     corpus: the 4-bit nibble stream expands through the spec step
@@ -431,10 +455,7 @@ def multimodal_audio_samples_adpcm(spark: SparkSession, sf_dir: str) -> DataFram
     nibble/magnitude/sign/clamp paths are proven by the
     independent-implementation roundtrip test, the same dual-proof
     pattern as the JPEG AC path."""
-    from nreadability_spark.sources import synth
-
-    payloads = synth.payload_corpus(spark, sf_dir, synth.adpcm_payload_for)
-    return ordered_small(decode_samples(payloads), "doc_id")
+    return _sample_stats(spark, sf_dir, "adpcm")
 
 
 def multimodal_audio_samples_adpcm_sql() -> str:
@@ -468,16 +489,7 @@ samples AS (
          p0 + SUM(d) OVER (PARTITION BY doc_id, b ORDER BY t) AS v
   FROM diffs
 )
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_values,
-       CAST(MIN(v) AS BIGINT) AS min_amp,
-       CAST(MAX(v) AS BIGINT) AS max_amp,
-       CAST(SUM(v) AS BIGINT) AS sum_amp,
-       CAST(SUM(v * v) AS BIGINT) AS sum_sq
-FROM samples
-GROUP BY doc_id
-ORDER BY doc_id
-"""
+{_amplitude_stats_sql("samples")}"""
 
 
 def multimodal_audio_samples_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -489,10 +501,7 @@ def multimodal_audio_samples_g711(spark: SparkSession, sf_dir: str) -> DataFrame
     one wrong table entry in either law hash-mismatches; the tables
     themselves are pinned to an independent implementation
     (``audioop``) by a unit test."""
-    from nreadability_spark.sources import synth
-
-    payloads = synth.payload_corpus(spark, sf_dir, synth.g711_payload_for)
-    return ordered_small(decode_samples(payloads), "doc_id")
+    return _sample_stats(spark, sf_dir, "g711")
 
 
 def multimodal_audio_samples_g711_sql() -> str:
@@ -516,16 +525,7 @@ vals AS (
   JOIN tab ON tab.tag = positions.tag
           AND tab.b = (positions.doc_id * 13 + positions.j * 7) % 256
 )
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_values,
-       CAST(MIN(v) AS BIGINT) AS min_amp,
-       CAST(MAX(v) AS BIGINT) AS max_amp,
-       CAST(SUM(v) AS BIGINT) AS sum_amp,
-       CAST(SUM(v * v) AS BIGINT) AS sum_sq
-FROM vals
-GROUP BY doc_id
-ORDER BY doc_id
-"""
+{_amplitude_stats_sql("vals")}"""
 
 
 def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,16 +569,13 @@ def multimodal_audio_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``synth.wav_sample_value`` in closed form — a byte-order slip, an
     off-by-one in the chunk walk, or a lost trailing sample all
     hash-mismatch."""
-    from nreadability_spark.sources import synth
-
-    payloads = synth.payload_corpus(spark, sf_dir, synth.wav_payload_for)
-    return ordered_small(decode_samples(payloads), "doc_id")
+    return _sample_stats(spark, sf_dir, "wav")
 
 
 def multimodal_audio_samples_sql() -> str:
     # closed form of synth.wav_sample_value over synth.wav_meta_for's
     # interleaved sample count (n_samples frames x n_channels)
-    return """
+    return f"""
 WITH base AS (
   SELECT doc_id,
          1 + doc_id % 2 AS n_channels,
@@ -587,19 +584,10 @@ WITH base AS (
 ),
 vals AS (
   SELECT doc_id,
-         (doc_id * 31 + unnest(range(n_samples * n_channels)) * 17) % 2001 - 1000 AS s
+         (doc_id * 31 + unnest(range(n_samples * n_channels)) * 17) % 2001 - 1000 AS v
   FROM base
 )
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_values,
-       CAST(min(s) AS BIGINT) AS min_amp,
-       CAST(max(s) AS BIGINT) AS max_amp,
-       CAST(sum(s) AS BIGINT) AS sum_amp,
-       CAST(sum(s * s) AS BIGINT) AS sum_sq
-FROM vals
-GROUP BY doc_id
-ORDER BY doc_id
-"""
+{_amplitude_stats_sql("vals")}"""
 
 
 FRAME_SCHEMA = T.StructType(
@@ -1113,17 +1101,31 @@ def sample_frames(df: DataFrame, container: str = "gif") -> DataFrame:
     return _decode_stage(df, rows, FRAME_SCHEMA)
 
 
+def _frame_sample(spark: SparkSession, sf_dir: str, container: str) -> DataFrame:
+    """``sample_frames`` over the materialized ``{container}_payload_for``
+    corpus, by (doc_id, frame_idx)."""
+    from nreadability_spark.sources import synth
+
+    payloads = synth.payload_corpus(spark, sf_dir, getattr(synth, f"{container}_payload_for"))
+    return ordered_small(
+        sample_frames(payloads, container=container), "doc_id", "frame_idx"
+    )
+
+
+# the planted animated corpora (gif, mp4, mkv) all hold 1-4 frames per
+# doc: one row per (doc_id, frame_idx)
+_FRAMES_SQL = """frames AS (
+  SELECT doc_id, CAST(unnest(range(1 + doc_id % 4)) AS BIGINT) AS frame_idx
+  FROM documents
+)"""
+
+
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real frame sampling over the materialized animated-GIF corpus
     (1-4 frames per doc). The oracle restates the builder's closed-form
     layout (fixed-width blocks), so a parser that miscounts any block
     length or misreads a delay hash-mismatches."""
-    from nreadability_spark.sources import synth
-
-    payloads = synth.payload_corpus(spark, sf_dir, synth.gif_payload_for)
-    return ordered_small(
-        sample_frames(payloads, container="gif"), "doc_id", "frame_idx"
-    )
+    return _frame_sample(spark, sf_dir, "gif")
 
 
 def multimodal_frames_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1133,12 +1135,7 @@ def multimodal_frames_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form layout (frame sizes -> prefix-sum offsets, paired
     durations), so a walk that misreads any sample table — or fails to
     skip the audio trak — hash-mismatches."""
-    from nreadability_spark.sources import synth
-
-    payloads = synth.payload_corpus(spark, sf_dir, synth.mp4_payload_for)
-    return ordered_small(
-        sample_frames(payloads, container="mp4"), "doc_id", "frame_idx"
-    )
+    return _frame_sample(spark, sf_dir, "mp4")
 
 
 def multimodal_frames_mkv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1149,12 +1146,7 @@ def multimodal_frames_mkv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-frame cluster overhead + prefix-sum sizes), so a walk that
     misreads any varint, timestamp scale or duration source
     hash-mismatches."""
-    from nreadability_spark.sources import synth
-
-    payloads = synth.payload_corpus(spark, sf_dir, synth.mkv_payload_for)
-    return ordered_small(
-        sample_frames(payloads, container="mkv"), "doc_id", "frame_idx"
-    )
+    return _frame_sample(spark, sf_dir, "mkv")
 
 
 def multimodal_frames_mkv_sql() -> str:
@@ -1167,12 +1159,7 @@ def multimodal_frames_mkv_sql() -> str:
     )
 
     return f"""
-WITH base AS (
-  SELECT doc_id, 1 + doc_id % 4 AS n_frames FROM documents
-),
-frames AS (
-  SELECT doc_id, CAST(unnest(range(n_frames)) AS INT) AS frame_idx FROM base
-),
+WITH {_FRAMES_SQL},
 sized AS (
   SELECT doc_id, frame_idx,
          20 + (doc_id * 11 + frame_idx * 17) % 64
@@ -1197,12 +1184,7 @@ def multimodal_frames_mp4_sql() -> str:
     from nreadability_spark.sources.synth import MP4_MDAT_DATA_START
 
     return f"""
-WITH base AS (
-  SELECT doc_id, 1 + doc_id % 4 AS n_frames FROM documents
-),
-frames AS (
-  SELECT doc_id, CAST(unnest(range(n_frames)) AS INT) AS frame_idx FROM base
-),
+WITH {_FRAMES_SQL},
 sized AS (
   SELECT doc_id, frame_idx,
          20 + (doc_id * 7 + frame_idx * 13) % 64 AS sz
@@ -1228,12 +1210,7 @@ def multimodal_frames_sql() -> str:
 
     base_off = GIF_HEADER_LEN + GIF_DESC_OFFSET_IN_FRAME
     return f"""
-WITH base AS (
-  SELECT doc_id, 1 + doc_id % 4 AS n_frames FROM documents
-),
-frames AS (
-  SELECT doc_id, CAST(unnest(range(n_frames)) AS INT) AS frame_idx FROM base
-)
+WITH {_FRAMES_SQL}
 SELECT doc_id, frame_idx,
        CAST({base_off} + {GIF_FRAME_LEN} * frame_idx AS BIGINT) AS byte_offset,
        CAST((doc_id * 7 + frame_idx * 3) % 100 AS BIGINT) AS delay_cs
@@ -1374,11 +1351,8 @@ def multimodal_frame_pixels_sql() -> str:
     # closed form of synth.gif_frame_pixel_index_for over the planted
     # 2-color table (black, white): every frame is a 1x1 bitmap whose
     # index is (doc_id + frame_idx) % 2
-    return """
-WITH frames AS (
-  SELECT doc_id, CAST(unnest(range(1 + doc_id % 4)) AS BIGINT) AS frame_idx
-  FROM documents
-)
+    return f"""
+WITH {_FRAMES_SQL}
 SELECT doc_id, frame_idx,
        CAST(1 AS BIGINT) AS n_px,
        CAST((doc_id + frame_idx) % 2 AS BIGINT) AS px_index,
@@ -1503,6 +1477,19 @@ def _png_pixels(data: bytes):
     return np.frombuffer(b"".join(lines), dtype=np.uint8).reshape(h, w, 3)
 
 
+# closed form of synth.rgb_image_dims_for and of synth.png_row_rgb's
+# row-constant colors at row y
+_PNG_DIMS_SQL = """dims AS (
+  SELECT doc_id,
+         CAST(16 + doc_id % 48 AS BIGINT) AS w,
+         CAST(16 + doc_id % 32 AS BIGINT) AS h
+  FROM documents
+)"""
+_PNG_ROW_RGB_SQL = """(7 * doc_id + 3 * y) % 256 AS r,
+         (11 * doc_id + 5 * y) % 256 AS g,
+         (13 * doc_id + 7 * y) % 256 AS b"""
+
+
 def image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over REAL decoded bitmaps: exact integer
     channel sums and min/max per image. Scale shape: pure map-side
@@ -1538,21 +1525,14 @@ def image_pixel_stats_sql() -> str:
     # closed form of synth.png_row_rgb over synth.rgb_image_dims_for:
     # pixels are row-constant, so every statistic is an H-bounded
     # aggregate of the planted per-row colors
-    return """
-WITH dims AS (
-  SELECT doc_id,
-         CAST(16 + doc_id % 48 AS BIGINT) AS w,
-         CAST(16 + doc_id % 32 AS BIGINT) AS h
-  FROM documents
-),
+    return f"""
+WITH {_PNG_DIMS_SQL},
 rows_ AS (
   SELECT doc_id, w, h, CAST(unnest(range(h)) AS BIGINT) AS y FROM dims
 ),
 colored AS (
   SELECT doc_id, w, h,
-         (7 * doc_id + 3 * y) % 256 AS r,
-         (11 * doc_id + 5 * y) % 256 AS g,
-         (13 * doc_id + 7 * y) % 256 AS b
+         {_PNG_ROW_RGB_SQL}
   FROM rows_
 )
 SELECT doc_id, w AS width, h AS height, w * h AS n_px,
@@ -1620,12 +1600,7 @@ def image_resize_thumb_sql() -> str:
     # nearest-neighbor sample rows src_y = (j*h)//t; columns are
     # constant so each sampled row contributes t identical pixels
     return f"""
-WITH dims AS (
-  SELECT doc_id,
-         CAST(16 + doc_id % 48 AS BIGINT) AS w,
-         CAST(16 + doc_id % 32 AS BIGINT) AS h
-  FROM documents
-),
+WITH {_PNG_DIMS_SQL},
 grid AS (
   SELECT doc_id, w, h, CAST(unnest(range({t})) AS BIGINT) AS j FROM dims
 ),
@@ -1634,9 +1609,7 @@ sampled AS (
 ),
 colored AS (
   SELECT doc_id,
-         (7 * doc_id + 3 * y) % 256 AS r,
-         (11 * doc_id + 5 * y) % 256 AS g,
-         (13 * doc_id + 7 * y) % 256 AS b
+         {_PNG_ROW_RGB_SQL}
   FROM sampled
 )
 SELECT doc_id, CAST({t} AS BIGINT) AS thumb,

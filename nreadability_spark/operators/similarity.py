@@ -39,6 +39,20 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e): the embeddings as double arrays."""
+    return load_embeddings(spark, sf_dir).select(
+        "vec_id", _dvec(F.col("embedding")).alias("e")
+    )
+
+
+def _pinned(emb: DataFrame, k: int) -> DataFrame:
+    """(cent_id, c): the first k vectors by id as centroids."""
+    return emb.where(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
+    )
+
+
 def _dot(a, b):
     """Sequential-order double dot product (parity with SQL `+` chain).
 
@@ -68,6 +82,9 @@ def _dvec(col):
     return col.cast("array<double>")
 
 
+_BASE_SQL = "base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)"
+
+
 def _dot_sql(a: str, b: str) -> str:
     # explicit left-associative chain: bit-identical to F.aggregate
     return "(" + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(1, DIM + 1)) + ")"
@@ -82,9 +99,7 @@ def _cosine_sql(a: str, b: str) -> str:
 
 def knn_brute_force(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Top-k cosine neighbors of the pinned query vector (vec_id=0)."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("e").alias("q"))
     scored = (
         emb.where(F.col("vec_id") != QUERY_VEC_ID)
@@ -103,7 +118,7 @@ def knn_brute_force(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFra
 def knn_brute_force_sql(k: int = TOP_K) -> str:
     cos = _cosine_sql("e.emb", "q.emb")
     return f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+WITH {_BASE_SQL},
 q AS (SELECT emb FROM base WHERE vec_id = {QUERY_VEC_ID}),
 scored AS (
   SELECT e.vec_id, {cos} AS cos
@@ -130,39 +145,15 @@ def knn_ivf(
     — the production wiring (fit job -> IVF build). Defaults to the
     pinned stand-in so the oracle stays closed-form.
     """
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    cents = (
-        centroids
-        if centroids is not None
-        else emb.where(F.col("vec_id") < IVF_CENTROIDS).select(
-            F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
-        )
-    )
-
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "e", "cent_id", _cosine(F.col("e"), F.col("c")).alias("ccos")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    assigned = (
-        scored.withColumn("r", F.row_number().over(w_assign))
-        .where(F.col("r") == 1)
-        .select("vec_id", "e", F.col("cent_id").alias("cell"))
-    )
-
-    probe_cells = (
-        scored.where(F.col("vec_id") == QUERY_VEC_ID)
-        .withColumn("r", F.row_number().over(w_assign))
-        .where(F.col("r") <= IVF_NPROBE)
-        .select(F.col("cent_id").alias("cell"))
-    )
-
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("e").alias("q"))
+    emb = _vectors(spark, sf_dir)
+    cents = centroids if centroids is not None else _pinned(emb, IVF_CENTROIDS)
+    q = emb.where(F.col("vec_id") == QUERY_VEC_ID)
+    probe_cells = _assign_to_centroids(q, cents, top=IVF_NPROBE).select("cell")
     cands = (
-        assigned.join(F.broadcast(probe_cells), "cell")
+        _assign_to_centroids(emb, cents)
+        .join(F.broadcast(probe_cells), "cell")
         .where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(q.select(F.col("e").alias("q"))))
         .select("vec_id", "cell", _cosine(F.col("e"), F.col("q")).alias("cos"))
     )
     w_rank = Window.orderBy(F.col("cos").desc(), F.col("vec_id"))
@@ -175,30 +166,44 @@ def knn_ivf(
     )
 
 
-def _knn_ivf_body_sql(k: int = IVF_TOP_K) -> str:
-    """The search CTE chain, assuming ``base`` (vec_id, emb) and
-    ``cents`` (cent_id, emb) are already defined by the caller."""
-    ccos = _cosine_sql("e.emb", "c.emb")
-    qcos = _cosine_sql("e.emb", "q.emb")
-    return f"""
-scored AS (
-  SELECT e.vec_id, c.cent_id, {ccos} AS ccos
-  FROM base e, cents c
+def _assign_sql(
+    cents: str, s: str = "scored", a: str = "assigned", emb: bool = False,
+    ccos: str = "", nprobe: int | None = None,
+) -> str:
+    """The SQL twin of ``_assign_to_centroids`` over ``base`` (vec_id,
+    emb) and ``cents`` (cent_id, c), as CTEs: ``s``, every vector's
+    cosine to every centroid, and ``a`` (vec_id, [emb,] cell[, ccos]),
+    its nearest centroid, ties to the lowest cent_id. ``ccos`` is the
+    select item that keeps the cosine (none when empty). With
+    ``nprobe``, a third CTE ``probe`` (cell) holds the query vector's
+    ``nprobe`` nearest cells."""
+    keep = "emb, " if emb else ""
+    sql = f"""{s} AS {"MATERIALIZED " if nprobe else ""}(
+  SELECT e.vec_id, {"e." + keep if emb else ""}c.cent_id, {_cosine_sql("e.emb", "c.c")} AS ccos
+  FROM base e, {cents} c
 ),
-assigned AS (
-  SELECT vec_id, cent_id AS cell FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
-    FROM scored
+{a} AS MATERIALIZED (
+  SELECT vec_id, {keep}cent_id AS cell{ccos} FROM (
+    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
+    FROM {s}
   ) t WHERE r = 1
-),
+)"""
+    if nprobe:
+        sql += f""",
 probe AS (
   SELECT cent_id AS cell FROM (
-    SELECT cent_id,
-           row_number() OVER (ORDER BY ccos DESC, cent_id) AS r
-    FROM scored WHERE vec_id = {QUERY_VEC_ID}
-  ) t WHERE r <= {IVF_NPROBE}
-),
+    SELECT cent_id, row_number() OVER (ORDER BY ccos DESC, cent_id) AS r
+    FROM {s} WHERE vec_id = {QUERY_VEC_ID}
+  ) t WHERE r <= {nprobe}
+)"""
+    return sql
+
+
+def _knn_ivf_body_sql(cents: str, k: int = IVF_TOP_K) -> str:
+    """The search CTE chain over ``base`` (vec_id, emb) and the
+    centroid table ``cents`` (cent_id, c), both defined by the caller."""
+    qcos = _cosine_sql("e.emb", "q.emb")
+    return f"""{_assign_sql(cents, nprobe=IVF_NPROBE)},
 q AS (SELECT emb FROM base WHERE vec_id = {QUERY_VEC_ID}),
 cands AS (
   SELECT e.vec_id, a.cell, {qcos} AS cos
@@ -220,9 +225,9 @@ WHERE rank <= {k} ORDER BY rank
 def knn_ivf_sql(k: int = IVF_TOP_K) -> str:
     """Pinned-centroid variant (closed-form cents CTE)."""
     return (
-        f"WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),\n"
-        f"cents AS (SELECT vec_id AS cent_id, emb FROM base WHERE vec_id < {IVF_CENTROIDS}),\n"
-        + _knn_ivf_body_sql(k)
+        f"WITH {_BASE_SQL},\n"
+        f"cents AS (SELECT vec_id AS cent_id, emb AS c FROM base WHERE vec_id < {IVF_CENTROIDS}),\n"
+        + _knn_ivf_body_sql("cents", k)
     )
 
 
@@ -234,26 +239,27 @@ KMEANS_ITERS = 2
 def pinned_centroids(spark: SparkSession, sf_dir: str, k: int = IVF_CENTROIDS) -> DataFrame:
     """The deterministic stand-in centroids (first k vectors by id) —
     the test fixture; production uses ``fit_centroids``."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    return emb.where(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
-    )
+    return _pinned(_vectors(spark, sf_dir), k)
 
 
-def _assign_to_centroids(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, e) x (cent_id, c) -> (vec_id, e, cell): nearest centroid
-    by cosine, ties to the lowest cent_id. The centroid table is tiny
-    (C rows) and explicitly broadcast."""
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "e", "cent_id", _cosine(F.col("e"), F.col("c")).alias("ccos")
-    )
+def _assign_to_centroids(
+    emb: DataFrame, cents: DataFrame, top: int = 1, ccos=None
+) -> DataFrame:
+    """(vec_id, ...) x (cent_id, c, ...) -> (vec_id, ..., cell, ccos):
+    each vector's ``top`` nearest centroids by cosine, ties to the
+    lowest cent_id. ``ccos`` replaces the cosine of e and c (the
+    near-dup kernel divides by precomputed norms). The centroid table
+    is tiny (C rows) and explicitly broadcast."""
+    if ccos is None:
+        ccos = _cosine(F.col("e"), F.col("c"))
     w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
     return (
-        scored.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") == 1)
-        .select("vec_id", "e", F.col("cent_id").alias("cell"))
+        emb.crossJoin(F.broadcast(cents))
+        .select(*emb.columns, "cent_id", ccos.alias("ccos"))
+        .withColumn("r", F.row_number().over(w))
+        # an equality for the nearest cell, as the assignment plans have it
+        .where(F.col("r") == 1 if top == 1 else F.col("r") <= top)
+        .select(*emb.columns, F.col("cent_id").alias("cell"), "ccos")
     )
 
 
@@ -276,9 +282,7 @@ def fit_centroids(
     agg with map-side partials — no collect, no driver math; the
     centroid table itself is the only driver-sized object.
     """
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     cents = pinned_centroids(spark, sf_dir, k)
     for _ in range(iters):
         assigned = _assign_to_centroids(emb, cents)
@@ -297,9 +301,13 @@ def fit_centroids(
     # unpinned plan re-runs the whole Lloyd chain once per exchange. In
     # production this is the parquet model table jobs/fit_models.py
     # writes; locally, localCheckpoint is the same materialize-once.
-    # eager=False: merely CONSTRUCTING a composed plan (explain, schema,
-    # plan-shape tests) must not run the Lloyd jobs — the checkpoint
-    # materializes at the query's first action instead.
+    # What eager=False guarantees is one materialization per query: the
+    # first action that computes the checkpoint stores it and every
+    # exchange that references it reads the stored rows. It does not
+    # keep plan construction from running the Lloyd jobs: under
+    # adaptive execution, planning the checkpointed plan runs its
+    # shuffle stages, so building a query over a fit launches them
+    # (tools/check_oracles.py counts them as build jobs).
     return cents.localCheckpoint(eager=False)
 
 
@@ -319,18 +327,8 @@ def centroid_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmeans_iter_sql(prev: str, idx: int) -> str:
     """One unrolled Lloyd iteration as CTE clauses (DuckDB)."""
-    ccos = _cosine_sql("e.emb", "c.c")
     return f"""
-s{idx} AS (
-  SELECT e.vec_id, e.emb, c.cent_id, {ccos} AS ccos FROM base e, {prev} c
-),
-a{idx} AS (
-  SELECT vec_id, emb, cent_id AS cell FROM (
-    SELECT vec_id, emb, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
-    FROM s{idx}
-  ) t WHERE r = 1
-),
+{_assign_sql(prev, f"s{idx}", f"a{idx}", emb=True)},
 m{idx} AS (
   SELECT cell, dim, round(avg(val), 6) AS val FROM (
     SELECT cell, unnest(range(1, {DIM + 1})) AS dim, unnest(emb) AS val FROM a{idx}
@@ -345,7 +343,7 @@ def _kmeans_cte_chain(k: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS) -> str:
     """``base`` + the unrolled Lloyd CTEs ending at ``c{iters}``
     (cent_id, c) — shared by the fit oracle and the fitted-IVF oracle."""
     parts = [
-        f"base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),",
+        f"{_BASE_SQL},",
         f"c0 AS (SELECT vec_id AS cent_id, emb AS c FROM base WHERE vec_id < {k})",
     ]
     for i in range(1, iters + 1):
@@ -377,11 +375,7 @@ def knn_ivf_fitted(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> Data
 def knn_ivf_fitted_sql(
     k: int = IVF_TOP_K, c: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS
 ) -> str:
-    return (
-        f"WITH {_kmeans_cte_chain(c, iters)},\n"
-        f"cents AS (SELECT cent_id, c AS emb FROM c{iters}),\n"
-        + _knn_ivf_body_sql(k)
-    )
+    return f"WITH {_kmeans_cte_chain(c, iters)},\n" + _knn_ivf_body_sql(f"c{iters}", k)
 
 
 # production near-dup threshold is ~0.95; the synthetic embeddings are
@@ -410,51 +404,24 @@ def _input_bytes(df: DataFrame) -> int:
     return total
 
 
+def _pair_strategy(strategy: str, emb: DataFrame) -> str:
+    """Resolves ``auto``: ``broadcast`` when the parquet ``emb`` scans
+    is under ``BROADCAST_PAIR_JOIN_MAX_BYTES``, else ``block_pairs``."""
+    if strategy != "auto":
+        return strategy
+    size = _input_bytes(emb)
+    return "broadcast" if 0 < size <= BROADCAST_PAIR_JOIN_MAX_BYTES else "block_pairs"
+
+
 def _assigned_vectors(spark: SparkSession, sf_dir: str):
-    """(vec_id, e, n, cell): every vector with its norm and IVF cell."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    ).withColumn("n", F.sqrt(_dot(F.col("e"), F.col("e"))))
+    """(vec_id, e, n, cell, ccos): every vector with its norm and IVF
+    cell (nearest pinned centroid)."""
+    emb = _vectors(spark, sf_dir).withColumn("n", F.sqrt(_dot(F.col("e"), F.col("e"))))
     cents = emb.where(F.col("vec_id") < IVF_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"), F.col("e").alias("c"), F.col("n").alias("cn")
     )
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "e", "n", "cent_id",
-        (
-            _dot(F.col("e"), F.col("c"))
-            / F.greatest(F.col("n") * F.col("cn"), F.lit(1e-300))
-        ).alias("ccos"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    assigned = (
-        scored.withColumn("r", F.row_number().over(w_assign))
-        .where(F.col("r") == 1)
-        .select("vec_id", "e", "n", F.col("cent_id").alias("cell"))
-    )
-    return emb, assigned
-
-
-def _pandas_dot():
-    """Arrow-vectorized numpy dot product — the measured-faster kernel
-    for the exact pair-verification stage (~2x the higher-order-function
-    form at sf0.1: HOFs are interpreted per element, numpy is one C
-    loop per batch). NOT the oracle-pinned default: numpy's pairwise
-    summation can differ from the sequential left-associative chain in
-    the last ulp, which the 6-dp rounding almost always — but not
-    provably always — hides."""
-    import pandas as pd  # noqa: F401 — signature needs the types
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def pdot(ea, eb):
-        import numpy as np
-        import pandas as _pd
-
-        a = np.stack(ea.values)
-        b = np.stack(eb.values)
-        return _pd.Series((a * b).sum(axis=1))
-
-    return pdot
+    ccos = _dot(F.col("e"), F.col("c")) / F.greatest(F.col("n") * F.col("cn"), F.lit(1e-300))
+    return emb, _assign_to_centroids(emb, cents, ccos=ccos)
 
 
 def _block_pair_join(df: DataFrame, n_salts: int, order_col: str):
@@ -491,23 +458,29 @@ def _block_pair_join(df: DataFrame, n_salts: int, order_col: str):
     )
 
 
-def _pair_cols(threshold, kernel: str = "jvm"):
-    def project(joined):
-        if kernel == "pandas":
-            dot = _pandas_dot()(F.col("a.e"), F.col("b.e"))
-        else:
-            dot = _dot(F.col("a.e"), F.col("b.e"))
-        return joined.select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.cell").cast("long").alias("cell"),
-            F.round(
-                dot / F.greatest(F.col("a.n") * F.col("b.n"), F.lit(1e-300)),
-                6,
-            ).alias("cos_sim"),
-        ).where(F.col("cos_sim") >= threshold)
+def _cell_pairs(df: DataFrame, strategy: str, n_salts: int, order_col: str):
+    """Every unordered pair of same-cell rows of ``df`` once, as a join
+    of ``df`` aliased ``a`` and ``b``: a broadcast self-join keeping
+    ``a.order_col < b.order_col`` for ``broadcast``, else the salted
+    block-pair join, which leaves the pair's order open."""
+    if strategy != "broadcast":
+        return _block_pair_join(df, n_salts, order_col)
+    a, b = df.alias("a"), df.alias("b")
+    return a.join(
+        F.broadcast(b),
+        (F.col("a.cell") == F.col("b.cell"))
+        & (F.col(f"a.{order_col}") < F.col(f"b.{order_col}")),
+    )
 
-    return project
+
+def _pair_cos(norm: str):
+    """Rounded cosine of a joined pair, from the ``a``/``b`` vectors and
+    their precomputed ``norm`` columns: one dot per pair, not three."""
+    return F.round(
+        _dot(F.col("a.e"), F.col("b.e"))
+        / F.greatest(F.col(f"a.{norm}") * F.col(f"b.{norm}"), F.lit(1e-300)),
+        6,
+    )
 
 
 def embedding_near_dups(
@@ -516,7 +489,6 @@ def embedding_near_dups(
     threshold: float = COSINE_DUP_THRESHOLD,
     strategy: str = "auto",
     n_salts: int = NEAR_DUP_SALTS,
-    kernel: str = "jvm",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: vectors are blocked by
     their IVF cell (nearest pinned centroid), and only same-cell pairs
@@ -543,56 +515,37 @@ def embedding_near_dups(
     - ``auto``: broadcast when the scanned parquet is under
       ``BROADCAST_PAIR_JOIN_MAX_BYTES``, else block_pairs.
 
-    ``kernel``: ``jvm`` (default, oracle-pinned — sequential-order HOF
-    dot, bit-identical to the SQL twin) or ``pandas`` (Arrow-batched
-    numpy dot — measured ~2x faster on the verification stage at sf0.1;
-    last-ulp summation-order caveat in ``_pandas_dot``). At 100 TB the
-    pandas kernel is the production pick: the verification stage is
-    compute-bound and the Arrow transfer is amortized per batch.
+    The pair cosine is the sequential-order dot product of ``_dot``,
+    bit-identical to the SQL twin.
     """
-    _, assigned = _assigned_vectors(spark, sf_dir)
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if 0 < _input_bytes(load_embeddings(spark, sf_dir)) <= BROADCAST_PAIR_JOIN_MAX_BYTES
-            else "block_pairs"
+    emb, assigned = _assigned_vectors(spark, sf_dir)
+    strategy = _pair_strategy(strategy, emb)
+    pairs = (
+        _cell_pairs(assigned, strategy, n_salts, "vec_id")
+        .select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            F.col("a.cell").cast("long").alias("cell"),
+            _pair_cos("n").alias("cos_sim"),
         )
-
-    if strategy == "broadcast":
-        a, b = assigned.alias("a"), assigned.alias("b")
-        joined = a.join(
-            F.broadcast(b),
-            (F.col("a.cell") == F.col("b.cell")) & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        return _pair_cols(threshold, kernel)(joined).orderBy("vec_a", "vec_b")
-
-    # block_pairs: salted sub-block pair join (no broadcast of the table)
-    joined = _block_pair_join(assigned, n_salts, "vec_id")
-    pairs = _pair_cols(threshold, kernel)(joined).select(
-        F.least("vec_a", "vec_b").alias("vec_a"),
-        F.greatest("vec_a", "vec_b").alias("vec_b"),
-        "cell",
-        "cos_sim",
+        .where(F.col("cos_sim") >= threshold)
     )
+    if strategy != "broadcast":
+        pairs = pairs.select(
+            F.least("vec_a", "vec_b").alias("vec_a"),
+            F.greatest("vec_a", "vec_b").alias("vec_b"),
+            "cell",
+            "cos_sim",
+        )
     return pairs.orderBy("vec_a", "vec_b")
 
 
 def embedding_near_dups_sql(threshold: float = COSINE_DUP_THRESHOLD) -> str:
-    ccos = _cosine_sql("e.emb", "c.emb")
     pcos = _cosine_sql("a.emb", "b.emb")
     return f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-cents AS (SELECT vec_id AS cent_id, emb FROM base WHERE vec_id < {IVF_CENTROIDS}),
-scored AS (
-  SELECT e.vec_id, c.cent_id, {ccos} AS ccos FROM base e, cents c
-),
-assigned AS (
-  SELECT vec_id, cent_id AS cell FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
-    FROM scored
-  ) t WHERE r = 1
-)
+WITH {_BASE_SQL},
+cents AS (SELECT vec_id AS cent_id, emb AS c FROM base WHERE vec_id < {IVF_CENTROIDS}),
+{_assign_sql("cents")}
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        CAST(aa.cell AS BIGINT) AS cell,
        round({pcos}, 6) AS cos_sim
@@ -605,8 +558,6 @@ ORDER BY vec_a, vec_b
 """
 
 
-
-
 # --- int8 scalar quantization ------------------------------------------
 
 def quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -616,9 +567,7 @@ def quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4x smaller vectors; IVF assignment runs on dequantized values).
     Map-side only: in-array transforms + one sequential-order aggregate
     per vector (parity with the SQL twin's list ops); no shuffle."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     absmax = F.array_max(F.transform(F.col("e"), lambda x: F.abs(x)))
     scale = absmax / F.lit(127.0)
     # zero guard: an all-zero embedding gives scale 0, and 0/0 semantics
@@ -701,14 +650,14 @@ def _l2sq_sql(a: str, b: str, dims: int = PQ_SUBDIM) -> str:
     )
 
 
-def _subvectors(emb: DataFrame) -> DataFrame:
-    """(vec_id, m, sv): each vector split into PQ_M contiguous
+def _subvectors(emb: DataFrame, key: str = "vec_id") -> DataFrame:
+    """(key, m, sv): each vector e split into PQ_M contiguous
     subvectors — built map-side from one slice transform."""
     slices = F.transform(
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         lambda m: F.slice(F.col("e"), m * PQ_SUBDIM + 1, PQ_SUBDIM),
     )
-    return emb.select("vec_id", F.posexplode(slices).alias("m", "sv"))
+    return emb.select(key, F.posexplode(slices).alias("m", "sv"))
 
 
 def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
@@ -749,8 +698,9 @@ def fit_pq_codebook(emb: DataFrame, iters: int = PQ_ITERS) -> DataFrame:
         )
     # pin the M x K codebook (same rationale as fit_centroids): the PQ
     # searches reference it from both the codes join and the ADC
-    # distance-table join — materialize the fit once, lazily
-    # (eager=False, see fit_centroids).
+    # distance-table join, and the checkpoint materializes the fit once
+    # per query. As there, building a query over it still runs the
+    # fit's shuffle stages under adaptive execution.
     return cents.localCheckpoint(eager=False)
 
 
@@ -761,11 +711,8 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     for search, err is the per-subspace reconstruction residual).
     Product quantization after Jegou et al. 2011, "Product Quantization
     for Nearest Neighbor Search"."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    cents = fit_pq_codebook(emb)
-    final = _pq_assign(_subvectors(emb), cents)
+    emb = _vectors(spark, sf_dir)
+    final = _pq_assign(_subvectors(emb), fit_pq_codebook(emb))
     return (
         final.select(
             "vec_id",
@@ -774,6 +721,101 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("d", 6).alias("err"),
         )
         .orderBy("vec_id", "sub")
+    )
+
+
+def _residual_vectors(emb: DataFrame, coarse: DataFrame) -> DataFrame:
+    """(vec_id, cell, e): each vector replaced by its RESIDUAL vs the
+    coarse centroid of its cell (vec - c_cell) — the IVFADC encoding of
+    Jegou et al. 2011 §III: residuals have strictly less energy than
+    raw vectors (the cell mean is removed), so the same PQ budget
+    quantizes them with lower reconstruction error and the ADC
+    estimates tighten."""
+    assigned = _assign_to_centroids(emb, coarse)
+    return assigned.join(
+        F.broadcast(coarse), assigned.cell == coarse.cent_id
+    ).select(
+        "vec_id", "cell", F.zip_with("e", "c", lambda x, y: x - y).alias("e")
+    )
+
+
+def _adc_knn(
+    spark: SparkSession, sf_dir: str, k: int, nprobe: int | None = None,
+    residual: bool = False,
+) -> DataFrame:
+    """The asymmetric-distance (ADC) top-k search of Jegou et al. 2011
+    behind the three PQ kNN queries. Without ``nprobe`` it scans every
+    vector's PQ codes; with it, a fitted coarse quantizer files each
+    vector under its nearest cell and the query scans only its
+    ``nprobe`` nearest cells. With ``residual``, PQ encodes vec - its
+    cell's centroid, and the query builds one distance table per probed
+    cell from its own residual against that cell's centroid.
+
+    The query meets the codebook once (a PQ_M x PQ_K distance table per
+    cell, micro fixed point, broadcast); each vector's distance is then
+    a BIGINT sum of PQ_M table lookups, so the search touches raw floats
+    only for the tables and the sum is partition-order independent."""
+    emb = _vectors(spark, sf_dir)
+    q = emb.where(F.col("vec_id") == QUERY_VEC_ID)
+    vecs, cells, q_sub = emb, None, _subvectors(q)
+    if nprobe is not None:
+        coarse = fit_centroids(spark, sf_dir)
+        w = Window.orderBy(F.col("ccos").desc(), F.col("cent_id"))
+        probe = (
+            q.crossJoin(F.broadcast(coarse))
+            .select("cent_id", "c", _cosine(F.col("e"), F.col("c")).alias("ccos"))
+            .withColumn("r", F.row_number().over(w))
+            .where(F.col("r") <= nprobe)
+            .select(F.col("cent_id").alias("cell"), "c")
+        )
+        if residual:
+            res = _residual_vectors(emb, coarse)
+            vecs, cells = res.select("vec_id", "e"), res.select("vec_id", "cell")
+            q_res = probe.crossJoin(F.broadcast(q.select(F.col("e").alias("qe")))).select(
+                "cell", F.zip_with("qe", "c", lambda x, y: x - y).alias("e")
+            )
+            q_sub = _subvectors(q_res, "cell")
+        else:
+            cells = _assign_to_centroids(emb, coarse).select("vec_id", "cell")
+    book = fit_pq_codebook(vecs)
+    # the index: each vector's PQ codes, filed under its cell
+    codes = _pq_assign(_subvectors(vecs), book).select("vec_id", "m", "code")
+    index = codes if cells is None else cells.join(codes, "vec_id")
+    per_cell = ["cell"] if residual else []
+    dtable = (
+        q_sub.withColumnRenamed("sv", "qv")
+        .join(F.broadcast(book), "m")
+        .select(
+            *per_cell,
+            "m",
+            F.col("cent_id").alias("code"),
+            F.round(_l2sq(F.col("qv"), F.col("c")) * PQ_MICRO)
+            .cast("long")
+            .alias("d_micro"),
+        )
+    )
+    adist = index.where(F.col("vec_id") != QUERY_VEC_ID)
+    if cells is not None and not residual:
+        # the residual tables exist only for probed cells; the one raw
+        # table serves every cell, so the probe join filters them
+        adist = adist.join(F.broadcast(probe.select("cell")), "cell")
+    by = ["vec_id"] if cells is None else ["vec_id", "cell"]
+    adist = (
+        adist.join(F.broadcast(dtable), [*per_cell, "m", "code"])
+        .groupBy(*by)
+        .agg(F.sum("d_micro").alias("adist_micro"))
+    )
+    w = Window.orderBy("adist_micro", "vec_id")
+    return (
+        adist.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("rank").cast("long").alias("rank"),
+            "vec_id",
+            *(F.col(c).cast("long").alias(c) for c in by[1:]),
+            "adist_micro",
+        )
+        .orderBy("rank")
     )
 
 
@@ -793,138 +835,8 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> DataFram
     signal instead: ADC's top-10 averages well below the corpus mean
     exact distance. On real (clustered) embeddings PQ recall behaves
     as in Jegou et al."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    cents = fit_pq_codebook(emb)
-    codes = _pq_assign(_subvectors(emb), cents).select("vec_id", "m", "code")
-    q_sub = _subvectors(emb.where(F.col("vec_id") == QUERY_VEC_ID)).select(
-        "m", F.col("sv").alias("qv")
-    )
-    dtable = q_sub.join(cents, "m").select(
-        "m",
-        F.col("cent_id").alias("code"),
-        F.round(_l2sq(F.col("qv"), F.col("c")) * PQ_MICRO)
-        .cast("long")
-        .alias("d_micro"),
-    )
-    adist = (
-        codes.where(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(dtable), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("d_micro").alias("adist_micro"))
-    )
-    w = Window.orderBy("adist_micro", "vec_id")
-    return (
-        adist.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("rank").cast("long").alias("rank"), "vec_id", "adist_micro")
-        .orderBy("rank")
-    )
+    return _adc_knn(spark, sf_dir, k)
 
-
-def _pq_slices_sql(src: str = "base") -> str:
-    slices = ", ".join(
-        f"emb[{m * PQ_SUBDIM + 1}:{(m + 1) * PQ_SUBDIM}]" for m in range(PQ_M)
-    )
-    return (
-        f"SELECT vec_id, CAST(unnest(range({PQ_M})) AS BIGINT) AS m, "
-        f"unnest([{slices}]) AS sv FROM {src}"
-    )
-
-
-def _pq_cte_chain(iters: int = PQ_ITERS, include_base: bool = True, src: str = "base") -> str:
-    """base + sub + unrolled per-subspace Lloyd CTEs ending at
-    ``pc{iters}`` (m, cent_id, c). ``include_base=False`` composes with
-    a caller that already defined ``base`` (the IVF+PQ oracle); ``src``
-    selects the (vec_id, emb) table the subvectors slice (the residual
-    oracle points it at the residual CTE)."""
-    d = _l2sq_sql("s.sv", "c.c")
-    parts = [
-        f"sub AS MATERIALIZED ({_pq_slices_sql(src)})",
-        f"pc0 AS (SELECT m, vec_id AS cent_id, sv AS c FROM sub WHERE vec_id < {PQ_K})",
-    ]
-    if include_base:
-        parts.insert(
-            0,
-            "base AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)",
-        )
-    for i in range(1, iters + 1):
-        prev = f"pc{i - 1}"
-        parts.append(
-            f"""pa{i} AS MATERIALIZED (
-  SELECT vec_id, m, sv, cent_id AS cell FROM (
-    SELECT s.vec_id, s.m, s.sv, c.cent_id,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-                              ORDER BY {d}, c.cent_id) AS r
-    FROM sub s JOIN {prev} c ON s.m = c.m
-  ) t WHERE r = 1
-)"""
-        )
-        parts.append(
-            f"""pc{i} AS MATERIALIZED (
-  SELECT m, cell AS cent_id, list(val ORDER BY dim) AS c FROM (
-    SELECT m, cell, dim, round(avg(val), 6) AS val FROM (
-      SELECT m, cell, unnest(range(1, {PQ_SUBDIM + 1})) AS dim, unnest(sv) AS val
-      FROM pa{i}
-    ) x GROUP BY m, cell, dim
-  ) y GROUP BY m, cell
-)"""
-        )
-    return ",\n".join(parts)
-
-
-def pq_codes_sql(iters: int = PQ_ITERS) -> str:
-    d = _l2sq_sql("s.sv", "c.c")
-    return f"""WITH {_pq_cte_chain(iters)},
-final AS (
-  SELECT vec_id, m, cent_id AS code, d FROM (
-    SELECT s.vec_id, s.m, c.cent_id, {d} AS d,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-                              ORDER BY {d}, c.cent_id) AS r
-    FROM sub s JOIN pc{iters} c ON s.m = c.m
-  ) t WHERE r = 1
-)
-SELECT vec_id, CAST(m AS BIGINT) AS sub, CAST(code AS BIGINT) AS code,
-       round(d, 6) AS err
-FROM final ORDER BY vec_id, sub
-"""
-
-
-def knn_pq_adc_sql(k: int = IVF_TOP_K, iters: int = PQ_ITERS) -> str:
-    d = _l2sq_sql("s.sv", "c.c")
-    dq = _l2sq_sql("q.sv", "c.c")
-    return f"""WITH {_pq_cte_chain(iters)},
-codes AS (
-  SELECT vec_id, m, cent_id AS code FROM (
-    SELECT s.vec_id, s.m, c.cent_id,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-                              ORDER BY {d}, c.cent_id) AS r
-    FROM sub s JOIN pc{iters} c ON s.m = c.m
-  ) t WHERE r = 1
-),
-dtable AS (
-  SELECT q.m, c.cent_id AS code,
-         CAST(round({dq} * {PQ_MICRO}) AS BIGINT) AS d_micro
-  FROM (SELECT m, sv FROM sub WHERE vec_id = {QUERY_VEC_ID}) q
-  JOIN pc{iters} c ON q.m = c.m
-),
-adist AS (
-  SELECT cd.vec_id, sum(dt.d_micro) AS adist_micro
-  FROM codes cd JOIN dtable dt ON cd.m = dt.m AND cd.code = dt.code
-  WHERE cd.vec_id != {QUERY_VEC_ID}
-  GROUP BY cd.vec_id
-)
-SELECT CAST(rank AS BIGINT) AS rank, vec_id,
-       CAST(adist_micro AS BIGINT) AS adist_micro FROM (
-  SELECT vec_id, adist_micro,
-         row_number() OVER (ORDER BY adist_micro, vec_id) AS rank
-  FROM adist
-) r WHERE rank <= {k} ORDER BY rank
-"""
-
-
-# --- composed IVF + PQ (the full FAISS-style index layout) -------------
 
 def knn_ivf_pq(
     spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE
@@ -941,130 +853,7 @@ def knn_ivf_pq(
     IVFADC layout (PQ over vec - coarse centroid, per-cell ADC
     tables), with strictly lower reconstruction error — see
     ``test_residual_pq_strictly_improves_reconstruction``."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    coarse = fit_centroids(spark, sf_dir)
-    book = fit_pq_codebook(emb)
-    # index build: inverted lists of PQ codes
-    assigned = _assign_to_centroids(emb, coarse).select("vec_id", "cell")
-    codes = _pq_assign(_subvectors(emb), book).select("vec_id", "m", "code")
-    index = assigned.join(codes, "vec_id")
-    # query side: nprobe nearest cells + ADC table, both broadcast
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID)
-    qscored = q.crossJoin(F.broadcast(coarse)).select(
-        "cent_id", _cosine(F.col("e"), F.col("c")).alias("ccos")
-    )
-    wp = Window.orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    probe = (
-        qscored.withColumn("r", F.row_number().over(wp))
-        .where(F.col("r") <= nprobe)
-        .select(F.col("cent_id").alias("cell"))
-    )
-    q_sub = _subvectors(q).select("m", F.col("sv").alias("qv"))
-    dtable = q_sub.join(book, "m").select(
-        "m",
-        F.col("cent_id").alias("code"),
-        F.round(_l2sq(F.col("qv"), F.col("c")) * PQ_MICRO)
-        .cast("long")
-        .alias("d_micro"),
-    )
-    adist = (
-        index.where(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(probe), "cell")
-        .join(F.broadcast(dtable), ["m", "code"])
-        .groupBy("vec_id", "cell")
-        .agg(F.sum("d_micro").alias("adist_micro"))
-    )
-    w = Window.orderBy("adist_micro", "vec_id")
-    return (
-        adist.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("rank").cast("long").alias("rank"),
-            "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            "adist_micro",
-        )
-        .orderBy("rank")
-    )
-
-
-def knn_ivf_pq_sql(
-    k: int = IVF_TOP_K,
-    nprobe: int = IVF_NPROBE,
-    c: int = IVF_CENTROIDS,
-    kmeans_iters: int = KMEANS_ITERS,
-    pq_iters: int = PQ_ITERS,
-) -> str:
-    ccos = _cosine_sql("e.emb", "c.c")
-    d = _l2sq_sql("s.sv", "c.c")
-    dq = _l2sq_sql("q.sv", "c.c")
-    return f"""WITH {_kmeans_cte_chain(c, kmeans_iters)},
-{_pq_cte_chain(pq_iters, include_base=False)},
-coarse_scored AS MATERIALIZED (
-  SELECT e.vec_id, c.cent_id, {ccos} AS ccos FROM base e, c{kmeans_iters} c
-),
-assigned AS (
-  SELECT vec_id, cent_id AS cell FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
-    FROM coarse_scored
-  ) t WHERE r = 1
-),
-probe AS (
-  SELECT cent_id AS cell FROM (
-    SELECT cent_id, row_number() OVER (ORDER BY ccos DESC, cent_id) AS r
-    FROM coarse_scored WHERE vec_id = {QUERY_VEC_ID}
-  ) t WHERE r <= {nprobe}
-),
-codes AS MATERIALIZED (
-  SELECT vec_id, m, cent_id AS code FROM (
-    SELECT s.vec_id, s.m, c.cent_id,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-                              ORDER BY {d}, c.cent_id) AS r
-    FROM sub s JOIN pc{pq_iters} c ON s.m = c.m
-  ) t WHERE r = 1
-),
-dtable AS (
-  SELECT q.m, c.cent_id AS code,
-         CAST(round({dq} * {PQ_MICRO}) AS BIGINT) AS d_micro
-  FROM (SELECT m, sv FROM sub WHERE vec_id = {QUERY_VEC_ID}) q
-  JOIN pc{pq_iters} c ON q.m = c.m
-),
-adist AS (
-  SELECT a.vec_id, a.cell, sum(dt.d_micro) AS adist_micro
-  FROM assigned a
-  JOIN probe p ON a.cell = p.cell
-  JOIN codes cd ON cd.vec_id = a.vec_id
-  JOIN dtable dt ON cd.m = dt.m AND cd.code = dt.code
-  WHERE a.vec_id != {QUERY_VEC_ID}
-  GROUP BY a.vec_id, a.cell
-)
-SELECT CAST(rank AS BIGINT) AS rank, vec_id, CAST(cell AS BIGINT) AS cell,
-       CAST(adist_micro AS BIGINT) AS adist_micro FROM (
-  SELECT vec_id, cell, adist_micro,
-         row_number() OVER (ORDER BY adist_micro, vec_id) AS rank
-  FROM adist
-) r WHERE rank <= {k} ORDER BY rank
-"""
-
-
-# --- residual IVF+PQ (the standard IVFADC layout) ----------------------
-
-def _residual_vectors(emb: DataFrame, coarse: DataFrame) -> DataFrame:
-    """(vec_id, cell, e): each vector replaced by its RESIDUAL vs the
-    coarse centroid of its cell (vec - c_cell) — the IVFADC encoding of
-    Jegou et al. 2011 §III: residuals have strictly less energy than
-    raw vectors (the cell mean is removed), so the same PQ budget
-    quantizes them with lower reconstruction error and the ADC
-    estimates tighten."""
-    assigned = _assign_to_centroids(emb, coarse)
-    return assigned.join(
-        F.broadcast(coarse), assigned.cell == coarse.cent_id
-    ).select(
-        "vec_id", "cell", F.zip_with("e", "c", lambda x, y: x - y).alias("e")
-    )
+    return _adc_knn(spark, sf_dir, k, nprobe)
 
 
 def knn_ivf_pq_residual(
@@ -1079,143 +868,138 @@ def knn_ivf_pq_residual(
     Everything else keeps the composed plan's scale shape: the search
     touches raw floats only for the distance tables; per-vector work is
     code lookups and a BIGINT sum."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    coarse = fit_centroids(spark, sf_dir)
-    res = _residual_vectors(emb, coarse)
-    book = fit_pq_codebook(res.select("vec_id", "e"))
-    # index build: inverted lists of residual PQ codes
-    codes = _pq_assign(_subvectors(res.select("vec_id", "e")), book).select(
-        "vec_id", "m", "code"
-    )
-    index = res.select("vec_id", "cell").join(codes, "vec_id")
-    # query side: nprobe nearest cells, then one ADC table PER CELL
-    # from the query's residual against that cell's centroid
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID)
-    qscored = q.crossJoin(F.broadcast(coarse)).select(
-        "cent_id", "c", _cosine(F.col("e"), F.col("c")).alias("ccos")
-    )
-    wp = Window.orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    probe = (
-        qscored.withColumn("r", F.row_number().over(wp))
-        .where(F.col("r") <= nprobe)
-        .select(F.col("cent_id").alias("cell"), "c")
-    )
-    q_res = probe.crossJoin(F.broadcast(q.select(F.col("e").alias("qe")))).select(
-        "cell", F.zip_with("qe", "c", lambda x, y: x - y).alias("e")
-    )
-    slices = F.transform(
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-        lambda m: F.slice(F.col("e"), m * PQ_SUBDIM + 1, PQ_SUBDIM),
-    )
-    q_sub = q_res.select("cell", F.posexplode(slices).alias("m", "qv"))
-    dtable = q_sub.join(F.broadcast(book), "m").select(
-        "cell",
-        "m",
-        F.col("cent_id").alias("code"),
-        F.round(_l2sq(F.col("qv"), F.col("c")) * PQ_MICRO)
-        .cast("long")
-        .alias("d_micro"),
-    )
-    adist = (
-        index.where(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(dtable), ["cell", "m", "code"])
-        .groupBy("vec_id", "cell")
-        .agg(F.sum("d_micro").alias("adist_micro"))
-    )
-    w = Window.orderBy("adist_micro", "vec_id")
-    return (
-        adist.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("rank").cast("long").alias("rank"),
-            "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            "adist_micro",
-        )
-        .orderBy("rank")
-    )
+    return _adc_knn(spark, sf_dir, k, nprobe, residual=True)
 
 
-def knn_ivf_pq_residual_sql(
-    k: int = IVF_TOP_K,
-    nprobe: int = IVF_NPROBE,
-    c: int = IVF_CENTROIDS,
-    kmeans_iters: int = KMEANS_ITERS,
-    pq_iters: int = PQ_ITERS,
-) -> str:
-    ccos = _cosine_sql("e.emb", "c.c")
-    d = _l2sq_sql("s.sv", "c.c")
-    dq = _l2sq_sql("q.sv", "c.c")
-    res_expr = f"list_transform(range(1, {DIM + 1}), i -> e.emb[i] - c.c[i])"
-    qres_expr = f"list_transform(range(1, {DIM + 1}), i -> q.emb[i] - c.c[i])"
-    qslices = ", ".join(
+def _pq_slices_sql(src: str, key: str = "vec_id") -> str:
+    slices = ", ".join(
         f"emb[{m * PQ_SUBDIM + 1}:{(m + 1) * PQ_SUBDIM}]" for m in range(PQ_M)
     )
-    return f"""WITH {_kmeans_cte_chain(c, kmeans_iters)},
-coarse_scored AS MATERIALIZED (
-  SELECT e.vec_id, c.cent_id, {ccos} AS ccos FROM base e, c{kmeans_iters} c
-),
-assigned AS MATERIALIZED (
-  SELECT vec_id, cent_id AS cell FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
-    FROM coarse_scored
-  ) t WHERE r = 1
-),
-res AS MATERIALIZED (
-  SELECT e.vec_id, a.cell, {res_expr} AS emb
-  FROM base e
-  JOIN assigned a ON a.vec_id = e.vec_id
-  JOIN c{kmeans_iters} c ON c.cent_id = a.cell
-),
-{_pq_cte_chain(pq_iters, include_base=False, src="res")},
-codes AS MATERIALIZED (
-  SELECT vec_id, m, cent_id AS code FROM (
-    SELECT s.vec_id, s.m, c.cent_id,
+    return (
+        f"SELECT {key}, CAST(unnest(range({PQ_M})) AS BIGINT) AS m, "
+        f"unnest([{slices}]) AS sv FROM {src}"
+    )
+
+
+def _pq_assign_sql(book: str) -> str:
+    """The SQL twin of ``_pq_assign``: each ``sub`` row's nearest
+    codeword of ``book`` (m, cent_id, c) -> (vec_id, m, sv, code, d)."""
+    d = _l2sq_sql("s.sv", "c.c")
+    return f"""SELECT vec_id, m, sv, cent_id AS code, d FROM (
+    SELECT s.vec_id, s.m, s.sv, c.cent_id, {d} AS d,
            row_number() OVER (PARTITION BY s.vec_id, s.m
                               ORDER BY {d}, c.cent_id) AS r
-    FROM sub s JOIN pc{pq_iters} c ON s.m = c.m
-  ) t WHERE r = 1
-),
-probe AS (
-  SELECT cent_id AS cell FROM (
-    SELECT cent_id, row_number() OVER (ORDER BY ccos DESC, cent_id) AS r
-    FROM coarse_scored WHERE vec_id = {QUERY_VEC_ID}
-  ) t WHERE r <= {nprobe}
-),
-qres AS (
-  SELECT p.cell, {qres_expr} AS emb
+    FROM sub s JOIN {book} c ON s.m = c.m
+  ) t WHERE r = 1"""
+
+
+def _pq_cte_chain(iters: int = PQ_ITERS, include_base: bool = True, src: str = "base") -> str:
+    """base + sub + unrolled per-subspace Lloyd CTEs ending at
+    ``pc{iters}`` (m, cent_id, c). ``include_base=False`` composes with
+    a caller that already defined ``base`` (the IVF+PQ oracle); ``src``
+    selects the (vec_id, emb) table the subvectors slice (the residual
+    oracle points it at the residual CTE)."""
+    parts = [
+        f"sub AS MATERIALIZED ({_pq_slices_sql(src)})",
+        f"pc0 AS (SELECT m, vec_id AS cent_id, sv AS c FROM sub WHERE vec_id < {PQ_K})",
+    ]
+    if include_base:
+        parts.insert(
+            0,
+            "base AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)",
+        )
+    for i in range(1, iters + 1):
+        parts.append(f"pa{i} AS MATERIALIZED ({_pq_assign_sql(f'pc{i - 1}')})")
+        parts.append(
+            f"""pc{i} AS MATERIALIZED (
+  SELECT m, code AS cent_id, list(val ORDER BY dim) AS c FROM (
+    SELECT m, code, dim, round(avg(val), 6) AS val FROM (
+      SELECT m, code, unnest(range(1, {PQ_SUBDIM + 1})) AS dim, unnest(sv) AS val
+      FROM pa{i}
+    ) x GROUP BY m, code, dim
+  ) y GROUP BY m, code
+)"""
+        )
+    return ",\n".join(parts)
+
+
+def pq_codes_sql(iters: int = PQ_ITERS) -> str:
+    return f"""WITH {_pq_cte_chain(iters)}
+SELECT vec_id, CAST(m AS BIGINT) AS sub, CAST(code AS BIGINT) AS code,
+       round(d, 6) AS err
+FROM ({_pq_assign_sql(f"pc{iters}")}) final ORDER BY vec_id, sub
+"""
+
+
+def _adc_knn_sql(
+    k: int, nprobe: int | None = None, residual: bool = False,
+    c: int = IVF_CENTROIDS, kmeans_iters: int = KMEANS_ITERS, pq_iters: int = PQ_ITERS,
+) -> str:
+    """The SQL twin of ``_adc_knn``: the unrolled fits, the codes, the
+    query's distance table(s), and the top-k over the summed lookups."""
+    book, ivf = f"pc{pq_iters}", nprobe is not None
+    ctes = []
+    if ivf:
+        cents = f"c{kmeans_iters}"
+        ctes += [_kmeans_cte_chain(c, kmeans_iters), _assign_sql(cents, nprobe=nprobe)]
+    if residual:
+        minus = f"list_transform(range(1, {DIM + 1}), i -> {{}}.emb[i] - c.c[i])"
+        ctes.append(f"""res AS MATERIALIZED (
+  SELECT e.vec_id, a.cell, {minus.format("e")} AS emb
+  FROM base e
+  JOIN assigned a ON a.vec_id = e.vec_id
+  JOIN {cents} c ON c.cent_id = a.cell
+)""")
+    ctes.append(_pq_cte_chain(pq_iters, not ivf, "res" if residual else "base"))
+    ctes.append(f"codes AS MATERIALIZED ({_pq_assign_sql(book)})")
+    if residual:
+        ctes.append(f"""qres AS (
+  SELECT p.cell, {minus.format("q")} AS emb
   FROM probe p
-  JOIN c{kmeans_iters} c ON c.cent_id = p.cell,
+  JOIN {cents} c ON c.cent_id = p.cell,
   (SELECT emb FROM base WHERE vec_id = {QUERY_VEC_ID}) q
-),
-qsub AS (
-  SELECT cell, CAST(unnest(range({PQ_M})) AS BIGINT) AS m,
-         unnest([{qslices}]) AS sv
-  FROM qres
-),
-dtable AS (
-  SELECT q.cell, q.m, c.cent_id AS code,
-         CAST(round({dq} * {PQ_MICRO}) AS BIGINT) AS d_micro
-  FROM qsub q JOIN pc{pq_iters} c ON q.m = c.m
-),
-adist AS (
-  SELECT a.vec_id, a.cell, sum(dt.d_micro) AS adist_micro
-  FROM assigned a
-  JOIN codes cd ON cd.vec_id = a.vec_id
-  JOIN dtable dt ON dt.cell = a.cell AND dt.m = cd.m AND dt.code = cd.code
-  WHERE a.vec_id != {QUERY_VEC_ID}
-  GROUP BY a.vec_id, a.cell
-)
-SELECT CAST(rank AS BIGINT) AS rank, vec_id, CAST(cell AS BIGINT) AS cell,
-       CAST(adist_micro AS BIGINT) AS adist_micro FROM (
-  SELECT vec_id, cell, adist_micro,
-         row_number() OVER (ORDER BY adist_micro, vec_id) AS rank
-  FROM adist
+)""")
+        qsub, per_cell = _pq_slices_sql("qres", "cell"), "q.cell, "
+    else:
+        qsub, per_cell = f"SELECT m, sv FROM sub WHERE vec_id = {QUERY_VEC_ID}", ""
+    ctes.append(f"""dtable AS (
+  SELECT {per_cell}q.m, c.cent_id AS code,
+         CAST(round({_l2sq_sql("q.sv", "c.c")} * {PQ_MICRO}) AS BIGINT) AS d_micro
+  FROM ({qsub}) q JOIN {book} c ON q.m = c.m
+)""")
+    cell = ", a.cell" if ivf else ""
+    joins = "JOIN assigned a ON a.vec_id = cd.vec_id\n  " if ivf else ""
+    if ivf and not residual:
+        joins += "JOIN probe p ON p.cell = a.cell\n  "
+    ctes.append(f"""adist AS (
+  SELECT cd.vec_id{cell}, sum(dt.d_micro) AS adist_micro
+  FROM codes cd
+  {joins}JOIN dtable dt ON dt.m = cd.m AND dt.code = cd.code{" AND dt.cell = a.cell" if residual else ""}
+  WHERE cd.vec_id != {QUERY_VEC_ID}
+  GROUP BY cd.vec_id{cell}
+)""")
+    out_cell = "CAST(cell AS BIGINT) AS cell, " if ivf else ""
+    sep = ",\n"
+    return f"""WITH {sep.join(ctes)}
+SELECT CAST(rank AS BIGINT) AS rank, vec_id, {out_cell}CAST(adist_micro AS BIGINT) AS adist_micro
+FROM (
+  SELECT *, row_number() OVER (ORDER BY adist_micro, vec_id) AS rank FROM adist
 ) r WHERE rank <= {k} ORDER BY rank
 """
+
+
+def knn_pq_adc_sql(k: int = IVF_TOP_K, iters: int = PQ_ITERS) -> str:
+    return _adc_knn_sql(k, pq_iters=iters)
+
+
+def knn_ivf_pq_sql(k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE, c: int = IVF_CENTROIDS,
+                   kmeans_iters: int = KMEANS_ITERS, pq_iters: int = PQ_ITERS) -> str:
+    return _adc_knn_sql(k, nprobe, False, c, kmeans_iters, pq_iters)
+
+
+def knn_ivf_pq_residual_sql(k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE, c: int = IVF_CENTROIDS,
+                            kmeans_iters: int = KMEANS_ITERS, pq_iters: int = PQ_ITERS) -> str:
+    return _adc_knn_sql(k, nprobe, True, c, kmeans_iters, pq_iters)
 
 
 # --- SemDeDup: semantic deduplication over embedding clusters ----------
@@ -1260,26 +1044,13 @@ def semantic_dedup(
     - the dominated set is a distinct (vec_id) anti-join back — one
       narrow shuffle keyed by vec_id.
     """
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    cents = fit_centroids(spark, sf_dir)
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "e", "cent_id", _cosine(F.col("e"), F.col("c")).alias("ccos")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("cent_id")
-    )
-    assigned = (
-        scored.withColumn("r", F.row_number().over(w_assign))
-        .where(F.col("r") == 1)
+    emb = _vectors(spark, sf_dir)
+    assigned = _assign_to_centroids(emb, fit_centroids(spark, sf_dir)).select(
+        "vec_id", "e", "cell",
         # round BEFORE ranking: the rank order must be reproducible
         # across engines, and 1e-16 summation noise would reorder
         # near-equal centroid cosines
-        .select(
-            "vec_id", "e", F.col("cent_id").alias("cell"),
-            F.round("ccos", 6).alias("ccos"),
-        )
+        F.round("ccos", 6).alias("ccos"),
     )
     w_rank = Window.partitionBy("cell").orderBy(F.col("ccos").asc(), F.col("vec_id"))
     # norm precomputed once: the pair stage then pays ONE dot per pair
@@ -1287,48 +1058,22 @@ def semantic_dedup(
     ranked = assigned.withColumn("rnk", F.row_number().over(w_rank)).withColumn(
         "nn", F.sqrt(_dot(F.col("e"), F.col("e")))
     )
-
-    def _pair_cos(a_side, b_side):
-        return F.round(
-            _dot(F.col(f"{a_side}.e"), F.col(f"{b_side}.e"))
-            / F.greatest(
-                F.col(f"{a_side}.nn") * F.col(f"{b_side}.nn"), F.lit(1e-300)
-            ),
-            6,
+    strategy = _pair_strategy(strategy, emb)
+    # the LATER-ranked member of each eps-close pair is the dominated
+    # one; the broadcast join already orders a before b
+    later = (
+        F.col("b.vec_id")
+        if strategy == "broadcast"
+        else F.when(F.col("a.rnk") < F.col("b.rnk"), F.col("b.vec_id")).otherwise(
+            F.col("a.vec_id")
         )
-
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if 0 < _input_bytes(load_embeddings(spark, sf_dir)) <= BROADCAST_PAIR_JOIN_MAX_BYTES
-            else "block_pairs"
-        )
-    if strategy == "broadcast":
-        a, b = ranked.alias("a"), ranked.alias("b")
-        joined = a.join(
-            F.broadcast(b),
-            (F.col("a.cell") == F.col("b.cell")) & (F.col("a.rnk") < F.col("b.rnk")),
-        )
-        dominated = (
-            joined.where(_pair_cos("a", "b") >= F.lit(eps))
-            .select(F.col("b.vec_id").alias("vec_id"))
-            .distinct()
-        )
-    else:
-        # shared salted block-pair shuffle join (``_block_pair_join``);
-        # every unordered same-cell pair meets exactly once, then the
-        # LATER-ranked member is the dominated one
-        joined = _block_pair_join(ranked, n_salts, "rnk")
-        dominated = (
-            joined.where(_pair_cos("a", "b") >= F.lit(eps))
-            .select(
-                F.when(F.col("a.rnk") < F.col("b.rnk"), F.col("b.vec_id"))
-                .otherwise(F.col("a.vec_id"))
-                .alias("vec_id")
-            )
-            .distinct()
-        )
-
+    )
+    dominated = (
+        _cell_pairs(ranked, strategy, n_salts, "rnk")
+        .where(_pair_cos("nn") >= F.lit(eps))
+        .select(later.alias("vec_id"))
+        .distinct()
+    )
     return (
         ranked.join(
             dominated.withColumn("_dom", F.lit(True)), "vec_id", "left"
@@ -1348,34 +1093,24 @@ def semantic_dedup_sql(
     k: int = IVF_CENTROIDS,
     iters: int = KMEANS_ITERS,
 ) -> str:
-    ccos = _cosine_sql("e.emb", "c.c")
     pdot = _dot_sql("i.emb", "j.emb")
     return f"""
 WITH {_kmeans_cte_chain(k, iters)},
-sd_scored AS (
-  SELECT e.vec_id, e.emb, c.cent_id, {ccos} AS ccos FROM base e, c{iters} c
-),
-sd_assigned AS (
-  SELECT vec_id, emb, cent_id AS cell, round(ccos, 6) AS ccos FROM (
-    SELECT vec_id, emb, cent_id, ccos,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
-    FROM sd_scored
-  ) t WHERE r = 1
-),
-sd_ranked AS MATERIALIZED (
+{_assign_sql(f"c{iters}", emb=True, ccos=", round(ccos, 6) AS ccos")},
+ranked AS MATERIALIZED (
   SELECT *, row_number() OVER (PARTITION BY cell ORDER BY ccos ASC, vec_id) AS rnk,
          sqrt({_dot_sql('emb', 'emb')}) AS nn
-  FROM sd_assigned
+  FROM assigned
 ),
-sd_dominated AS (
+dominated AS (
   SELECT DISTINCT j.vec_id
-  FROM sd_ranked i JOIN sd_ranked j
+  FROM ranked i JOIN ranked j
     ON j.cell = i.cell AND i.rnk < j.rnk
    AND round({pdot} / greatest(i.nn * j.nn, 1e-300), 6) >= {eps}
 )
 SELECT r.vec_id, CAST(r.cell AS BIGINT) AS cell, r.ccos,
        (d.vec_id IS NULL) AS kept
-FROM sd_ranked r LEFT JOIN sd_dominated d ON d.vec_id = r.vec_id
+FROM ranked r LEFT JOIN dominated d ON d.vec_id = r.vec_id
 ORDER BY r.vec_id
 """
 

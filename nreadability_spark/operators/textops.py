@@ -999,23 +999,27 @@ PII_PATTERNS = {
 }
 
 
+def _pii_hits(texts: DataFrame) -> DataFrame:
+    """(doc_id, n_emails, n_phones, n_ssns) per ``texts`` row (doc_id,
+    text) with at least one hit, by doc_id."""
+    counts = [
+        F.regexp_count(F.col("text"), F.lit(rx)).cast("long").alias(f"n_{name}")
+        for name, rx in PII_PATTERNS.items()
+    ]
+    any_hit = None
+    for name in PII_PATTERNS:
+        c = F.col(f"n_{name}") > 0
+        any_hit = c if any_hit is None else (any_hit | c)
+    return texts.select("doc_id", *counts).where(any_hit).orderBy("doc_id")
+
+
 def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document PII pattern counts (emails/phones/SSN-shaped) — the
     redaction pre-scan of a cleaning pipeline. Pure regexp_count scalar
     expressions, embarrassingly parallel; only documents with at least
     one hit are returned (at 100 TB the clean majority is the corpus —
     don't materialize zero rows)."""
-    docs = load_documents(spark, sf_dir)
-    counts = [
-        F.regexp_count(F.col("text"), F.lit(rx)).cast("long").alias(f"n_{name}")
-        for name, rx in PII_PATTERNS.items()
-    ]
-    out = docs.select("doc_id", *counts)
-    any_hit = None
-    for name in PII_PATTERNS:
-        c = F.col(f"n_{name}") > 0
-        any_hit = c if any_hit is None else (any_hit | c)
-    return out.where(any_hit).orderBy("doc_id")
+    return _pii_hits(load_documents(spark, sf_dir))
 
 
 def pii_scan_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1045,16 +1049,7 @@ def pii_scan_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CASE WHEN doc_id % 5 = 0 THEN 'ssn 123-45-6789 end' ELSE 'no ssn here' END"),
         ).alias("text"),
     )
-    counts = [
-        F.regexp_count(F.col("text"), F.lit(rx)).cast("long").alias(f"n_{name}")
-        for name, rx in PII_PATTERNS.items()
-    ]
-    out = planted.select("doc_id", *counts)
-    any_hit = None
-    for name in PII_PATTERNS:
-        c = F.col(f"n_{name}") > 0
-        any_hit = c if any_hit is None else (any_hit | c)
-    return out.where(any_hit).orderBy("doc_id")
+    return _pii_hits(planted)
 
 
 def pii_scan_planted_sql() -> str:
@@ -1095,6 +1090,92 @@ LM_VOCAB_SIZE = 40  # top-V corpus tokens kept as the unigram model
 LM_MICRO = 1_000_000  # fixed-point grain: log10-prob in millionths
 
 
+def _unigram_model(toks: DataFrame, vocab_size: int):
+    """The unigram LM both scorers fit on ``toks`` (one row per token):
+    ``vocab`` (tok, logp_micro), the top-V tokens by count (ties by
+    token) with their log10 probability, and ``oov`` (oov_micro), the
+    one-row 0.5/total floor. The top-V runs through
+    TakeOrderedAndProject, never a global sort."""
+    totals = toks.agg(F.count(F.lit(1)).cast("double").alias("total_toks"))
+    vocab = (
+        toks.groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .orderBy(F.col("cnt").desc(), F.col("tok"))
+        .limit(vocab_size)
+        .crossJoin(F.broadcast(totals))
+        .select(
+            "tok",
+            F.round(F.log10(F.col("cnt") / F.col("total_toks")) * LM_MICRO)
+            .cast("long")
+            .alias("logp_micro"),
+        )
+    )
+    oov = totals.select(
+        F.round(F.log10(F.lit(0.5) / F.col("total_toks")) * LM_MICRO)
+        .cast("long")
+        .alias("oov_micro")
+    )
+    return vocab, oov
+
+
+def _per_doc_logp(docs: DataFrame, scored: DataFrame, counted: str) -> DataFrame:
+    """Every document of ``docs`` with its ``scored`` sums (doc_id,
+    n_tokens, ``counted``, sum_logp_micro), 0 for a document without
+    tokens, and the mean log-prob ``avg_logp`` (NULL then). Column
+    pruning keeps the join to (doc_id, scores)."""
+    return (
+        docs.select("doc_id")
+        .join(scored, "doc_id", "left")
+        .select(
+            "doc_id",
+            *(
+                F.coalesce(c, F.lit(0)).cast("long").alias(c)
+                for c in ("n_tokens", counted, "sum_logp_micro")
+            ),
+            F.when(
+                F.coalesce("n_tokens", F.lit(0)) > 0,
+                F.round(
+                    F.col("sum_logp_micro") / F.col("n_tokens") / F.lit(float(LM_MICRO)), 6
+                ),
+            ).alias("avg_logp"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _unigram_model_sql(vocab_size: int) -> str:
+    """The SQL twin of ``_unigram_model``: CTEs ``toks`` (doc_id, pos,
+    tok), ``totals``, ``vocab`` and ``oov``."""
+    toks = tx.exploded_tokens_sql("documents")
+    return f"""toks AS MATERIALIZED (SELECT doc_id, pos, tok FROM ({toks}) t),
+totals AS (SELECT CAST(count(*) AS DOUBLE) AS total_toks FROM toks),
+vocab AS MATERIALIZED (
+  SELECT tok,
+         CAST(round(log10(cnt / total_toks) * {LM_MICRO}) AS BIGINT) AS logp_micro
+  FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
+        ORDER BY cnt DESC, tok LIMIT {vocab_size}) v
+  CROSS JOIN totals
+),
+oov AS (
+  SELECT CAST(round(log10(0.5 / total_toks) * {LM_MICRO}) AS BIGINT) AS oov_micro
+  FROM totals
+)"""
+
+
+def _per_doc_logp_sql(counted: str) -> str:
+    """The SQL twin of ``_per_doc_logp`` over a ``scored`` CTE."""
+    return f"""SELECT d.doc_id,
+       CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
+       CAST(coalesce(s.{counted}, 0) AS BIGINT) AS {counted},
+       CAST(coalesce(s.sum_logp_micro, 0) AS BIGINT) AS sum_logp_micro,
+       CASE WHEN coalesce(s.n_tokens, 0) > 0
+            THEN round(coalesce(s.sum_logp_micro, 0) / s.n_tokens / {LM_MICRO}.0, 6)
+            END AS avg_logp
+FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
+ORDER BY d.doc_id
+"""
+
+
 def unigram_logprob(
     spark: SparkSession, sf_dir: str, vocab_size: int = LM_VOCAB_SIZE
 ) -> DataFrame:
@@ -1118,26 +1199,7 @@ def unigram_logprob(
     thanks to column pruning."""
     docs = load_documents(spark, sf_dir)
     toks = tx.exploded_tokens(docs).select("doc_id", "tok")
-
-    totals = toks.agg(F.count(F.lit(1)).cast("double").alias("total_toks"))
-    vocab = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("tok"))
-        .limit(vocab_size)
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "tok",
-            F.round(F.log10(F.col("cnt") / F.col("total_toks")) * LM_MICRO)
-            .cast("long")
-            .alias("logp_micro"),
-        )
-    )
-    oov = totals.select(
-        F.round(F.log10(F.lit(0.5) / F.col("total_toks")) * LM_MICRO)
-        .cast("long")
-        .alias("oov_micro")
-    )
+    vocab, oov = _unigram_model(toks, vocab_size)
     scored = (
         toks.join(F.broadcast(vocab), "tok", "left")
         .crossJoin(F.broadcast(oov))
@@ -1153,41 +1215,12 @@ def unigram_logprob(
             F.sum("micro").alias("sum_logp_micro"),
         )
     )
-    return (
-        docs.select("doc_id")
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
-            F.coalesce("n_oov", F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce("sum_logp_micro", F.lit(0)).cast("long").alias("sum_logp_micro"),
-            F.when(
-                F.coalesce("n_tokens", F.lit(0)) > 0,
-                F.round(
-                    F.col("sum_logp_micro") / F.col("n_tokens") / F.lit(float(LM_MICRO)), 6
-                ),
-            ).alias("avg_logp"),
-        )
-        .orderBy("doc_id")
-    )
+    return _per_doc_logp(docs, scored, "n_oov")
 
 
 def unigram_logprob_sql(vocab_size: int = LM_VOCAB_SIZE) -> str:
-    toks = tx.exploded_tokens_sql("documents")
     return f"""
-WITH toks AS (SELECT doc_id, tok FROM ({toks}) t),
-totals AS (SELECT CAST(count(*) AS DOUBLE) AS total_toks FROM toks),
-vocab AS (
-  SELECT tok,
-         CAST(round(log10(cnt / total_toks) * {LM_MICRO}) AS BIGINT) AS logp_micro
-  FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
-        ORDER BY cnt DESC, tok LIMIT {vocab_size}) v
-  CROSS JOIN totals
-),
-oov AS (
-  SELECT CAST(round(log10(0.5 / total_toks) * {LM_MICRO}) AS BIGINT) AS oov_micro
-  FROM totals
-),
+WITH {_unigram_model_sql(vocab_size)},
 scored AS (
   SELECT t.doc_id,
          CAST(count(*) AS BIGINT) AS n_tokens,
@@ -1196,16 +1229,7 @@ scored AS (
   FROM toks t LEFT JOIN vocab v ON t.tok = v.tok CROSS JOIN oov o
   GROUP BY t.doc_id
 )
-SELECT d.doc_id,
-       CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(s.n_oov, 0) AS BIGINT) AS n_oov,
-       CAST(coalesce(s.sum_logp_micro, 0) AS BIGINT) AS sum_logp_micro,
-       CASE WHEN coalesce(s.n_tokens, 0) > 0
-            THEN round(coalesce(s.sum_logp_micro, 0) / s.n_tokens / {LM_MICRO}.0, 6)
-            END AS avg_logp
-FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
-ORDER BY d.doc_id
-"""
+{_per_doc_logp_sql("n_oov")}"""
 
 
 # --- bigram LM scoring with stupid backoff -----------------------------
@@ -1237,26 +1261,7 @@ def bigram_logprob(
     doc_id ends the plan."""
     docs = load_documents(spark, sf_dir)
     toks = tx.exploded_tokens(docs).select("doc_id", "pos", "tok")
-
-    totals = toks.agg(F.count(F.lit(1)).cast("double").alias("total_toks"))
-    vocab = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("tok"))
-        .limit(vocab_size)
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "tok",
-            F.round(F.log10(F.col("cnt") / F.col("total_toks")) * LM_MICRO)
-            .cast("long")
-            .alias("logp_micro"),
-        )
-    )
-    oov = totals.select(
-        F.round(F.log10(F.lit(0.5) / F.col("total_toks")) * LM_MICRO)
-        .cast("long")
-        .alias("oov_micro")
-    )
+    vocab, oov = _unigram_model(toks, vocab_size)
 
     # map-side adjacent pairs from the materialized token array
     # (lambda-CSE-safe: toks column first, element_at in the transform)
@@ -1324,41 +1329,12 @@ def bigram_logprob(
             F.sum("micro").cast("long").alias("sum_logp_micro"),
         )
     )
-    return (
-        docs.select("doc_id")
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
-            F.coalesce("n_bigram_hits", F.lit(0)).cast("long").alias("n_bigram_hits"),
-            F.coalesce("sum_logp_micro", F.lit(0)).cast("long").alias("sum_logp_micro"),
-            F.when(
-                F.coalesce("n_tokens", F.lit(0)) > 0,
-                F.round(
-                    F.col("sum_logp_micro") / F.col("n_tokens") / F.lit(float(LM_MICRO)), 6
-                ),
-            ).alias("avg_logp"),
-        )
-        .orderBy("doc_id")
-    )
+    return _per_doc_logp(docs, scored, "n_bigram_hits")
 
 
 def bigram_logprob_sql(vocab_size: int = LM_VOCAB_SIZE) -> str:
-    toks = tx.exploded_tokens_sql("documents")
     return f"""
-WITH toks AS MATERIALIZED (SELECT doc_id, pos, tok FROM ({toks}) t),
-totals AS (SELECT CAST(count(*) AS DOUBLE) AS total_toks FROM toks),
-vocab AS MATERIALIZED (
-  SELECT tok,
-         CAST(round(log10(cnt / total_toks) * {LM_MICRO}) AS BIGINT) AS logp_micro
-  FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
-        ORDER BY cnt DESC, tok LIMIT {vocab_size}) v
-  CROSS JOIN totals
-),
-oov AS (
-  SELECT CAST(round(log10(0.5 / total_toks) * {LM_MICRO}) AS BIGINT) AS oov_micro
-  FROM totals
-),
+WITH {_unigram_model_sql(vocab_size)},
 pairs AS MATERIALIZED (
   SELECT doc_id, prev, tok AS cur FROM (
     SELECT doc_id, lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS prev, tok
@@ -1402,16 +1378,7 @@ scored AS (
   FROM (SELECT * FROM first_tok UNION ALL SELECT * FROM rest) u
   GROUP BY doc_id
 )
-SELECT d.doc_id,
-       CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(s.n_bigram_hits, 0) AS BIGINT) AS n_bigram_hits,
-       CAST(coalesce(s.sum_logp_micro, 0) AS BIGINT) AS sum_logp_micro,
-       CASE WHEN coalesce(s.n_tokens, 0) > 0
-            THEN round(coalesce(s.sum_logp_micro, 0) / s.n_tokens / {LM_MICRO}.0, 6)
-            END AS avg_logp
-FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
-ORDER BY d.doc_id
-"""
+{_per_doc_logp_sql("n_bigram_hits")}"""
 
 
 # --- source mixture weights (data-mixture balancing) -------------------

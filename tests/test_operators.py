@@ -1943,20 +1943,6 @@ def test_training_ready_contamination_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
-def test_near_dup_pandas_kernel_matches_jvm(spark):
-    """The Arrow/numpy verification kernel (the measured ~2x production
-    pick) must produce the same pair set and cosines as the
-    oracle-pinned sequential JVM kernel at the 6-dp grain."""
-    from nreadability_spark.operators import similarity
-
-    jvm = {(r["vec_a"], r["vec_b"]): r["cos_sim"]
-           for r in similarity.embedding_near_dups(spark, SF_DIR).collect()}
-    pnd = {(r["vec_a"], r["vec_b"]): r["cos_sim"]
-           for r in similarity.embedding_near_dups(spark, SF_DIR, kernel="pandas").collect()}
-    assert set(jvm) == set(pnd) and jvm
-    assert all(abs(jvm[k] - pnd[k]) <= 1e-6 for k in jvm)
-
-
 def test_wav_metadata_decode_is_real():
     """The audio decoder must recover fmt-chunk fields from actual
     RIFF/WAVE bytes — including parameters the doc-keyed formula never
