@@ -5,10 +5,12 @@ From-scratch equivalent of the reference's DOM layer, which is
 ``DomExtensions.cs:33-299``). The binding semantics reproduced here:
 
 1.  tag/attribute names are lowercased (``SgmlDomBuilder.cs:71``);
-2.  the lenient HTML DTD implies end tags: a start tag not allowed in the
-    current element pops optional-end-tag ancestors until a legal
-    container is found (``SgmlReader.cs:2560-2650`` ``ValidateContent``);
-    the BODY element at stack depth 2 and the HTML root are never popped;
+2.  the lenient HTML DTD implies end tags (``SgmlReader.cs:2560-2650``
+    ``ValidateContent``): while the start tag is in ``CLOSED_BY`` of the
+    innermost open element, that element is popped. The table holds the
+    optional-end-tag elements other than ``html``, so the root, unknown
+    containers and required-end-tag elements are never popped; neither
+    is the BODY element at stack depth 2;
 3.  whitespace-only text nodes are dropped (``SgmlDomBuilder.cs:73``);
 4.  entities are expanded to characters at parse time and re-escaped
     minimally at serialization (XLinq behaviour);
@@ -81,14 +83,10 @@ _BLOCK = frozenset(
 
 _FLOW = _INLINE | _BLOCK
 
-# Elements whose end tag is optional in HTML 4 — the only ones the
-# recovery loop may auto-close (everything else breaks the scan, matching
-# ``ElementDecl.EndTagOptional`` checks in SgmlReader.cs:2600-2607).
-OPTIONAL_END_TAG = frozenset(
-    "body colgroup dd dt head html li option p tbody td tfoot th thead tr".split()
-)
-
-# Content models for the optional-end-tag elements (what they may contain).
+# Content models (what they may contain) of the elements whose end tag
+# is optional in HTML 4 — the only ones the recovery loop may auto-close
+# (everything else breaks the scan, matching ``ElementDecl.EndTagOptional``
+# checks in SgmlReader.cs:2600-2607).
 _CONTAINS = {
     "html": frozenset(("head", "body", "frameset")),
     "head": frozenset("title base script style meta link object isindex".split()),
@@ -109,39 +107,20 @@ _CONTAINS = {
 
 # Elements known to the HTML DTD. Unknown tags bypass validation entirely
 # (SgmlReader.cs: nodes with null DtdType are allowed anywhere).
-KNOWN_ELEMENTS = _FLOW | OPTIONAL_END_TAG | VOID_ELEMENTS | frozenset(
+KNOWN_ELEMENTS = _FLOW | frozenset(_CONTAINS) | VOID_ELEMENTS | frozenset(
     "title style caption col colgroup optgroup legend ins del map area param "
     "frameset frame noframes applet object script select textarea label button "
     "abbr acronym bdo".split()
 )
 
-
-def parse_preserves(parent_name, child_name):
-    """True iff the parser, on seeing ``child_name``'s start tag while
-    ``parent_name`` is the innermost open element, leaves the parent open
-    — i.e. ``_validate_content``'s scan breaks at its first iteration and
-    the parent/child edge survives a serialize→reparse round-trip.
-
-    Mirrors the loop in ``_validate_content`` exactly, except the
-    BODY-at-stack-index-2 special case is dropped: callers use this to
-    decide whether a reparse may be *elided*, so omitting the case is
-    conservative (a body-in-fragment edge takes the real reparse path,
-    never the reverse).
-    """
-    if child_name not in KNOWN_ELEMENTS:
-        return True  # unknown elements are allowed anywhere
-    if parent_name == "html":
-        return True  # cannot pop the root element
-    if parent_name not in KNOWN_ELEMENTS:
-        return True  # unknown container: allows any content
-    contains = _CONTAINS.get(parent_name)
-    if contains is not None and child_name in contains:
-        return True
-    if parent_name not in OPTIONAL_END_TAG:
-        return True  # required end tag: cannot auto-close
-    if contains is None:
-        return True  # optional-end element without a model: allows
-    return False  # parent would be auto-closed before the child
+# Implied end tags: each optional-end-tag parent -> the known tags whose
+# start tag auto-closes it. ``html`` is left out (the root is never
+# popped), and unknown tags close nothing.
+CLOSED_BY = {
+    parent: KNOWN_ELEMENTS - contains
+    for parent, contains in _CONTAINS.items()
+    if parent != "html"
+}
 
 
 class Node:
@@ -167,14 +146,6 @@ class Node:
                 self._pos = i
                 return i
         return -1
-
-    def next_node(self):
-        """Following sibling, or None (detached nodes have no siblings)."""
-        i = self._index_in_parent()
-        if i < 0:
-            return None
-        siblings = self.parent.children
-        return siblings[i + 1] if i + 1 < len(siblings) else None
 
     def remove(self):
         """Detach this node from its parent (no-op when detached)."""
@@ -277,9 +248,6 @@ class _Container(Node):
         self.children.insert(0, node)
         return node
 
-    def first_node(self):
-        return self.children[0] if self.children else None
-
     def nodes(self):
         return list(self.children)
 
@@ -291,18 +259,7 @@ class _Container(Node):
 
     def descendants(self):
         """All descendant elements in document order (self excluded)."""
-        stack = [iter(self.children)]
-        while stack:
-            it = stack[-1]
-            advanced = False
-            for node in it:
-                if isinstance(node, Element):
-                    yield node
-                    stack.append(iter(node.children))
-                    advanced = True
-                    break
-            if not advanced:
-                stack.pop()
+        return (node for node in self.descendant_nodes() if isinstance(node, Element))
 
     def descendant_nodes(self):
         stack = [iter(self.children)]
@@ -1017,29 +974,15 @@ class _TreeBuilder(Tokenizer):
     def _validate_content(self, name):
         """Auto-close optional-end-tag ancestors that cannot contain
         ``name`` (SgmlReader.cs ValidateContent, lines 2560-2650)."""
-        if name not in KNOWN_ELEMENTS:
-            return  # unknown elements are allowed anywhere
         stack = self.stack
         top = len(stack) - 1
         i = top
         while i > 0:
-            elem = stack[i]
-            if not isinstance(elem, Element):
-                break
-            ename = elem.name
+            ename = stack[i].name
             if i == 2 and ename == "body":
                 break  # never close BODY early
-            if ename == "html":
-                break  # cannot pop the root element
-            if ename not in KNOWN_ELEMENTS:
-                break  # unknown container: allow the content
-            contains = _CONTAINS.get(ename)
-            if contains is not None and name in contains:
+            if name not in CLOSED_BY.get(ename, ()):
                 break
-            if ename not in OPTIONAL_END_TAG:
-                break  # required end tag: cannot auto-close
-            if contains is None:
-                break  # optional-end element w/o model: allow
             i -= 1
         if 0 < i < top:
             del stack[i + 1 :]  # nodes stay attached; only the open stack shrinks
@@ -1154,34 +1097,3 @@ def build_document(html_content):
     builder = _TreeBuilder()
     builder.tokenize(html_content)
     return builder.finish()
-
-
-# --- mutation-safe traversers ------------------------------------------------------
-
-
-def traverse_elements(element, visitor):
-    """Pre-order element walk that is safe under visitor mutation: the
-    next sibling is captured before visiting a child, and a detached
-    node's next sibling is None (ElementsTraverser.cs:46-63). Iterative
-    — the explicit stack holds the pending sibling per depth, so walk
-    depth never hits the Python recursion limit."""
-    visitor(element)
-    stack = [element.first_node() if isinstance(element, _Container) else None]
-    while stack:
-        child = stack[-1]
-        if child is None:
-            stack.pop()
-            continue
-        stack[-1] = child.next_node()  # capture before visiting (ET:50-61)
-        if isinstance(child, Element):
-            visitor(child)
-            stack.append(child.first_node())
-
-
-def traverse_child_nodes(container, visitor):
-    """Child-node walk safe under mutation (ChildNodesTraverser.cs:46-63)."""
-    child = container.first_node()
-    while child is not None:
-        nxt = child.next_node()
-        visitor(child)
-        child = nxt

@@ -30,16 +30,14 @@ from dataclasses import dataclass, field
 from nreadability_spark.core import regexes, urls
 from nreadability_spark.core.css import READABILITY_CSS
 from nreadability_spark.core.dom import (
+    CLOSED_BY,
     XML_WHITESPACE,
     Comment,
     Document,
     Element,
     Text,
     build_document,
-    parse_preserves,
     to_pretty_html,
-    traverse_child_nodes,
-    traverse_elements,
 )
 
 GENERATOR_NAME = "nreadability-spark 0.1.0"
@@ -379,8 +377,11 @@ class _Run:
         root = document.root
         if root is None:
             return
-
-        def visitor(element):
+        # pre-order; an element's children are pushed after its visit, so
+        # the paragraphs a div's stray text becomes are walked too
+        stack = [root]
+        while stack:
+            element = stack.pop()
             element_name = (element.name or "").lower()
 
             unlikely_match_string = element.get_class() + element.get_id()
@@ -391,9 +392,8 @@ class _Run:
                 and regexes.UNLIKELY_CANDIDATES_RE.search(unlikely_match_string)
                 and not regexes.OK_MAYBE_ITS_A_CANDIDATE_RE.search(unlikely_match_string)
             ):
-                if element.parent is not None:
-                    element.remove()
-                return
+                element.remove()
+                continue  # nothing reads the detached subtree
 
             if element_name == "div":
                 if not _div_inner_html_has_block_element(element):
@@ -401,18 +401,14 @@ class _Run:
                     element.name = "p"
                 else:
                     # wrap stray text nodes in styled paragraphs (NRT:817-836)
-                    def child_visitor(child_node):
-                        if not isinstance(child_node, Text) or not (child_node.value or "").strip():
-                            return
-                        para = Element("p")
-                        para.set_inner_html(child_node.value)  # raw value, ws preserved
-                        para.set_class(READABILITY_STYLED_CSS_CLASS)
-                        para.set_style("display: inline;")
-                        child_node.replace_with(para)
-
-                    traverse_child_nodes(element, child_visitor)
-
-        traverse_elements(root, visitor)
+                    for child in element.children:
+                        if type(child) is Text and child.value.strip():
+                            para = Element("p")
+                            para.set_inner_html(child.value)  # raw value, ws preserved
+                            para.set_class(READABILITY_STYLED_CSS_CLASS)
+                            para.set_style("display: inline;")
+                            child.replace_with(para)
+            stack.extend(c for c in reversed(element.children) if type(c) is Element)
 
     # -- candidate scoring (NRT:842-884) ----------------------------------------------
 
@@ -600,7 +596,7 @@ class _Run:
                 weight += 25
         return weight
 
-    def get_inner_text(self, node, dont_normalize_spaces=None):
+    def get_inner_text(self, node):
         r"""NRT:1149-1184: element/text value, trimmed; runs of whitespace
         collapsed unless normalization is off.
 
@@ -612,18 +608,12 @@ class _Run:
         occurs holds no match and comes back unchanged. Collapsing also
         cannot empty a trimmed non-empty text, so a test for emptiness
         needs only the trim."""
-        if dont_normalize_spaces is None:
-            dont_normalize_spaces = self.opts.dont_normalize_spaces
-        if isinstance(node, (Element, Document)):
-            result = node.value
-        elif isinstance(node, Text):
-            result = node.value
-        else:
+        if not isinstance(node, (Element, Document, Text)):
             raise TypeError(f"nodes of type {type(node).__name__} are not supported")
-        result = (result or "").strip()
-        if not dont_normalize_spaces:
-            return normalize_spaces(result)
-        return result
+        result = (node.value or "").strip()
+        if self.opts.dont_normalize_spaces:
+            return result
+        return normalize_spaces(result)
 
     # -- cleaning ----------------------------------------------------------------------------------
 
@@ -878,23 +868,57 @@ class _Run:
 # --- module-level pure helpers ------------------------------------------------------
 
 
-def _parse_stable(element, trigger_prefixes=()):
-    """True iff reparsing ``element``'s serialized inner HTML provably
-    reproduces the subtree unchanged, i.e. ``parse(serialize(T)) == T``
-    for the child forest T — the precondition for eliding the reference's
-    SetInnerHtml reparse (DomExtensions.cs:238-263).
+def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
+    """Run serialize -> regex-substitute -> SetInnerHtml
+    (DomExtensions.cs:238-263), eliding each step that provably changes
+    nothing. The reference always reparses, and its reparse can
+    restructure the subtree (rawtext re-escaping, implied end tags) even
+    when the regexes match nothing. ``_stage_walk`` decides in one walk
+    whether the regexes may match and whether the subtree is a parser
+    fixed point: the substitution runs only when they may match, the
+    reparse only when the subtree is no fixed point or the substitution
+    changed the text. On the elided path only RemoveAll's attribute
+    clearing remains observable (e.g. the article div loses its id in
+    KillBreaks).
+    """
+    stable, may_match = _stage_walk(element, trigger_prefixes)
+    if stable and not may_match:
+        element.attrs.clear()
+        return
+    inner = element.inner_html()
+    new_inner = inner
+    if may_match:
+        for rx, repl in regex_repl_pairs:
+            new_inner = rx.sub(repl, new_inner)
+    if stable and new_inner == inner:
+        element.attrs.clear()
+        return
+    element.set_inner_html(new_inner)
 
-    Conditions checked (each names the parser behaviour that would
-    otherwise restructure the tree):
+
+def _stage_walk(element, trigger_prefixes):
+    """``(stable, may_match)`` for a serialized regex stage over
+    ``element``, in one walk of its subtree that stops once both are
+    decided.
+
+    ``may_match`` is False when the stage's regexes provably match
+    nothing in the serialized subtree (``_may_trigger`` on every node).
+
+    ``stable`` is True iff reparsing ``element``'s serialized inner HTML
+    provably reproduces the subtree unchanged, i.e. ``parse(serialize(T))
+    == T`` for the child forest T. Conditions checked (each names the
+    parser behaviour that would otherwise restructure the tree):
 
     - no ``script``/``style`` descendants — rawtext parses as CDATA
       while serialization escapes it;
-    - every parent→child element edge *inside* the forest satisfies the
-      implied-end-tag content model (``parse_preserves``): pipeline
-      mutations such as the div→p rename (NRT:812) can build trees like
-      ``<p><li>`` that a reparse restructures by auto-closing the ``p``.
-      Top-level children are exempt: the fragment reparse opens them
-      under a fresh ``html`` root, which is never popped;
+    - no parent->child element edge *inside* the forest is an implied
+      end tag (``CLOSED_BY``): pipeline mutations such as the div->p
+      rename (NRT:812) can build trees like ``<p><li>`` that a reparse
+      restructures by auto-closing the ``p``. Top-level children are
+      exempt: the fragment reparse opens them under a fresh ``html``
+      root, which is never popped. The parser's BODY-at-depth-2 rule is
+      not applied, which is conservative: such an edge takes the real
+      reparse;
     - no whitespace-only Text nodes (dropped by the parser) and no
       adjacent Text siblings (merged by the parser);
     - no Comment before the first Element/Text among the TOP-LEVEL
@@ -902,40 +926,36 @@ def _parse_stable(element, trigger_prefixes=()):
       attaches pre-root comments to the temp Document, and
       ``set_inner_html`` copies only ``tmp.root.children`` — a real
       reparse drops them, so the elided path must not keep them.
-
-    Given a regex stage's ``trigger_prefixes``, the same walk also
-    answers False when the stage's regexes may match (``_may_trigger`` on
-    some node), so True means the whole serialize -> substitute ->
-    reparse stage is elidable.
     """
+    stable = True
+    may_match = False
     for node in element.children:
         if isinstance(node, Comment):
-            return False
+            stable = False
+            break
         if isinstance(node, (Element, Text)):
             break
     stack = [element]
     while stack:
         parent = stack.pop()
+        closed_by = () if parent is element else CLOSED_BY.get(parent.name, ())
         prev_was_text = False
         for node in parent.children:
-            if trigger_prefixes and _may_trigger(node, trigger_prefixes):
-                return False
-            if type(node) is Element:
-                prev_was_text = False
-                name = node.name
-                if name in ("script", "style"):
-                    return False
-                if parent is not element and not parse_preserves(parent.name, name):
-                    return False
-                if node.children:
-                    stack.append(node)
-            elif type(node) is Text:
-                if prev_was_text or not node.value.strip(XML_WHITESPACE):
-                    return False
-                prev_was_text = True
-            else:
-                prev_was_text = False
-    return True
+            if not may_match and _may_trigger(node, trigger_prefixes):
+                may_match = True
+            kind = type(node)
+            if stable:
+                if kind is Element:
+                    name = node.name
+                    stable = name not in closed_by and name not in ("script", "style")
+                elif kind is Text:
+                    stable = not prev_was_text and node.value.strip(XML_WHITESPACE) != ""
+                prev_was_text = kind is Text
+            if may_match and not stable:
+                return False, True
+            if kind is Element and node.children:
+                stack.append(node)
+    return stable, may_match
 
 
 def _may_trigger(node, trigger_prefixes):
@@ -959,56 +979,6 @@ def _may_trigger(node, trigger_prefixes):
         raw = node.to_html().lower()
         return any("<" + p in raw or "</" + p in raw for p in trigger_prefixes)
     return False
-
-
-def _regex_may_match(element, trigger_prefixes):
-    """False when the stage's regexes provably match nothing in the
-    serialized subtree (``_may_trigger`` on every descendant)."""
-    return any(
-        _may_trigger(node, trigger_prefixes)
-        for node in element.descendant_nodes()
-    )
-
-
-def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
-    """Run serialize -> regex-substitute -> SetInnerHtml, with both the
-    serialization and the reparse elided when they provably change
-    nothing: the regexes cannot match (``_regex_may_match``) and the
-    subtree is a parser fixed point — the reference's reparse itself can
-    restructure (rawtext re-escaping, implied end tags) even when the
-    regexes match nothing. One walk (``_parse_stable`` given the stage)
-    decides both; on the elided path only RemoveAll's attribute clearing
-    remains observable.
-    """
-    if _parse_stable(element, trigger_prefixes):
-        element.attrs.clear()
-        return
-    inner = element.inner_html()
-    new_inner = inner
-    if _regex_may_match(element, trigger_prefixes):
-        for rx, repl in regex_repl_pairs:
-            new_inner = rx.sub(repl, new_inner)
-    _rewrite_inner_html(element, inner, new_inner)
-
-
-def _rewrite_inner_html(element, old_inner, new_inner):
-    """``element.SetInnerHtml(new_inner)`` with the reparse elided when
-    it provably cannot change anything.
-
-    The reference always reparses (DomExtensions.cs:238-263). Skipping
-    is exactly equivalent when (a) the regex stage changed nothing
-    (``new_inner == old_inner``, the overwhelmingly common case) and
-    (b) the subtree is a parser fixed point per ``_parse_stable`` —
-    rawtext elements, content-model-violating edges produced by pipeline
-    mutations, and mergeable/droppable text nodes all force the real
-    reparse. ``XElement.RemoveAll``'s attribute clearing is observable
-    (e.g. the article div loses its id in KillBreaks) and is preserved
-    on the skip path.
-    """
-    if new_inner == old_inner and _parse_stable(element):
-        element.attrs.clear()
-        return
-    element.set_inner_html(new_inner)
 
 
 def _div_inner_html_has_block_element(element):

@@ -236,12 +236,6 @@ def knn_ivf_sql(k: int = IVF_TOP_K) -> str:
 KMEANS_ITERS = 2
 
 
-def pinned_centroids(spark: SparkSession, sf_dir: str, k: int = IVF_CENTROIDS) -> DataFrame:
-    """The deterministic stand-in centroids (first k vectors by id) —
-    the test fixture; production uses ``fit_centroids``."""
-    return _pinned(_vectors(spark, sf_dir), k)
-
-
 def _assign_to_centroids(
     emb: DataFrame, cents: DataFrame, top: int = 1, ccos=None
 ) -> DataFrame:
@@ -283,7 +277,7 @@ def fit_centroids(
     centroid table itself is the only driver-sized object.
     """
     emb = _vectors(spark, sf_dir)
-    cents = pinned_centroids(spark, sf_dir, k)
+    cents = _pinned(emb, k)
     for _ in range(iters):
         assigned = _assign_to_centroids(emb, cents)
         means = (

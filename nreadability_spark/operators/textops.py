@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from nreadability_spark.functions import hashing
 from nreadability_spark.functions import text as tx
+from nreadability_spark.functions.prefix import exclusive_prefix_sum
 
 # (lang, token, weight) marker-model table for language ID — the 100 TB
 # shape: the model is DATA (a broadcast table the corpus scan joins
@@ -911,58 +912,38 @@ def sequence_packing(
     its global token offset, its starting pack, its offset within that
     pack, and how many packs it spans.
 
-    The global running total is a TWO-PHASE prefix sum, not one giant
-    window: a single ``Window.orderBy(doc_id)`` puts the entire corpus
-    in ONE task. Instead (1) docs hash-aggregate into doc_id//block
-    blocks (map-side partials), (2) an exclusive running sum over the
-    per-block sums is a window over n_docs/block_size ROWS (at 10^12
-    docs and block 10^6 that is 10^6 rows — and the same decomposition
-    recurses if even that is too wide), (3) a within-block window is
-    bounded at ``block_size`` rows by construction. Same shape as the
-    conversation-offset two-phase plan, lifted to a global key."""
+    The global running total is a blocked prefix sum over doc_id
+    (``functions.prefix``), not one window: a single
+    ``Window.orderBy(doc_id)`` puts the entire corpus in ONE task."""
     docs = load_documents(spark, sf_dir)
-    # integer `div`, NOT double division + cast: a double round-trip is
-    # exact only below 2^53, and the global token offset exceeds that
-    # at the 10^12-doc scale this layout exists for (the SQL twin uses
-    # integer // for the same reason)
     toks = docs.select(
         "doc_id", tx.token_count(F.col("text")).cast("long").alias("n_tokens")
-    ).withColumn("_blk", F.expr(f"doc_id div {block_size}"))
+    )
+    return _packed(toks, "doc_id", "n_tokens", budget, block_size)
 
-    blk_sums = toks.groupBy("_blk").agg(F.sum("n_tokens").alias("_blk_tokens"))
-    w_blk = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)
-    blk_prefix = blk_sums.select(
-        "_blk", F.coalesce(F.sum("_blk_tokens").over(w_blk), F.lit(0)).alias("_blk_prefix")
-    )
-    w_in = (
-        Window.partitionBy("_blk")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = (
-        toks.join(blk_prefix, "_blk")
-        .withColumn(
-            "offset_global",
-            (F.col("_blk_prefix") + F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0))).cast("long"),
+
+def _packed(df: DataFrame, key: str, len_col: str, budget: int, block_size: int) -> DataFrame:
+    """(key, len_col, offset_global, pack_id, pack_offset,
+    n_packs_spanned) ordered by ``key``: the rows of ``df`` laid
+    head-to-tail in ``key`` order into packs of ``budget``, the global
+    offset a blocked prefix sum (``functions.prefix``). A zero-length
+    row spans one pack."""
+    laid = exclusive_prefix_sum(df, len_col, key, "offset_global", block_size)
+    return laid.select(
+        key,
+        len_col,
+        "offset_global",
+        F.expr(f"offset_global div {budget}").alias("pack_id"),
+        (F.col("offset_global") % F.lit(budget)).cast("long").alias("pack_offset"),
+        F.when(F.col(len_col) == 0, F.lit(1))
+        .otherwise(
+            F.expr(f"(offset_global + {len_col} - 1) div {budget}")
+            - F.expr(f"offset_global div {budget}")
+            + 1
         )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "offset_global",
-            F.expr(f"offset_global div {budget}").alias("pack_id"),
-            (F.col("offset_global") % F.lit(budget)).cast("long").alias("pack_offset"),
-            F.when(F.col("n_tokens") == 0, F.lit(1))
-            .otherwise(
-                F.expr(f"(offset_global + n_tokens - 1) div {budget}")
-                - F.expr(f"offset_global div {budget}")
-                + 1
-            )
-            .cast("long")
-            .alias("n_packs_spanned"),
-        )
-        .orderBy("doc_id")
-    )
-    return out
+        .cast("long")
+        .alias("n_packs_spanned"),
+    ).orderBy(key)
 
 
 def sequence_packing_sql(budget: int = PACK_BUDGET) -> str:

@@ -37,6 +37,7 @@ import uuid
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from nreadability_spark.functions.prefix import exclusive_prefix_sum
 from nreadability_spark.operators.extract import extract_columns
 from nreadability_spark.sources import lineage
 
@@ -89,59 +90,19 @@ def with_conv_offsets_two_phase(df, block_size=1024, length_col="content_text"):
     plain window for pathological conversations.
 
     The plain ``Window.partitionBy(conv_id)`` puts an entire
-    conversation in ONE task; a 10^6-turn conversation pins it (AQE can
-    split skewed *joins* but not window partitions). Two phases bound
-    every partition:
-
-    1. block sums: turns group into ``turn_idx // block_size`` blocks;
-       per-(conv, block) char sums are a hash aggregate (map-side
-       partial, no skew);
-    2. block prefix: an exclusive running sum over a conversation's
-       block sums — a window over ``n_turns / block_size`` rows per
-       conversation (10^6 turns -> ~1k rows: trivial);
-    3. within-block prefix: a window partitioned by (conv, block) —
-       at most ``block_size`` rows per partition, by construction.
-
-    ``conv_offset = block_prefix + within_block_prefix``. Exactly
-    equals the single-window result (tests assert it).
+    conversation in ONE task; a 10^6-turn conversation pins it. Here the
+    turns group into ``turn_idx div block_size`` blocks and the offset
+    is a blocked prefix sum per conversation (``functions.prefix``), so
+    no task holds more than ``block_size`` turns or one conversation's
+    block sums. Exactly equals the single-window result (tests assert
+    it).
     """
-    # integer div (not double division + cast — exact only below 2^53;
-    # turn_idx is int32 today, but the offset arithmetic pattern is
-    # uniform with sequence_packing's, which does exceed it)
-    blk = F.expr(f"turn_idx div {block_size}")
-    out = df.withColumn("_blk", blk).withColumn(
+    out = df.withColumn(
         "_len", F.coalesce(F.length(length_col).cast("long"), F.lit(0))
     )
-
-    blk_sums = out.groupBy("conv_id", "_blk").agg(F.sum("_len").alias("_blk_chars"))
-    w_blk = (
-        Window.partitionBy("conv_id")
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    blk_prefix = blk_sums.select(
-        "conv_id",
-        "_blk",
-        F.coalesce(F.sum("_blk_chars").over(w_blk), F.lit(0)).alias("_blk_prefix"),
-    )
-
-    w_in = (
-        Window.partitionBy("conv_id", "_blk")
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = (
-        out.join(blk_prefix, ["conv_id", "_blk"])
-        .withColumn(
-            "conv_offset",
-            (
-                F.col("_blk_prefix")
-                + F.coalesce(F.sum("_len").over(w_in), F.lit(0))
-            ).cast("long"),
-        )
-        .drop("_blk", "_len", "_blk_prefix")
-    )
-    return out
+    return exclusive_prefix_sum(
+        out, "_len", "turn_idx", "conv_offset", block_size, ("conv_id",)
+    ).drop("_len")
 
 
 def extract_transcripts(

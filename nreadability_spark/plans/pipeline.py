@@ -208,14 +208,13 @@ def cluster_topics(
     count C bounds the idf table, the window partitions and the
     output."""
     from nreadability_spark.operators.similarity import (
-        _assign_to_centroids, _dvec, fit_centroids, load_embeddings,
+        _assign_to_centroids, _vectors, fit_centroids,
     )
 
     docs = load_documents(spark, sf_dir)
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    assigned = _assign_to_centroids(emb, fit_centroids(spark, sf_dir)).select(
+    assigned = _assign_to_centroids(
+        _vectors(spark, sf_dir), fit_centroids(spark, sf_dir)
+    ).select(
         F.col("vec_id").alias("doc_id"), F.col("cell").cast("long").alias("cell")
     )
     sizes = assigned.groupBy("cell").agg(
@@ -269,30 +268,20 @@ def cluster_topics(
 
 def cluster_topics_sql(k: int = CLUSTER_TOPIC_K) -> str:
     from nreadability_spark.operators.similarity import (
-        KMEANS_ITERS, _cosine_sql, _kmeans_cte_chain,
+        KMEANS_ITERS, _assign_sql, _kmeans_cte_chain,
     )
 
-    ccos = _cosine_sql("e.emb", "c.c")
     m = CLUSTER_TOPIC_MICRO
     return f"""
 WITH {_kmeans_cte_chain()},
-ct_scored AS (
-  SELECT e.vec_id, c.cent_id, {ccos} AS ccos FROM base e, c{KMEANS_ITERS} c
-),
-ct_assigned AS MATERIALIZED (
-  SELECT vec_id AS doc_id, CAST(cent_id AS BIGINT) AS cell FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent_id) AS r
-    FROM ct_scored
-  ) t WHERE r = 1
-),
+{_assign_sql(f"c{KMEANS_ITERS}", "ct_scored", "ct_assigned")},
 ct_sizes AS (
   SELECT cell, CAST(count(*) AS BIGINT) AS n_docs FROM ct_assigned GROUP BY cell
 ),
 ct_tf AS MATERIALIZED (
   SELECT a.cell, tok AS term, count(*) AS tf
   FROM ({tx.exploded_tokens_sql('documents')}) toks
-  JOIN ct_assigned a USING (doc_id)
+  JOIN ct_assigned a ON a.vec_id = toks.doc_id
   GROUP BY a.cell, tok
 ),
 ct_idf AS (
@@ -336,14 +325,10 @@ def sft_packed(
     pack, offset within that pack, and packs spanned.
 
     Scale shape: one hash agg to conversation granularity (map-side
-    partials), then the same TWO-PHASE global prefix sum as
-    ``sequence_packing`` — per-block partial sums, an exclusive window
-    over n_convs/block_size block rows, a within-block window bounded
-    at ``block_size`` rows — never a single corpus-wide window task.
-    Integer `div` throughout: global offsets exceed 2^53 at the
-    10^12-turn scale this layout exists for."""
-    from nreadability_spark.operators.textops import SFT_END, SFT_ROLES
-    from pyspark.sql import Window
+    partials), then the layout of ``sequence_packing``, whose global
+    offset is a blocked prefix sum over conv_id — never a single
+    corpus-wide window task."""
+    from nreadability_spark.operators.textops import SFT_END, SFT_ROLES, _packed
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     role = F.element_at(
@@ -366,43 +351,8 @@ def sft_packed(
         ev.select(F.col("user_id").alias("conv_id"), turn_len.alias("turn_len"))
         .groupBy("conv_id")
         .agg(F.sum("turn_len").cast("long").alias("example_len"))
-        .withColumn("_blk", F.expr(f"conv_id div {block_size}"))
     )
-    blk_sums = conv.groupBy("_blk").agg(F.sum("example_len").alias("_blk_chars"))
-    w_blk = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)
-    blk_prefix = blk_sums.select(
-        "_blk", F.coalesce(F.sum("_blk_chars").over(w_blk), F.lit(0)).alias("_blk_prefix")
-    )
-    w_in = (
-        Window.partitionBy("_blk")
-        .orderBy("conv_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        conv.join(blk_prefix, "_blk")
-        .withColumn(
-            "offset_global",
-            (
-                F.col("_blk_prefix")
-                + F.coalesce(F.sum("example_len").over(w_in), F.lit(0))
-            ).cast("long"),
-        )
-        .select(
-            "conv_id",
-            "example_len",
-            "offset_global",
-            F.expr(f"offset_global div {budget}").alias("pack_id"),
-            (F.col("offset_global") % F.lit(budget)).cast("long").alias("pack_offset"),
-            (
-                F.expr(f"(offset_global + example_len - 1) div {budget}")
-                - F.expr(f"offset_global div {budget}")
-                + 1
-            )
-            .cast("long")
-            .alias("n_packs_spanned"),
-        )
-        .orderBy("conv_id")
-    )
+    return _packed(conv, "conv_id", "example_len", budget, block_size)
 
 
 def sft_packed_sql(budget: int = SFT_PACK_BUDGET) -> str:

@@ -2,6 +2,9 @@
 and the parser-semantics details in SgmlDomBuilder.cs:42-84."""
 
 from nreadability_spark.core.dom import (
+    CLOSED_BY,
+    KNOWN_ELEMENTS,
+    VOID_ELEMENTS,
     Comment,
     Element,
     Text,
@@ -278,3 +281,26 @@ def test_serialize_document_honors_pretty_print():
     # both serializations parse back to the same raw form (indentation
     # whitespace between elements is dropped by the parser)
     assert build_document(pretty).to_html() == raw
+
+
+def test_closed_by_is_what_the_parser_closes():
+    """``CLOSED_BY`` is both the parser's implied-end-tag rule and the
+    reparse elision's test of it: C's start tag inside P keeps C a child
+    of P exactly when C is not in ``CLOSED_BY[P]``. P is every known
+    container the fragment can hold open; C every known tag whose content
+    is markup, plus an unknown one."""
+    parents = sorted(
+        KNOWN_ELEMENTS - VOID_ELEMENTS - {"script", "style", "html", "head", "body"}
+    )
+    children = sorted(KNOWN_ELEMENTS - {"script", "style"}) + ["x-unknown"]
+    wrong = []
+    for p in parents:
+        for c in children:
+            div = build_document(f"<div><{p}><{c}></{c}></{p}></div>").root.children[0]
+            kept = any(
+                type(n) is Element and n.name == c for n in div.children[0].children
+            )
+            if kept == (c in CLOSED_BY.get(p, ())):
+                wrong.append((p, c))
+    assert len(parents) * len(children) == 6570
+    assert not wrong, wrong[:10]

@@ -58,7 +58,8 @@ def test_serializer_reparse_is_stable(soup):
     application, and the second application must already be stable.
     This is what the serialized-fragment regex stages (O4/O14/O19) rely
     on — they operate on ELEMENT subtrees, for which one application
-    suffices (guarded separately by ``_parse_stable``).
+    suffices (guarded separately by the ``stable`` half of
+    ``transcoder._stage_walk``).
 
     Why not a one-step fixed point at the DOCUMENT level: a comment
     trailing the root serializes after the final ``</html>``, which the
@@ -124,13 +125,12 @@ def _extract_unelided(soup):
     elision nor the trigger rule it shares with the stages is used."""
     import nreadability_spark.core.transcoder as T
 
-    orig = T._parse_stable, T._regex_may_match
-    T._parse_stable = lambda *args: False
-    T._regex_may_match = lambda *args: True
+    orig = T._stage_walk
+    T._stage_walk = lambda *args: (False, True)
     try:
         return extract(soup)
     finally:
-        T._parse_stable, T._regex_may_match = orig
+        T._stage_walk = orig
 
 
 def test_leading_comment_elision_matches_reparse():

@@ -2,8 +2,9 @@
 No Spark is started.
 
 - The ADC kNN searches, the LM logprob pair and the media twins each
-  run one builder and one SQL template. ``test_no_repeated_windows``
-  keeps them that way: a copied block of six lines fails it.
+  run one builder and one SQL template, and the blocked prefix sums one
+  helper. ``test_no_repeated_windows`` keeps the package that way: a
+  block of six lines copied within a module or across two fails it.
 - ``test_oracle_digest`` pins the DuckDB side of every query built on
   those kernels to a digest of its output at sf0.001. The oracle check
   compares Spark with DuckDB only, so a refactor that changed a
@@ -11,6 +12,7 @@ No Spark is started.
 """
 
 import collections
+import glob
 import hashlib
 import os
 
@@ -21,40 +23,51 @@ from tests.test_operators import SF_DIR
 from tools.check_oracles import _canon
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TABLES = ("documents", "embeddings")
-FOLDED_MODULES = ("similarity.py", "textops.py", "multimodal.py")
+TABLES = ("documents", "embeddings", "events")
 WINDOW = 6
 
 
-def repeated_windows(text: str) -> dict[tuple[str, ...], list[int]]:
-    """Every WINDOW-line window that occurs more than once in ``text``,
-    with the 1-based line numbers where it starts. Lines are compared
-    stripped, and a window counts only if at least WINDOW - 1 of its
-    lines are longer than 3 characters (so runs of brackets and blank
-    lines do not)."""
-    lines = [line.strip() for line in text.splitlines()]
+def repeated_windows(texts: dict[str, str]) -> dict[tuple[str, ...], list[str]]:
+    """Every WINDOW-line window that occurs more than once in the corpus
+    ``texts`` (name -> text; no window spans two texts), with the
+    ``name:line`` places where it starts, lines 1-based. Lines are
+    compared stripped, and a window counts only if at least WINDOW - 1
+    of its lines are longer than 3 characters (so runs of brackets and
+    blank lines do not)."""
     starts = collections.defaultdict(list)
-    for i in range(len(lines) - WINDOW + 1):
-        window = tuple(lines[i : i + WINDOW])
-        if sum(len(line) > 3 for line in window) >= WINDOW - 1:
-            starts[window].append(i + 1)
+    for name, text in texts.items():
+        lines = [line.strip() for line in text.splitlines()]
+        for i in range(len(lines) - WINDOW + 1):
+            window = tuple(lines[i : i + WINDOW])
+            if sum(len(line) > 3 for line in window) >= WINDOW - 1:
+                starts[window].append(f"{name}:{i + 1}")
     return {w: s for w, s in starts.items() if len(s) > 1}
 
 
-@pytest.mark.parametrize("module", FOLDED_MODULES)
-def test_no_repeated_windows(module):
-    path = os.path.join(REPO_DIR, "nreadability_spark", "operators", module)
-    with open(path, encoding="utf-8") as f:
-        repeats = repeated_windows(f.read())
-    assert not repeats, [f"{module}:{s} {w[0]!r}" for w, s in repeats.items()]
+def test_no_repeated_windows():
+    package = os.path.join(REPO_DIR, "nreadability_spark")
+    texts = {}
+    for path in sorted(glob.glob(os.path.join(package, "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as f:
+            texts[os.path.relpath(path, package)] = f.read()
+    assert "core/dom.py" in texts
+    repeats = repeated_windows(texts)
+    assert not repeats, [f"{s} {w[0]!r}" for w, s in repeats.items()]
 
 
 def test_repeated_windows_counts_copies():
     block = "\n".join(f"line number {i}" for i in range(WINDOW))
     text = "\n".join([block, "}", block, "", "(", ")", "x", "(", ")", "x", "(", ")"])
-    assert list(repeated_windows(text).values()) == [[1, 8]]
+    assert list(repeated_windows({"a.py": text}).values()) == [["a.py:1", "a.py:8"]]
     short = "\n".join(["(", ")", "x"] * 6)
-    assert repeated_windows(short) == {}
+    assert repeated_windows({"a.py": short}) == {}
+    # a copy in another module counts; a window never spans two texts
+    assert list(repeated_windows({"a.py": block, "b.py": "x\n" + block}).values()) == [
+        ["a.py:1", "b.py:2"]
+    ]
+    halves = block.splitlines()
+    split = {"a.py": "\n".join(halves[:3]), "b.py": "\n".join(halves[3:])}
+    assert repeated_windows({**split, "c.py": block}) == {}
 
 
 def oracle_digest(con, sql: str) -> str:
@@ -69,6 +82,9 @@ def oracle_digest(con, sql: str) -> str:
 
 # oracle output at sf0.001, computed before the kernels were shared
 DIGESTS = {
+    "pipeline_cluster_topics": "2634fb95e7fbb5a23e69c5a3320b3812630c603aaa91f0c93dffb58e041b20c7",
+    "pipeline_sft_packed": "bbc2503fa1baf64d574dc9649edb38f5673301ae1204715afc5c501154c9d369",
+    "text_sequence_packing": "a3f2ca7f28aa35a8d9cc6764ac6f72c0006b3c4423f514dcc3476dcd5e9b67c8",
     "sim_knn_ivf": "cc641f1e620ff760f8ba644052287827e899bf615b86a85caa28407190ba89da",
     "sim_knn_ivf_pinned": "d3478318fc403729325d7a2beaf141ff48493c681c6a4f1eaa73f85e7561a6e6",
     "sim_centroid_fit": "53f3f3ef494d1d44383a9999a68286d8835bc2e73574bc62fbb92bc7c82e8ca6",
@@ -96,8 +112,11 @@ DIGESTS = {
 
 def _oracles():
     from nreadability_spark.operators import multimodal, similarity, textops
+    from nreadability_spark.plans import pipeline
 
-    return {**similarity.ORACLES, **textops.ORACLES, **multimodal.ORACLES}
+    return {
+        **similarity.ORACLES, **textops.ORACLES, **multimodal.ORACLES, **pipeline.ORACLES
+    }
 
 
 @pytest.fixture(scope="module")

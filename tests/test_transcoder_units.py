@@ -437,12 +437,12 @@ def test_div_li_rename_matches_reference_reparse():
         + "</div></body></html>"
     )
     fast = extract(html)
-    orig = T._parse_stable
-    T._parse_stable = lambda *args: False
+    orig = T._stage_walk
+    T._stage_walk = lambda *args: (False, True)
     try:
         ref = extract(html)
     finally:
-        T._parse_stable = orig
+        T._stage_walk = orig
     assert fast.content_html == ref.content_html
     assert fast.html == ref.html
     # and the restructuring actually happened: no li left directly inside a p
