@@ -3,8 +3,10 @@ No Spark is started.
 
 - The ADC kNN searches, the LM logprob pair and the media twins each
   run one builder and one SQL template, and the blocked prefix sums one
-  helper. ``test_no_repeated_windows`` keeps the package that way: a
-  block of six lines copied within a module or across two fails it.
+  helper. ``test_no_repeated_windows`` keeps each of the three operator
+  modules that way, and ``test_no_repeated_windows_across_package`` the
+  whole package: a block of six lines copied within a module or across
+  two fails it.
 - ``test_oracle_digest`` pins the DuckDB side of every query built on
   those kernels to a digest of its output at sf0.001. The oracle check
   compares Spark with DuckDB only, so a refactor that changed a
@@ -24,6 +26,7 @@ from tools.check_oracles import _canon
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ("documents", "embeddings", "events")
+FOLDED_MODULES = ("similarity.py", "textops.py", "multimodal.py")
 WINDOW = 6
 
 
@@ -44,7 +47,15 @@ def repeated_windows(texts: dict[str, str]) -> dict[tuple[str, ...], list[str]]:
     return {w: s for w, s in starts.items() if len(s) > 1}
 
 
-def test_no_repeated_windows():
+@pytest.mark.parametrize("module", FOLDED_MODULES)
+def test_no_repeated_windows(module):
+    path = os.path.join(REPO_DIR, "nreadability_spark", "operators", module)
+    with open(path, encoding="utf-8") as f:
+        repeats = repeated_windows({module: f.read()})
+    assert not repeats, [f"{s} {w[0]!r}" for w, s in repeats.items()]
+
+
+def test_no_repeated_windows_across_package():
     package = os.path.join(REPO_DIR, "nreadability_spark")
     texts = {}
     for path in sorted(glob.glob(os.path.join(package, "**", "*.py"), recursive=True)):
