@@ -41,14 +41,6 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # usually inherit the driver cwd on sys.path anyway
 
 
-def _salted(df: DataFrame) -> DataFrame:
-    """Spread rows across the cluster before a Python-UDF stage: a
-    single parquet file arrives as one split, which would serialize the
-    extraction; 2x parallelism is the measured per-task sweet spot."""
-    n = 2 * df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, F.xxhash64("doc_id"))
-
-
 def _page_shell() -> F.Column:
     """The deterministic web-page shell around a document's text
     (header/sidebar/footer boilerplate; replicated byte-for-byte by
@@ -128,10 +120,12 @@ def _extract_query(source: Callable[[SparkSession, str], DataFrame]) -> Callable
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         from nreadability_spark.functions.ordering import ordered_small
         from nreadability_spark.operators.extract import extract_columns
+        from nreadability_spark.plans.extract_job import salted
+        from nreadability_spark.session import ARROW_BATCH_ROWS
 
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         docs = source(spark, sf_dir)
-        out = extract_columns(_salted(docs), include_html=False)
+        out = extract_columns(salted(docs, "doc_id"), include_html=False)
         kind = ["kind"] if "kind" in docs.columns else []
         return ordered_small(
             out.select(
@@ -155,9 +149,10 @@ def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same on every machine) -> Arrow-batched extraction UDF ->
     conversation window offsets (rows-only check; sf_dir sets scale)."""
     from nreadability_spark.plans.extract_job import extract_transcripts
+    from nreadability_spark.session import ARROW_BATCH_ROWS
     from nreadability_spark.sources.synth import transcripts_df
 
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
     n_convs = 60 if "0.001" in sf_dir else 200
     src = transcripts_df(spark, n_convs=n_convs)
     out = extract_transcripts(src, include_html=False)

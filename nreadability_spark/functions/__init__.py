@@ -14,7 +14,7 @@ node, and its RangePartitioner's sampling pass would run every decode
 a second time; a single-partition sort runs it once.
 
 ``prefix.exclusive_prefix_sum`` is the one running total over an
-ordered key (the packers' global offsets, the two-phase conversation
-offsets): block sums, a window over the blocks, a window within each
-block, so no task holds a whole corpus or conversation.
+ordered key (the packers' global offsets): block sums, a window over
+the blocks, a window within each block, so no task holds a whole
+corpus.
 """

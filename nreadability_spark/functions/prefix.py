@@ -1,15 +1,14 @@
 """The exclusive running sum of a column, in two bounded phases.
 
-A single ``Window.orderBy(key)`` puts every row of a window partition
-in one task: the whole corpus for a global running total, a whole
-conversation for a per-conversation one (AQE can split skewed joins,
-not window partitions). Blocking the order key bounds every task:
+A single ``Window.orderBy(key)`` puts every row in one task: the whole
+corpus for a global running total (AQE can split skewed joins, not
+window partitions). Blocking the order key bounds every task:
 
 1. block sums: rows group into ``order_col div block_size`` blocks, and
    each block's sum is a hash aggregate (map-side partials, no skew);
 2. block prefix: an exclusive running sum over the block sums, a
-   window over ``rows / block_size`` rows per group (10^12 rows in
-   blocks of 10^6 is 10^6 rows);
+   window over ``rows / block_size`` rows (10^12 rows in blocks of
+   10^6 is 10^6 rows);
 3. within-block prefix: a window over one block, at most
    ``block_size`` rows by construction.
 
@@ -31,24 +30,21 @@ def exclusive_prefix_sum(
     order_col: str,
     out_col: str,
     block_size: int,
-    partition_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """``df`` plus ``out_col`` (long): the sum of ``value_col`` over the
-    rows before each row in integer ``order_col`` order, within each
-    ``partition_cols`` group (over the whole frame when there is none).
-    The block join puts ``partition_cols`` first among the columns."""
-    keys = [*partition_cols, "_blk"]
+    rows before each row in integer ``order_col`` order, over the whole
+    frame."""
     df = df.withColumn("_blk", F.expr(f"{order_col} div {block_size}"))
     before = Window.unboundedPreceding, -1
-    w_blk = Window.partitionBy(*partition_cols).orderBy("_blk").rowsBetween(*before)
+    w_blk = Window.orderBy("_blk").rowsBetween(*before)
     blk_prefix = (
-        df.groupBy(*keys)
+        df.groupBy("_blk")
         .agg(F.sum(value_col).alias("_blk_sum"))
-        .select(*keys, F.coalesce(F.sum("_blk_sum").over(w_blk), F.lit(0)).alias("_blk_prefix"))
+        .select("_blk", F.coalesce(F.sum("_blk_sum").over(w_blk), F.lit(0)).alias("_blk_prefix"))
     )
-    w_in = Window.partitionBy(*keys).orderBy(order_col).rowsBetween(*before)
+    w_in = Window.partitionBy("_blk").orderBy(order_col).rowsBetween(*before)
     return (
-        df.join(blk_prefix, keys)
+        df.join(blk_prefix, "_blk")
         .withColumn(
             out_col,
             (

@@ -132,21 +132,22 @@ WHERE rank <= {k} ORDER BY rank
 """
 
 
-def knn_ivf(
-    spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K, centroids: DataFrame | None = None
-) -> DataFrame:
-    """IVF(nprobe) approximate top-k for the pinned query vector.
+def knn_ivf(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> DataFrame:
+    """IVF(nprobe) approximate top-k for the pinned query vector over
+    the pinned stand-in centroids, so the oracle stays closed-form
+    (``knn_ivf_fitted`` is the production wiring)."""
+    emb = _vectors(spark, sf_dir)
+    return _ivf_search(emb, _pinned(emb, IVF_CENTROIDS), k)
+
+
+def _ivf_search(emb: DataFrame, cents: DataFrame, k: int) -> DataFrame:
+    """The IVF search over ``emb`` (vec_id, e) and the (cent_id, c)
+    table ``cents``.
 
     Stage 1 (build): every vector -> nearest centroid (broadcast join
     against C centroids, window argmax). Stage 2 (search): query picks
     its ``nprobe`` nearest cells; only those cells are rescored.
-
-    ``centroids``: a (cent_id, c) table, e.g. ``fit_centroids``'s output
-    — the production wiring (fit job -> IVF build). Defaults to the
-    pinned stand-in so the oracle stays closed-form.
     """
-    emb = _vectors(spark, sf_dir)
-    cents = centroids if centroids is not None else _pinned(emb, IVF_CENTROIDS)
     q = emb.where(F.col("vec_id") == QUERY_VEC_ID)
     probe_cells = _assign_to_centroids(q, cents, top=IVF_NPROBE).select("cell")
     cands = (
@@ -257,10 +258,8 @@ def _assign_to_centroids(
     )
 
 
-def fit_centroids(
-    spark: SparkSession, sf_dir: str, k: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS
-) -> DataFrame:
-    """Lloyd k-means over the embeddings as a Spark job -> (cent_id, c).
+def fit_centroids(emb: DataFrame, k: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS) -> DataFrame:
+    """Lloyd k-means over ``emb`` (vec_id, e) as a Spark job -> (cent_id, c).
 
     Deterministic by construction so the fit itself is oracle-checkable:
     pinned init (first k vectors), cosine assignment with lowest-id tie
@@ -276,7 +275,6 @@ def fit_centroids(
     agg with map-side partials — no collect, no driver math; the
     centroid table itself is the only driver-sized object.
     """
-    emb = _vectors(spark, sf_dir)
     cents = _pinned(emb, k)
     for _ in range(iters):
         assigned = _assign_to_centroids(emb, cents)
@@ -308,7 +306,7 @@ def fit_centroids(
 def centroid_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() entry: the fitted centroid table in long format
     (cell, dim, centroid), dim 1-based."""
-    cents = fit_centroids(spark, sf_dir)
+    cents = fit_centroids(_vectors(spark, sf_dir))
     return (
         cents.select(
             F.col("cent_id").cast("long").alias("cell"),
@@ -363,7 +361,8 @@ def knn_ivf_fitted(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> Data
     unrolled Lloyd CTE chain extended through the same search CTEs —
     exact, because each iteration's centroids are rounded to 6 decimals
     as part of the algorithm (engine-independent doubles)."""
-    return knn_ivf(spark, sf_dir, k=k, centroids=fit_centroids(spark, sf_dir))
+    emb = _vectors(spark, sf_dir)
+    return _ivf_search(emb, fit_centroids(emb), k)
 
 
 def knn_ivf_fitted_sql(
@@ -753,7 +752,7 @@ def _adc_knn(
     q = emb.where(F.col("vec_id") == QUERY_VEC_ID)
     vecs, cells, q_sub = emb, None, _subvectors(q)
     if nprobe is not None:
-        coarse = fit_centroids(spark, sf_dir)
+        coarse = fit_centroids(emb)
         w = Window.orderBy(F.col("ccos").desc(), F.col("cent_id"))
         probe = (
             q.crossJoin(F.broadcast(coarse))
@@ -1039,7 +1038,7 @@ def semantic_dedup(
       narrow shuffle keyed by vec_id.
     """
     emb = _vectors(spark, sf_dir)
-    assigned = _assign_to_centroids(emb, fit_centroids(spark, sf_dir)).select(
+    assigned = _assign_to_centroids(emb, fit_centroids(emb)).select(
         "vec_id", "e", "cell",
         # round BEFORE ranking: the rank order must be reproducible
         # across engines, and 1e-16 summation noise would reorder

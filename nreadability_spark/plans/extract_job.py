@@ -7,13 +7,13 @@
 Scale design notes (the parts that must survive 1000 executors / 100 TB):
 
 - **pre-filter pushes down**: the null/empty text filter is a native
-  ``where`` before the UDF, so it reaches the parquet/Iceberg scan
+  ``where`` before the UDF, so it reaches the parquet scan
   (PushedFilters), and column pruning keeps the scan to the 6 input
   columns;
 - **payload-length skew, not key skew**: extraction is row-local, so the
-  UDF stage is decorrelated from conversation length by repartitioning
-  on ``xxhash64(conv_id, turn_idx)`` — a 10k-turn conversation spreads
-  over the whole cluster instead of pinning one task;
+  UDF stage is decorrelated from conversation length by ``salted`` on
+  ``(conv_id, turn_idx)`` — a 10k-turn conversation spreads over the
+  whole cluster instead of pinning one task;
 - **one keyed shuffle after the UDF**: ``bucket`` is a function of
   ``conv_id``, so ``run_extract_job`` runs the conversation-offset
   window partitioned by ``(bucket, conv_id)`` right after the write's
@@ -26,7 +26,8 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   only for joins and ``rebalance``, never for a ``repartition``, so the
   salt above stays the skew remedy;
 - **Arrow batch cap**: large HTML rows x default 10k-row batches would
-  be GiB-scale per worker; ``tune_session`` caps records per batch.
+  be GiB-scale per worker; ``tune_session`` caps records per batch at
+  ``session.ARROW_BATCH_ROWS``.
 """
 
 from __future__ import annotations
@@ -37,8 +38,8 @@ import uuid
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from nreadability_spark.functions.prefix import exclusive_prefix_sum
 from nreadability_spark.operators.extract import extract_columns
+from nreadability_spark.session import ARROW_BATCH_ROWS
 from nreadability_spark.sources import lineage
 
 OUTPUT_COLUMNS = [
@@ -58,12 +59,12 @@ OUTPUT_COLUMNS = [
 ]
 
 
-def tune_session(spark, arrow_batch_rows=512):
+def tune_session(spark):
     """Session knobs the job depends on; idempotent."""
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark
 
@@ -84,50 +85,30 @@ def with_conv_offsets(df, partition_cols=("conv_id",)):
     )
 
 
-def with_conv_offsets_two_phase(df, block_size=1024, length_col="content_text"):
-    """Conversation-cumulative char offsets via a two-phase salted
-    aggregation (SURVEY.md §4.3.2) — the skew-proof alternative to the
-    plain window for pathological conversations.
-
-    The plain ``Window.partitionBy(conv_id)`` puts an entire
-    conversation in ONE task; a 10^6-turn conversation pins it. Here the
-    turns group into ``turn_idx div block_size`` blocks and the offset
-    is a blocked prefix sum per conversation (``functions.prefix``), so
-    no task holds more than ``block_size`` turns or one conversation's
-    block sums. Exactly equals the single-window result (tests assert
-    it).
-    """
-    out = df.withColumn(
-        "_len", F.coalesce(F.length(length_col).cast("long"), F.lit(0))
-    )
-    return exclusive_prefix_sum(
-        out, "_len", "turn_idx", "conv_offset", block_size, ("conv_id",)
-    ).drop("_len")
+def salted(df, *keys):
+    """``df`` hash-repartitioned on ``xxhash64(*keys)`` into 2x the
+    cluster's default parallelism: the explicit shuffle ahead of a
+    Python-UDF stage. It decorrelates the stage from payload skew — long
+    conversations and heavy payloads (150 KB pages cost ~50x a chat
+    turn) otherwise pin whole tasks, a single parquet file arrives as one
+    split, and AQE cannot rebalance *inside* the UDF stage. 2x is the
+    measured optimum on local[32]: it beats 1x by ~60% via finer skew
+    spreading, and beats 4x-10x, where per-task Arrow/runner overhead
+    dominates."""
+    n = 2 * df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, F.xxhash64(*keys))
 
 
-def extract_transcripts(
-    df,
-    options=None,
-    include_html=True,
-    salt_partitions="auto",
-    with_conv_offset=True,
-    conv_offset_strategy="window",
-):
+def extract_transcripts(df, options=None, include_html=True, with_conv_offset=True):
     """Transcripts DataFrame -> extracted DataFrame (lazy; no action).
 
     ``with_conv_offset=False`` returns ``OUTPUT_COLUMNS`` without
     ``conv_offset``: the front that ``run_extract_job`` windows on its
-    own exchange and that streams use as is (with ``salt_partitions``
-    None).
+    own exchange and that streams use as is.
 
-    ``salt_partitions``: explicit shuffle decorrelating payload skew
-    before the UDF stage — long conversations and heavy payloads (150 KB
-    pages cost ~50x a chat turn) otherwise pin whole tasks, and AQE
-    cannot rebalance *inside* the UDF stage. "auto" = 2x the cluster's
-    default parallelism — measured optimum on local[32] (2x beats 1x by
-    ~60% via finer skew spreading, and beats 4x-10x, where per-task
-    Arrow/runner overhead dominates). Pass None to disable when the
-    input is already hash-distributed.
+    A batch input is ``salted`` on ``(conv_id, turn_idx)`` before the
+    UDF; a streaming one is not, so each micro-batch reaches the UDF
+    without a shuffle.
 
     Each Python worker process pays a fixed cost once, about 0.11-0.21 s
     on a 4-core box under Python 3.11: PySpark's worker calls
@@ -144,24 +125,16 @@ def extract_transcripts(
     # native prefilter (reaches the scan); null/empty rows short-circuit
     # inside the UDF anyway, but skipping them avoids shipping the rows
     out = out.where(F.col("text").isNotNull() & (F.length("text") > 0))
-
-    if salt_partitions == "auto":
-        salt_partitions = 2 * df.sparkSession.sparkContext.defaultParallelism
-    if salt_partitions:
-        out = out.repartition(salt_partitions, F.xxhash64("conv_id", "turn_idx"))
+    if not df.isStreaming:
+        out = salted(out, "conv_id", "turn_idx")
 
     out = extract_columns(out, options=options, include_html=include_html)
     out = out.drop("text")
 
     if not with_conv_offset:
         return out.select(*(c for c in OUTPUT_COLUMNS if c != "conv_offset"))
-    if conv_offset_strategy == "two_phase":
-        # skew-proof offsets for pathological conversations (§4.3.2)
-        out = with_conv_offsets_two_phase(out)
-    else:
-        # the only conv_id-keyed shuffle in the query
-        out = with_conv_offsets(out)
-    return out.select(*OUTPUT_COLUMNS)
+    # the only conv_id-keyed shuffle in the query
+    return with_conv_offsets(out).select(*OUTPUT_COLUMNS)
 
 
 def run_extract_job(
@@ -172,17 +145,13 @@ def run_extract_job(
     n_buckets=32,
     options=None,
     include_html=True,
-    salt_partitions="auto",
     resume=True,
-    conv_offset_strategy="window",
 ):
     """Full job with lineage commits and optional resume.
 
     After the UDF the rows take one exchange, ``repartition(bucket)``;
     the conversation window runs over ``(bucket, conv_id)`` on top of
-    it, and its sort is the one the write needs. ``"two_phase"`` swaps
-    the window for ``with_conv_offsets_two_phase``, whose own exchanges
-    then come before the bucket repartition.
+    it, and its sort is the one the write needs.
 
     Returns a dict with run metrics: ``rows`` written, wall seconds,
     buckets written and counters observed on the rows this run
@@ -195,19 +164,12 @@ def run_extract_job(
 
     df = lineage.filter_uncommitted(source_df, out_path, n_buckets) if resume else source_df
     extracted = extract_transcripts(
-        df,
-        options=options,
-        include_html=include_html,
-        salt_partitions=salt_partitions,
-        with_conv_offset=False,
+        df, options=options, include_html=include_html, with_conv_offset=False
     )
-    out = lineage.with_bucket(extracted, n_buckets)
-    if conv_offset_strategy == "two_phase":
-        out = with_conv_offsets_two_phase(out).repartition(lineage.BUCKET_COL)
-    else:
-        out = with_conv_offsets(
-            out.repartition(lineage.BUCKET_COL), (lineage.BUCKET_COL, "conv_id")
-        )
+    out = with_conv_offsets(
+        lineage.with_bucket(extracted, n_buckets).repartition(lineage.BUCKET_COL),
+        (lineage.BUCKET_COL, "conv_id"),
+    )
 
     t0 = time.monotonic()
     manifests, counters = lineage.write_partitioned(

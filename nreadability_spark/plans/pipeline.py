@@ -212,9 +212,8 @@ def cluster_topics(
     )
 
     docs = load_documents(spark, sf_dir)
-    assigned = _assign_to_centroids(
-        _vectors(spark, sf_dir), fit_centroids(spark, sf_dir)
-    ).select(
+    emb = _vectors(spark, sf_dir)
+    assigned = _assign_to_centroids(emb, fit_centroids(emb)).select(
         F.col("vec_id").alias("doc_id"), F.col("cell").cast("long").alias("cell")
     )
     sizes = assigned.groupBy("cell").agg(

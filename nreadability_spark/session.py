@@ -41,6 +41,10 @@ from pathlib import Path
 _PACKAGE_ROOT = Path(__file__).resolve().parent
 _STOCK_ZIP_INVALIDATE = zipimport.zipimporter.invalidate_caches
 
+# records per Arrow batch sent to a Python worker: large HTML rows in
+# Spark's default 10k-row batches would be GiB-scale per worker
+ARROW_BATCH_ROWS = 512
+
 
 def package_zip():
     """Zip the nreadability_spark package; returns the archive path."""
@@ -99,7 +103,6 @@ def get_spark(
     master=None,
     app_name="nreadability-spark",
     shuffle_partitions=None,
-    arrow_batch_rows=512,
     extra_conf=None,
 ):
     """Build (or reuse) a tuned SparkSession with the package shipped."""
@@ -114,7 +117,7 @@ def get_spark(
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.ui.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():

@@ -7,9 +7,9 @@ into Structured Streaming unchanged:
 
 Pieces:
 - ``extract_stream``: transcripts stream -> extracted stream. It is the
-  batch front, ``extract_transcripts`` without the salt and without the
-  conversation-offset window (cumulative offsets over an unbounded
-  stream require keyed state; see note below).
+  batch front, ``extract_transcripts``, which skips the salt on a
+  streaming input, without the conversation-offset window (cumulative
+  offsets over an unbounded stream require keyed state; see note below).
 - ``windowed_turn_metrics``: event-time windowed aggregation with a
   watermark — the late-data-tolerant operational metrics stream
   (turns/minute, extraction rate, error rate).
@@ -18,11 +18,12 @@ Pieces:
   ``foreachBatch`` + deterministic extraction + per-bucket dynamic
   overwrite keeps restarts idempotent (the Iceberg MERGE analogue).
 
-Conversation-cumulative offsets in a stream would use
-``applyInPandasWithState`` keyed by conv_id; the batch job remains the
-system of record for them (BASELINE.json's north rule is a batch table
-at rest), so that stateful variant is intentionally not part of the
-contract here.
+Conversation-cumulative offsets over a stream are keyed state:
+``streaming.stateful.stream_conv_offsets`` computes them with
+``applyInPandasWithState`` keyed by conv_id, over this module's
+``extract_stream`` (``stream_conv_offsets_ordered`` when turns can
+arrive out of order). The batch job remains the system of record for
+them (BASELINE.json's north rule is a batch table at rest).
 """
 
 from __future__ import annotations
@@ -36,11 +37,7 @@ from nreadability_spark.plans.extract_job import extract_transcripts
 def extract_stream(stream_df: DataFrame, options=None, include_html=True) -> DataFrame:
     """Streaming transcripts -> streaming extraction results (lazy)."""
     return extract_transcripts(
-        stream_df,
-        options=options,
-        include_html=include_html,
-        salt_partitions=None,
-        with_conv_offset=False,
+        stream_df, options=options, include_html=include_html, with_conv_offset=False
     )
 
 

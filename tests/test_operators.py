@@ -173,7 +173,7 @@ def test_residual_pq_strictly_improves_reconstruction(spark):
         .agg(F.sum("d"))
         .collect()[0][0]
     )
-    coarse = sim.fit_centroids(spark, SF_DIR)
+    coarse = sim.fit_centroids(emb)
     res = sim._residual_vectors(emb, coarse).select("vec_id", "e")
     res_book = sim.fit_pq_codebook(res)
     res_err = (
@@ -1171,18 +1171,6 @@ def test_extraction_prefilter_reaches_scan(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(text)" in plan
 
 
-def test_iceberg_production_path_declared(spark):
-    """The Iceberg call-sites are real code (argument construction is
-    checked); the runtime jar is absent in the sandbox by design."""
-    from nreadability_spark.sources import iceberg
-
-    conf = iceberg.iceberg_session_conf("lake", "s3://wh")
-    assert conf["spark.sql.catalog.lake"] == "org.apache.iceberg.spark.SparkCatalog"
-    assert "bucket(256, conv_id)" in iceberg.create_output_table_ddl("t")
-    assert iceberg.committed_partitions_sql("t").endswith("FROM t.files")
-    assert iceberg.is_iceberg_available(spark) is False
-
-
 def test_near_dup_block_pairs_equals_broadcast_no_broadcast_join(spark):
     """The 100 TB pair-join path: the salted (cell, i, j) block-pair
     shuffle join must produce exactly the broadcast path's pairs, with
@@ -1250,13 +1238,13 @@ def test_ivf_reads_fitted_centroids(spark):
     (no cell drops out on this data)."""
     from nreadability_spark.operators import similarity
 
-    cents = similarity.fit_centroids(spark, SF_DIR)
+    cents = similarity.fit_centroids(similarity._vectors(spark, SF_DIR))
     assert cents.count() == similarity.IVF_CENTROIDS
     brute = {
         r["vec_id"]: r["cos_sim"]
         for r in similarity.knn_brute_force(spark, SF_DIR, k=10**6).collect()
     }
-    rows = similarity.knn_ivf(spark, SF_DIR, centroids=cents).collect()
+    rows = similarity.knn_ivf_fitted(spark, SF_DIR).collect()
     assert rows, "fitted-centroid IVF returned nothing"
     for r in rows:
         assert r["vec_id"] in brute

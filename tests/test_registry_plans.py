@@ -7,12 +7,17 @@ With a Python node below and no other exchange in between, every row
 goes through Python twice. Small results use
 ``functions.ordering.ordered_small`` instead.
 
+No Python function is evaluated in two plan nodes. A DataFrame with a
+Python stage that is used twice in one plan, as in a self-join, runs
+every row through Python once per use.
+
 A query over a cached synthetic corpus builds without a Spark job: the
 cache is read with the schema it was written with, so no
 schema-discovery job runs.
 """
 
 import os
+from collections import Counter
 
 import pytest
 
@@ -26,9 +31,12 @@ PYTHON_NODES = frozenset(
 ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
+def _seq(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 def _children(node):
-    kids = node.children()
-    return [kids.apply(i) for i in range(kids.size())]
+    return _seq(node.children())
 
 
 def _initial_plan(df):
@@ -66,6 +74,27 @@ def python_below_range_exchange(plan):
     return found
 
 
+def python_functions_in_two_nodes(plan):
+    """Result ids of the Python functions that more than one node of
+    ``plan`` evaluates. Each call of a Python UDF in the DataFrame API
+    has its own result id, so a node evaluating the same id as another
+    re-runs that call on the same rows."""
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        stack.extend(_children(node))
+        if node.nodeName() not in PYTHON_NODES:
+            continue
+        ids, exprs = set(), list(_seq(node.expressions()))
+        while exprs:
+            e = exprs.pop()
+            if e.getClass().getSimpleName() == "PythonUDF":
+                ids.add(e.resultId().id())
+            exprs.extend(_seq(e.children()))
+        nodes.extend(ids)
+    return sorted(i for i, n in Counter(nodes).items() if n > 1)
+
+
 needs_sf = pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.001 tables")
 
 
@@ -94,6 +123,32 @@ def test_no_range_exchange_above_python_stage(spark, registry):
         if found:
             offenders[name] = sorted(set(found))
     assert offenders == {}, f"range exchange directly above a Python stage: {offenders}"
+
+
+@needs_sf
+def test_no_python_function_in_two_nodes(spark, registry):
+    offenders = {}
+    for name, build in registry.items():
+        found = python_functions_in_two_nodes(_initial_plan(build(spark, SF_DIR)))
+        if found:
+            offenders[name] = found
+    assert offenders == {}, f"Python functions evaluated in two nodes: {offenders}"
+
+
+def test_extract_job_write_runs_each_python_function_once(spark, tmp_path, monkeypatch):
+    """The frame ``run_extract_job`` hands to its write, planned without
+    writing."""
+    from nreadability_spark.plans.extract_job import run_extract_job
+    from nreadability_spark.sources import lineage
+    from nreadability_spark.sources.synth import transcripts_df
+
+    written = []
+    monkeypatch.setattr(
+        lineage, "write_partitioned", lambda df, *a, **k: written.append(df) or ({}, {})
+    )
+    run_extract_job(spark, transcripts_df(spark, 8), str(tmp_path / "out"), n_buckets=4)
+    assert len(written) == 1
+    assert python_functions_in_two_nodes(_initial_plan(written[0])) == []
 
 
 @needs_sf
@@ -149,3 +204,17 @@ def test_walk_flags_order_by_over_map_in_pandas(spark):
     assert python_below_range_exchange(_initial_plan(ordered_small(mapped, "id"))) == []
     hashed = mapped.repartition(4, "id").orderBy("id")
     assert python_below_range_exchange(_initial_plan(hashed)) == []
+
+
+def test_walk_flags_a_python_function_in_two_nodes(spark):
+    """The walk itself: a self-join of a Python stage is flagged, a
+    chain of two calls of one UDF and two separate stages are not."""
+    from pyspark.sql import functions as F
+
+    plus_one = F.pandas_udf(lambda s: s + 1, "long")
+    once = spark.range(8).withColumn("x", plus_one("id"))
+    assert len(python_functions_in_two_nodes(_initial_plan(once.join(once, "id")))) == 1
+    chained = once.withColumn("y", plus_one("x"))
+    assert python_functions_in_two_nodes(_initial_plan(chained)) == []
+    other = spark.range(8).withColumn("z", plus_one("id"))
+    assert python_functions_in_two_nodes(_initial_plan(once.join(other, "id"))) == []

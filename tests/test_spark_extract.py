@@ -177,6 +177,32 @@ def test_extract_job_reports_observed_counts(spark, tmp_path):
     assert {k: again[k] for k in table} == dict.fromkeys(table, 0)
 
 
+def test_extract_cli_reports_the_rows_it_committed(spark, tmp_path):
+    """``jobs/extract.py`` as spark-submit runs it, in its own process:
+    its JSON line counts the rows the bucket manifests commit, which are
+    the source's non-empty turns."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    src, out = str(tmp_path / "src.parquet"), str(tmp_path / "out")
+    transcripts_df(spark, 6, long_every=0).write.parquet(src)
+    env = dict(os.environ, PYTHONPATH=repo, PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell")
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "jobs", "extract.py"),
+         "--source", src, "--out", out, "--buckets", "4", "--no-html"],
+        capture_output=True, text=True, env=env, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    metrics = json.loads(proc.stdout.strip().splitlines()[-1])
+    manifests = lineage.committed_buckets(out)
+    assert metrics["rows"] == sum(m["rows"] for m in manifests.values())
+    assert metrics["buckets_written"] == len(manifests)
+    assert metrics["rows"] == spark.read.parquet(src).where("length(text) > 0").count() > 0
+
+
 def _plans_of(spark, action):
     """Run ``action``; return the physical plan description of each SQL
     execution it started, as the SQL status store holds it."""
@@ -275,26 +301,6 @@ def test_manifests_equal_a_read_back_of_each_bucket(spark, tmp_path):
     assert _manifest_stats(resumed) == _bucket_read_back(spark, resumed) == _manifest_stats(full)
 
 
-def test_extract_job_two_phase_writes_the_same_table(spark, tmp_path):
-    """``conv_offset_strategy="two_phase"`` replaces the job's window and
-    writes the same rows, manifests, counters and one file per bucket."""
-    source = transcripts_df(spark, 12, long_every=5)
-    written = {}
-    for strategy in ("window", "two_phase"):
-        out = tmp_path / strategy
-        metrics = run_extract_job(
-            spark, source, str(out), n_buckets=4, include_html=False, conv_offset_strategy=strategy
-        )
-        written[strategy] = (
-            spark.read.parquet(str(out)).orderBy("conv_id", "turn_idx").collect(),
-            _manifest_stats(out),
-            {k: metrics[k] for k in ("rows", "buckets_written", "extracted_rows", "chars", "errors")},
-            sorted(f.parent.name for f in out.glob("bucket=*/*.parquet")),
-        )
-    assert written["two_phase"] == written["window"]
-    assert len(set(written["window"][3])) == len(written["window"][3]) == 4
-
-
 def test_hostile_rows_set_error_not_fail(spark):
     import pandas as pd
 
@@ -314,49 +320,3 @@ def test_hostile_rows_set_error_not_fail(spark):
     rows = {r["turn_idx"]: r for r in extract_columns(df).collect()}
     assert len(rows) == 3  # no task failure
     assert rows[1]["error"] is None
-
-
-def test_two_phase_offsets_equal_window_offsets(spark):
-    """The skew-proof two-phase offset computation (SURVEY §4.3.2) must
-    agree exactly with the plain window, including on the long skewed
-    conversation and across block boundaries."""
-    source = transcripts_df(spark, 12, long_every=5)  # several long convs
-    window_out = {
-        (r["conv_id"], r["turn_idx"]): r["conv_offset"]
-        for r in extract_transcripts(source, include_html=False).collect()
-    }
-    two_phase_out = {
-        (r["conv_id"], r["turn_idx"]): r["conv_offset"]
-        for r in extract_transcripts(
-            source, include_html=False, conv_offset_strategy="two_phase"
-        ).collect()
-    }
-    assert window_out == two_phase_out
-
-
-def test_two_phase_offsets_cross_block_carry(spark):
-    """Exercise the block-prefix carry with a block size smaller than
-    the conversations (block_size=7 over 600-turn conversations)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from nreadability_spark.plans.extract_job import with_conv_offsets_two_phase
-
-    df = transcripts_df(spark, 3, long_every=1).select(
-        "conv_id", "turn_idx", F.coalesce("text", F.lit("")).alias("content_text")
-    )
-    w = Window.partitionBy("conv_id").orderBy("turn_idx").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    want = {
-        (r["conv_id"], r["turn_idx"]): r["off"]
-        for r in df.withColumn(
-            "off", F.coalesce(F.sum(F.length("content_text")).over(w), F.lit(0)).cast("long")
-        ).collect()
-    }
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["conv_offset"]
-        for r in with_conv_offsets_two_phase(df, block_size=7).collect()
-    }
-    assert got == want
-    assert max(t for _, t in got) >= 599  # many blocks per conversation
