@@ -36,14 +36,12 @@ def main():
     ap.add_argument("--stage", choices=("clean", "training_ready"), default="training_ready")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from nreadability_spark.plans.extract_job import tune_session
     from nreadability_spark.plans.pipeline import MIN_TOKENS, clean_corpus, training_ready
+    from nreadability_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("nreadability-clean-corpus").getOrCreate()
-    tune_session(spark)
+    spark = get_spark(app_name="nreadability-clean-corpus")
 
     min_tokens = args.min_tokens if args.min_tokens is not None else MIN_TOKENS
     t0 = time.monotonic()

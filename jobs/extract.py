@@ -32,11 +32,10 @@ def main():
     ap.add_argument("--no-html", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from nreadability_spark.plans.extract_job import run_extract_job
+    from nreadability_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("nreadability-extract").getOrCreate()
+    spark = get_spark(app_name="nreadability-extract")
     metrics = run_extract_job(
         spark,
         spark.read.parquet(args.source),

@@ -41,14 +41,12 @@ def main():
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from nreadability_spark.operators import bpe, classifier, similarity
-    from nreadability_spark.plans.extract_job import tune_session
+    from nreadability_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("nreadability-fit-models").getOrCreate()
-    tune_session(spark)
+    spark = get_spark(app_name="nreadability-fit-models")
 
     t0 = time.monotonic()
     counts = {}

@@ -80,19 +80,17 @@ labeled AS (
 )"""
 
 
-def featurize(df: DataFrame, passthrough: tuple = ()) -> DataFrame:
-    """(doc_id, *passthrough, x0..x3): 6-dp-rounded surface features
-    from ``text``; x0 is the bias term. Works on batch AND streaming
-    DataFrames (stateless map-side expressions only)."""
-    keep = list(passthrough)
-    d = df.select(
+def feature_frame(labeled: DataFrame) -> DataFrame:
+    """(doc_id, y, x0..x3) over a labeled corpus: 6-dp-rounded surface
+    features from ``text``; x0 is the bias term."""
+    d = labeled.select(
         "doc_id",
-        *keep,
+        "y",
         tx.tokens(F.col("text")).alias("toks"),
         F.length("text").alias("n_chars"),
     ).select(
         "doc_id",
-        *keep,
+        "y",
         F.size("toks").alias("n_toks"),
         F.expr(f"size(filter(toks, t -> t IN ({_STOP_ARR})))").alias("n_stop"),
         F.expr("aggregate(toks, 0L, (a, t) -> a + length(t))").alias("sum_len"),
@@ -101,30 +99,11 @@ def featurize(df: DataFrame, passthrough: tuple = ()) -> DataFrame:
     nt = F.greatest("n_toks", F.lit(1))
     return d.select(
         "doc_id",
-        *keep,
+        "y",
         F.lit(1.0).alias("x0"),
         F.round(F.col("n_stop") / nt, 6).alias("x1"),
         F.round(F.col("sum_len") / nt / 10, 6).alias("x2"),
         F.round(F.col("n_toks") / F.greatest("n_chars", F.lit(1)), 6).alias("x3"),
-    )
-
-
-def feature_frame(labeled: DataFrame) -> DataFrame:
-    """(doc_id, y, x0..x3) over a labeled corpus."""
-    return featurize(labeled, passthrough=("y",))
-
-
-def score_frame(docs: DataFrame, weights: list) -> DataFrame:
-    """Apply fitted weights to any (doc_id, text) frame — batch or
-    streaming: (doc_id, logit_micro, pred). Pure map-side expressions;
-    the model rides along as literals (at 100 TB: a broadcast of F
-    doubles)."""
-    feats = featurize(docs)
-    z = sum(F.col(f"x{j}") * F.lit(weights[j]) for j in range(N_FEATURES))
-    return feats.select(
-        "doc_id",
-        F.round(z * GD_MICRO).cast("long").alias("logit_micro"),
-        (z > 0).cast("long").alias("pred"),
     )
 
 

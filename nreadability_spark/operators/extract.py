@@ -12,8 +12,8 @@ constraints it satisfies:
 - deterministic: the core is a pure function, so Spark is free to retry
   or speculate tasks without changing results;
 - worker memory bounded: callers should cap
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (see
-  ``plans.extract_job.tune_session``) because HTML payloads are large;
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (``session.get_spark``
+  sets ``session.ARROW_BATCH_ROWS``) because HTML payloads are large;
 - only read outputs are computed: the core never builds the reading
   page (``ExtractResult.html``), and builds ``content_html`` only under
   ``include_html``.

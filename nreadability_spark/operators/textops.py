@@ -1881,11 +1881,11 @@ def dsir_bucket_model(
 
     Complete means every bucket 0..B-1 has a row, including buckets no
     fit-corpus n-gram hashed to: add-1 smoothing exists precisely to
-    define those weights (count 0 -> log10(1/(tot+B))), and the online
-    scorer (``streaming/dsir_stream.py``) sees NOVEL documents whose
-    features may hash to fit-unseen buckets — with a count-only table
-    the scoring inner join would silently drop those occurrences and
-    the online score would diverge from the model."""
+    define those weights (count 0 -> log10(1/(tot+B))), and
+    ``dsir_score_frame`` may score NOVEL documents whose features hash
+    to fit-unseen buckets — with a count-only table the scoring inner
+    join would silently drop those occurrences and the score would
+    diverge from the model."""
     docs = load_documents(spark, sf_dir)
     uni = tx.positional_shingle_hashes(docs, n=1)
     bi = tx.positional_shingle_hashes(docs, n=2)
@@ -1945,12 +1945,10 @@ def dsir_score_frame(
     df: DataFrame, model: DataFrame, buckets: int = DSIR_BUCKETS
 ) -> DataFrame:
     """Score a (doc_id, text) frame against a fitted (b, lw_micro)
-    bucket model -> (doc_id, n_ngrams, dsir_micro). The ONE scoring
-    code path: ``dsir_select`` composes it after the in-query fit, the
-    streaming scorer applies it per micro-batch against the persisted
-    model table — so the online score can never drift from the
-    offline one. Map-side features, broadcast B-row model, one hash
-    agg keyed by doc_id."""
+    bucket model -> (doc_id, n_ngrams, dsir_micro): ``dsir_select``
+    composes it after the in-query fit, and it applies as well to the
+    model table ``jobs/fit_models.py`` persists. Map-side features,
+    broadcast B-row model, one hash agg keyed by doc_id."""
     uni = tx.positional_shingle_hashes(df, n=1)
     bi = tx.positional_shingle_hashes(df, n=2)
     feats = (

@@ -20,14 +20,15 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   ``repartition(bucket)``. The wide payload (``content_html``,
   ``content_text``, ``spans``) crosses one exchange after the UDF, and
   the window's sort is the one the write needs;
-- **AQE on**: it coalesces the small partitions of the bucket
-  exchange (a ``repartition`` by column, no count); the salt exchange
-  has an explicit count, which AQE keeps. AQE splits skewed partitions
-  only for joins and ``rebalance``, never for a ``repartition``, so the
-  salt above stays the skew remedy;
+- **AQE on** (Spark's default): it coalesces the small partitions of
+  the bucket exchange (a ``repartition`` by column, no count); the salt
+  exchange has an explicit count, which AQE keeps. AQE splits skewed
+  partitions only for joins and ``rebalance``, never for a
+  ``repartition``, so the salt above stays the skew remedy;
 - **Arrow batch cap**: large HTML rows x default 10k-row batches would
-  be GiB-scale per worker; ``tune_session`` caps records per batch at
-  ``session.ARROW_BATCH_ROWS``.
+  be GiB-scale per worker; ``session.get_spark`` caps records per batch
+  at ``session.ARROW_BATCH_ROWS``. The job reads the caller's session
+  settings and changes none of them.
 """
 
 from __future__ import annotations
@@ -39,7 +40,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nreadability_spark.operators.extract import extract_columns
-from nreadability_spark.session import ARROW_BATCH_ROWS
 from nreadability_spark.sources import lineage
 
 OUTPUT_COLUMNS = [
@@ -57,16 +57,6 @@ OUTPUT_COLUMNS = [
     "conv_offset",
     "error",
 ]
-
-
-def tune_session(spark):
-    """Session knobs the job depends on; idempotent."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    return spark
 
 
 def with_conv_offsets(df, partition_cols=("conv_id",)):
@@ -159,7 +149,6 @@ def run_extract_job(
     ``errors``. They and the bucket manifests come from one observation
     on the write's own pass.
     """
-    tune_session(spark)
     run_id = run_id or uuid.uuid4().hex
 
     df = lineage.filter_uncommitted(source_df, out_path, n_buckets) if resume else source_df

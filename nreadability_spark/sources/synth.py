@@ -1189,10 +1189,12 @@ def _synth_version() -> str:
 def _materialize(scope: str, name: str, write) -> str:
     """Path of the cached corpus ``name`` under ``scope`` (an sf_dir,
     keyed by its basename); on a miss ``write(tmp)``
-    builds it at a tmp path that is then renamed into place."""
-    path = os.path.join(
-        _CACHE_ROOT, os.path.basename(scope.rstrip("/")), _synth_version(), name
-    )
+    builds it at a tmp path that is then renamed into place, and the
+    caches of every other ``_synth_version()`` under the scope are
+    removed (no reader can meet them again)."""
+    version = _synth_version()
+    scope_dir = os.path.join(_CACHE_ROOT, os.path.basename(scope.rstrip("/")))
+    path = os.path.join(scope_dir, version, name)
     if os.path.isdir(path):
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -1202,6 +1204,9 @@ def _materialize(scope: str, name: str, write) -> str:
         os.rename(tmp, path)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)  # concurrent builder won
+    for entry in os.listdir(scope_dir):
+        if entry != version:
+            shutil.rmtree(os.path.join(scope_dir, entry), ignore_errors=True)
     return path
 
 

@@ -50,45 +50,18 @@ DEDUP_STATE_SCHEMA = T.StructType(
 _OUT_COLS = ["fp60", "conv_id", "turn_idx"]
 
 
-def _make_dedup_fn(idle_timeout_ms):
-    def _dedup_fn(key, pdf_iter, state):
-        import pandas as pd
+def dedup_step(key, pdf, state):
+    """The first-seen step: within a micro-batch the minimum
+    (conv_id, turn_idx) is canonical; once a fingerprint has state,
+    every later arrival is a duplicate."""
+    import pandas as pd
 
-        empty = pd.DataFrame(columns=_OUT_COLS)
-        if state.hasTimedOut:
-            state.remove()
-            yield empty
-            return
-        (fp60,) = key
-        chunks = [c for c in pdf_iter if len(c)]
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(int(idle_timeout_ms))
-        if not chunks:
-            yield empty
-            return
-        if state.exists:
-            # fingerprint already canonicalized in an earlier batch:
-            # every arrival in this batch is a duplicate
-            yield empty
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        first = pdf.sort_values(
-            ["conv_id", "turn_idx"], kind="mergesort", ignore_index=True
-        ).iloc[0]
-        state.update((str(first["conv_id"]), int(first["turn_idx"])))
-        yield pd.DataFrame(
-            {
-                "fp60": [int(fp60)],
-                "conv_id": [str(first["conv_id"])],
-                "turn_idx": [int(first["turn_idx"])],
-            }
-        )
-
-    return _dedup_fn
-
-
-# module-level default (importable/picklable, used by tests)
-_dedup_fn = _make_dedup_fn(None)
+    if pdf is None or state is not None:
+        return pd.DataFrame(columns=_OUT_COLS), state
+    first = pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort").iloc[0]
+    canon = (str(first["conv_id"]), int(first["turn_idx"]))
+    (fp60,) = key
+    return pd.DataFrame([(int(fp60), *canon)], columns=_OUT_COLS), canon
 
 
 def dedup_stream(stream_df: DataFrame, idle_timeout_ms=None) -> DataFrame:
@@ -105,7 +78,7 @@ def dedup_stream(stream_df: DataFrame, idle_timeout_ms=None) -> DataFrame:
     )
     return apply_with_state(
         fp.groupBy("fp60"),
-        _make_dedup_fn(idle_timeout_ms),
+        dedup_step,
         DEDUP_OUTPUT_SCHEMA,
         DEDUP_STATE_SCHEMA,
         idle_timeout_ms,

@@ -21,9 +21,9 @@ Pieces:
 Conversation-cumulative offsets over a stream are keyed state:
 ``streaming.stateful.stream_conv_offsets`` computes them with
 ``applyInPandasWithState`` keyed by conv_id, over this module's
-``extract_stream`` (``stream_conv_offsets_ordered`` when turns can
-arrive out of order). The batch job remains the system of record for
-them (BASELINE.json's north rule is a batch table at rest).
+``extract_stream`` (its ``max_disorder`` admits turns that arrive out
+of order). The batch job remains the system of record for them
+(BASELINE.json's north rule is a batch table at rest).
 """
 
 from __future__ import annotations

@@ -8,12 +8,12 @@ keyed by the conversation key (``user_id``):
 
 - state per conversation: (next_start_offset,);
 - each micro-batch's rows for a conversation process in
-  (ts, event_id) order (one concat + one sort across Arrow chunks,
-  same chunk-safety rule as ``stateful._offsets_fn``); EVERY turn
+  (ts, event_id) order (``sft_step``, one sort over the Arrow chunks
+  that ``stateful.apply_with_state`` concatenates); EVERY turn
   advances the state, assistant turns also emit their
   [span_start, span_end);
-- same monotone-arrival contract and idle-TTL semantics as
-  ``stateful.stream_conv_offsets``.
+- the monotone-arrival contract of ``stateful.stream_conv_offsets`` at
+  its default ``max_disorder=0``, and its idle-TTL semantics.
 
 ``conv_len`` is deliberately NOT emitted: on an unbounded stream the
 example's total length is unknowable until the conversation closes —
@@ -55,53 +55,35 @@ SFT_STATE_SCHEMA = T.StructType([T.StructField("cum_chars", T.LongType())])
 _END_LEN = len(SFT_END)
 
 
-def _make_sft_fn(idle_timeout_ms):
-    def _sft_fn(key, pdf_iter, state):
-        import pandas as pd
+def sft_step(key, pdf, state):
+    """The span step: every turn advances the running render offset,
+    assistant turns also emit their [span_start, span_end)."""
+    import pandas as pd
 
-        cols = ["conv_id", "turn_id", "span_start", "span_end"]
-        empty = pd.DataFrame(columns=cols)
-        if state.hasTimedOut:
-            state.remove()
-            yield empty
-            return
-        (conv_id,) = key
-        (cum,) = state.get if state.exists else (0,)
-        chunks = list(pdf_iter)
-        if not chunks:
-            yield empty
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(
-            ["ts", "event_id"], kind="mergesort", ignore_index=True
-        )
-        roles = pdf["event_id"].map(lambda e: SFT_ROLES[int(e) % 3])
-        header_len = roles.map(len).astype("int64") + 4  # <| |>
-        text_len = (
-            pdf["event_type"].fillna("").map(len).astype("int64")
-            + 1
-            + pdf["props"].fillna("").map(len).astype("int64")
-        )
-        turn_len = header_len + text_len + _END_LEN
-        starts = turn_len.cumsum().shift(1, fill_value=0) + int(cum)
-        state.update((int(cum) + int(turn_len.sum()),))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(int(idle_timeout_ms))
-        mask = roles == "assistant"
-        yield pd.DataFrame(
-            {
-                "conv_id": int(conv_id),
-                "turn_id": pdf["event_id"][mask].astype("int64"),
-                "span_start": (starts + header_len)[mask].astype("int64"),
-                "span_end": (starts + header_len + text_len)[mask].astype("int64"),
-            }
-        )
-
-    return _sft_fn
-
-
-# module-level default (importable/picklable, used by tests)
-_sft_fn = _make_sft_fn(None)
+    if pdf is None:
+        return pd.DataFrame(columns=SFT_OUTPUT_SCHEMA.fieldNames()), state
+    (conv_id,) = key
+    (cum,) = state or (0,)
+    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort", ignore_index=True)
+    roles = pdf["event_id"].map(lambda e: SFT_ROLES[int(e) % 3])
+    header_len = roles.map(len).astype("int64") + 4  # <| |>
+    text_len = (
+        pdf["event_type"].fillna("").map(len).astype("int64")
+        + 1
+        + pdf["props"].fillna("").map(len).astype("int64")
+    )
+    turn_len = header_len + text_len + _END_LEN
+    starts = turn_len.cumsum().shift(1, fill_value=0) + int(cum)
+    mask = roles == "assistant"
+    spans = pd.DataFrame(
+        {
+            "conv_id": int(conv_id),
+            "turn_id": pdf["event_id"][mask].astype("int64"),
+            "span_start": (starts + header_len)[mask].astype("int64"),
+            "span_end": (starts + header_len + text_len)[mask].astype("int64"),
+        }
+    )
+    return spans, (int(cum) + int(turn_len.sum()),)
 
 
 def stream_sft_spans(stream_df: DataFrame, idle_timeout_ms=None) -> DataFrame:
@@ -114,7 +96,7 @@ def stream_sft_spans(stream_df: DataFrame, idle_timeout_ms=None) -> DataFrame:
     same documented trade-off as ``stream_conv_offsets``."""
     return apply_with_state(
         stream_df.select("user_id", "event_id", "ts", "event_type", "props").groupBy("user_id"),
-        _make_sft_fn(idle_timeout_ms),
+        sft_step,
         SFT_OUTPUT_SCHEMA,
         SFT_STATE_SCHEMA,
         idle_timeout_ms,

@@ -151,6 +151,23 @@ def test_extract_job_write_runs_each_python_function_once(spark, tmp_path, monke
     assert python_functions_in_two_nodes(_initial_plan(written[0])) == []
 
 
+def test_materialize_removes_other_versions(tmp_path, monkeypatch):
+    """A cache miss removes the corpora an earlier ``_synth_version()``
+    left under the same scope and keeps the current version's."""
+    from nreadability_spark.sources import synth
+
+    monkeypatch.setattr(synth, "_CACHE_ROOT", str(tmp_path))
+    scope = tmp_path / "sf_test"
+    stale = scope / "0123456789"
+    current = scope / synth._synth_version()
+    (stale / "old_corpus").mkdir(parents=True)
+    (current / "kept_corpus").mkdir(parents=True)
+    path = synth._materialize("/data/sf_test/", "new_corpus", os.makedirs)
+    assert path == str(current / "new_corpus") and os.path.isdir(path)
+    assert not stale.exists()
+    assert (current / "kept_corpus").is_dir()
+
+
 @needs_sf
 def test_cached_corpora_have_their_declared_schema(spark, registry, monkeypatch):
     """Schema discovery on each cache the registry reads gives the

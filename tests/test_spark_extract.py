@@ -151,6 +151,20 @@ def test_rerun_over_committed_output_is_noop(spark, tmp_path):
     assert before == after
 
 
+def test_extract_job_leaves_the_session_settings(spark, tmp_path):
+    """The job reads the caller's Arrow batch cap and does not rewrite it."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        run_extract_job(
+            spark, transcripts_df(spark, 2), str(tmp_path / "out"), n_buckets=2, include_html=False
+        )
+        assert spark.conf.get(key) == "300"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_extract_job_reports_observed_counts(spark, tmp_path):
     """The counters observed during the write must match the table it
     wrote, and a rerun over the committed output must count nothing."""
