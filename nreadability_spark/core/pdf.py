@@ -12,6 +12,9 @@ vertical gap larger than ``PARA_GAP`` starts a new paragraph.
 Deliberately NOT handled (gated, never silently wrong):
 
 - encrypted documents (``/Encrypt`` in the trailer) -> ``PdfGated``;
+- documents whose FlateDecode streams inflate past ``MAX_INFLATED``
+  bytes in all (deflate reaches about 1,000:1, so a small row could
+  otherwise take gigabytes and minutes) -> ``PdfOverBudget``;
 - non-Flate stream filters (DCTDecode, LZW, ...) -> the stream is
   skipped; if no text was recovered at all the result is
   ``extracted=False``;
@@ -35,6 +38,8 @@ from dataclasses import dataclass, field
 # vertical gap (in text-space units) between consecutive lines that
 # starts a new paragraph; default leading is 12-14pt
 PARA_GAP = 20.0
+# bytes one document's FlateDecode streams may inflate to, together
+MAX_INFLATED = 1 << 23
 
 _STREAM_RE = re.compile(rb"<<(.*?)>>\s*stream\r?\n(.*?)endstream", re.DOTALL)
 # literal string with escape pairs consumed atomically: a closing paren
@@ -60,6 +65,29 @@ def _strip_stream_bodies(data: bytes) -> bytes:
 class PdfGated(Exception):
     """Raised for well-formed PDFs this extractor refuses to guess at
     (encryption); surfaces in the job's ``error`` column."""
+
+
+class PdfOverBudget(Exception):
+    """Raised when a document's streams inflate past ``MAX_INFLATED``
+    bytes; surfaces in the job's ``error`` column."""
+
+
+def _inflate(stream: bytes, budget: int) -> bytes | None:
+    """``stream`` inflated, or None for a corrupt or truncated stream
+    (retried once without a trailing EOL, which writers commonly pad
+    before ``endstream``). Raises ``PdfOverBudget`` when the output
+    passes ``budget`` bytes; never inflates more than one byte past it."""
+    for data in (stream, stream.rstrip(b"\r\n")):
+        inflater = zlib.decompressobj()
+        try:
+            out = inflater.decompress(data, budget + 1)
+        except zlib.error:
+            continue
+        if len(out) > budget:
+            raise PdfOverBudget(f"FlateDecode streams inflate past {MAX_INFLATED} bytes")
+        if inflater.eof:
+            return out
+    return None
 
 
 def looks_like_pdf(payload: str | bytes | None) -> bool:
@@ -312,8 +340,9 @@ class PdfResult:
 
 def extract_pdf(payload: str | bytes) -> PdfResult:
     """PDF bytes (or latin-1 string) -> title + paragraphs, reference-
-    result-shaped. Raises ``PdfGated`` for encrypted files; malformed
-    input yields ``extracted=False`` (never a crash on a hostile row)."""
+    result-shaped. Raises ``PdfGated`` for encrypted files and
+    ``PdfOverBudget`` past the inflation budget; malformed input yields
+    ``extracted=False`` (never a crash on a hostile row)."""
     data = payload.encode("latin-1", "replace") if isinstance(payload, str) else payload
     # metadata scans run on the stream-blanked view: page text inside a
     # content stream must never supply the title or trip the encryption
@@ -326,17 +355,15 @@ def extract_pdf(payload: str | bytes) -> PdfResult:
     title = _unescape_pdf_string(title_m.group(1)) if title_m else None
 
     runs: list[_TextRun] = []
+    budget = MAX_INFLATED
     for dict_bytes, stream in _STREAM_RE.findall(data):
         if b"/Filter" in dict_bytes:
             if b"/FlateDecode" not in dict_bytes:
                 continue  # unsupported filter: skip this stream
-            try:
-                stream = zlib.decompress(stream)
-            except zlib.error:
-                try:  # writers commonly pad an EOL before 'endstream'
-                    stream = zlib.decompress(stream.rstrip(b"\r\n"))
-                except zlib.error:
-                    continue
+            stream = _inflate(stream, budget)
+            if stream is None:
+                continue
+            budget -= len(stream)
         runs.extend(_extract_runs(stream))
 
     paragraphs = _layout(runs)

@@ -75,13 +75,10 @@ def write_partitioned(df, out_path, run_id, n_buckets, counters=()):
     collected in the write's result stage, where Spark applies a task's
     accumulator update once even if the task is retried. Returns the
     manifests of the buckets this write produced, keyed by bucket, and
-    the observed ``counters``. Dynamic partition overwrite leaves every
-    other bucket's data and manifest untouched, so re-running any subset
-    of buckets is idempotent.
+    the observed ``counters``. Dynamic partition overwrite, an option of
+    this write alone, leaves every other bucket's data and manifest
+    untouched, so re-running any subset of buckets is idempotent.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     observation = Observation("lineage")
     per_bucket = []
     for b in range(n_buckets):
@@ -95,6 +92,7 @@ def write_partitioned(df, out_path, run_id, n_buckets, counters=()):
         df.observe(observation, *counters, *per_bucket)
         .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BUCKET_COL)
         .parquet(str(out_path))
     )

@@ -1,96 +1,24 @@
-"""Operator-level tests: dedup / similarity / text analysis /
-multimodal / relational queries, each checked against its DuckDB oracle
-twin at sf0.001 (the same comparison the driver runs at sf0.01), plus
-behavioral properties the oracle can't express.
+"""Operator-level tests: behavioral properties of the dedup /
+similarity / text analysis / multimodal / relational queries that an
+oracle can't express, and oracle parity on planted inputs. Every
+registry query is compared with its DuckDB oracle at sf0.001 by the
+registry walk in ``tests/test_registry_plans.py``.
 """
-
-import math
 
 import duckdb
 import pytest
 
+from tools import check_oracles
+
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 pytestmark = pytest.mark.spark
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def _canon(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(round(v, 9))
-    return repr(v)
-
-
-def assert_matches_oracle(sdf, sql, duck):
-    spark_rows = sdf.collect()
-    cols = sorted(sdf.columns)
-    res = duck.sql(sql)
-    assert sorted(res.columns) == cols
-    dmap = {c: i for i, c in enumerate(res.columns)}
-    duck_rows = res.fetchall()
-    assert len(spark_rows) == len(duck_rows)
-    s_sorted = sorted(tuple(_canon(r[c]) for c in cols) for r in spark_rows)
-    d_sorted = sorted(tuple(_canon(r[dmap[c]]) for c in cols) for r in duck_rows)
-    assert s_sorted == d_sorted
-
-
-# --- representative oracle-parity checks (one per module) --------------
-
-def test_token_stats_matches_oracle(spark, duck):
-    from nreadability_spark.operators import textops
-
-    assert_matches_oracle(
-        textops.token_stats(spark, SF_DIR), textops.TOKEN_STATS_SQL, duck
-    )
-
-
-def test_minhash_lsh_matches_oracle(spark, duck):
-    from nreadability_spark.operators import dedup
-
-    assert_matches_oracle(
-        dedup.minhash_lsh_pairs(spark, SF_DIR), dedup.ORACLES["dedup_minhash_lsh"], duck
-    )
-
-
-def test_knn_brute_force_matches_oracle(spark, duck):
-    from nreadability_spark.operators import similarity
-
-    assert_matches_oracle(
-        similarity.knn_brute_force(spark, SF_DIR),
-        similarity.ORACLES["sim_knn_brute_force"],
-        duck,
-    )
-
-
-def test_multimodal_matches_oracle(spark, duck):
-    from nreadability_spark.operators import multimodal
-
-    assert_matches_oracle(
-        multimodal.multimodal_metadata(spark, SF_DIR),
-        multimodal.ORACLES["multimodal_decode_meta"],
-        duck,
-    )
-
-
-def test_pricing_summary_matches_oracle(spark, duck):
-    from nreadability_spark.plans import relational
-
-    assert_matches_oracle(
-        relational.pricing_summary(spark, SF_DIR),
-        relational.PRICING_SUMMARY_SQL,
-        duck,
-    )
+    with check_oracles.duck(SF_DIR) as con:
+        yield con
 
 
 # --- behavioral properties ---------------------------------------------
@@ -322,8 +250,6 @@ def test_sft_spans_slice_the_rendered_conversation(spark):
     (sorted turns, '<|role|>' + text + '<|end|>' concatenation) and
     slicing: every span recovers exactly its turn's text, never a
     header or end marker."""
-    import duckdb
-
     from nreadability_spark.operators.textops import SFT_END, SFT_ROLES, sft_spans
 
     rows = sft_spans(spark, SF_DIR).collect()
@@ -532,21 +458,6 @@ def test_png_pixel_decode_handles_all_filter_types():
     ) is None
 
 
-def test_image_pixel_ops_match_oracle(spark, duck):
-    from nreadability_spark.operators import multimodal
-
-    assert_matches_oracle(
-        multimodal.image_pixel_stats(spark, SF_DIR),
-        multimodal.image_pixel_stats_sql(),
-        duck,
-    )
-    assert_matches_oracle(
-        multimodal.image_resize_thumb(spark, SF_DIR),
-        multimodal.image_resize_thumb_sql(),
-        duck,
-    )
-
-
 def test_jpeg_decode_dc_only_is_exact():
     """The planted DC-only corpus must reconstruct losslessly: the
     IDCT of a lone DC coefficient is flat, 16*dcq/8 + 128 exactly."""
@@ -724,16 +635,6 @@ def test_png_decode_bounds_inflate():
     assert peak < 1 << 22
 
 
-def test_jpeg_pixel_stats_match_oracle(spark, duck):
-    from nreadability_spark.operators import multimodal
-
-    assert_matches_oracle(
-        multimodal.jpeg_pixel_stats(spark, SF_DIR),
-        multimodal.jpeg_pixel_stats_sql(),
-        duck,
-    )
-
-
 def test_gif_lzw_decode_roundtrips_independent_encoder():
     """The LZW decoder must be GENERAL — reconstruct arbitrary pixel
     sequences written by an independent spec-following encoder (code
@@ -816,16 +717,6 @@ def test_gif_lzw_rejects_min_code_size_outside_spec():
         assert not gif[off + 9] & 0x80  # no local color table: the LZW byte follows
         gif[off + 10] = 24
     assert gif_frame_pixels(bytes(gif)) == []
-
-
-def test_frame_pixels_match_oracle(spark, duck):
-    from nreadability_spark.operators import multimodal
-
-    assert_matches_oracle(
-        multimodal.multimodal_frame_pixels(spark, SF_DIR),
-        multimodal.multimodal_frame_pixels_sql(),
-        duck,
-    )
 
 
 def test_lang_id_predicts_only_known_labels(spark):
@@ -1188,16 +1079,6 @@ def test_near_dup_block_pairs_equals_broadcast_no_broadcast_join(spark):
     plan = bp._jdf.queryExecution().sparkPlan().toString()
     assert "BroadcastHashJoin" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-
-
-def test_semantic_dedup_matches_oracle(spark, duck):
-    from nreadability_spark.operators import similarity
-
-    assert_matches_oracle(
-        similarity.semantic_dedup(spark, SF_DIR),
-        similarity.semantic_dedup_sql(),
-        duck,
-    )
 
 
 def test_semantic_dedup_strategies_agree_and_rule_holds(spark):
@@ -1576,30 +1457,35 @@ def test_components_nonconvergence_raises(spark, tmp_path):
         dedup.duplicate_components(spark, str(tmp_path), max_iters=0)
 
 
+def _planted_embeddings_parity(spark, path, rows, build, sql):
+    """``build``'s rows over a planted embeddings table, checked against
+    the oracle ``sql`` over the same table."""
+    spark.createDataFrame(rows, "vec_id: long, embedding: array<float>").coalesce(
+        1
+    ).write.parquet(f"{path}/embeddings.parquet")
+    sdf = build(spark, path)
+    got = sdf.collect()
+    with duckdb.connect() as con:
+        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/embeddings.parquet/*.parquet'")
+        oracle = con.sql(sql)
+        assert check_oracles.compare(sdf.columns, got, oracle.columns, oracle.fetchall()) == []
+    return got
+
+
 def test_quantize_int8_zero_vector_parity(spark, tmp_path):
     """An all-zero embedding must quantize to q=0 / mse=0 / scale=0 on
     BOTH engines (the guarded divide) — no NULL/NaN divergence."""
-    import duckdb as _duckdb
-
     from nreadability_spark.operators import similarity
 
     rows = [
         (0, [0.0] * similarity.DIM),
         (1, [(j % 7 - 3) / 3.0 for j in range(similarity.DIM)]),
     ]
-    spark.createDataFrame(rows, "vec_id: long, embedding: array<float>").coalesce(
-        1
-    ).write.parquet(f"{tmp_path}/embeddings.parquet")
-    con = _duckdb.connect()
-    con.sql(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet/*.parquet'"
+    got = _planted_embeddings_parity(
+        spark, str(tmp_path), rows, similarity.quantize_int8, similarity.quantize_int8_sql()
     )
-    assert_matches_oracle(
-        similarity.quantize_int8(spark, str(tmp_path)), similarity.quantize_int8_sql(), con
-    )
-    zero = similarity.quantize_int8(spark, str(tmp_path)).where("vec_id = 0").collect()[0]
+    zero = next(r for r in got if r["vec_id"] == 0)
     assert (zero["scale"], zero["mse"], zero["q_max"], zero["q_min"]) == (0.0, 0.0, 0, 0)
-    con.close()
 
 
 def test_bottomk_containment_detects_subset(spark, tmp_path):
@@ -1663,8 +1549,6 @@ def test_knn_zero_vector_parity(spark, tmp_path):
     unguarded 0/0 cosine is NaN in Spark (sorts FIRST desc) but NULL in
     DuckDB (sorts last); the guarded cosine makes it exactly 0.0 on
     both engines."""
-    import duckdb as _duckdb
-
     from nreadability_spark.operators import similarity
 
     rows = [(0, [1.0] + [0.0] * (similarity.DIM - 1)),
@@ -1672,22 +1556,11 @@ def test_knn_zero_vector_parity(spark, tmp_path):
         (i, [((i * 13 + j * 7) % 19 - 9) / 9.0 for j in range(similarity.DIM)])
         for i in range(2, 12)
     ]
-    spark.createDataFrame(rows, "vec_id: long, embedding: array<float>").coalesce(
-        1
-    ).write.parquet(f"{tmp_path}/embeddings.parquet")
-    con = _duckdb.connect()
-    con.sql(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet/*.parquet'"
+    got = _planted_embeddings_parity(
+        spark, str(tmp_path), rows, similarity.knn_brute_force, similarity.knn_brute_force_sql()
     )
-    assert_matches_oracle(
-        similarity.knn_brute_force(spark, str(tmp_path)),
-        similarity.knn_brute_force_sql(),
-        con,
-    )
-    got = {r["vec_id"]: r["cos_sim"] for r in
-           similarity.knn_brute_force(spark, str(tmp_path)).collect()}
-    assert got[1] == 0.0  # the zero vector scores an exact 0, not NaN
-    con.close()
+    cos = {r["vec_id"]: r["cos_sim"] for r in got}
+    assert cos[1] == 0.0  # the zero vector scores an exact 0, not NaN
 
 
 def test_gif_frame_parse_is_real():
@@ -1978,8 +1851,6 @@ def test_sft_packed_layout_is_sequential_and_consistent(spark):
     is consistent, and each example length equals the rendered
     conversation's actual character count (cross-checked against the
     sft_spans rendering invariant's ground truth)."""
-    import duckdb
-
     from nreadability_spark.operators.textops import SFT_END, SFT_ROLES
     from nreadability_spark.plans.pipeline import sft_packed
 
@@ -2020,14 +1891,6 @@ def _write_src_docs(spark, path, rows):
     ).coalesce(1).write.parquet(f"{path}/documents.parquet")
 
 
-def test_unigram_logprob_matches_oracle(spark, duck):
-    from nreadability_spark.operators import textops
-
-    assert_matches_oracle(
-        textops.unigram_logprob(spark, SF_DIR), textops.unigram_logprob_sql(), duck
-    )
-
-
 def test_unigram_logprob_ranks_oov_docs_lower(spark, tmp_path):
     """A document made of corpus-frequent tokens must out-score a
     document of singletons (all OOV below the top-V cut): the model
@@ -2044,14 +1907,6 @@ def test_unigram_logprob_ranks_oov_docs_lower(spark, tmp_path):
     assert rows[3]["n_oov"] == 40
     assert rows[0]["n_oov"] == 0
     assert rows[0]["avg_logp"] > rows[3]["avg_logp"]
-
-
-def test_source_mixture_matches_oracle(spark, duck):
-    from nreadability_spark.operators import textops
-
-    assert_matches_oracle(
-        textops.source_mixture(spark, SF_DIR), textops.SOURCE_MIXTURE_SQL, duck
-    )
 
 
 def test_source_mixture_weights_invert_share(spark, tmp_path):
@@ -2072,14 +1927,6 @@ def test_source_mixture_weights_invert_share(spark, tmp_path):
     assert abs(out["big"]["sample_weight"] - 0.5 / out["big"]["token_share"]) < 1e-5
 
 
-def test_bigram_logprob_matches_oracle(spark, duck):
-    from nreadability_spark.operators import textops
-
-    assert_matches_oracle(
-        textops.bigram_logprob(spark, SF_DIR), textops.bigram_logprob_sql(), duck
-    )
-
-
 def test_bigram_logprob_planted_exact(spark, tmp_path):
     """Closed-form check of the stupid-backoff arithmetic: one doc
     'x y x y x y' — every bigram is deterministic within its context
@@ -2095,16 +1942,6 @@ def test_bigram_logprob_planted_exact(spark, tmp_path):
 
     want_first = round(math.log10(3 / 6) * textops.LM_MICRO)
     assert r["sum_logp_micro"] == want_first  # pairs contribute 0 each
-
-
-def test_cluster_topics_matches_oracle(spark, duck):
-    from nreadability_spark.plans import pipeline
-
-    assert_matches_oracle(
-        pipeline.cluster_topics(spark, SF_DIR),
-        pipeline.cluster_topics_sql(),
-        duck,
-    )
 
 
 def test_cluster_topics_shape(spark):
@@ -2146,14 +1983,6 @@ def test_dsir_model_is_complete_and_scores_novel_docs(spark):
     assert r["n_ngrams"] == 7
 
 
-def test_dsir_select_matches_oracle(spark, duck):
-    from nreadability_spark.operators import textops
-
-    assert_matches_oracle(
-        textops.dsir_select(spark, SF_DIR), textops.dsir_select_sql(), duck
-    )
-
-
 def test_dsir_select_prefers_target_distribution(spark):
     """Importance weights must actually pull toward the target: the
     target source's own documents (drawn FROM the target distribution)
@@ -2179,14 +2008,6 @@ def test_dsir_select_prefers_target_distribution(spark):
     share_corpus = n_target_total / len(docs)
     share_sel = n_target_sel / len(sel)
     assert share_sel > share_corpus, (share_sel, share_corpus)
-
-
-def test_line_dedup_matches_oracle(spark, duck):
-    from nreadability_spark.operators import textops
-
-    assert_matches_oracle(
-        textops.line_dedup(spark, SF_DIR), textops.line_dedup_sql(), duck
-    )
 
 
 def test_line_dedup_removes_boilerplate_keeps_body(spark, tmp_path):
@@ -2249,16 +2070,6 @@ def test_line_dedup_tag_join_broadcasts(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan
-
-
-def test_approx_distinct_matches_oracle(spark, duck):
-    from nreadability_spark.plans import relational
-
-    assert_matches_oracle(
-        relational.approx_distinct_customers(spark, SF_DIR),
-        relational.APPROX_DISTINCT_CUSTOMERS_SQL,
-        duck,
-    )
 
 
 def test_unigram_logprob_plan_shape(spark):

@@ -140,6 +140,39 @@ def test_udf_dispatch_routes_pdf_and_html():
     assert "PdfGated" in gated["error"]
 
 
+def _flate_pdf(body: bytes) -> str:
+    return (
+        "%PDF-1.4\n4 0 obj <</Length " + str(len(body)) + " /Filter /FlateDecode>>\nstream\n"
+        + body.decode("latin-1") + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n"
+    )
+
+
+def test_flate_bomb_is_an_error_row():
+    """A 255 kB stream of deflated spaces would inflate to 256 MB: the
+    row stops at the inflation budget and carries the error. Streams
+    under the budget extract as before, and a truncated one is skipped
+    as a corrupt one is."""
+    import time
+
+    from nreadability_spark.operators.extract import _extract_one
+
+    bomb = zlib.compressobj(9)
+    body = b"".join(bomb.compress(b" " * (1 << 20)) for _ in range(256)) + bomb.flush()
+    t0 = time.monotonic()
+    row = _extract_one(_flate_pdf(body), None)
+    assert time.monotonic() - t0 < 1.0
+    assert row["extracted"] is False
+    assert row["error"].startswith("PdfOverBudget")
+
+    compressed = build_pdf("t", PARAS, compress_streams=True)
+    assert extract_pdf(compressed) == extract_pdf(build_pdf("t", PARAS))
+    assert _extract_one(compressed, None)["error"] is None
+    stream = zlib.compress(b"BT 72 720 Td (visible text) Tj ET")
+    assert extract_pdf(_flate_pdf(stream)).content_text == "visible text"
+    truncated = _extract_one(_flate_pdf(stream[:-6]), None)
+    assert (truncated["extracted"], truncated["error"]) == (False, None)
+
+
 def test_pdf_paragraphs_split_is_deterministic():
     text = " ".join(f"w{i}" for i in range(50))
     paras = pdf_paragraphs(text, words_per_para=24)

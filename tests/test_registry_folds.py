@@ -18,14 +18,12 @@ import glob
 import hashlib
 import os
 
-import duckdb
 import pytest
 
 from tests.test_operators import SF_DIR
-from tools.check_oracles import _canon
+from tools import check_oracles
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TABLES = ("documents", "embeddings", "events")
 FOLDED_MODULES = ("similarity.py", "textops.py", "multimodal.py")
 WINDOW = 6
 
@@ -87,7 +85,7 @@ def oracle_digest(con, sql: str) -> str:
     rel = con.sql(sql)
     cols = rel.columns
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    rows = sorted(tuple(_canon(r[i]) for i in order) for r in rel.fetchall())
+    rows = sorted(tuple(check_oracles._canon(r[i]) for i in order) for r in rel.fetchall())
     return hashlib.sha256(repr((sorted(cols), rows)).encode()).hexdigest()
 
 
@@ -134,11 +132,8 @@ def _oracles():
 def duck():
     if not os.path.isdir(SF_DIR):
         pytest.skip(f"test data not present: {SF_DIR}")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    yield con
-    con.close()
+    with check_oracles.duck(SF_DIR) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", sorted(DIGESTS))

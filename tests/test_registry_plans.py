@@ -1,4 +1,10 @@
-"""Plan guards over the query registry.
+"""The registry walk, and plan guards over the query registry.
+
+The walk builds every ``__spark_entry__.queries()`` entry once at
+sf0.001 through ``tools/check_oracles.check``, which collects it and
+compares the rows with its ``oracle_sql()`` twin on DuckDB. Three tests
+per query read the walk: oracle equality and the two plan guards below,
+each run on the initial physical plan of the DataFrame the walk built.
 
 No range exchange may sit directly above a Python stage. A global sort
 plans ``Exchange rangepartitioning``, whose RangePartitioner runs a
@@ -21,7 +27,9 @@ from collections import Counter
 
 import pytest
 
+import __spark_entry__
 from tests.test_operators import SF_DIR
+from tools import check_oracles
 
 pytestmark = pytest.mark.spark
 
@@ -102,8 +110,6 @@ needs_sf = pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.0
 def registry(spark):
     """The registry's builders; the Arrow batch size some builders set
     is restored afterwards."""
-    import __spark_entry__
-
     before = spark.conf.get(ARROW_BATCH)
     yield __spark_entry__.queries()
     spark.conf.set(ARROW_BATCH, before)
@@ -115,24 +121,61 @@ def _cached_corpus_queries(registry):
     return {n: registry[n] for n in names}
 
 
-@needs_sf
-def test_no_range_exchange_above_python_stage(spark, registry):
-    offenders = {}
-    for name, build in registry.items():
-        found = python_below_range_exchange(_initial_plan(build(spark, SF_DIR)))
-        if found:
-            offenders[name] = sorted(set(found))
-    assert offenders == {}, f"range exchange directly above a Python stage: {offenders}"
+QUERY_NAMES = list(__spark_entry__.queries())
+
+
+def test_every_query_has_an_oracle(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+    assert __spark_entry__.queries().keys() == __spark_entry__.oracle_sql().keys()
+    assert len(QUERY_NAMES) == 90
+
+
+@pytest.fixture(scope="module")
+def walk(spark):
+    """Each registry query built once and checked against its oracle:
+    name -> what ``check_oracles.check`` returned (status first, the
+    built DataFrame last), or the exception its build or collect raised.
+    The build jobs it records are not asserted: the count moved on
+    unchanged code. The Arrow batch size some builders set is restored
+    afterwards."""
+    before = spark.conf.get(ARROW_BATCH)
+    results = {}
+    with pytest.MonkeyPatch.context() as mp, check_oracles.duck(SF_DIR) as con:
+        # the extract_* golden oracles at the walk's scale factor
+        mp.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+        oracles = __spark_entry__.oracle_sql()
+        for name, build in __spark_entry__.queries().items():
+            try:
+                results[name] = check_oracles.check(build, oracles[name], spark, SF_DIR, con)
+            except Exception as exc:  # noqa: BLE001 — fails this query's items only
+                results[name] = exc
+    spark.conf.set(ARROW_BATCH, before)
+    return results
+
+
+def _walked(walk, name):
+    checked = walk[name]
+    if isinstance(checked, Exception):
+        raise checked
+    return checked
 
 
 @needs_sf
-def test_no_python_function_in_two_nodes(spark, registry):
-    offenders = {}
-    for name, build in registry.items():
-        found = python_functions_in_two_nodes(_initial_plan(build(spark, SF_DIR)))
-        if found:
-            offenders[name] = found
-    assert offenders == {}, f"Python functions evaluated in two nodes: {offenders}"
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_query_matches_oracle(walk, name):
+    assert _walked(walk, name)[0] == []
+
+
+@needs_sf
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_no_range_exchange_above_python_stage(walk, name):
+    assert python_below_range_exchange(_initial_plan(_walked(walk, name)[-1])) == []
+
+
+@needs_sf
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_no_python_function_in_two_nodes(walk, name):
+    assert python_functions_in_two_nodes(_initial_plan(_walked(walk, name)[-1])) == []
 
 
 def test_extract_job_write_runs_each_python_function_once(spark, tmp_path, monkeypatch):

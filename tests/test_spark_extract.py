@@ -152,8 +152,10 @@ def test_rerun_over_committed_output_is_noop(spark, tmp_path):
 
 
 def test_extract_job_leaves_the_session_settings(spark, tmp_path):
-    """The job reads the caller's Arrow batch cap and does not rewrite it."""
+    """The job reads the caller's Arrow batch cap and does not rewrite
+    it, and its dynamic partition overwrite is not left on the session."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    overwrite = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key)
     spark.conf.set(key, "300")
     try:
@@ -161,6 +163,7 @@ def test_extract_job_leaves_the_session_settings(spark, tmp_path):
             spark, transcripts_df(spark, 2), str(tmp_path / "out"), n_buckets=2, include_html=False
         )
         assert spark.conf.get(key) == "300"
+        assert spark.conf.get(overwrite) == "STATIC"  # Spark's default
     finally:
         spark.conf.set(key, before)
 

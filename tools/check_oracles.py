@@ -8,6 +8,10 @@ DuckDB seconds and the number of Spark jobs its build alone launched
 ``sf_dir``, the passed count, the failed names, and the Spark seconds
 and build jobs per query.
 
+``duck(sf_dir)`` is the DuckDB connection the oracles run on (one view
+per table), and ``check`` the one build + compare of a query; the
+Tier-1 registry walk (``tests/test_registry_plans.py``) runs both.
+
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
 
@@ -26,6 +30,14 @@ REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+
+def duck(sf_dir):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def _canon(v):
@@ -84,21 +96,21 @@ def build_jobs(spark, fn, sf_dir):
 
 
 def check(fn, sql, spark, sf_dir, con):
-    """Run one query on Spark (build + collect, or count when it has no
-    oracle) and its oracle on DuckDB; returns (status, spark_s, duck_s,
-    build_jobs, note)."""
+    """Build one query through ``build_jobs``, run it on Spark (collect,
+    or count when it has no oracle) and its oracle on DuckDB; returns
+    (status, spark_s, duck_s, build_jobs, note, the built DataFrame)."""
     t0 = time.monotonic()
     sdf, jobs = build_jobs(spark, fn, sf_dir)
     if sql is None:
         n = sdf.count()
-        return [], time.monotonic() - t0, 0.0, jobs, f"(rows-only: {n} rows)"
+        return [], time.monotonic() - t0, 0.0, jobs, f"(rows-only: {n} rows)", sdf
     spark_rows = sdf.collect()
     spark_s = time.monotonic() - t0
     t0 = time.monotonic()
-    duck = con.sql(sql)
-    duck_cols, duck_rows = duck.columns, duck.fetchall()
+    oracle = con.sql(sql)
+    duck_cols, duck_rows = oracle.columns, oracle.fetchall()
     duck_s = time.monotonic() - t0
-    return compare(sdf.columns, spark_rows, duck_cols, duck_rows), spark_s, duck_s, jobs, ""
+    return compare(sdf.columns, spark_rows, duck_cols, duck_rows), spark_s, duck_s, jobs, "", sdf
 
 
 def main():
@@ -115,9 +127,7 @@ def main():
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck(sf_dir)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed, spark_s, jobs_per_query = [], {}, {}
@@ -125,7 +135,7 @@ def main():
         if only and name not in only:
             continue
         try:
-            status, s_s, d_s, jobs, note = check(fn, oracles.get(name), spark, sf_dir, con)
+            status, s_s, d_s, jobs, note, _ = check(fn, oracles.get(name), spark, sf_dir, con)
         except Exception as exc:  # noqa: BLE001
             status, s_s, d_s, jobs, note = (
                 [f"EXCEPTION {type(exc).__name__}: {exc}"], 0.0, 0.0, None, "")
