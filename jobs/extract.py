@@ -23,11 +23,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
+    from nreadability_spark.sources.lineage import N_BUCKETS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--source", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--buckets", type=int, default=32)
+    ap.add_argument("--buckets", type=int, default=N_BUCKETS)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--no-html", action="store_true")
     args = ap.parse_args()

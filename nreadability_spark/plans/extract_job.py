@@ -59,19 +59,36 @@ OUTPUT_COLUMNS = [
 ]
 
 
+# ties on turn_idx break on every other output column, so the copy kept
+# of a repeated (conv_id, turn_idx) does not depend on the shuffle
+_TIE_BREAK = [c for c in OUTPUT_COLUMNS if c not in ("conv_id", "turn_idx", "conv_offset")]
+
+
 def with_conv_offsets(df, partition_cols=("conv_id",)):
-    """Cumulative char offset of each turn within its conversation: a
-    window over ``partition_cols``, which must hold ``conv_id``. A column
-    that is a function of ``conv_id`` may lead them, as the write's
-    ``bucket`` does, so the window reuses an exchange on that column."""
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return df.withColumn(
-        "conv_offset",
-        F.coalesce(F.sum(F.length("content_text")).over(w), F.lit(0)).cast("long"),
+    """One row per ``(conv_id, turn_idx)`` with its cumulative char
+    offset within the conversation: a window over ``partition_cols``,
+    which must hold ``conv_id``. A column that is a function of
+    ``conv_id`` may lead them, as the write's ``bucket`` does, so the
+    window reuses an exchange on that column.
+
+    A repeated turn keeps the first of its copies in ``(turn_idx,
+    *_TIE_BREAK)`` order; the others are dropped before the running sum,
+    so a redelivered turn is written once and counted once. Both windows
+    share one partitioning and order, hence one sort."""
+    w = Window.partitionBy(*partition_cols).orderBy("turn_idx", *_TIE_BREAK)
+    return (
+        df.withColumn("_repeat", F.lag("turn_idx").over(w).eqNullSafe(F.col("turn_idx")))
+        .where(~F.col("_repeat"))
+        .drop("_repeat")
+        .withColumn(
+            "conv_offset",
+            F.coalesce(
+                F.sum(F.length("content_text")).over(
+                    w.rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            ).cast("long"),
+        )
     )
 
 
@@ -132,7 +149,7 @@ def run_extract_job(
     source_df,
     out_path,
     run_id=None,
-    n_buckets=32,
+    n_buckets=lineage.N_BUCKETS,
     options=None,
     include_html=True,
     resume=True,

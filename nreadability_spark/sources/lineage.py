@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 
 BUCKET_COL = "bucket"
 LINEAGE_DIR = "_lineage"
+# the default bucket count of the batch job, its CLI and the stream sink
+N_BUCKETS = 32
 
 
 def with_bucket(df, n_buckets, conv_col="conv_id"):

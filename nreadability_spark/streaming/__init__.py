@@ -5,5 +5,4 @@ from nreadability_spark.streaming.extract_stream import (  # noqa: F401
     run_stream_to_parquet,
     windowed_turn_metrics,
 )
-from nreadability_spark.streaming.stateful import stream_conv_offsets  # noqa: F401
 from nreadability_spark.streaming.dedup_stream import dedup_stream  # noqa: F401

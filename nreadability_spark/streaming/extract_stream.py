@@ -1,44 +1,82 @@
-"""Streaming extraction (SURVEY.md §7.7 made concrete).
+"""Streaming extraction: the batch job's table from a transcripts stream.
 
-The extraction UDF is stateless per row, so the same operator drops
-into Structured Streaming unchanged:
-
-    spark.readStream... -> extract_columns(...) -> writeStream
+    spark.readStream... -> extract_stream(...) -> run_stream_to_parquet(...)
 
 Pieces:
-- ``extract_stream``: transcripts stream -> extracted stream. It is the
-  batch front, ``extract_transcripts``, which skips the salt on a
-  streaming input, without the conversation-offset window (cumulative
-  offsets over an unbounded stream require keyed state; see note below).
-- ``windowed_turn_metrics``: event-time windowed aggregation with a
-  watermark — the late-data-tolerant operational metrics stream
-  (turns/minute, extraction rate, error rate).
+- ``extract_stream``: the stream twin of ``extract_transcripts``, one
+  query. The stateless front (``extract_transcripts`` without the
+  conversation window; a streaming input skips the salt) runs the
+  extraction UDF once per turn, then one ``applyInPandasWithState``
+  keyed by ``conv_id`` (``stateful.offsets_step``) carries each row
+  through and appends its ``conv_offset``. The result has
+  ``OUTPUT_COLUMNS``, the batch table's columns.
 - ``run_stream_to_parquet``: ``foreachBatch`` sink writing each
   micro-batch through the batch job's bucketed, manifested write;
   ``foreachBatch`` + deterministic extraction + per-bucket dynamic
   overwrite keeps restarts idempotent (the Iceberg MERGE analogue).
-
-Conversation-cumulative offsets over a stream are keyed state:
-``streaming.stateful.stream_conv_offsets`` computes them with
-``applyInPandasWithState`` keyed by conv_id, over this module's
-``extract_stream`` (its ``max_disorder`` admits turns that arrive out
-of order). The batch job remains the system of record for them
-(BASELINE.json's north rule is a batch table at rest).
+- ``windowed_turn_metrics``: event-time windowed aggregation with a
+  watermark — the late-data-tolerant operational metrics stream
+  (turns/minute, extraction rate, error rate). It reads the stateless
+  front: a watermark above the stateful operator is a different query.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from nreadability_spark.plans.extract_job import extract_transcripts
+from nreadability_spark.plans.extract_job import OUTPUT_COLUMNS, extract_transcripts
+from nreadability_spark.sources import lineage
+from nreadability_spark.streaming.stateful import (
+    OFFSET_STATE_SCHEMA,
+    apply_with_state,
+    offsets_step,
+)
 
 
-def extract_stream(stream_df: DataFrame, options=None, include_html=True) -> DataFrame:
-    """Streaming transcripts -> streaming extraction results (lazy)."""
-    return extract_transcripts(
+def extract_stream(
+    stream_df: DataFrame, options=None, include_html=True, max_disorder=0, idle_timeout_ms=None
+) -> DataFrame:
+    """Streaming transcripts -> the batch job's ``OUTPUT_COLUMNS``
+    (lazy), with ``conv_offset`` carried across micro-batches as keyed
+    state (``stateful`` module docstring).
+
+    ``max_disorder``: how far out of ``turn_idx`` order a conversation's
+    turns may arrive across micro-batches. The result equals the batch
+    table whenever the source's true disorder is within it and every
+    repeated turn is a copy of its first arrival. A turn waits for a
+    later *seen* turn, not for its exact successor: the prefilter removes
+    empty and NULL turns, so ``turn_idx`` gaps are systematic, and a gap
+    contributes nothing to offsets anyway. Up to ``max_disorder`` turns
+    per conversation wait in state; at 0 none do.
+
+    ``idle_timeout_ms``: optional state TTL. When set, a conversation
+    idle that long emits its pending turns and has its state evicted
+    (bounding the state store); if it later resumes, offsets restart
+    from 0. The TTL is a processing-time timeout, for which Spark runs a
+    no-data micro-batch on every trigger to look for expired groups, so
+    an ``availableNow`` query never finishes unless
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` is false when it
+    starts (timeouts then fire only on batches that carry data)."""
+    front = extract_transcripts(
         stream_df, options=options, include_html=include_html, with_conv_offset=False
     )
+    return apply_with_state(
+        front.groupBy("conv_id"),
+        partial(
+            offsets_step,
+            # naive timestamps, as Spark hands them to pandas
+            row_schema=to_arrow_schema(front.schema, timestamp_utc=False),
+            max_disorder=max_disorder,
+        ),
+        T.StructType([*front.schema.fields, T.StructField("conv_offset", T.LongType())]),
+        OFFSET_STATE_SCHEMA,
+        idle_timeout_ms,
+    ).select(*OUTPUT_COLUMNS)
 
 
 def windowed_turn_metrics(
@@ -48,7 +86,9 @@ def windowed_turn_metrics(
     options=None,
 ) -> DataFrame:
     """Event-time windowed extraction metrics with late-data handling."""
-    extracted = extract_stream(stream_df, options=options, include_html=False)
+    extracted = extract_transcripts(
+        stream_df, options=options, include_html=False, with_conv_offset=False
+    )
     return (
         extracted.withWatermark("ts", watermark_delay)
         .groupBy(F.window("ts", window_duration).alias("win"))
@@ -70,17 +110,15 @@ def windowed_turn_metrics(
 
 
 def run_stream_to_parquet(
-    stream_df: DataFrame,
+    extracted: DataFrame,
     out_path: str,
     checkpoint_path: str,
     run_id: str = "stream",
-    n_buckets: int = 8,
-    options=None,
-    include_html=True,
-    trigger_available_now: bool = True,
+    n_buckets: int = lineage.N_BUCKETS,
 ):
-    """Start the streaming extraction into bucketed parquet via
-    foreachBatch; returns the StreamingQuery.
+    """Start writing ``extracted``, an ``extract_stream`` result, into
+    bucketed parquet via foreachBatch with an ``availableNow`` trigger;
+    returns the StreamingQuery.
 
     Micro-batch ``id`` goes to ``out_path/batch=<id>/`` through the batch
     job's ``lineage.write_partitioned``: one file per bucket, ordered by
@@ -91,17 +129,14 @@ def run_stream_to_parquet(
     earlier batches sharing a bucket — the sandbox analogue of
     foreachBatch + Iceberg MERGE.
     """
-    from nreadability_spark.sources import lineage
-
-    extracted = extract_stream(stream_df, options=options, include_html=include_html)
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         bucketed = lineage.with_bucket(batch_df, n_buckets).repartition(lineage.BUCKET_COL)
         lineage.write_partitioned(bucketed, f"{out_path}/batch={batch_id}", run_id, n_buckets)
 
-    writer = extracted.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        extracted.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -12,8 +12,9 @@ keyed by the conversation key (``user_id``):
   that ``stateful.apply_with_state`` concatenates); EVERY turn
   advances the state, assistant turns also emit their
   [span_start, span_end);
-- the monotone-arrival contract of ``stateful.stream_conv_offsets`` at
-  its default ``max_disorder=0``, and its idle-TTL semantics.
+- the monotone-arrival contract of ``extract_stream``'s conversation
+  offsets at its default ``max_disorder=0``, and their idle-TTL
+  semantics.
 
 ``conv_len`` is deliberately NOT emitted: on an unbounded stream the
 example's total length is unknowable until the conversation closes —
@@ -93,7 +94,7 @@ def stream_sft_spans(stream_df: DataFrame, idle_timeout_ms=None) -> DataFrame:
     ``idle_timeout_ms``: optional state TTL — an idle conversation's
     offset state is evicted after that period (bounding the store); a
     conversation resuming after eviction restarts at offset 0, the
-    same documented trade-off as ``stream_conv_offsets``."""
+    same documented trade-off as ``extract_stream``'s offsets."""
     return apply_with_state(
         stream_df.select("user_id", "event_id", "ts", "event_type", "props").groupBy("user_id"),
         sft_step,

@@ -151,6 +151,43 @@ def test_rerun_over_committed_output_is_noop(spark, tmp_path):
     assert before == after
 
 
+def test_extract_job_keeps_one_row_per_turn(spark, tmp_path):
+    """Two differing copies of one ``(conv_id, turn_idx)``: the job
+    writes one of them, the first in the window's tie order (here the
+    lesser ``role``), whatever the shuffle, and later offsets count it
+    once."""
+    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
+
+    def page(words):
+        return f"<html><body><p>{words}, with commas, for scoring.</p></body></html>"
+
+    source = spark.createDataFrame(
+        [
+            ("c", 0, "user", page("first turn"), None, None),
+            ("c", 1, "user", page("one copy of the second turn"), None, None),
+            ("c", 2, "user", page("third turn"), None, None),
+            ("c", 1, "assistant", page("another copy"), None, None),
+        ],
+        TRANSCRIPTS_SCHEMA,
+    ).repartition(4)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    tables = []
+    try:
+        for n in ("3", "11"):
+            spark.conf.set(key, n)
+            out = str(tmp_path / f"out{n}")
+            run_extract_job(spark, source, out, n_buckets=2, include_html=False)
+            tables.append(spark.read.parquet(out).orderBy("turn_idx").collect())
+    finally:
+        spark.conf.set(key, before)
+    assert tables[0] == tables[1]
+    rows = tables[0]
+    assert [r["turn_idx"] for r in rows] == [0, 1, 2]
+    assert rows[1]["role"] == "assistant" and "another copy" in rows[1]["content_text"]
+    assert rows[2]["conv_offset"] == len(rows[0]["content_text"]) + len(rows[1]["content_text"])
+
+
 def test_extract_job_leaves_the_session_settings(spark, tmp_path):
     """The job reads the caller's Arrow batch cap and does not rewrite
     it, and its dynamic partition overwrite is not left on the session."""
@@ -274,7 +311,8 @@ def test_extract_job_write_runs_one_exchange_after_the_udf(spark, tmp_path):
         .save(),
     )
     names = [name for name, _ in _plan_nodes(plans[-1])]
-    assert names.count("Exchange") == 2 and names.count("Window") == 1
+    # one window marks repeated turns, the other sums over the rest
+    assert names.count("Exchange") == 2 and names.count("Window") == 2
 
 
 def _bucket_read_back(spark, out):

@@ -1,7 +1,14 @@
 """Structured Streaming tests: the batch extraction operator must work
 unchanged over a stream, streaming results must equal the batch results
 on the same rows, and the windowed metrics must respect event time.
+
+Every query runs with an ``availableNow`` trigger through ``_await``:
+one that has not finished within ``STREAM_TIMEOUT_S`` fails the test,
+and the query is stopped either way, so a hung stream neither reads a
+partial table nor runs on into later tests.
 """
+
+from functools import partial
 
 import pytest
 from hypothesis import given, settings
@@ -10,6 +17,69 @@ from hypothesis import strategies as st
 pytestmark = pytest.mark.spark
 
 NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+STREAM_TIMEOUT_S = 240
+SENTINEL_TURN = 10_000
+
+
+def _await(query, timeout_s=STREAM_TIMEOUT_S):
+    """Wait for ``query`` to finish; fail if it is still running after
+    ``timeout_s`` seconds, and stop it either way."""
+    try:
+        assert query.awaitTermination(timeout_s), f"{query.name or query.id} still running"
+    finally:
+        query.stop()
+
+
+def _drain(df, name, timeout_s=STREAM_TIMEOUT_S):
+    """The rows an ``availableNow`` run of streaming ``df`` appends to
+    the memory table ``name``."""
+    _await(
+        df.writeStream.format("memory").queryName(name).trigger(availableNow=True).start(),
+        timeout_s,
+    )
+    return df.sparkSession.sql(f"select * from {name}").collect()
+
+
+def _file_stream(spark, src):
+    """``src``'s parquet files as a stream, one file per micro-batch."""
+    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
+
+    return spark.readStream.schema(TRANSCRIPTS_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
+
+
+def _keyed(rows, *cols):
+    """``(conv_id, turn_idx)`` -> the row's ``cols`` (all of them when
+    none are named); the keys must be unique."""
+    out = {(r["conv_id"], r["turn_idx"]): tuple(r[c] for c in cols) if cols else r for r in rows}
+    assert len(out) == len(rows)
+    return out
+
+
+def _stream_and_batch_tables(spark, out, src, tmp_path):
+    """The table a stream wrote to ``out`` and the one ``run_extract_job``
+    writes from ``src`` without its sentinel turns, both read back and
+    keyed by ``(conv_id, turn_idx)``."""
+    from nreadability_spark.plans.extract_job import OUTPUT_COLUMNS, run_extract_job
+
+    batch_out = str(tmp_path / "batch_out")
+    run_extract_job(spark, spark.read.parquet(src), batch_out, n_buckets=4, include_html=True)
+    got, want = (
+        _keyed(spark.read.parquet(path).select(*OUTPUT_COLUMNS).collect())
+        for path in (out, batch_out)
+    )
+    return got, {k: r for k, r in want.items() if k[1] != SENTINEL_TURN}
+
+
+def _plan_node_names(plan):
+    """The names of all nodes of a physical plan."""
+    from tests.test_registry_plans import _children
+
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        stack.extend(_children(node))
+    return names
 
 
 @pytest.fixture()
@@ -25,65 +95,112 @@ def transcript_files(spark, tmp_path):
     return src, df
 
 
-def test_stream_extraction_equals_batch(spark, tmp_path, transcript_files):
-    from nreadability_spark.plans.extract_job import extract_transcripts
-    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
-    from nreadability_spark.streaming import run_stream_to_parquet
+def _sentinels(df):
+    """One high turn per conversation of ``df``: it advances the
+    disorder bound past every turn before it."""
+    from pyspark.sql import functions as F
 
-    src, batch_df = transcript_files
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    return df.select("conv_id").distinct().select(
+        "conv_id",
+        F.lit(SENTINEL_TURN).alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.lit("<p>conversation end marker</p>").alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"),
     )
-    query = run_stream_to_parquet(stream, out, ckpt, include_html=False, n_buckets=4)
-    query.awaitTermination(300)
 
-    got = {
-        (r["conv_id"], r["turn_idx"]): (r["extracted"], r["content_text"])
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        (r["conv_id"], r["turn_idx"]): (r["extracted"], r["content_text"])
-        for r in extract_transcripts(
-            spark.read.parquet(src), include_html=False, with_conv_offset=False
-        ).collect()
-    }
-    assert got == want
-    assert len(got) > 0
+
+def test_stream_extraction_equals_batch(spark, tmp_path):
+    """The stream writes the batch job's table. One source, NULL and
+    empty turns, the 600-turn conversation and identical redeliveries
+    included, arrives in four micro-batches with turns out of order by
+    less than ``max_disorder``; a fifth of sentinel turns releases the
+    turns still pending. Both tables, read back, are equal row for
+    row on all of ``OUTPUT_COLUMNS`` apart from the sentinels, which the
+    stream holds. The micro-batch plan evaluates the extraction UDF in
+    one node."""
+    from nreadability_spark.sources.synth import transcripts_df
+    from nreadability_spark.streaming import extract_stream, run_stream_to_parquet
+    from tests.test_registry_plans import python_functions_in_two_nodes
+
+    src = str(tmp_path / "src")
+    df = transcripts_df(spark, 14)
+    # arrival: turns 2, 3 and 8 come one file late, and turns 1, 6, 11,
+    # 16, ... come again in a fourth file, after or while their first
+    # copy waits in state
+    for part in (
+        df.where("turn_idx < 6 AND turn_idx NOT IN (2, 3)"),
+        df.where("turn_idx IN (2, 3) OR (turn_idx BETWEEN 6 AND 11 AND turn_idx != 8)"),
+        df.where("turn_idx = 8 OR turn_idx >= 12"),
+        df.where("turn_idx % 5 = 1"),
+        _sentinels(df),
+    ):
+        part.coalesce(1).write.mode("append").parquet(src)
+
+    out = str(tmp_path / "stream_out")
+    query = run_stream_to_parquet(
+        extract_stream(_file_stream(spark, src), max_disorder=4),
+        out,
+        str(tmp_path / "ckpt"),
+        n_buckets=4,
+    )
+    _await(query)
+    plan = query._jsq.streamingQuery().lastExecution().executedPlan()
+    assert python_functions_in_two_nodes(plan) == []
+    assert _plan_node_names(plan).count("ArrowEvalPython") == 1
+
+    got, want = _stream_and_batch_tables(spark, out, src, tmp_path)
+    assert got == want and len(got) > 500
 
 
 def test_stream_restart_is_idempotent(spark, tmp_path, transcript_files):
-    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
-    from nreadability_spark.streaming import run_stream_to_parquet
+    from nreadability_spark.streaming import extract_stream, run_stream_to_parquet
 
     src, _ = transcript_files
     out = str(tmp_path / "out2")
     ckpt = str(tmp_path / "ckpt2")
 
     def run_once():
-        stream = (
-            spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        extracted = extract_stream(_file_stream(spark, src), include_html=False)
+        _await(run_stream_to_parquet(extracted, out, ckpt, n_buckets=4))
+        return sorted(
+            (r["conv_id"], r["turn_idx"], r["content_text"], r["conv_offset"])
+            for r in spark.read.parquet(out).collect()
         )
-        q = run_stream_to_parquet(stream, out, ckpt, include_html=False, n_buckets=4)
-        q.awaitTermination(300)
 
-    run_once()
-    first = sorted(
-        (r["conv_id"], r["turn_idx"], r["content_text"])
-        for r in spark.read.parquet(out).collect()
-    )
-    run_once()  # availableNow restart over the same checkpoint: no-op
-    second = sorted(
-        (r["conv_id"], r["turn_idx"], r["content_text"])
-        for r in spark.read.parquet(out).collect()
-    )
-    assert first == second
+    first = run_once()
+    # availableNow restart over the same checkpoint: no-op
+    assert run_once() == first
+
+
+def test_stream_restart_emits_the_turns_pending_in_state(spark, tmp_path):
+    """A ``max_disorder > 0`` stream ends its first run with turns
+    pending in state. A file that arrives later releases them: the
+    restarted query reads them back from the checkpoint and writes them
+    equal to the batch table's rows, ``content_html``, ``spans`` and
+    ``ts`` included."""
+    from nreadability_spark.sources.synth import transcripts_df
+    from nreadability_spark.streaming import extract_stream, run_stream_to_parquet
+
+    src = str(tmp_path / "src")
+    df = transcripts_df(spark, 6, long_every=0)
+    df.where("turn_idx >= 2").coalesce(1).write.parquet(src)
+    df.where("turn_idx < 2").coalesce(1).write.mode("append").parquet(src)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run():
+        extracted = extract_stream(_file_stream(spark, src), max_disorder=16)
+        _await(run_stream_to_parquet(extracted, out, ckpt, n_buckets=4))
+
+    run()
+    # every turn waits: no conversation has a turn 16 past another
+    assert not any(p.suffix == ".parquet" for p in (tmp_path / "out").rglob("*"))
+    _sentinels(df).coalesce(1).write.mode("append").parquet(src)
+    run()
+
+    got, want = _stream_and_batch_tables(spark, out, src, tmp_path)
+    assert got == want
+    assert any(r["spans"] for r in want.values()) and all(r["ts"] for r in want.values())
 
 
 def test_stream_bucket_files_are_ordered_and_manifested(spark, tmp_path):
@@ -95,16 +212,20 @@ def test_stream_bucket_files_are_ordered_and_manifested(spark, tmp_path):
 
     from nreadability_spark.sources import lineage
     from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA, transcripts_df
-    from nreadability_spark.streaming import run_stream_to_parquet
+    from nreadability_spark.streaming import extract_stream, run_stream_to_parquet
 
     src = str(tmp_path / "src3")
     transcripts_df(spark, 60, long_every=37).write.parquet(src)
     out = tmp_path / "out3"
     stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(src)
-    q = run_stream_to_parquet(
-        stream, str(out), str(tmp_path / "ckpt3"), include_html=False, n_buckets=4
+    _await(
+        run_stream_to_parquet(
+            extract_stream(stream, include_html=False),
+            str(out),
+            str(tmp_path / "ckpt3"),
+            n_buckets=4,
+        )
     )
-    q.awaitTermination(300)
 
     files = sorted(out.glob("batch=*/bucket=*/*.parquet"))
     assert files
@@ -127,17 +248,7 @@ def test_windowed_metrics_by_event_time(spark, tmp_path, transcript_files):
 
     src, batch_df = transcript_files
     stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(src)
-    metrics = windowed_turn_metrics(stream, window_duration="1 minute")
-
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName("turn_metrics")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("select * from turn_metrics").collect()
+    rows = _drain(windowed_turn_metrics(stream, window_duration="1 minute"), "turn_metrics")
     # watermark closes all but the trailing window(s); every emitted
     # window must be consistent and non-overlapping
     assert rows, "expected at least one closed window"
@@ -148,13 +259,20 @@ def test_windowed_metrics_by_event_time(spark, tmp_path, transcript_files):
     assert len(starts) == len(set(starts))
 
 
+def _batch_offsets(spark, src):
+    from nreadability_spark.plans.extract_job import extract_transcripts
+
+    return _keyed(
+        extract_transcripts(spark.read.parquet(src), include_html=False).collect(), "conv_offset"
+    )
+
+
 def test_stateful_conv_offsets_across_batches(spark, tmp_path):
     """conv_offset computed with applyInPandasWithState over a stream
     (conversations split across micro-batches) must equal the batch
     window's conv_offset."""
-    from nreadability_spark.plans.extract_job import extract_transcripts
-    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA, transcripts_df
-    from nreadability_spark.streaming.stateful import stream_conv_offsets
+    from nreadability_spark.sources.synth import transcripts_df
+    from nreadability_spark.streaming import extract_stream
 
     src = str(tmp_path / "split_src")
     df = transcripts_df(spark, 10)
@@ -163,32 +281,9 @@ def test_stateful_conv_offsets_across_batches(spark, tmp_path):
     df.where("turn_idx < 3").coalesce(1).write.parquet(src)
     df.where("turn_idx >= 3").coalesce(1).write.mode("append").parquet(src)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream_conv_offsets(stream)
-        .writeStream.format("memory")
-        .queryName("conv_offsets")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["conv_offset"]
-        for r in spark.sql("select * from conv_offsets").collect()
-    }
-    want = {
-        (r["conv_id"], r["turn_idx"]): r["conv_offset"]
-        for r in extract_transcripts(spark.read.parquet(src), include_html=False).collect()
-    }
-    assert got == want and len(got) > 0
-
-
+    rows = _drain(extract_stream(_file_stream(spark, src), include_html=False), "conv_offsets")
+    got = _keyed(rows, "conv_offset")
+    assert got == _batch_offsets(spark, src) and len(got) > 0
 class _FakeState:
     """Minimal stand-in for GroupState (unit tests, no Spark)."""
 
@@ -230,6 +325,23 @@ def _shell(step, idle_timeout_ms=None):
     return apply_with_state(_FakeGrouped(), step, None, None, idle_timeout_ms)
 
 
+def _step(max_disorder):
+    """The offset step over ``_turns`` frames."""
+    import pyarrow as pa
+
+    from nreadability_spark.streaming.stateful import offsets_step
+
+    schema = pa.schema(
+        [
+            ("conv_id", pa.string()),
+            ("turn_idx", pa.int32()),
+            ("content_text", pa.string()),
+            ("extracted", pa.bool_()),
+        ]
+    )
+    return partial(offsets_step, row_schema=schema, max_disorder=max_disorder)
+
+
 def _turns(rows):
     """(turn_idx, content_text) rows of conversation "c" as the offset
     step reads them."""
@@ -250,15 +362,11 @@ def test_apply_with_state_protocol():
     concatenated whatever their order, the state is updated and the TTL
     armed; on a timeout the step's rows (here the pending turns, flushed
     in turn order) are emitted and the state is removed."""
-    from functools import partial
-
-    from nreadability_spark.streaming.stateful import offsets_step
-
-    fn = _shell(partial(offsets_step, max_disorder=64), 60_000)
+    fn = _shell(_step(64), 60_000)
     state = _FakeState()
-    (out,) = list(fn(("c",), iter([_turns([(5, "ff")]), _turns([(3, "ddd")])]), state))
-    assert out.empty and state.timeout_ms == 60_000
-    assert state.get == (0, -1, [3, 5], [3, 2], [True, True])
+    assert list(fn(("c",), iter([_turns([(5, "ff")]), _turns([(3, "ddd")])]), state)) == []
+    assert state.timeout_ms == 60_000
+    assert state.get[:2] == (0, -1) and state.get[2]
     state.hasTimedOut = True
     # Spark hands a timed-out group one empty frame
     (flushed,) = list(fn(("c",), iter([_turns([])]), state))
@@ -273,20 +381,18 @@ def test_offsets_fn_sorts_across_arrow_chunks():
     not per-chunk order (round-2 ADVICE, medium)."""
     import pandas as pd
 
-    from nreadability_spark.streaming.stateful import offsets_step
-
     def chunk(idxs):
         return _turns([(i, "x" * (i + 1)) for i in idxs])
 
     # chunks deliberately out of order: [4,5] before [0..3], plus interleave
     pdf = pd.concat([chunk([4, 5]), chunk([1, 3]), chunk([0, 2])], ignore_index=True)
-    out, state = offsets_step(("c0",), pdf, None)
+    out, state = _step(0)(("c0",), pdf, None)
     out = out.sort_values("turn_idx", ignore_index=True)
     # expected cumulative offsets over lengths 1..6 in turn order
     lens = [i + 1 for i in range(6)]
     want = [sum(lens[:i]) for i in range(6)]
     assert list(out["conv_offset"]) == want
-    assert state == (sum(lens), 5, [], [], [])
+    assert state == (sum(lens), 5, None)
 
 
 def test_stateful_offsets_large_group_multi_chunk(spark, tmp_path):
@@ -294,9 +400,8 @@ def test_stateful_offsets_large_group_multi_chunk(spark, tmp_path):
     (256 in tests) in a single micro-batch: the group reaches the state
     function as multiple chunks and must still produce globally ordered
     offsets equal to the batch window's."""
-    from nreadability_spark.plans.extract_job import extract_transcripts
     from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
-    from nreadability_spark.streaming.stateful import stream_conv_offsets
+    from nreadability_spark.streaming import extract_stream
 
     src = str(tmp_path / "big_conv_src")
     n = 600
@@ -311,44 +416,25 @@ def test_stateful_offsets_large_group_multi_chunk(spark, tmp_path):
     stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(src)
     # the idle TTL is a processing-time state timeout, which requests a
     # no-data micro-batch on every trigger: availableNow would never run
-    # out of batches (see stream_conv_offsets)
+    # out of batches (see extract_stream)
     spark.conf.set(NO_DATA_BATCHES, "false")
-    q = None
     try:
-        q = (
-            stream_conv_offsets(stream, idle_timeout_ms=120_000)
-            .writeStream.format("memory")
-            .queryName("big_conv_offsets")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        rows = _drain(
+            extract_stream(stream, include_html=False, idle_timeout_ms=120_000),
+            "big_conv_offsets",
         )
-        assert q.awaitTermination(60), "availableNow query did not terminate"
-        got = {
-            r["turn_idx"]: r["conv_offset"]
-            for r in spark.sql("select * from big_conv_offsets").collect()
-        }
     finally:
-        if q is not None:
-            q.stop()
         spark.conf.unset(NO_DATA_BATCHES)
-    want = {
-        r["turn_idx"]: r["conv_offset"]
-        for r in extract_transcripts(spark.read.parquet(src), include_html=False).collect()
-    }
+    got = _keyed(rows, "conv_offset")
     assert len(got) == n
-    assert got == want
+    assert got == _batch_offsets(spark, src)
 
 
 def test_ordered_fn_buffers_out_of_order_and_dedupes():
     """Unit: bounded-disorder reordering — rows buffer until the
     watermark (max_seen - D) passes them, emit in turn order with true
     cumulative offsets; duplicates and beyond-bound late rows drop."""
-    from functools import partial
-
-    from nreadability_spark.streaming.stateful import offsets_step
-
-    step = partial(offsets_step, max_disorder=2)  # D=2
+    step = _step(2)  # D=2
     # batch 1: turns 2 and 4 -> watermark 4-2=2 -> only turn 2 emits
     out1, state = step(("c",), _turns([(2, "cc"), (4, "eeee")]), None)
     assert list(out1["turn_idx"]) == [2]
@@ -361,23 +447,19 @@ def test_ordered_fn_buffers_out_of_order_and_dedupes():
     out3, state = step(("c",), _turns([(6, "gg")]), state)
     assert list(out3["turn_idx"]) == [3, 4]
     assert list(out3["conv_offset"]) == [2, 5]
-    assert list(out3["content_len"]) == [3, 4]  # original "eeee" kept
+    assert list(out3["content_text"]) == ["ddd", "eeee"]  # first copy kept
 
 
 def test_ordered_fn_timeout_flushes_pending_in_order():
     """Unit: a timeout (``pdf`` None) emits the pending turns in turn
     order; with nothing pending it emits nothing."""
-    from functools import partial
-
-    from nreadability_spark.streaming.stateful import offsets_step
-
-    step = partial(offsets_step, max_disorder=64)
+    step = _step(64)
     out, state = step(("c",), _turns([(5, "fffff"), (3, "ddd")]), None)
     assert out.empty
     flushed, _ = step(("c",), None, state)
     assert list(flushed["turn_idx"]) == [3, 5]
     assert list(flushed["conv_offset"]) == [0, 3]
-    assert step(("c",), None, (42, 7, [], [], []))[0].empty
+    assert step(("c",), None, (42, 7, None))[0].empty
 
 
 @settings(max_examples=300, deadline=None)
@@ -387,12 +469,9 @@ def test_offsets_step_equals_sorted_cumsum_over_first_seen(data):
     NULL texts included, arrive in random micro-batches out of order by
     less than ``max_disorder`` (in order at 0); what the shell emits,
     a final timeout flush included, is the turns' running character sum
-    in turn order over each turn's first-seen row."""
-    from functools import partial
-
+    in turn order over each turn's first-seen row, which passes through
+    whole."""
     import pandas as pd
-
-    from nreadability_spark.streaming.stateful import offsets_step
 
     d = data.draw(st.integers(0, 8), label="max_disorder")
     text = st.one_of(st.none(), st.text(max_size=6))
@@ -419,7 +498,7 @@ def test_offsets_step_equals_sorted_cumsum_over_first_seen(data):
             }
         )
 
-    fn = _shell(partial(offsets_step, max_disorder=d), 1_000)
+    fn = _shell(_step(d), 1_000)
     state = _FakeState()
     outs = []
     for lo, hi in zip(bounds, bounds[1:]):
@@ -427,19 +506,19 @@ def test_offsets_step_equals_sorted_cumsum_over_first_seen(data):
     state.hasTimedOut = True
     outs += fn(("c",), iter([frame([])]), state)
     got = [
-        (r.conv_id, r.turn_idx, r.content_len, r.conv_offset, r.extracted)
+        (r.conv_id, r.turn_idx, r.content_text, r.conv_offset, r.extracted)
         for out in outs
         for r in out.itertuples()
     ]
 
     first = {}
     for i, t, e in arrival:
-        first.setdefault(i, (0 if t is None else len(t), e))
+        first.setdefault(i, (t, e))
     want, cum = [], 0
     for i in sorted(first):
-        n, e = first[i]
-        want.append(("c", i, n, cum, e))
-        cum += n
+        t, e = first[i]
+        want.append(("c", i, t, cum, e))
+        cum += len(t or "")
     assert got == want
 
 
@@ -448,12 +527,10 @@ def test_stream_ordered_offsets_out_of_order_batches(spark, tmp_path):
     turns in the second. A third batch of high-turn sentinel rows
     advances the disorder watermark past every buffered row, releasing
     the whole backlog — the result must equal the batch window's
-    offsets exactly (sentinels included on both sides)."""
-    from pyspark.sql import functions as F
-
-    from nreadability_spark.plans.extract_job import extract_transcripts
-    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA, transcripts_df
-    from nreadability_spark.streaming.stateful import stream_conv_offsets
+    offsets exactly (the sentinels stay buffered: nothing follows
+    them)."""
+    from nreadability_spark.sources.synth import transcripts_df
+    from nreadability_spark.streaming import extract_stream
 
     src = str(tmp_path / "ooo_src")
     # conv 0 is the 600-turn skewed conversation: its front-to-back
@@ -461,52 +538,25 @@ def test_stream_ordered_offsets_out_of_order_batches(spark, tmp_path):
     # bounded-disorder reorderer must drop its early turns — use only
     # short conversations (gap <= 12 < D=16) for the exact-equality check
     df = transcripts_df(spark, 7).where("conv_id != 'conv00000000'")
-    sentinels = (
-        df.select("conv_id").distinct()
-        .select(
-            "conv_id", F.lit(900).alias("turn_idx"), F.lit("user").alias("role"),
-            F.lit("<p>conversation end marker</p>").alias("text"),
-            F.lit(None).cast("string").alias("tool"),
-            F.lit(None).cast("timestamp").alias("ts"),
-        )
-    )
     # arrival order: turns >= 3, then turns < 3, then the sentinels
     df.where("turn_idx >= 3").coalesce(1).write.parquet(src)
     df.where("turn_idx < 3").coalesce(1).write.mode("append").parquet(src)
-    sentinels.coalesce(1).write.mode("append").parquet(src)
+    _sentinels(df).coalesce(1).write.mode("append").parquet(src)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    rows = _drain(
+        extract_stream(_file_stream(spark, src), include_html=False, max_disorder=16),
+        "ooo_offsets",
     )
-    q = (
-        stream_conv_offsets(stream, max_disorder=16)
-        .writeStream.format("memory")
-        .queryName("ooo_offsets")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["conv_offset"]
-        for r in spark.sql("select * from ooo_offsets").collect()
-    }
-    want = {
-        (r["conv_id"], r["turn_idx"]): r["conv_offset"]
-        for r in extract_transcripts(spark.read.parquet(src), include_html=False).collect()
-        if r["turn_idx"] != 900  # sentinels stay buffered (nothing after them)
-    }
+    got = _keyed(rows, "conv_offset")
+    want = {k: v for k, v in _batch_offsets(spark, src).items() if k[1] != SENTINEL_TURN}
     assert got == want and len(got) > 0
 
 
-def test_stream_conv_offsets_emits_a_repeated_turn_once(spark, tmp_path):
+def test_stream_emits_a_repeated_turn_once(spark, tmp_path):
     """A turn that arrives again in a later micro-batch is emitted once:
     the offsets equal the batch window's over the first-seen rows."""
-    from nreadability_spark.plans.extract_job import extract_transcripts
     from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
-    from nreadability_spark.streaming.stateful import stream_conv_offsets
+    from nreadability_spark.streaming import extract_stream
 
     def turns(idxs):
         return spark.createDataFrame(
@@ -521,29 +571,9 @@ def test_stream_conv_offsets_emits_a_repeated_turn_once(spark, tmp_path):
     src = str(tmp_path / "repeat_src")
     turns([0, 1]).coalesce(1).write.parquet(src)
     turns([1, 2]).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream_conv_offsets(stream)
-        .writeStream.format("memory")
-        .queryName("repeat_offsets")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        (r["turn_idx"], r["conv_offset"])
-        for r in spark.sql("select * from repeat_offsets").collect()
-    )
-    want = sorted(
-        (r["turn_idx"], r["conv_offset"])
-        for r in extract_transcripts(turns([0, 1, 2]), include_html=False).collect()
-    )
-    assert got == want and len(got) == 3
+    rows = _drain(extract_stream(_file_stream(spark, src), include_html=False), "repeat_offsets")
+    got = _keyed(rows, "conv_offset")
+    assert got == _batch_offsets(spark, src) and len(got) == 3
 
 
 def test_dedup_fn_first_seen_wins_and_ttl():
@@ -589,21 +619,7 @@ def test_stream_dedup_across_micro_batches(spark, tmp_path):
     spark.createDataFrame(batch1, TRANSCRIPTS_SCHEMA).coalesce(1).write.parquet(src)
     spark.createDataFrame(batch2, TRANSCRIPTS_SCHEMA).coalesce(1).write.mode("append").parquet(src)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("select * from dedup_out").collect()
+    rows = _drain(dedup_stream(_file_stream(spark, src)), "dedup_out")
     by_conv = {(r["conv_id"], r["turn_idx"]) for r in rows}
     # one row per distinct normalized content: dup family canonicalized
     # at its minimum first-batch occurrence ("a0", 0); b2's whitespace/
@@ -627,23 +643,16 @@ def test_stream_dedup_state_survives_restart(spark, tmp_path):
     dup = "Boilerplate seen before the restart, identical bytes."
 
     def run():
-        stream = (
-            spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
         def write_batch(bdf, _bid):
             bdf.write.mode("append").parquet(out)
 
-        q = (
-            dedup_stream(stream)
+        _await(
+            dedup_stream(_file_stream(spark, src))
             .writeStream.foreachBatch(write_batch)  # memory sink can't recover
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
 
     spark.createDataFrame(
         [("a0", 0, "user", dup, None, None),
@@ -714,19 +723,9 @@ def test_stream_sft_spans_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = (
-        stream_sft_spans(stream)
-        .writeStream.format("memory")
-        .queryName("sft_spans_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
     got = {
         (r["conv_id"], r["turn_id"]): (r["span_start"], r["span_end"])
-        for r in spark.sql("select * from sft_spans_stream").collect()
+        for r in _drain(stream_sft_spans(stream), "sft_spans_stream")
     }
     want = {
         (r["conv_id"], r["turn_id"]): (r["span_start"], r["span_end"])
