@@ -31,10 +31,6 @@ from pyspark.sql import functions as F
 
 from nreadability_spark.functions import hashing
 from nreadability_spark.functions import text as tx
-from nreadability_spark.operators.similarity import (
-    BROADCAST_PAIR_JOIN_MAX_BYTES,
-    _input_bytes,
-)
 from nreadability_spark.operators.textops import _norm_text, _norm_text_sql, load_documents
 
 MINHASH_K = 16
@@ -78,44 +74,20 @@ def ngram_jaccard_pairs(
     sf_dir: str,
     n: int = 3,
     threshold: float = 0.2,
-    max_posting_list: int | None = None,
 ) -> DataFrame:
     """Exact pairwise Jaccard via an inverted-index self-join on hashed
     shingles (8-byte longs in the shuffle, never strings). All-pairs:
     the scale-limited verification kernel — run MinHash-LSH for
-    discovery at 100 TB.
-
-    ``max_posting_list``: stop-shingle cap. A shingle shared by p docs
-    contributes p^2 join rows; one ubiquitous shingle ("terms of
-    service") makes the join quadratic in the corpus. With the cap set,
-    shingles whose posting list exceeds it are dropped from BOTH the
-    intersections and the per-doc sizes (Jaccard over the filtered
-    shingle space — a documented semantic change, so the oracle-pinned
-    query keeps the default None)."""
+    discovery at 100 TB. A shingle shared by p docs contributes p^2
+    join rows, so one ubiquitous shingle ("terms of service") makes the
+    join quadratic in the corpus; the Jaccard is over the full shingle
+    sets."""
     docs = load_documents(spark, sf_dir)
     # cache() = MEMORY_AND_DISK: the hashed table is (long, long) rows —
     # ~an order of magnitude smaller than string shingles — and is read
     # 3x (sizes, both join sides); at 100 TB prefer recomputation (the
     # construction is map-side) over materializing the explode
     sh = tx.hashed_shingles(docs, n=n).cache()
-    if max_posting_list is not None:
-        hot = (
-            sh.groupBy("sh60")
-            .agg(F.count(F.lit(1)).alias("p"))
-            .where(F.col("p") > max_posting_list)
-            .select("sh60")
-        )
-        # |hot| <= total_shingles / max_posting_list — linear in the
-        # corpus (slowly, but unbounded), so the broadcast is size-gated
-        # with the shared idiom from similarity.py: bound shingles by
-        # input bytes (over-conservative: every shingle spans >= 1 input
-        # byte) at ~24 B per broadcast row; past the cap fall back to a
-        # shuffle anti-join (AQE still broadcasts at runtime if the
-        # aggregate turns out tiny, but never an unbounded planner hint).
-        est_hot_bytes = 24 * (_input_bytes(docs) // max_posting_list)
-        if 0 < est_hot_bytes <= BROADCAST_PAIR_JOIN_MAX_BYTES:
-            hot = F.broadcast(hot)
-        sh = sh.join(hot, "sh60", "left_anti")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -189,24 +161,11 @@ def lsh_band_table(sigs: DataFrame) -> DataFrame:
     return bands
 
 
-def lsh_oversized_buckets(bands: DataFrame, cap: int) -> DataFrame:
-    """(band, band_key, n_docs) of buckets over the cap — the drop log
-    a capped run must surface (no silent caps)."""
-    return (
-        bands.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") > cap)
-    )
-
-
 def minhash_lsh_pairs(
     spark: SparkSession,
     sf_dir: str,
     n: int = 3,
     threshold: float = 0.2,
-    collapse_exact: bool = True,
-    expand_exact: bool = True,
-    band_bucket_cap: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from LSH banding, verified with exact Jaccard.
 
@@ -214,45 +173,29 @@ def minhash_lsh_pairs(
     the signature-agreement estimate, ``jaccard`` the exact verified
     value (>= threshold).
 
-    Skew controls (the result set is IDENTICAL with the defaults —
-    verified against the uncollapsed DuckDB oracle):
-
-    - ``collapse_exact``: exact-dedup-first. Byte-identical documents
-      all land in the same band bucket, making the candidate join
-      quadratic in the duplicate count — the dominant hot-key source in
-      a crawl (boilerplate pages duplicated millions of times). Signing
-      and banding run over ONE representative per fp60 class; with
-      ``expand_exact`` the verified representative pairs are then
-      expanded back to member pairs (duplicates share their rep's
-      signatures and Jaccard values exactly, so the expansion
-      reconstructs the uncollapsed result — within-class pairs are
-      (1.0, 1.0) by definition). At 100 TB you run expand_exact=False:
-      the class table IS the expansion, materializing the quadratic
-      pair list serves no pipeline purpose.
-    - ``band_bucket_cap``: drops (band, band_key) buckets larger than
-      the cap from candidate generation — the backstop for
-      near-identical floods that exact dedup can't collapse. Lossy
-      (bounded recall loss, log ``lsh_oversized_buckets``); default off
-      so the pinned query stays oracle-exact.
+    Exact-dedup-first (the result set is IDENTICAL to the uncollapsed
+    DuckDB oracle's): byte-identical documents all land in the same
+    band bucket, making the candidate join quadratic in the duplicate
+    count — the dominant hot-key source in a crawl (boilerplate pages
+    duplicated millions of times). Signing and banding run over ONE
+    representative per fp60 class; the verified representative pairs
+    are then expanded back to member pairs (duplicates share their
+    rep's signatures and Jaccard values exactly, so the expansion
+    reconstructs the uncollapsed result — within-class pairs are
+    (1.0, 1.0) by definition). Near-identical floods, which exact dedup
+    cannot collapse, still meet in one band bucket.
     """
     docs = load_documents(spark, sf_dir)
     classes = docs.select(
         "doc_id", hashing.h60(_norm_text(F.col("text"))).alias("fp60")
     )
-    if collapse_exact:
-        reps = classes.groupBy("fp60").agg(F.min("doc_id").alias("doc_id"))
-        sign_docs = docs.join(reps.select("doc_id"), "doc_id")
-    else:
-        sign_docs = docs
+    reps = classes.groupBy("fp60").agg(F.min("doc_id").alias("doc_id"))
+    sign_docs = docs.join(reps.select("doc_id"), "doc_id")
     # cache() = MEMORY_AND_DISK; see ngram_jaccard_pairs note — at
     # 100 TB drop the persist and recompute the map-side construction
     sh = tx.hashed_shingles(sign_docs, n=n).cache()
     sigs = minhash_signatures(sh)
     bands = lsh_band_table(sigs)
-
-    if band_bucket_cap is not None:
-        oversized = lsh_oversized_buckets(bands, band_bucket_cap).select("band", "band_key")
-        bands = bands.join(oversized, ["band", "band_key"], "left_anti")
 
     a, b = bands.alias("a"), bands.alias("b")
     cands = (
@@ -293,9 +236,6 @@ def minhash_lsh_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard", "jaccard")
     )
-
-    if not (collapse_exact and expand_exact):
-        return rep_pairs.orderBy("doc_a", "doc_b")
 
     # expand representative pairs back to member pairs: every member of
     # a class has its rep's exact shingle set, hence its signatures,

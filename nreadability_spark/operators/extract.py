@@ -118,15 +118,13 @@ def _extract_one(text, options, include_html=True):
         return row
 
 
-def make_extract_udf(options=None, include_html=True):
-    """Build the extraction pandas UDF.
+def make_extract_udf(include_html=True):
+    """Build the extraction pandas UDF (the core's ``DEFAULT_OPTIONS``).
 
     ``include_html=False`` drops the (large) ``content_html`` payload at
     the source — Catalyst cannot prune struct fields produced inside a
     Python UDF, so not serializing it is the pruning.
     """
-    opts = options or DEFAULT_OPTIONS
-
     @F.pandas_udf(EXTRACT_RESULT_SCHEMA)
     def extract_udf(texts):
         import pandas as pd
@@ -141,7 +139,7 @@ def make_extract_udf(options=None, include_html=True):
         names = list(EXTRACT_RESULT_SCHEMA.names)
         cols = {name: [] for name in names}
         for text in texts:
-            row = _extract_one(text, opts, include_html)
+            row = _extract_one(text, DEFAULT_OPTIONS, include_html)
             for name in names:
                 cols[name].append(row[name])
         return pd.DataFrame(cols, columns=names)
@@ -149,17 +147,18 @@ def make_extract_udf(options=None, include_html=True):
     return extract_udf
 
 
-def extract_columns(df, text_col="text", options=None, include_html=True, result_col="extract"):
-    """Append extraction result columns to a transcripts DataFrame.
+def extract_columns(df, include_html=True):
+    """Append the extraction result columns of the ``text`` column to a
+    transcripts DataFrame.
 
     The struct is expanded into flat columns so downstream plans (window,
     write partitioning) are ordinary Catalyst expressions.
     """
-    udf = make_extract_udf(options=options, include_html=include_html)
-    out = df.withColumn(result_col, udf(F.col(text_col)))
+    udf = make_extract_udf(include_html=include_html)
+    out = df.withColumn("extract", udf(F.col("text")))
     # one analysis for all fields; like withColumn, a field named after
     # an existing column replaces it
     out = out.withColumns(
-        {field: F.col(f"{result_col}.{field}") for field in EXTRACT_RESULT_SCHEMA.names}
+        {field: F.col(f"extract.{field}") for field in EXTRACT_RESULT_SCHEMA.names}
     )
-    return out.drop(result_col)
+    return out.drop("extract")

@@ -397,11 +397,9 @@ def _input_bytes(df: DataFrame) -> int:
     return total
 
 
-def _pair_strategy(strategy: str, emb: DataFrame) -> str:
-    """Resolves ``auto``: ``broadcast`` when the parquet ``emb`` scans
-    is under ``BROADCAST_PAIR_JOIN_MAX_BYTES``, else ``block_pairs``."""
-    if strategy != "auto":
-        return strategy
+def _pair_strategy(emb: DataFrame) -> str:
+    """``broadcast`` when the parquet ``emb`` scans is under
+    ``BROADCAST_PAIR_JOIN_MAX_BYTES``, else ``block_pairs``."""
     size = _input_bytes(emb)
     return "broadcast" if 0 < size <= BROADCAST_PAIR_JOIN_MAX_BYTES else "block_pairs"
 
@@ -417,23 +415,23 @@ def _assigned_vectors(spark: SparkSession, sf_dir: str):
     return emb, _assign_to_centroids(emb, cents, ccos=ccos)
 
 
-def _block_pair_join(df: DataFrame, n_salts: int, order_col: str):
+def _block_pair_join(df: DataFrame, order_col: str):
     """Salted sub-block pair join — the 100 TB pair-enumeration path
     shared by the near-dup and SemDeDup operators. Each cell's rows
-    split into S salt sub-blocks (salt = xxhash64(vec_id) mod S); side
-    A explodes to block-pairs (i=salt, j=salt..S-1), side B to
-    (i=0..salt, j=salt), and the join key (cell, i, j) meets every
-    unordered pair of sub-blocks exactly once via a SHUFFLE join with
-    C*S(S+1)/2 distinct keys. Same-block pairs (i==j) keep only
+    split into S = ``NEAR_DUP_SALTS`` salt sub-blocks (salt =
+    xxhash64(vec_id) mod S); side A explodes to block-pairs (i=salt,
+    j=salt..S-1), side B to (i=0..salt, j=salt), and the join key
+    (cell, i, j) meets every unordered pair of sub-blocks exactly once
+    via a SHUFFLE join with C*S(S+1)/2 distinct keys. Same-block pairs (i==j) keep only
     ``a.order_col < b.order_col`` to avoid the double match. Per-task
     memory is one sub-block pair; each row ships S+1 times — bounded
     fan-out instead of an unbounded broadcast."""
     salted = df.withColumn(
-        "salt", F.pmod(F.xxhash64("vec_id"), F.lit(n_salts)).cast("int")
+        "salt", F.pmod(F.xxhash64("vec_id"), F.lit(NEAR_DUP_SALTS)).cast("int")
     )
     side_a = salted.select(
         "*", F.col("salt").alias("bi"),
-        F.explode(F.sequence(F.col("salt"), F.lit(n_salts - 1))).alias("bj"),
+        F.explode(F.sequence(F.col("salt"), F.lit(NEAR_DUP_SALTS - 1))).alias("bj"),
     ).alias("a")
     side_b = salted.select(
         "*", F.explode(F.sequence(F.lit(0), F.col("salt"))).alias("bi"),
@@ -451,13 +449,13 @@ def _block_pair_join(df: DataFrame, n_salts: int, order_col: str):
     )
 
 
-def _cell_pairs(df: DataFrame, strategy: str, n_salts: int, order_col: str):
+def _cell_pairs(df: DataFrame, strategy: str, order_col: str):
     """Every unordered pair of same-cell rows of ``df`` once, as a join
     of ``df`` aliased ``a`` and ``b``: a broadcast self-join keeping
     ``a.order_col < b.order_col`` for ``broadcast``, else the salted
     block-pair join, which leaves the pair's order open."""
     if strategy != "broadcast":
-        return _block_pair_join(df, n_salts, order_col)
+        return _block_pair_join(df, order_col)
     a, b = df.alias("a"), df.alias("b")
     return a.join(
         F.broadcast(b),
@@ -480,8 +478,6 @@ def embedding_near_dups(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = COSINE_DUP_THRESHOLD,
-    strategy: str = "auto",
-    n_salts: int = NEAR_DUP_SALTS,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: vectors are blocked by
     their IVF cell (nearest pinned centroid), and only same-cell pairs
@@ -489,7 +485,8 @@ def embedding_near_dups(
     O(n^2 / C) instead of O(n^2) at scale (recall is bounded by cell
     purity; raise C or use multi-assignment for higher recall).
 
-    Pair-join strategies (identical result set, different plans):
+    The pair join is picked from the input size (identical result set,
+    different plans):
 
     - ``broadcast``: broadcast the whole assigned table as the build
       side. Right when the input fits the broadcast threshold — the cell
@@ -505,16 +502,18 @@ def embedding_near_dups(
       pair, each row is shipped S+1 times — bounded fan-out instead of
       an unbounded broadcast. Same-block pairs (i==j) keep only
       vec_id_a < vec_id_b to avoid the double match.
-    - ``auto``: broadcast when the scanned parquet is under
-      ``BROADCAST_PAIR_JOIN_MAX_BYTES``, else block_pairs.
+
+    ``broadcast`` runs when the scanned parquet is under
+    ``BROADCAST_PAIR_JOIN_MAX_BYTES``, else ``block_pairs`` with S =
+    ``NEAR_DUP_SALTS``.
 
     The pair cosine is the sequential-order dot product of ``_dot``,
     bit-identical to the SQL twin.
     """
     emb, assigned = _assigned_vectors(spark, sf_dir)
-    strategy = _pair_strategy(strategy, emb)
+    strategy = _pair_strategy(emb)
     pairs = (
-        _cell_pairs(assigned, strategy, n_salts, "vec_id")
+        _cell_pairs(assigned, strategy, "vec_id")
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
@@ -1009,8 +1008,6 @@ def semantic_dedup(
     spark: SparkSession,
     sf_dir: str,
     eps: float = SEMDEDUP_EPS,
-    strategy: str = "auto",
-    n_salts: int = NEAR_DUP_SALTS,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means-cluster
     the embedding space, then inside each cluster drop every vector
@@ -1029,11 +1026,11 @@ def semantic_dedup(
       jobs/fit_models.py) — the paper scales K with N so cluster
       size stays roughly constant, which bounds BOTH the per-cell rank
       window and the intra-cell pair volume (O(N^2/K) total);
-    - pair enumeration reuses the near-dup strategies: size-gated
-      broadcast self-join at small scale, salted block-pair SHUFFLE
-      join (``block_pairs``, similarity.py near-dups) when the
-      assigned table outgrows the broadcast budget — per-task memory
-      is one sub-block pair, never a cell;
+    - pair enumeration reuses the near-dup pair join, picked from the
+      input size as there: broadcast self-join under
+      ``BROADCAST_PAIR_JOIN_MAX_BYTES``, salted block-pair SHUFFLE
+      join (``block_pairs``) above it — per-task memory is one
+      sub-block pair, never a cell;
     - the dominated set is a distinct (vec_id) anti-join back — one
       narrow shuffle keyed by vec_id.
     """
@@ -1051,7 +1048,7 @@ def semantic_dedup(
     ranked = assigned.withColumn("rnk", F.row_number().over(w_rank)).withColumn(
         "nn", F.sqrt(_dot(F.col("e"), F.col("e")))
     )
-    strategy = _pair_strategy(strategy, emb)
+    strategy = _pair_strategy(emb)
     # the LATER-ranked member of each eps-close pair is the dominated
     # one; the broadcast join already orders a before b
     later = (
@@ -1062,7 +1059,7 @@ def semantic_dedup(
         )
     )
     dominated = (
-        _cell_pairs(ranked, strategy, n_salts, "rnk")
+        _cell_pairs(ranked, strategy, "rnk")
         .where(_pair_cos("nn") >= F.lit(eps))
         .select(later.alias("vec_id"))
         .distinct()

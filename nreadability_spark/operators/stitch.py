@@ -37,13 +37,7 @@ STITCH_RESULT_SCHEMA = T.StructType(
 )
 
 
-def stitch_conversations(
-    df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    include_html: bool = True,
-    options=None,
-) -> DataFrame:
+def stitch_conversations(df: DataFrame, include_html: bool = True) -> DataFrame:
     """(conv_id, turn_idx, url, text) -> one stitched article per
     conversation. The first page (min turn_idx) is the start URL."""
 
@@ -53,9 +47,9 @@ def stitch_conversations(
         from nreadability_spark.core.weblike import web_transcode
 
         pdf = pdf.sort_values("turn_idx")
-        pages = dict(zip(pdf[url_col], pdf[text_col]))
-        start_url = pdf.iloc[0][url_col]
-        html, extracted, n_pages = web_transcode(pages.get, start_url, options=options)
+        pages = dict(zip(pdf["url"], pdf["text"]))
+        start_url = pdf.iloc[0]["url"]
+        html, extracted, n_pages = web_transcode(pages.get, start_url)
         return pd.DataFrame(
             [
                 {
@@ -76,7 +70,7 @@ def stitch_conversations(
     # reuses its clustering (no second shuffle).
     n_parts = 2 * df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.select("conv_id", "turn_idx", url_col, text_col)
+        df.select("conv_id", "turn_idx", "url", "text")
         .repartition(n_parts, "conv_id")
         .groupBy("conv_id")
         .applyInPandas(stitch, schema=STITCH_RESULT_SCHEMA)

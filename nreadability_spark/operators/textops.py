@@ -1450,7 +1450,6 @@ def line_dedup(
     spark: SparkSession,
     sf_dir: str,
     min_docs: int = LINE_BOILER_MIN_DOCS,
-    boiler_salt: int = 0,
 ) -> DataFrame:
     """CCNet/RefinedWeb-style cross-document line deduplication: a line
     whose distinct-document frequency reaches ``min_docs`` is
@@ -1477,13 +1476,8 @@ def line_dedup(
       with no exchange under the join at all (measured in
       docs/SKEW.md section B: 0 skew splits at any threshold; an explicit
       ``repartition(line_h)`` doesn't help either — AQE exempts
-      user-specified repartitions from skew/coalesce rewriting). The
-      deterministic mitigation is ``boiler_salt=S``: the boiler side
-      explodes each key S ways, the probe salts on
-      ``pmod(xxhash64(doc_id, pos), S)``, and the hot key's probe rows
-      spread over S partitions by construction — planner-independent,
-      exact, costing only S copies of the (aggregated, narrow) boiler
-      table.
+      user-specified repartitions from skew/coalesce rewriting), so
+      the hot key's probe rows share one partition.
 
     Rebuild is one hash agg keyed by doc_id with an in-array sort — no
     global window."""
@@ -1501,20 +1495,7 @@ def line_dedup(
     boiler = freq.where(F.col("doc_freq") >= F.lit(min_docs)).select(
         "line_h", F.lit(True).alias("_boiler")
     )
-    if boiler_salt > 1:
-        boiler = boiler.select(
-            "line_h",
-            "_boiler",
-            F.explode(F.sequence(F.lit(0), F.lit(boiler_salt - 1))).alias("_salt"),
-        )
-        probe = e.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64("doc_id", "pos"), F.lit(boiler_salt)).cast("int"),
-        )
-        tagged = probe.join(boiler, ["line_h", "_salt"], "left")
-    else:
-        tagged = e.join(boiler, "line_h", "left")
-    tagged = tagged.withColumn(
+    tagged = e.join(boiler, "line_h", "left").withColumn(
         "is_boiler", F.coalesce(F.col("_boiler"), F.lit(False))
     )
     return (

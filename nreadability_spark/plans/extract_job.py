@@ -106,7 +106,7 @@ def salted(df, *keys):
     return df.repartition(n, F.xxhash64(*keys))
 
 
-def extract_transcripts(df, options=None, include_html=True, with_conv_offset=True):
+def extract_transcripts(df, include_html=True, with_conv_offset=True):
     """Transcripts DataFrame -> extracted DataFrame (lazy; no action).
 
     ``with_conv_offset=False`` returns ``OUTPUT_COLUMNS`` without
@@ -135,7 +135,7 @@ def extract_transcripts(df, options=None, include_html=True, with_conv_offset=Tr
     if not df.isStreaming:
         out = salted(out, "conv_id", "turn_idx")
 
-    out = extract_columns(out, options=options, include_html=include_html)
+    out = extract_columns(out, include_html=include_html)
     out = out.drop("text")
 
     if not with_conv_offset:
@@ -150,7 +150,6 @@ def run_extract_job(
     out_path,
     run_id=None,
     n_buckets=lineage.N_BUCKETS,
-    options=None,
     include_html=True,
     resume=True,
 ):
@@ -169,9 +168,7 @@ def run_extract_job(
     run_id = run_id or uuid.uuid4().hex
 
     df = lineage.filter_uncommitted(source_df, out_path, n_buckets) if resume else source_df
-    extracted = extract_transcripts(
-        df, options=options, include_html=include_html, with_conv_offset=False
-    )
+    extracted = extract_transcripts(df, include_html=include_html, with_conv_offset=False)
     out = with_conv_offsets(
         lineage.with_bucket(extracted, n_buckets).repartition(lineage.BUCKET_COL),
         (lineage.BUCKET_COL, "conv_id"),

@@ -12,12 +12,13 @@ end-to-end, not operator-by-operator):
 Pruning is the greedy one-pass rule (per PAIR, not transitive
 clustering): deterministic, embarrassingly joinable, and what
 large-scale dedup pipelines ship first — connected-components
-clustering is a separate iterative job.
+clustering is a separate iterative job (``dedup.duplicate_components``,
+the ``dedup_components`` query).
 
 Scale shape: the quality gate and fingerprint are map-side; the only
 added shuffles over the underlying operators are two fp60/doc_id-keyed
 joins (hash-distributed, no hot keys). The LSH stage reuses
-``dedup.minhash_lsh_pairs`` with all its skew controls.
+``dedup.minhash_lsh_pairs`` with its exact-dedup-first collapse.
 """
 
 from __future__ import annotations
@@ -37,16 +38,11 @@ def clean_corpus(
     spark: SparkSession,
     sf_dir: str,
     min_tokens: int = MIN_TOKENS,
-    near_dup_strategy: str = "greedy",
 ) -> DataFrame:
-    """``near_dup_strategy``:
-
-    - ``greedy`` (oracle-pinned): drop the higher doc_id of each
-      verified pair — one join pass, keeps one doc per PAIR.
-    - ``components``: drop every non-minimum member of each transitive
-      near-dup cluster (``dedup.duplicate_components``) — stricter
-      (chains a~b~c collapse to one survivor even when a,c never
-      paired directly); the iterative-job composition."""
+    """Quality-gated, exact-deduplicated documents with the greedy
+    near-dup prune: drop the higher doc_id of each verified MinHash-LSH
+    pair whose two docs both survived exact dedup — one join pass,
+    keeps one doc per PAIR (a chain a~b~c can keep a and c)."""
     docs = load_documents(spark, sf_dir)
     quality = docs.select(
         "doc_id",
@@ -57,19 +53,15 @@ def clean_corpus(
     reps = quality.groupBy("fp60").agg(F.min("doc_id").alias("doc_id"))
     rep_rows = quality.join(reps.select("doc_id"), "doc_id")
 
-    if near_dup_strategy == "components":
-        comp = dedup.duplicate_components(spark, sf_dir)
-        dropped = comp.where(F.col("doc_id") != F.col("component")).select("doc_id")
-    else:
-        pairs = dedup.minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        rep_ids_a = rep_rows.select(F.col("doc_id").alias("doc_a"))
-        rep_ids_b = rep_rows.select(F.col("doc_id").alias("doc_b"))
-        dropped = (
-            pairs.join(rep_ids_a, "doc_a")
-            .join(rep_ids_b, "doc_b")
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-        )
+    pairs = dedup.minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    rep_ids_a = rep_rows.select(F.col("doc_id").alias("doc_a"))
+    rep_ids_b = rep_rows.select(F.col("doc_id").alias("doc_b"))
+    dropped = (
+        pairs.join(rep_ids_a, "doc_a")
+        .join(rep_ids_b, "doc_b")
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+    )
     return (
         rep_rows.join(dropped, "doc_id", "left_anti")
         .select("doc_id", "fp60", "n_tokens")

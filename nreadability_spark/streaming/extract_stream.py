@@ -39,7 +39,7 @@ from nreadability_spark.streaming.stateful import (
 
 
 def extract_stream(
-    stream_df: DataFrame, options=None, include_html=True, max_disorder=0, idle_timeout_ms=None
+    stream_df: DataFrame, include_html=True, max_disorder=0, idle_timeout_ms=None
 ) -> DataFrame:
     """Streaming transcripts -> the batch job's ``OUTPUT_COLUMNS``
     (lazy), with ``conv_offset`` carried across micro-batches as keyed
@@ -62,9 +62,7 @@ def extract_stream(
     an ``availableNow`` query never finishes unless
     ``spark.sql.streaming.noDataMicroBatches.enabled`` is false when it
     starts (timeouts then fire only on batches that carry data)."""
-    front = extract_transcripts(
-        stream_df, options=options, include_html=include_html, with_conv_offset=False
-    )
+    front = extract_transcripts(stream_df, include_html=include_html, with_conv_offset=False)
     return apply_with_state(
         front.groupBy("conv_id"),
         partial(
@@ -83,12 +81,9 @@ def windowed_turn_metrics(
     stream_df: DataFrame,
     window_duration: str = "1 minute",
     watermark_delay: str = "2 minutes",
-    options=None,
 ) -> DataFrame:
     """Event-time windowed extraction metrics with late-data handling."""
-    extracted = extract_transcripts(
-        stream_df, options=options, include_html=False, with_conv_offset=False
-    )
+    extracted = extract_transcripts(stream_df, include_html=False, with_conv_offset=False)
     return (
         extracted.withWatermark("ts", watermark_delay)
         .groupBy(F.window("ts", window_duration).alias("win"))

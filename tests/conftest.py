@@ -45,3 +45,42 @@ def spark():
     )
     yield session
     session.stop()
+
+
+class _Walk(dict):
+    """name -> ``check_oracles.Checked``; reading a query whose build
+    or collect raised re-raises that exception."""
+
+    def __getitem__(self, name):
+        checked = super().__getitem__(name)
+        if isinstance(checked, Exception):
+            raise checked
+        return checked
+
+
+@pytest.fixture(scope="session")
+def walk(spark):
+    """The Tier-1 registry walk: each ``__spark_entry__.queries()``
+    entry built once at sf0.001 and checked against its oracle through
+    ``check_oracles.check``. Oracle and plan tests read the outcome,
+    behavioural tests the collected rows. The build jobs it records are
+    not asserted: the count moved on unchanged code. The Arrow batch
+    size some builders set is restored afterwards."""
+    import __spark_entry__
+    from tests.test_operators import SF_DIR
+    from tools import check_oracles
+
+    arrow_batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(arrow_batch)
+    results = _Walk()
+    with pytest.MonkeyPatch.context() as mp, check_oracles.duck(SF_DIR) as con:
+        # the extract_* golden oracles at the walk's scale factor
+        mp.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+        oracles = __spark_entry__.oracle_sql()
+        for name, build in __spark_entry__.queries().items():
+            try:
+                results[name] = check_oracles.check(build, oracles[name], spark, SF_DIR, con)
+            except Exception as exc:  # noqa: BLE001 — fails this query's items only
+                results[name] = exc
+    spark.conf.set(arrow_batch, before)
+    return results

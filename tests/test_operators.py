@@ -2,7 +2,9 @@
 similarity / text analysis / multimodal / relational queries that an
 oracle can't express, and oracle parity on planted inputs. Every
 registry query is compared with its DuckDB oracle at sf0.001 by the
-registry walk in ``tests/test_registry_plans.py``.
+registry walk (the ``walk`` fixture in ``tests/conftest.py``); a
+property of a registry query at that scale reads the rows the walk
+collected instead of building the query again.
 """
 
 import duckdb
@@ -23,43 +25,33 @@ def duck():
 
 # --- behavioral properties ---------------------------------------------
 
-def test_lsh_recalls_all_jaccard_pairs(spark):
+def test_lsh_recalls_all_jaccard_pairs(walk):
     """Every pair found by the exact n-gram Jaccard scan must also be
     found by MinHash+LSH at the same threshold (banding recall)."""
-    from nreadability_spark.operators import dedup
-
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.ngram_jaccard_pairs(spark, SF_DIR).collect()
-    }
-    lsh = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_lsh_pairs(spark, SF_DIR).collect()
-    }
+    exact = {(r["doc_a"], r["doc_b"]) for r in walk["dedup_ngram_jaccard"].rows}
+    lsh = {(r["doc_a"], r["doc_b"]) for r in walk["dedup_minhash_lsh"].rows}
     assert exact, "fixture corpus should contain near-duplicate pairs"
     missing = exact - lsh
     assert not missing, f"LSH missed {len(missing)} of {len(exact)} exact pairs"
 
 
-def test_simhash_pairs_have_low_hamming(spark):
+def test_simhash_pairs_have_low_hamming(walk):
     from nreadability_spark.operators import dedup
 
-    rows = dedup.simhash_pairs(spark, SF_DIR).collect()
+    rows = walk["dedup_simhash"].rows
     assert all(0 <= r["hamming"] <= dedup.SIMHASH_MAX_DIST for r in rows)
 
 
-def test_exact_dedup_covers_all_docs(spark):
-    from nreadability_spark.operators import dedup
-
-    groups = dedup.exact_dedup_groups(spark, SF_DIR).collect()
+def test_exact_dedup_covers_all_docs(spark, walk):
+    groups = walk["dedup_exact_groups"].rows
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     assert sum(r["n_docs"] for r in groups) == n_docs
 
 
-def test_knn_self_excluded_and_ranked(spark):
+def test_knn_self_excluded_and_ranked(walk):
     from nreadability_spark.operators import similarity
 
-    rows = similarity.knn_brute_force(spark, SF_DIR).collect()
+    rows = walk["sim_knn_brute_force"].rows
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
     assert all(r["vec_id"] != similarity.QUERY_VEC_ID for r in rows)
     sims = [r["cos_sim"] for r in rows]
@@ -1062,15 +1054,27 @@ def test_extraction_prefilter_reaches_scan(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(text)" in plan
 
 
-def test_near_dup_block_pairs_equals_broadcast_no_broadcast_join(spark):
+def _pair_join_paths(monkeypatch, build):
+    """``build()`` once on the broadcast pair join and once on the
+    block-pair join, each forced through the input-size gate."""
+    from nreadability_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "BROADCAST_PAIR_JOIN_MAX_BYTES", 1 << 62)
+    bc = build()
+    monkeypatch.setattr(similarity, "BROADCAST_PAIR_JOIN_MAX_BYTES", 0)
+    return bc, build()
+
+
+def test_near_dup_block_pairs_equals_broadcast_no_broadcast_join(spark, monkeypatch):
     """The 100 TB pair-join path: the salted (cell, i, j) block-pair
     shuffle join must produce exactly the broadcast path's pairs, with
     NO BroadcastHashJoin in its plan (only the tiny centroid cross
     joins may broadcast)."""
     from nreadability_spark.operators import similarity
 
-    bc = similarity.embedding_near_dups(spark, SF_DIR, strategy="broadcast")
-    bp = similarity.embedding_near_dups(spark, SF_DIR, strategy="block_pairs")
+    bc, bp = _pair_join_paths(
+        monkeypatch, lambda: similarity.embedding_near_dups(spark, SF_DIR)
+    )
     assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, bp.collect()))
     # the STATIC plan must not hint/force a broadcast of the table; at
     # tiny scale AQE may still legitimately convert the exchange to a
@@ -1081,7 +1085,7 @@ def test_near_dup_block_pairs_equals_broadcast_no_broadcast_join(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
 
-def test_semantic_dedup_strategies_agree_and_rule_holds(spark):
+def test_semantic_dedup_strategies_agree_and_rule_holds(spark, monkeypatch):
     """block_pairs must equal broadcast exactly, and the SemDeDup keep
     rule must hold row-by-row: a vector is dropped iff some
     earlier-ranked vector in its cell is eps-close (rank = ccos asc,
@@ -1089,8 +1093,9 @@ def test_semantic_dedup_strategies_agree_and_rule_holds(spark):
     transitive closure)."""
     from nreadability_spark.operators import similarity
 
-    bc = similarity.semantic_dedup(spark, SF_DIR, strategy="broadcast").collect()
-    bp = similarity.semantic_dedup(spark, SF_DIR, strategy="block_pairs").collect()
+    bc, bp = _pair_join_paths(
+        monkeypatch, lambda: similarity.semantic_dedup(spark, SF_DIR).collect()
+    )
     assert [r.asDict() for r in bc] == [r.asDict() for r in bp]
     # non-vacuous at the test SF: the planted near-dups must drop
     dropped = [r for r in bc if not r["kept"]]
@@ -1098,15 +1103,15 @@ def test_semantic_dedup_strategies_agree_and_rule_holds(spark):
     assert any(r["kept"] for r in bc)
 
 
-def test_near_dup_block_pairs_no_duplicate_pairs(spark):
+def test_near_dup_block_pairs_no_duplicate_pairs(spark, monkeypatch):
     """Every unordered same-cell pair must be matched exactly once by
     the block-pair explode scheme (i==j needs the id-order guard)."""
     from nreadability_spark.operators import similarity
 
+    monkeypatch.setattr(similarity, "BROADCAST_PAIR_JOIN_MAX_BYTES", 0)
+    monkeypatch.setattr(similarity, "NEAR_DUP_SALTS", 3)
     # threshold -1: keep ALL same-cell pairs, so double-matching shows
-    rows = similarity.embedding_near_dups(
-        spark, SF_DIR, threshold=-1.0, strategy="block_pairs", n_salts=3
-    ).collect()
+    rows = similarity.embedding_near_dups(spark, SF_DIR, threshold=-1.0).collect()
     pairs = [(r["vec_a"], r["vec_b"]) for r in rows]
     assert len(pairs) == len(set(pairs))
     assert all(a < b for a, b in pairs)
@@ -1132,18 +1137,30 @@ def test_ivf_reads_fitted_centroids(spark):
         assert abs(brute[r["vec_id"]] - r["cos_sim"]) < 1e-9
 
 
-# --- LSH skew controls (exact-dedup-first + bucket cap) -----------------
+# --- LSH exact-dedup-first ----------------------------------------------
+
+_PLANTED_SCHEMAS = {
+    "documents": "doc_id: long, text: string",
+    "embeddings": "vec_id: long, embedding: array<float>",
+}
+
+
+def _write_table(spark, path, table, rows):
+    spark.createDataFrame(rows, _PLANTED_SCHEMAS[table]).coalesce(1).write.parquet(
+        f"{path}/{table}.parquet"
+    )
+
 
 def _write_docs(spark, path, texts):
-    spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id: long, text: string"
-    ).coalesce(1).write.parquet(f"{path}/documents.parquet")
+    _write_table(spark, path, "documents", list(enumerate(texts)))
 
 
 def test_lsh_collapse_expand_equals_uncollapsed(spark, tmp_path):
     """Exact-dedup-first + expansion must reconstruct the uncollapsed
     result exactly: duplicates share their representative's signatures
-    and Jaccard values, so no pair may appear, vanish, or change."""
+    and Jaccard values, so no pair may appear, vanish, or change. The
+    uncollapsed reference is the DuckDB oracle, which signs and bands
+    every document."""
     from nreadability_spark.operators import dedup
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -1155,19 +1172,15 @@ def test_lsh_collapse_expand_equals_uncollapsed(spark, tmp_path):
         + ["xy"]                                    # < n tokens: no shingles
         + ["xy"]                                    # identical shingle-less doc: must NOT pair
     )
-    _write_docs(spark, str(tmp_path), texts)
-    plain = sorted(
-        map(tuple, dedup.minhash_lsh_pairs(spark, str(tmp_path), collapse_exact=False).collect())
+    got = _planted_parity(
+        spark, str(tmp_path), "documents", list(enumerate(texts)),
+        dedup.minhash_lsh_pairs, dedup.minhash_lsh_sql(),
     )
-    fast = sorted(
-        map(tuple, dedup.minhash_lsh_pairs(spark, str(tmp_path), collapse_exact=True).collect())
-    )
-    assert plain, "corpus should produce pairs"
-    assert fast == plain
+    assert got, "corpus should produce pairs"
 
 
 def test_lsh_hot_key_collapses_identical_flood(spark, tmp_path):
-    """1000 byte-identical docs: signing/banding must see ONE
+    """1000 byte-identical docs: signing and banding see one
     representative (no quadratic candidate blowup), while the expanded
     output still reports every duplicate pair."""
     from nreadability_spark.operators import dedup
@@ -1176,60 +1189,15 @@ def test_lsh_hot_key_collapses_identical_flood(spark, tmp_path):
     texts = [hot] * 1000 + ["some genuinely unique document text number one of a kind"]
     _write_docs(spark, str(tmp_path), texts)
 
-    reps_only = dedup.minhash_lsh_pairs(
-        spark, str(tmp_path), collapse_exact=True, expand_exact=False
-    )
-    assert reps_only.count() == 0  # one rep per class; no cross-class near-dups
-    expanded = dedup.minhash_lsh_pairs(spark, str(tmp_path), collapse_exact=True)
+    expanded = dedup.minhash_lsh_pairs(spark, str(tmp_path))
     assert expanded.count() == 1000 * 999 // 2
 
 
-def test_lsh_band_bucket_cap_drops_and_logs(spark, tmp_path):
-    """A capped run must drop oversized buckets from candidate
-    generation AND surface them via lsh_oversized_buckets."""
-    from nreadability_spark.functions import text as tx
-    from nreadability_spark.operators import dedup
-
-    # 6 distinct docs sharing identical shingles except one token ->
-    # same band keys land many docs in one bucket
-    base = "shared prefix words for every single document in this tiny corpus"
-    texts = [base + f" tail{i}" for i in range(6)]
-    _write_docs(spark, str(tmp_path), texts)
-    docs = spark.read.parquet(f"{tmp_path}/documents.parquet")
-    sigs = dedup.minhash_signatures(tx.hashed_shingles(docs))
-    bands = dedup.lsh_band_table(sigs)
-    over = dedup.lsh_oversized_buckets(bands, cap=2).collect()
-    assert over, "expected at least one bucket above the cap"
-    capped = dedup.minhash_lsh_pairs(spark, str(tmp_path), band_bucket_cap=2)
-    uncapped = dedup.minhash_lsh_pairs(spark, str(tmp_path))
-    assert capped.count() < uncapped.count()
-
-
-def test_ngram_posting_cap_bounds_join(spark, tmp_path):
-    """With max_posting_list set, a ubiquitous shingle cannot contribute
-    candidate pairs (and sizes shrink consistently)."""
-    from nreadability_spark.operators import dedup
-
-    shared = "common header sentence appearing in every page of the site"
-    texts = [shared + f" unique body {i} {i + 1} {i + 2}" for i in range(10)]
-    _write_docs(spark, str(tmp_path), texts)
-    full = dedup.ngram_jaccard_pairs(spark, str(tmp_path), threshold=0.01)
-    capped = dedup.ngram_jaccard_pairs(
-        spark, str(tmp_path), threshold=0.01, max_posting_list=5
-    )
-    assert full.count() > 0
-    # the shared-shingle contributions are gone; remaining pairs only
-    # from incidental overlaps
-    assert capped.count() < full.count()
-
-
-def test_duplicate_components_are_consistent(spark):
+def test_duplicate_components_are_consistent(walk):
     """Every near-dup pair must land in the same component, and each
     component's id must be its minimum member."""
-    from nreadability_spark.operators import dedup
-
-    comp = {r["doc_id"]: r["component"] for r in dedup.duplicate_components(spark, SF_DIR).collect()}
-    pairs = dedup.minhash_lsh_pairs(spark, SF_DIR).collect()
+    comp = {r["doc_id"]: r["component"] for r in walk["dedup_components"].rows}
+    pairs = walk["dedup_minhash_lsh"].rows
     assert pairs and comp
     for r in pairs:
         assert comp[r["doc_a"]] == comp[r["doc_b"]]
@@ -1350,18 +1318,6 @@ def test_decontaminate_flags_benchmark_duplicates(spark, tmp_path):
     assert 13 not in flagged     # ordinary doc untouched
 
 
-def test_clean_corpus_components_stricter_than_greedy(spark):
-    """Transitive-cluster pruning must keep a subset of the greedy
-    survivors (chains collapse further), and both must pass the quality
-    gate."""
-    from nreadability_spark.plans.pipeline import clean_corpus
-
-    greedy = {r["doc_id"] for r in clean_corpus(spark, SF_DIR).collect()}
-    comps = {r["doc_id"] for r in clean_corpus(spark, SF_DIR, near_dup_strategy="components").collect()}
-    assert comps <= greedy
-    assert comps  # non-empty
-
-
 def test_simhash_64bit_keyspace_bounds_buckets(spark, tmp_path):
     """The width flood test behind the 32->64-bit widening: with 8-bit
     chunk keys (256 buckets/chunk) a few hundred DISTINCT documents
@@ -1457,16 +1413,14 @@ def test_components_nonconvergence_raises(spark, tmp_path):
         dedup.duplicate_components(spark, str(tmp_path), max_iters=0)
 
 
-def _planted_embeddings_parity(spark, path, rows, build, sql):
-    """``build``'s rows over a planted embeddings table, checked against
-    the oracle ``sql`` over the same table."""
-    spark.createDataFrame(rows, "vec_id: long, embedding: array<float>").coalesce(
-        1
-    ).write.parquet(f"{path}/embeddings.parquet")
+def _planted_parity(spark, path, table, rows, build, sql):
+    """``build``'s rows over a planted ``table``, checked against the
+    oracle ``sql`` over the same table."""
+    _write_table(spark, path, table, rows)
     sdf = build(spark, path)
     got = sdf.collect()
     with duckdb.connect() as con:
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/embeddings.parquet/*.parquet'")
+        con.sql(f"CREATE VIEW {table} AS SELECT * FROM '{path}/{table}.parquet/*.parquet'")
         oracle = con.sql(sql)
         assert check_oracles.compare(sdf.columns, got, oracle.columns, oracle.fetchall()) == []
     return got
@@ -1481,8 +1435,9 @@ def test_quantize_int8_zero_vector_parity(spark, tmp_path):
         (0, [0.0] * similarity.DIM),
         (1, [(j % 7 - 3) / 3.0 for j in range(similarity.DIM)]),
     ]
-    got = _planted_embeddings_parity(
-        spark, str(tmp_path), rows, similarity.quantize_int8, similarity.quantize_int8_sql()
+    got = _planted_parity(
+        spark, str(tmp_path), "embeddings", rows,
+        similarity.quantize_int8, similarity.quantize_int8_sql(),
     )
     zero = next(r for r in got if r["vec_id"] == 0)
     assert (zero["scale"], zero["mse"], zero["q_max"], zero["q_min"]) == (0.0, 0.0, 0, 0)
@@ -1556,8 +1511,9 @@ def test_knn_zero_vector_parity(spark, tmp_path):
         (i, [((i * 13 + j * 7) % 19 - 9) / 9.0 for j in range(similarity.DIM)])
         for i in range(2, 12)
     ]
-    got = _planted_embeddings_parity(
-        spark, str(tmp_path), rows, similarity.knn_brute_force, similarity.knn_brute_force_sql()
+    got = _planted_parity(
+        spark, str(tmp_path), "embeddings", rows,
+        similarity.knn_brute_force, similarity.knn_brute_force_sql(),
     )
     cos = {r["vec_id"]: r["cos_sim"] for r in got}
     assert cos[1] == 0.0  # the zero vector scores an exact 0, not NaN
@@ -1944,14 +1900,13 @@ def test_bigram_logprob_planted_exact(spark, tmp_path):
     assert r["sum_logp_micro"] == want_first  # pairs contribute 0 each
 
 
-def test_cluster_topics_shape(spark):
+def test_cluster_topics_shape(spark, walk):
     """Per cell: ranks are 1..k dense, terms distinct; the cluster
     sizes sum to the corpus size (every vector assigned exactly one
     cell)."""
-    from nreadability_spark.plans import pipeline
     from nreadability_spark.operators.textops import load_documents
 
-    rows = pipeline.cluster_topics(spark, SF_DIR).collect()
+    rows = walk["pipeline_cluster_topics"].rows
     by_cell = {}
     for r in rows:
         by_cell.setdefault(r["cell"], []).append(r)
@@ -2043,19 +1998,6 @@ def test_line_dedup_below_threshold_keeps_lines(spark, tmp_path):
     out = textops.line_dedup(spark, str(tmp_path)).collect()
     assert all(r["n_removed"] == 0 for r in out)
     assert all("navigation" in r["clean_text"] for r in out)
-
-
-def test_line_dedup_salted_equals_plain(spark):
-    """boiler_salt is a pure partitioning change: salted and plain
-    paths must produce identical rows (the salt spreads the hot key's
-    probe rows over S join partitions by construction — the
-    deterministic fallback where the AQE skew rule structurally cannot
-    fire, see docs/SKEW.md section B)."""
-    from nreadability_spark.operators import textops
-
-    plain = textops.line_dedup(spark, SF_DIR).collect()
-    salted = textops.line_dedup(spark, SF_DIR, boiler_salt=8).collect()
-    assert [r.asDict() for r in plain] == [r.asDict() for r in salted]
 
 
 def test_line_dedup_tag_join_broadcasts(spark):

@@ -1,10 +1,11 @@
 """The registry walk, and plan guards over the query registry.
 
-The walk builds every ``__spark_entry__.queries()`` entry once at
-sf0.001 through ``tools/check_oracles.check``, which collects it and
-compares the rows with its ``oracle_sql()`` twin on DuckDB. Three tests
-per query read the walk: oracle equality and the two plan guards below,
-each run on the initial physical plan of the DataFrame the walk built.
+The walk (the session fixture in ``tests/conftest.py``) builds every
+``__spark_entry__.queries()`` entry once at sf0.001 through
+``tools/check_oracles.check``, which collects it and compares the rows
+with its ``oracle_sql()`` twin on DuckDB. Three tests per query read
+the walk: oracle equality and the two plan guards below, each run on
+the initial physical plan of the DataFrame the walk built.
 
 No range exchange may sit directly above a Python stage. A global sort
 plans ``Exchange rangepartitioning``, whose RangePartitioner runs a
@@ -29,7 +30,6 @@ import pytest
 
 import __spark_entry__
 from tests.test_operators import SF_DIR
-from tools import check_oracles
 
 pytestmark = pytest.mark.spark
 
@@ -130,52 +130,22 @@ def test_every_query_has_an_oracle(monkeypatch):
     assert len(QUERY_NAMES) == 90
 
 
-@pytest.fixture(scope="module")
-def walk(spark):
-    """Each registry query built once and checked against its oracle:
-    name -> what ``check_oracles.check`` returned (status first, the
-    built DataFrame last), or the exception its build or collect raised.
-    The build jobs it records are not asserted: the count moved on
-    unchanged code. The Arrow batch size some builders set is restored
-    afterwards."""
-    before = spark.conf.get(ARROW_BATCH)
-    results = {}
-    with pytest.MonkeyPatch.context() as mp, check_oracles.duck(SF_DIR) as con:
-        # the extract_* golden oracles at the walk's scale factor
-        mp.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
-        oracles = __spark_entry__.oracle_sql()
-        for name, build in __spark_entry__.queries().items():
-            try:
-                results[name] = check_oracles.check(build, oracles[name], spark, SF_DIR, con)
-            except Exception as exc:  # noqa: BLE001 — fails this query's items only
-                results[name] = exc
-    spark.conf.set(ARROW_BATCH, before)
-    return results
-
-
-def _walked(walk, name):
-    checked = walk[name]
-    if isinstance(checked, Exception):
-        raise checked
-    return checked
-
-
 @needs_sf
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(walk, name):
-    assert _walked(walk, name)[0] == []
+    assert walk[name].status == []
 
 
 @needs_sf
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_no_range_exchange_above_python_stage(walk, name):
-    assert python_below_range_exchange(_initial_plan(_walked(walk, name)[-1])) == []
+    assert python_below_range_exchange(_initial_plan(walk[name].df)) == []
 
 
 @needs_sf
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_no_python_function_in_two_nodes(walk, name):
-    assert python_functions_in_two_nodes(_initial_plan(_walked(walk, name)[-1])) == []
+    assert python_functions_in_two_nodes(_initial_plan(walk[name].df)) == []
 
 
 def test_extract_job_write_runs_each_python_function_once(spark, tmp_path, monkeypatch):

@@ -10,7 +10,8 @@ and build jobs per query.
 
 ``duck(sf_dir)`` is the DuckDB connection the oracles run on (one view
 per table), and ``check`` the one build + compare of a query; the
-Tier-1 registry walk (``tests/test_registry_plans.py``) runs both.
+Tier-1 registry walk (the ``walk`` fixture in ``tests/conftest.py``)
+runs both, and tests read the rows it collected.
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
@@ -23,6 +24,7 @@ import math
 import os
 import sys
 import time
+from typing import NamedTuple
 
 import duckdb
 
@@ -95,22 +97,37 @@ def build_jobs(spark, fn, sf_dir):
     return sdf, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+class Checked(NamedTuple):
+    """What ``check`` found for one query: the compare's complaints
+    (empty when it matched), the Spark and DuckDB seconds, the build's
+    job count, a note, the collected Spark rows (None for a rows-only
+    query, which is counted instead) and the built DataFrame."""
+
+    status: list
+    spark_s: float
+    duck_s: float
+    jobs: int
+    note: str
+    rows: list | None
+    df: object
+
+
 def check(fn, sql, spark, sf_dir, con):
     """Build one query through ``build_jobs``, run it on Spark (collect,
-    or count when it has no oracle) and its oracle on DuckDB; returns
-    (status, spark_s, duck_s, build_jobs, note, the built DataFrame)."""
+    or count when it has no oracle) and its oracle on DuckDB."""
     t0 = time.monotonic()
     sdf, jobs = build_jobs(spark, fn, sf_dir)
     if sql is None:
         n = sdf.count()
-        return [], time.monotonic() - t0, 0.0, jobs, f"(rows-only: {n} rows)", sdf
+        return Checked([], time.monotonic() - t0, 0.0, jobs, f"(rows-only: {n} rows)", None, sdf)
     spark_rows = sdf.collect()
     spark_s = time.monotonic() - t0
     t0 = time.monotonic()
     oracle = con.sql(sql)
     duck_cols, duck_rows = oracle.columns, oracle.fetchall()
     duck_s = time.monotonic() - t0
-    return compare(sdf.columns, spark_rows, duck_cols, duck_rows), spark_s, duck_s, jobs, "", sdf
+    status = compare(sdf.columns, spark_rows, duck_cols, duck_rows)
+    return Checked(status, spark_s, duck_s, jobs, "", spark_rows, sdf)
 
 
 def main():
@@ -135,7 +152,7 @@ def main():
         if only and name not in only:
             continue
         try:
-            status, s_s, d_s, jobs, note, _ = check(fn, oracles.get(name), spark, sf_dir, con)
+            status, s_s, d_s, jobs, note, *_ = check(fn, oracles.get(name), spark, sf_dir, con)
         except Exception as exc:  # noqa: BLE001
             status, s_s, d_s, jobs, note = (
                 [f"EXCEPTION {type(exc).__name__}: {exc}"], 0.0, 0.0, None, "")
