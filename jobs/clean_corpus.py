@@ -2,11 +2,11 @@
 
     spark-submit --py-files nreadability_spark.zip jobs/clean_corpus.py \
         --sf-dir /root/testdata/sf0.01 --out /path/out \
-        [--min-tokens 30] [--stage clean|training_ready]
+        [--stage clean|training_ready]
 
 Runs the composed pipeline over the documents table at ``--sf-dir``:
 
-- ``clean`` — quality gate + exact dedup + near-dup prune
+- ``clean`` — quality gate (``pipeline.MIN_TOKENS``) + exact dedup + near-dup prune
   (``plans.pipeline.clean_corpus``);
 - ``training_ready`` (default) — the above, then eval-slice exclusion,
   contamination filtering, and deterministic split assignment
@@ -32,26 +32,24 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--min-tokens", type=int, default=None)
     ap.add_argument("--stage", choices=("clean", "training_ready"), default="training_ready")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
 
-    from nreadability_spark.plans.pipeline import MIN_TOKENS, clean_corpus, training_ready
+    from nreadability_spark.plans.pipeline import clean_corpus, training_ready
     from nreadability_spark.session import get_spark
 
     spark = get_spark(app_name="nreadability-clean-corpus")
 
-    min_tokens = args.min_tokens if args.min_tokens is not None else MIN_TOKENS
     t0 = time.monotonic()
     if args.stage == "clean":
-        out = clean_corpus(spark, args.sf_dir, min_tokens=min_tokens)
+        out = clean_corpus(spark, args.sf_dir)
         out.write.mode("overwrite").parquet(args.out)
         back = spark.read.parquet(args.out)
         counts = {"survivors": back.count()}
     else:
-        out = training_ready(spark, args.sf_dir, min_tokens=min_tokens)
+        out = training_ready(spark, args.sf_dir)
         out.write.mode("overwrite").partitionBy("split").parquet(args.out)
         back = spark.read.parquet(args.out)
         counts = {

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nreadability_spark.functions import hashing
+
 # split on whitespace runs; trim first so no boundary empties
 _WS = r"\s+"
 
@@ -56,24 +58,23 @@ def bpe_token_estimate_sql(expr: str) -> str:
     )
 
 
-def exploded_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, pos, tok) — one row per token, 0-based position."""
-    return df.select(
-        F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("pos", "tok")
-    )
+def exploded_tokens(df: DataFrame) -> DataFrame:
+    """(doc_id, pos, tok) — one row per token of ``text``, 0-based
+    position."""
+    return df.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok"))
 
 
-def exploded_tokens_sql(table: str, text_expr: str = "text", id_col: str = "doc_id") -> str:
+def exploded_tokens_sql(table: str) -> str:
     # DuckDB 1.0 has no WITH ORDINALITY; parallel unnest zips the token
     # list with a 0-based range, matching Spark's posexplode
     return (
-        f"SELECT {id_col}, CAST(unnest(range(len(toks))) AS INT) AS pos, "
-        f"unnest(toks) AS tok "
-        f"FROM (SELECT {id_col}, {tokens_sql(text_expr)} AS toks FROM {table}) tk"
+        "SELECT doc_id, CAST(unnest(range(len(toks))) AS INT) AS pos, "
+        "unnest(toks) AS tok "
+        f"FROM (SELECT doc_id, {tokens_sql('text')} AS toks FROM {table}) tk"
     )
 
 
-def _tokenized(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+def _tokenized(df: DataFrame, n: int) -> DataFrame:
     """Project the token array into a MATERIALIZED column before any
     lambda touches it. Referencing the raw ``tokens(text)`` expression
     inside a ``transform`` lambda embeds the whole split() subtree at
@@ -81,124 +82,69 @@ def _tokenized(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
     -eliminate inside higher-order functions — the tokenizer re-ran per
     element, making shingle construction quadratic per document
     (measured 11x slower at sf0.1)."""
-    return df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("toks")
-    ).where(F.size("toks") >= n)
+    return df.select("doc_id", tokens(F.col("text")).alias("toks")).where(F.size("toks") >= n)
 
 
-def word_shingles(df: DataFrame, n: int = 3, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """DISTINCT n-word shingles per document: (id, shingle).
+def shingle_hashes(n: int) -> Column:
+    """array<bigint>: the 60-bit hash of the n-word shingle starting at
+    each position of the materialized ``toks`` column, in position
+    order (not distinct). The rows must hold at least n tokens."""
 
-    Built entirely map-side: the (pre-materialized) token array is
-    sliced with a ``transform`` over positions and deduplicated per
-    document with ``array_distinct`` BEFORE exploding — zero shuffles
-    (the old posexplode + lead()-window construction shuffled by
-    document). The SQL oracle twin keeps the window-based construction;
-    the shingle SETS are identical by definition, which is what every
-    consumer (signatures, Jaccard, sketches) operates on.
-    """
-    def shingle_at(i):
-        return F.concat_ws(
-            " ", *[F.element_at(F.col("toks"), i + k + 1) for k in range(n)]
+    def hash_at(i):
+        return hashing.h60(
+            F.concat_ws(" ", *[F.element_at(F.col("toks"), i + k + 1) for k in range(n)])
         )
 
-    positions = F.sequence(F.lit(0), F.size("toks") - n)
-    shingles = F.array_distinct(F.transform(positions, shingle_at))
-    return _tokenized(df, n, id_col, text_col).select(
-        F.col(id_col), F.explode(shingles).alias("shingle")
-    )
+    return F.transform(F.sequence(F.lit(0), F.size("toks") - n), hash_at)
 
 
-def hashed_shingles(df: DataFrame, n: int = 3, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """DISTINCT 60-bit shingle hashes per document: (id, sh60).
+def hashed_shingles(df: DataFrame, n: int) -> DataFrame:
+    """DISTINCT 60-bit shingle hashes per document: (doc_id, sh60).
 
     The shared shingle-hash stage: MinHash signatures, the LSH/Jaccard
     intersection joins, and the bottom-sketch all consume h60(shingle),
     never the shingle string — so the hash is applied INSIDE the
-    map-side array transform and only 8-byte longs are ever exploded,
-    shuffled, or joined (vs. ~n-word strings). Zero shuffles, like
-    ``word_shingles``.
+    map-side array transform over the (pre-materialized) token array,
+    deduplicated per document with ``array_distinct`` before exploding,
+    and only 8-byte longs are ever exploded, shuffled, or joined (vs.
+    ~n-word strings). Zero shuffles. The SQL twin keeps the lead()
+    window construction; the hash SETS are identical by definition,
+    which is what every consumer operates on.
     """
-    from nreadability_spark.functions import hashing
+    hashes = F.array_distinct(shingle_hashes(n))
+    return _tokenized(df, n).select("doc_id", F.explode(hashes).alias("sh60"))
 
-    def hash_at(i):
-        return hashing.h60(
-            F.concat_ws(" ", *[F.element_at(F.col("toks"), i + k + 1) for k in range(n)])
-        )
 
-    positions = F.sequence(F.lit(0), F.size("toks") - n)
-    hashes = F.array_distinct(F.transform(positions, hash_at))
-    return _tokenized(df, n, id_col, text_col).select(
-        F.col(id_col), F.explode(hashes).alias("sh60")
+def positional_shingle_hashes(df: DataFrame, n: int) -> DataFrame:
+    """POSITIONAL 60-bit shingle hashes per document: (doc_id, pos,
+    sh60), one row per token position (NOT distinct — position identity
+    is the point). The inverted-index posting construction for
+    span-level dedup: hashes are computed inside the map-side array
+    transform (``shingle_hashes``) and ``posexplode`` recovers the
+    position as the array index. Zero shuffles."""
+    return _tokenized(df, n).select(
+        "doc_id", F.posexplode(shingle_hashes(n)).alias("pos", "sh60")
     )
 
 
-def positional_shingle_hashes(df: DataFrame, n: int = 3, id_col: str = "doc_id",
-                              text_col: str = "text") -> DataFrame:
-    """POSITIONAL 60-bit shingle hashes per document: (id, pos, sh60),
-    one row per token position (NOT distinct — position identity is the
-    point). The inverted-index posting construction for span-level
-    dedup: hashes are computed inside the map-side array transform
-    (same lambda-CSE-safe materialized-token pattern as
-    ``hashed_shingles``) and ``posexplode`` recovers the position as
-    the array index. Zero shuffles."""
-    from nreadability_spark.functions import hashing
-
-    def hash_at(i):
-        return hashing.h60(
-            F.concat_ws(" ", *[F.element_at(F.col("toks"), i + k + 1) for k in range(n)])
-        )
-
-    positions = F.sequence(F.lit(0), F.size("toks") - n)
-    hashes = F.transform(positions, hash_at)
-    return _tokenized(df, n, id_col, text_col).select(
-        F.col(id_col), F.posexplode(hashes).alias("pos", "sh60")
-    )
-
-
-def positional_shingle_hashes_sql(table: str, n: int = 3, text_expr: str = "text",
-                                  id_col: str = "doc_id") -> str:
+def positional_shingle_hashes_sql(table: str, n: int) -> str:
     """DuckDB twin of ``positional_shingle_hashes``: lead()-window
     shingle construction keyed by token position."""
-    from nreadability_spark.functions import hashing
-
-    toks = exploded_tokens_sql(table, text_expr, id_col)
     leads = ["tok"] + [
-        f"lead(tok, {i}) OVER (PARTITION BY {id_col} ORDER BY pos)" for i in range(1, n)
+        f"lead(tok, {i}) OVER (PARTITION BY doc_id ORDER BY pos)" for i in range(1, n)
     ]
     lead_cols = ", ".join(f"{e} AS t{j}" for j, e in enumerate(leads))
     # n=1 has no lead columns to null-check (unigram hashes)
     non_null = " AND ".join(f"t{j} IS NOT NULL" for j in range(1, n)) or "TRUE"
     concat = " || ' ' || ".join(f"t{j}" for j in range(n))
     return (
-        f"SELECT {id_col}, pos, {hashing.h60_sql(f'({concat})')} AS sh60 "
-        f"FROM (SELECT {id_col}, pos, {lead_cols} FROM ({toks}) base) leads "
+        f"SELECT doc_id, pos, {hashing.h60_sql(f'({concat})')} AS sh60 "
+        f"FROM (SELECT doc_id, pos, {lead_cols} FROM ({exploded_tokens_sql(table)}) base) leads "
         f"WHERE {non_null}"
     )
 
 
-def hashed_shingles_sql(table: str, n: int = 3, text_expr: str = "text",
-                        id_col: str = "doc_id") -> str:
-    from nreadability_spark.functions import hashing
-
-    return (
-        f"SELECT DISTINCT {id_col}, {hashing.h60_sql('shingle')} AS sh60 "
-        f"FROM ({word_shingles_sql(table, n, text_expr, id_col)}) ws"
-    )
-
-
-def word_shingles_sql(table: str, n: int = 3, text_expr: str = "text", id_col: str = "doc_id") -> str:
-    toks = exploded_tokens_sql(table, text_expr, id_col)
-    leads = ["tok"] + [
-        f"lead(tok, {i}) OVER (PARTITION BY {id_col} ORDER BY pos)" for i in range(1, n)
-    ]
-    lead_cols = ", ".join(f"{e} AS t{j}" for j, e in enumerate(leads))
-    non_null = " AND ".join(f"t{j} IS NOT NULL" for j in range(1, n))
-    concat = " || ' ' || ".join(f"t{j}" for j in range(n))
-    return (
-        f"SELECT DISTINCT {id_col}, {concat} AS shingle "
-        f"FROM (SELECT {id_col}, pos, {lead_cols} FROM ({toks}) base) leads "
-        f"WHERE {non_null}"
-    )
+def hashed_shingles_sql(table: str, n: int) -> str:
+    """DuckDB twin of ``hashed_shingles``: the distinct positional
+    hashes."""
+    return f"SELECT DISTINCT doc_id, sh60 FROM ({positional_shingle_hashes_sql(table, n)}) ps"

@@ -50,14 +50,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nreadability_spark.functions import text as tx
+from nreadability_spark.operators.textops import load_documents
 
 BPE_ROUNDS = 12
 
 _MERGE_SCHEMA = "rank: long, lhs: string, rhs: string, merged: string, pair_count: long"
-
-
-def _load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def word_table(docs: DataFrame) -> DataFrame:
@@ -103,7 +100,7 @@ def _merge_fold(lhs: str, rhs: str) -> F.Column:
     )
 
 
-def fit_merges(words: DataFrame, rounds: int = BPE_ROUNDS):
+def fit_merges(words: DataFrame, rounds: int):
     """Run the R merge rounds; returns (merge list, final word table).
     Each round's argmax is ONE row collected to the driver — a learned
     parameter, not data."""
@@ -126,13 +123,13 @@ def fit_merges(words: DataFrame, rounds: int = BPE_ROUNDS):
     return merges, words
 
 
-def bpe_fit(spark: SparkSession, sf_dir: str, rounds: int = BPE_ROUNDS) -> DataFrame:
+def bpe_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table: (rank, lhs, rhs, merged, pair_count)."""
-    merges, _ = fit_merges(word_table(_load_documents(spark, sf_dir)), rounds)
+    merges, _ = fit_merges(word_table(load_documents(spark, sf_dir)), BPE_ROUNDS)
     return spark.createDataFrame(merges, _MERGE_SCHEMA).orderBy("rank")
 
 
-def bpe_encode(spark: SparkSession, sf_dir: str, rounds: int = BPE_ROUNDS) -> DataFrame:
+def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document subword statistics under the fitted merge list.
 
     Scale shape (100 TB): the fit already paid the R merge folds ONCE
@@ -150,8 +147,8 @@ def bpe_encode(spark: SparkSession, sf_dir: str, rounds: int = BPE_ROUNDS) -> Da
     of once per distinct word — measured 3-4x slower at sf0.1, and the
     gap widens with corpus size since doc-word pairs grow linearly
     while distinct words grow sub-linearly."""
-    docs = _load_documents(spark, sf_dir)
-    _, words = fit_merges(word_table(docs), rounds)
+    docs = load_documents(spark, sf_dir)
+    _, words = fit_merges(word_table(docs), BPE_ROUNDS)
     vocab = words.select("word", F.size("syms").cast("long").alias("n_sub"))
     doc_words = (
         docs.select("doc_id", F.explode(tx.tokens(F.col("text"))).alias("word"))
@@ -183,7 +180,7 @@ _FOLD_SQL = """list_reduce(list_transform(syms, x -> [x]),
     ELSE list_append(acc, x[1]) END)"""
 
 
-def _fit_ctes(rounds: int) -> tuple[str, str]:
+def _fit_ctes() -> tuple[str, str]:
     """Shared CTE chain: returns (cte_sql, final_words_name)."""
     # AS MATERIALIZED: every w{k} is referenced twice (by m{k+1} and
     # w{k+1}); DuckDB 1.0 inlines plain CTEs, which re-executes the
@@ -196,7 +193,7 @@ def _fit_ctes(rounds: int) -> tuple[str, str]:
   GROUP BY word
 )"""
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, BPE_ROUNDS + 1):
         prev, m = f"w{k - 1}", f"m{k}"
         parts.append(
             f"""{m} AS MATERIALIZED (
@@ -211,7 +208,7 @@ def _fit_ctes(rounds: int) -> tuple[str, str]:
         )
         fold = _FOLD_SQL.format(m=m)
         # LEFT JOIN ON TRUE (not a cross join): when pair counts exhaust
-        # before `rounds`, m{k} is EMPTY — a cross join would empty w{k}
+        # before BPE_ROUNDS, m{k} is EMPTY — a cross join would empty w{k}
         # and every round after it, silently zeroing the vocabulary,
         # while Spark's fit_merges breaks and keeps the last word table.
         # With the left join the m{k} columns come back NULL, the CASE
@@ -221,21 +218,21 @@ def _fit_ctes(rounds: int) -> tuple[str, str]:
             f"w{k} AS MATERIALIZED (\n  SELECT word, cnt, {fold} AS syms"
             f"\n  FROM {prev} LEFT JOIN {m} ON TRUE\n)"
         )
-    return "WITH " + ",\n".join(parts), f"w{rounds}"
+    return "WITH " + ",\n".join(parts), f"w{BPE_ROUNDS}"
 
 
-def bpe_fit_sql(rounds: int = BPE_ROUNDS) -> str:
-    ctes, _ = _fit_ctes(rounds)
+def bpe_fit_sql() -> str:
+    ctes, _ = _fit_ctes()
     union = "\nUNION ALL\n".join(
         f"SELECT CAST({k - 1} AS BIGINT) AS rank, l AS lhs, r AS rhs, merged, "
         f"CAST(c AS BIGINT) AS pair_count FROM m{k}"
-        for k in range(1, rounds + 1)
+        for k in range(1, BPE_ROUNDS + 1)
     )
     return f"{ctes}\nSELECT * FROM ({union}) all_merges ORDER BY rank"
 
 
-def bpe_encode_sql(rounds: int = BPE_ROUNDS) -> str:
-    ctes, final = _fit_ctes(rounds)
+def bpe_encode_sql() -> str:
+    ctes, final = _fit_ctes()
     return f"""{ctes},
 vocab AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_sub FROM {final}),
 doc_words AS (

@@ -111,14 +111,15 @@ def _sigmoid(z):
     return 1.0 / (1.0 + F.exp(-z))
 
 
-def fit_logreg(feats: DataFrame, iters: int = GD_ITERS, lr: float = GD_LR):
-    """Full-batch GD; returns the weight trajectory
-    [(iter, [w0..w3]), ...] with iter 1-based (after that update)."""
+def fit_logreg(feats: DataFrame):
+    """Full-batch GD, GD_ITERS rounds at rate GD_LR; returns the weight
+    trajectory [(iter, [w0..w3]), ...] with iter 1-based (after that
+    update)."""
     feats = feats.localCheckpoint()
     n = feats.count()
     w = [0.0] * N_FEATURES
     out = []
-    for t in range(1, iters + 1):
+    for t in range(1, GD_ITERS + 1):
         z = sum(F.col(f"x{j}") * F.lit(w[j]) for j in range(N_FEATURES))
         resid = _sigmoid(z) - F.col("y")
         sums = feats.agg(
@@ -130,34 +131,30 @@ def fit_logreg(feats: DataFrame, iters: int = GD_ITERS, lr: float = GD_LR):
             ]
         ).collect()[0]
         w = [
-            round(w[j] - lr * sums[f"g{j}"] / GD_MICRO / n, 6)
+            round(w[j] - GD_LR * sums[f"g{j}"] / GD_MICRO / n, 6)
             for j in range(N_FEATURES)
         ]
         out.append((t, list(w)))
     return out
 
 
-def quality_classifier_fit(
-    spark: SparkSession, sf_dir: str, iters: int = GD_ITERS
-) -> DataFrame:
+def quality_classifier_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() entry: the GD weight trajectory in long format
     (iter, feature, weight)."""
     feats = feature_frame(labeled_corpus(load_documents(spark, sf_dir)))
-    traj = fit_logreg(feats, iters)
+    traj = fit_logreg(feats)
     rows = [(t, j, w[j]) for t, w in traj for j in range(N_FEATURES)]
     return spark.createDataFrame(
         rows, "iter: long, feature: long, weight: double"
     ).orderBy("iter", "feature")
 
 
-def quality_classifier_apply(
-    spark: SparkSession, sf_dir: str, iters: int = GD_ITERS
-) -> DataFrame:
+def quality_classifier_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fit, then score every document with the final weights (micro
     fixed-point logit so the compared value is an exact BIGINT) and
     report the hard prediction vs the label."""
     feats = feature_frame(labeled_corpus(load_documents(spark, sf_dir)))
-    w = fit_logreg(feats, iters)[-1][1]
+    w = fit_logreg(feats)[-1][1]
     z = sum(F.col(f"x{j}") * F.lit(w[j]) for j in range(N_FEATURES))
     return (
         feats.select(
@@ -186,15 +183,15 @@ feats AS MATERIALIZED (
 )"""
 
 
-def _gd_ctes(iters: int, lr: float = GD_LR) -> str:
-    """labeled + feats + unrolled GD rounds w1..w{iters}."""
+def _gd_ctes() -> str:
+    """labeled + feats + unrolled GD rounds w1..w{GD_ITERS}."""
     parts = [
         _LABELED_SQL,
         _FEATS_SQL,
         "w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3, "
         "(SELECT count(*) FROM feats) AS n)",
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, GD_ITERS + 1):
         prev = f"w{t - 1}"
         z = " + ".join(f"f.x{j} * w.w{j}" for j in range(N_FEATURES))
         grads = ", ".join(
@@ -202,7 +199,7 @@ def _gd_ctes(iters: int, lr: float = GD_LR) -> str:
             for j in range(N_FEATURES)
         )
         updates = ", ".join(
-            f"round(w.w{j} - {lr} * g.g{j} / {GD_MICRO} / w.n, 6) AS w{j}"
+            f"round(w.w{j} - {GD_LR} * g.g{j} / {GD_MICRO} / w.n, 6) AS w{j}"
             for j in range(N_FEATURES)
         )
         parts.append(f"g{t} AS MATERIALIZED (SELECT {grads} FROM feats f, {prev} w)")
@@ -210,22 +207,22 @@ def _gd_ctes(iters: int, lr: float = GD_LR) -> str:
     return ",\n".join(parts)
 
 
-def quality_classifier_fit_sql(iters: int = GD_ITERS) -> str:
+def quality_classifier_fit_sql() -> str:
     rows = "\nUNION ALL\n".join(
         f"SELECT CAST({t} AS BIGINT) AS iter, CAST({j} AS BIGINT) AS feature, w{j} AS weight FROM w{t}"
-        for t in range(1, iters + 1)
+        for t in range(1, GD_ITERS + 1)
         for j in range(N_FEATURES)
     )
-    return f"WITH {_gd_ctes(iters)}\nSELECT * FROM ({rows}) tr ORDER BY iter, feature"
+    return f"WITH {_gd_ctes()}\nSELECT * FROM ({rows}) tr ORDER BY iter, feature"
 
 
-def quality_classifier_apply_sql(iters: int = GD_ITERS) -> str:
+def quality_classifier_apply_sql() -> str:
     z = " + ".join(f"f.x{j} * w.w{j}" for j in range(N_FEATURES))
-    return f"""WITH {_gd_ctes(iters)}
+    return f"""WITH {_gd_ctes()}
 SELECT f.doc_id, f.y,
        CAST(round(({z}) * {GD_MICRO}) AS BIGINT) AS logit_micro,
        CAST(({z}) > 0 AS BIGINT) AS pred
-FROM feats f, w{iters} w
+FROM feats f, w{GD_ITERS} w
 ORDER BY f.doc_id"""
 
 

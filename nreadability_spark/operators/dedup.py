@@ -20,8 +20,8 @@ twin built from the same expression builders:
   (distance <=3 => at least one of 4 chunks equal), verified with
   bit_count(xor). Shuffles only (chunk_key, doc_id, simhash).
 
-All thresholds are explicit parameters; the QUERIES entries pin them so
-the oracle SQL (same constants) stays in lockstep.
+Every threshold is a module constant that a builder and its oracle SQL
+both read, so the two stay in lockstep.
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ from nreadability_spark.functions import hashing
 from nreadability_spark.functions import text as tx
 from nreadability_spark.operators.textops import _norm_text, _norm_text_sql, load_documents
 
+DEDUP_NGRAM = 3  # shingle width of the Jaccard pairs, exact and LSH
+JACCARD_THRESHOLD = 0.2
 MINHASH_K = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
 SIMHASH_BITS = 64
@@ -40,6 +42,7 @@ SIMHASH_CHUNKS = 4  # 4 x 16-bit chunks => guaranteed recall at distance <= 3
 SIMHASH_MAX_DIST = 3
 _SIMHASH_LO_BITS = 60  # bits 0-59 from h60(tok); 60+ universal-hashed
 _SIMHASH_HI_IDX = 61  # universal-hash family index for the top bits
+CC_MAX_ITERS = 20  # label-propagation rounds before duplicate_components raises
 
 
 # --- exact dedup -------------------------------------------------------
@@ -69,12 +72,7 @@ ORDER BY keep_doc_id
 
 # --- n-gram Jaccard ----------------------------------------------------
 
-def ngram_jaccard_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact pairwise Jaccard via an inverted-index self-join on hashed
     shingles (8-byte longs in the shuffle, never strings). All-pairs:
     the scale-limited verification kernel — run MinHash-LSH for
@@ -87,7 +85,7 @@ def ngram_jaccard_pairs(
     # ~an order of magnitude smaller than string shingles — and is read
     # 3x (sizes, both join sides); at 100 TB prefer recomputation (the
     # construction is map-side) over materializing the explode
-    sh = tx.hashed_shingles(docs, n=n).cache()
+    sh = tx.hashed_shingles(docs, DEDUP_NGRAM).cache()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -102,16 +100,16 @@ def ngram_jaccard_pairs(
             "jaccard",
             F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", F.col("n_inter").cast("long").alias("n_inter"), "jaccard")
         .orderBy("doc_a", "doc_b")
     )
     return out
 
 
-def ngram_jaccard_sql(n: int = 3, threshold: float = 0.2) -> str:
+def ngram_jaccard_sql() -> str:
     return f"""
-WITH sh AS ({tx.hashed_shingles_sql('documents', n)}),
+WITH sh AS ({tx.hashed_shingles_sql('documents', DEDUP_NGRAM)}),
 sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_inter
@@ -123,7 +121,7 @@ SELECT doc_a, doc_b, n_inter,
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 4) >= {threshold}
+WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 4) >= {JACCARD_THRESHOLD}
 ORDER BY doc_a, doc_b
 """
 
@@ -161,17 +159,12 @@ def lsh_band_table(sigs: DataFrame) -> DataFrame:
     return bands
 
 
-def minhash_lsh_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate pairs from LSH banding, verified with exact Jaccard.
 
     Returns (doc_a, doc_b, est_jaccard, jaccard) — ``est_jaccard`` is
     the signature-agreement estimate, ``jaccard`` the exact verified
-    value (>= threshold).
+    value (>= JACCARD_THRESHOLD).
 
     Exact-dedup-first (the result set is IDENTICAL to the uncollapsed
     DuckDB oracle's): byte-identical documents all land in the same
@@ -193,7 +186,7 @@ def minhash_lsh_pairs(
     sign_docs = docs.join(reps.select("doc_id"), "doc_id")
     # cache() = MEMORY_AND_DISK; see ngram_jaccard_pairs note — at
     # 100 TB drop the persist and recompute the map-side construction
-    sh = tx.hashed_shingles(sign_docs, n=n).cache()
+    sh = tx.hashed_shingles(sign_docs, DEDUP_NGRAM).cache()
     sigs = minhash_signatures(sh)
     bands = lsh_band_table(sigs)
 
@@ -233,7 +226,7 @@ def minhash_lsh_pairs(
             "jaccard",
             F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "est_jaccard", "jaccard")
     )
 
@@ -279,7 +272,7 @@ def minhash_lsh_pairs(
     return cross.unionAll(within).orderBy("doc_a", "doc_b")
 
 
-def minhash_lsh_sql(n: int = 3, threshold: float = 0.2) -> str:
+def minhash_lsh_sql() -> str:
     rows_per_band = MINHASH_K // LSH_BANDS
     sig_cols = ",\n         ".join(
         f"min({hashing.minhash_term_from_h_sql('h', i)}) AS sig_{i}" for i in range(MINHASH_K)
@@ -296,7 +289,7 @@ def minhash_lsh_sql(n: int = 3, threshold: float = 0.2) -> str:
         f"CAST(a.sig_{i} = b.sig_{i} AS INT)" for i in range(MINHASH_K)
     ) + f") / {float(MINHASH_K)}"
     return f"""
-WITH sh AS ({tx.hashed_shingles_sql('documents', n)}),
+WITH sh AS ({tx.hashed_shingles_sql('documents', DEDUP_NGRAM)}),
 hashed AS (SELECT doc_id, sh60 % {hashing.P} AS h FROM sh),
 sigs AS (SELECT doc_id, {sig_cols} FROM hashed GROUP BY doc_id),
 bands AS ({bands_sql}),
@@ -318,7 +311,7 @@ SELECT doc_a, doc_b, est_jaccard,
 FROM inter
 JOIN sizes za ON za.doc_id = doc_a
 JOIN sizes zb ON zb.doc_id = doc_b
-WHERE round(n_inter / (za.n_sh + zb.n_sh - n_inter), 4) >= {threshold}
+WHERE round(n_inter / (za.n_sh + zb.n_sh - n_inter), 4) >= {JACCARD_THRESHOLD}
 ORDER BY doc_a, doc_b
 """
 
@@ -376,14 +369,15 @@ def simhash_values(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return per_doc.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def _simhash_chunk_table(sims: DataFrame, bits: int, chunks: int) -> DataFrame:
+def _simhash_chunk_table(sims: DataFrame, bits: int) -> DataFrame:
     """(doc_id, simhash, chunk, chunk_key) — one row per pigeonhole
-    chunk. Arithmetic shiftright + mask extracts each chunk correctly
-    even from the signed top chunk (the mask keeps only the true bits)."""
-    chunk_bits = bits // chunks
+    chunk, SIMHASH_CHUNKS of them. Arithmetic shiftright + mask extracts
+    each chunk correctly even from the signed top chunk (the mask keeps
+    only the true bits)."""
+    chunk_bits = bits // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
     out = None
-    for c in range(chunks):
+    for c in range(SIMHASH_CHUNKS):
         part = sims.select(
             "doc_id",
             "simhash",
@@ -394,14 +388,8 @@ def _simhash_chunk_table(sims: DataFrame, bits: int, chunks: int) -> DataFrame:
     return out
 
 
-def simhash_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    max_dist: int = SIMHASH_MAX_DIST,
-    bits: int = SIMHASH_BITS,
-    chunks: int = SIMHASH_CHUNKS,
-) -> DataFrame:
-    """Near-dup pairs at Hamming distance <= ``max_dist``, candidates
+def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs at Hamming distance <= ``SIMHASH_MAX_DIST``, candidates
     from the chunk pigeonhole (distance <= chunks-1 => some chunk
     equal), verified with ``bit_count(xor)``.
 
@@ -411,8 +399,8 @@ def simhash_pairs(
     into every bucket (the quadratic pigeonhole join was the one
     remaining scale-killer at 32 bits; see the width flood test)."""
     docs = load_documents(spark, sf_dir)
-    sims = simhash_values(docs, bits=bits)
-    ch = _simhash_chunk_table(sims, bits, chunks)
+    sims = simhash_values(docs, bits=SIMHASH_BITS)
+    ch = _simhash_chunk_table(sims, SIMHASH_BITS)
     a, b = ch.alias("a"), ch.alias("b")
     out = (
         a.join(
@@ -427,17 +415,14 @@ def simhash_pairs(
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("int").alias("hamming"),
         )
         .distinct()
-        .where(F.col("hamming") <= max_dist)
+        .where(F.col("hamming") <= SIMHASH_MAX_DIST)
         .orderBy("doc_a", "doc_b")
     )
     return out
 
 
-def simhash_sql(
-    max_dist: int = SIMHASH_MAX_DIST,
-    bits: int = SIMHASH_BITS,
-    chunks: int = SIMHASH_CHUNKS,
-) -> str:
+def simhash_sql() -> str:
+    bits, chunks = SIMHASH_BITS, SIMHASH_CHUNKS
     chunk_bits = bits // chunks
     mask = (1 << chunk_bits) - 1
     toks_src = tx.exploded_tokens_sql("documents")
@@ -487,7 +472,7 @@ SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM chunks a JOIN chunks b
   ON a.chunk = b.chunk AND a.chunk_key = b.chunk_key AND a.doc_id < b.doc_id
-WHERE CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) <= {max_dist}
+WHERE CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) <= {SIMHASH_MAX_DIST}
 ORDER BY doc_a, doc_b
 """
 
@@ -526,9 +511,7 @@ def _cc_round(edges: DataFrame, labels: DataFrame) -> tuple[DataFrame, int]:
     return new_labels, changed
 
 
-def duplicate_components(
-    spark: SparkSession, sf_dir: str, max_iters: int = 20
-) -> DataFrame:
+def duplicate_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the verified near-dup pair graph:
     (doc_id, component) with component = the minimum doc_id reachable
     through near-dup edges — the clustering pass that turns pairwise
@@ -546,7 +529,7 @@ def duplicate_components(
     the logical plan layers one join per round and a late executor loss
     recomputes the whole history (on a real cluster use
     ``checkpoint()`` to the job's scratch dir for executor-loss-safe
-    truncation). Non-convergence within ``max_iters`` RAISES — a silent
+    truncation). Non-convergence within ``CC_MAX_ITERS`` RAISES — a silent
     partial labeling would diverge from the transitive-closure oracle
     (no silent caps).
 
@@ -569,15 +552,15 @@ def duplicate_components(
         .localCheckpoint()
     )
     changed = -1
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         labels, changed = _cc_round(edges, labels)
         if changed == 0:
             break
     edges.unpersist()
     if changed != 0:
         raise RuntimeError(
-            f"duplicate_components did not converge within {max_iters} "
-            f"rounds ({changed} labels still changing); raise max_iters"
+            f"duplicate_components did not converge within {CC_MAX_ITERS} "
+            f"rounds ({changed} labels still changing); raise CC_MAX_ITERS"
         )
     return labels.orderBy("doc_id")
 

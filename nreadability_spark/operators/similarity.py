@@ -7,8 +7,9 @@ Two operators:
   global top-k via window rank. At 100 TB you shard this with a
   broadcast of the (tiny) query set: cost O(rows x dim), one pass.
 - **IVF top-k** — the scale path: vectors are assigned to the nearest
-  of C coarse centroids (inverted file); a query probes only the
-  ``nprobe`` nearest cells, scanning a fraction ~nprobe/C of the data.
+  of C = IVF_CENTROIDS coarse centroids (inverted file); a query probes
+  only the IVF_NPROBE nearest cells, scanning a fraction ~IVF_NPROBE/C
+  of the data.
   Here the centroids are a deterministic pinned subset of the vectors
   (stand-in for a sampled k-means fit, which at scale is a separate
   Spark job); the operator mechanics — assignment, cell pruning,
@@ -46,9 +47,9 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pinned(emb: DataFrame, k: int) -> DataFrame:
-    """(cent_id, c): the first k vectors by id as centroids."""
-    return emb.where(F.col("vec_id") < k).select(
+def _pinned(emb: DataFrame) -> DataFrame:
+    """(cent_id, c): the first IVF_CENTROIDS vectors by id as centroids."""
+    return emb.where(F.col("vec_id") < IVF_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
     )
 
@@ -97,8 +98,8 @@ def _cosine_sql(a: str, b: str) -> str:
     )
 
 
-def knn_brute_force(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
-    """Top-k cosine neighbors of the pinned query vector (vec_id=0)."""
+def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-TOP_K cosine neighbors of the pinned query vector (vec_id=0)."""
     emb = _vectors(spark, sf_dir)
     q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("e").alias("q"))
     scored = (
@@ -109,13 +110,13 @@ def knn_brute_force(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFra
     w = Window.orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select("rank", "vec_id", F.round("cos", 6).alias("cos_sim"))
         .orderBy("rank")
     )
 
 
-def knn_brute_force_sql(k: int = TOP_K) -> str:
+def knn_brute_force_sql() -> str:
     cos = _cosine_sql("e.emb", "q.emb")
     return f"""
 WITH {_BASE_SQL},
@@ -128,25 +129,25 @@ ranked AS (
   SELECT row_number() OVER (ORDER BY cos DESC, vec_id) AS rank, vec_id, cos FROM scored
 )
 SELECT rank, vec_id, round(cos, 6) AS cos_sim FROM ranked
-WHERE rank <= {k} ORDER BY rank
+WHERE rank <= {TOP_K} ORDER BY rank
 """
 
 
-def knn_ivf(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> DataFrame:
-    """IVF(nprobe) approximate top-k for the pinned query vector over
-    the pinned stand-in centroids, so the oracle stays closed-form
-    (``knn_ivf_fitted`` is the production wiring)."""
+def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF(IVF_NPROBE) approximate top-IVF_TOP_K for the pinned query
+    vector over the pinned stand-in centroids, so the oracle stays
+    closed-form (``knn_ivf_fitted`` is the production wiring)."""
     emb = _vectors(spark, sf_dir)
-    return _ivf_search(emb, _pinned(emb, IVF_CENTROIDS), k)
+    return _ivf_search(emb, _pinned(emb))
 
 
-def _ivf_search(emb: DataFrame, cents: DataFrame, k: int) -> DataFrame:
-    """The IVF search over ``emb`` (vec_id, e) and the (cent_id, c)
-    table ``cents``.
+def _ivf_search(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """The IVF top-IVF_TOP_K search over ``emb`` (vec_id, e) and the
+    (cent_id, c) table ``cents``.
 
     Stage 1 (build): every vector -> nearest centroid (broadcast join
     against C centroids, window argmax). Stage 2 (search): query picks
-    its ``nprobe`` nearest cells; only those cells are rescored.
+    its IVF_NPROBE nearest cells; only those cells are rescored.
     """
     q = emb.where(F.col("vec_id") == QUERY_VEC_ID)
     probe_cells = _assign_to_centroids(q, cents, top=IVF_NPROBE).select("cell")
@@ -160,7 +161,7 @@ def _ivf_search(emb: DataFrame, cents: DataFrame, k: int) -> DataFrame:
     w_rank = Window.orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         cands.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= IVF_TOP_K)
         .select("rank", "vec_id", F.col("cell").cast("long").alias("cell"),
                 F.round("cos", 6).alias("cos_sim"))
         .orderBy("rank")
@@ -200,7 +201,7 @@ probe AS (
     return sql
 
 
-def _knn_ivf_body_sql(cents: str, k: int = IVF_TOP_K) -> str:
+def _knn_ivf_body_sql(cents: str) -> str:
     """The search CTE chain over ``base`` (vec_id, emb) and the
     centroid table ``cents`` (cent_id, c), both defined by the caller."""
     qcos = _cosine_sql("e.emb", "q.emb")
@@ -219,16 +220,16 @@ ranked AS (
   FROM cands
 )
 SELECT rank, vec_id, cell, round(cos, 6) AS cos_sim FROM ranked
-WHERE rank <= {k} ORDER BY rank
+WHERE rank <= {IVF_TOP_K} ORDER BY rank
 """
 
 
-def knn_ivf_sql(k: int = IVF_TOP_K) -> str:
+def knn_ivf_sql() -> str:
     """Pinned-centroid variant (closed-form cents CTE)."""
     return (
         f"WITH {_BASE_SQL},\n"
         f"cents AS (SELECT vec_id AS cent_id, emb AS c FROM base WHERE vec_id < {IVF_CENTROIDS}),\n"
-        + _knn_ivf_body_sql("cents", k)
+        + _knn_ivf_body_sql("cents")
     )
 
 
@@ -258,8 +259,9 @@ def _assign_to_centroids(
     )
 
 
-def fit_centroids(emb: DataFrame, k: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS) -> DataFrame:
-    """Lloyd k-means over ``emb`` (vec_id, e) as a Spark job -> (cent_id, c).
+def fit_centroids(emb: DataFrame) -> DataFrame:
+    """Lloyd k-means over ``emb`` (vec_id, e) as a Spark job -> (cent_id, c),
+    k = IVF_CENTROIDS cells, KMEANS_ITERS iterations.
 
     Deterministic by construction so the fit itself is oracle-checkable:
     pinned init (first k vectors), cosine assignment with lowest-id tie
@@ -275,8 +277,8 @@ def fit_centroids(emb: DataFrame, k: int = IVF_CENTROIDS, iters: int = KMEANS_IT
     agg with map-side partials — no collect, no driver math; the
     centroid table itself is the only driver-sized object.
     """
-    cents = _pinned(emb, k)
-    for _ in range(iters):
+    cents = _pinned(emb)
+    for _ in range(KMEANS_ITERS):
         assigned = _assign_to_centroids(emb, cents)
         means = (
             assigned.select("cell", F.posexplode("e").alias("pos", "val"))
@@ -331,29 +333,29 @@ c{idx} AS (
 )"""
 
 
-def _kmeans_cte_chain(k: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS) -> str:
-    """``base`` + the unrolled Lloyd CTEs ending at ``c{iters}``
+def _kmeans_cte_chain() -> str:
+    """``base`` + the unrolled Lloyd CTEs ending at ``c{KMEANS_ITERS}``
     (cent_id, c) — shared by the fit oracle and the fitted-IVF oracle."""
     parts = [
         f"{_BASE_SQL},",
-        f"c0 AS (SELECT vec_id AS cent_id, emb AS c FROM base WHERE vec_id < {k})",
+        f"c0 AS (SELECT vec_id AS cent_id, emb AS c FROM base WHERE vec_id < {IVF_CENTROIDS})",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, KMEANS_ITERS + 1):
         parts.append("," + _kmeans_iter_sql(f"c{i - 1}", i))
     return "\n".join(parts)
 
 
-def centroid_fit_sql(k: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS) -> str:
-    return f"""WITH {_kmeans_cte_chain(k, iters)}
+def centroid_fit_sql() -> str:
+    return f"""WITH {_kmeans_cte_chain()}
 SELECT CAST(cent_id AS BIGINT) AS cell, CAST(dim AS BIGINT) AS dim, centroid
 FROM (
   SELECT cent_id, unnest(range(1, {DIM + 1})) AS dim, unnest(c) AS centroid
-  FROM c{iters}
+  FROM c{KMEANS_ITERS}
 ) t ORDER BY cell, dim
 """
 
 
-def knn_ivf_fitted(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> DataFrame:
+def knn_ivf_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production IVF wiring, composed end-to-end: distributed
     k-means fit -> inverted-file build -> nprobe search — the DEFAULT
     ``sim_knn_ivf`` path (the pinned-centroid variant stays as
@@ -362,13 +364,11 @@ def knn_ivf_fitted(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> Data
     exact, because each iteration's centroids are rounded to 6 decimals
     as part of the algorithm (engine-independent doubles)."""
     emb = _vectors(spark, sf_dir)
-    return _ivf_search(emb, fit_centroids(emb), k)
+    return _ivf_search(emb, fit_centroids(emb))
 
 
-def knn_ivf_fitted_sql(
-    k: int = IVF_TOP_K, c: int = IVF_CENTROIDS, iters: int = KMEANS_ITERS
-) -> str:
-    return f"WITH {_kmeans_cte_chain(c, iters)},\n" + _knn_ivf_body_sql(f"c{iters}", k)
+def knn_ivf_fitted_sql() -> str:
+    return f"WITH {_kmeans_cte_chain()},\n" + _knn_ivf_body_sql(f"c{KMEANS_ITERS}")
 
 
 # production near-dup threshold is ~0.95; the synthetic embeddings are
@@ -474,12 +474,9 @@ def _pair_cos(norm: str):
     )
 
 
-def embedding_near_dups(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = COSINE_DUP_THRESHOLD,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: vectors are blocked by
+def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs at cosine >=
+    ``COSINE_DUP_THRESHOLD``: vectors are blocked by
     their IVF cell (nearest pinned centroid), and only same-cell pairs
     are exactly scored — the coarse-quantizer blocking that keeps this
     O(n^2 / C) instead of O(n^2) at scale (recall is bounded by cell
@@ -520,7 +517,7 @@ def embedding_near_dups(
             F.col("a.cell").cast("long").alias("cell"),
             _pair_cos("n").alias("cos_sim"),
         )
-        .where(F.col("cos_sim") >= threshold)
+        .where(F.col("cos_sim") >= COSINE_DUP_THRESHOLD)
     )
     if strategy != "broadcast":
         pairs = pairs.select(
@@ -532,7 +529,7 @@ def embedding_near_dups(
     return pairs.orderBy("vec_a", "vec_b")
 
 
-def embedding_near_dups_sql(threshold: float = COSINE_DUP_THRESHOLD) -> str:
+def embedding_near_dups_sql() -> str:
     pcos = _cosine_sql("a.emb", "b.emb")
     return f"""
 WITH {_BASE_SQL},
@@ -545,7 +542,7 @@ FROM base a
 JOIN assigned aa ON aa.vec_id = a.vec_id
 JOIN assigned ab ON ab.cell = aa.cell
 JOIN base b ON b.vec_id = ab.vec_id AND a.vec_id < b.vec_id
-WHERE round({pcos}, 6) >= {threshold}
+WHERE round({pcos}, 6) >= {COSINE_DUP_THRESHOLD}
 ORDER BY vec_a, vec_b
 """
 
@@ -634,10 +631,13 @@ def _l2sq(a, b):
     )
 
 
-def _l2sq_sql(a: str, b: str, dims: int = PQ_SUBDIM) -> str:
+def _l2sq_sql(a: str, b: str) -> str:
+    """Squared L2 of two PQ subvectors, the twin of ``_l2sq``."""
     return (
         "("
-        + " + ".join(f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])" for i in range(1, dims + 1))
+        + " + ".join(
+            f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])" for i in range(1, PQ_SUBDIM + 1)
+        )
         + ")"
     )
 
@@ -666,8 +666,8 @@ def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def fit_pq_codebook(emb: DataFrame, iters: int = PQ_ITERS) -> DataFrame:
-    """Per-subspace Lloyd fit -> (m, cent_id, c). ALL subspaces train
+def fit_pq_codebook(emb: DataFrame) -> DataFrame:
+    """Per-subspace Lloyd fit, PQ_ITERS iterations -> (m, cent_id, c). ALL subspaces train
     in one distributed job per iteration (the subspace id is just
     another grouping key) — same determinism contract as
     ``fit_centroids``: pinned init, 6-dp-rounded means, lowest-id tie
@@ -676,7 +676,7 @@ def fit_pq_codebook(emb: DataFrame, iters: int = PQ_ITERS) -> DataFrame:
     cents = sub.where(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("cent_id"), F.col("sv").alias("c")
     )
-    for _ in range(iters):
+    for _ in range(PQ_ITERS):
         assigned = _pq_assign(sub, cents)
         means = (
             assigned.select("m", F.col("code").alias("cell"), F.posexplode("sv").alias("pos", "val"))
@@ -732,10 +732,9 @@ def _residual_vectors(emb: DataFrame, coarse: DataFrame) -> DataFrame:
 
 
 def _adc_knn(
-    spark: SparkSession, sf_dir: str, k: int, nprobe: int | None = None,
-    residual: bool = False,
+    spark: SparkSession, sf_dir: str, nprobe: int | None = None, residual: bool = False
 ) -> DataFrame:
-    """The asymmetric-distance (ADC) top-k search of Jegou et al. 2011
+    """The asymmetric-distance (ADC) top-IVF_TOP_K search of Jegou et al. 2011
     behind the three PQ kNN queries. Without ``nprobe`` it scans every
     vector's PQ codes; with it, a fitted coarse quantizer files each
     vector under its nearest cell and the query scans only its
@@ -800,7 +799,7 @@ def _adc_knn(
     w = Window.orderBy("adist_micro", "vec_id")
     return (
         adist.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= IVF_TOP_K)
         .select(
             F.col("rank").cast("long").alias("rank"),
             "vec_id",
@@ -811,8 +810,8 @@ def _adc_knn(
     )
 
 
-def knn_pq_adc(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> DataFrame:
-    """Asymmetric-distance top-k: the query is compared to CODEBOOK
+def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric-distance top-IVF_TOP_K: the query is compared to CODEBOOK
     entries once (PQ_M x PQ_K distances, micro fixed-point, broadcast),
     then every vector's approximate distance is a BIGINT sum of PQ_M
     table lookups over the codes table — the search never touches a
@@ -827,17 +826,15 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K) -> DataFram
     signal instead: ADC's top-10 averages well below the corpus mean
     exact distance. On real (clustered) embeddings PQ recall behaves
     as in Jegou et al."""
-    return _adc_knn(spark, sf_dir, k)
+    return _adc_knn(spark, sf_dir)
 
 
-def knn_ivf_pq(
-    spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE
-) -> DataFrame:
+def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full inverted-file + product-quantization search, composed
     end-to-end: distributed coarse k-means fit -> per-cell inverted
     lists STORING PQ codes (the index build joins cell assignment and
     codes once, at build time — at 100 TB this is the materialized
-    index table, bytes per vector) -> query probes ``nprobe`` cells and
+    index table, bytes per vector) -> query probes IVF_NPROBE cells and
     ranks candidates by ADC BIGINT sums. The search touches raw floats
     only for the M x K codebook distance table; every per-vector
     operation is a code lookup. This variant trains PQ on RAW vectors
@@ -845,22 +842,20 @@ def knn_ivf_pq(
     IVFADC layout (PQ over vec - coarse centroid, per-cell ADC
     tables), with strictly lower reconstruction error — see
     ``test_residual_pq_strictly_improves_reconstruction``."""
-    return _adc_knn(spark, sf_dir, k, nprobe)
+    return _adc_knn(spark, sf_dir, IVF_NPROBE)
 
 
-def knn_ivf_pq_residual(
-    spark: SparkSession, sf_dir: str, k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE
-) -> DataFrame:
+def knn_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC with RESIDUAL encoding — the exact FAISS ``IVFx,PQy``
     layout that ``knn_ivf_pq`` simplifies away: the PQ codebook is
     fitted on residuals (vec - coarse centroid), the inverted lists
     store residual codes, and the query builds a SEPARATE ADC distance
     table per probed cell from its own residual (q - c_cell) — so the
-    table is nprobe x M x K entries, still a broadcast-sized model.
+    table is IVF_NPROBE x M x K entries, still a broadcast-sized model.
     Everything else keeps the composed plan's scale shape: the search
     touches raw floats only for the distance tables; per-vector work is
     code lookups and a BIGINT sum."""
-    return _adc_knn(spark, sf_dir, k, nprobe, residual=True)
+    return _adc_knn(spark, sf_dir, IVF_NPROBE, residual=True)
 
 
 def _pq_slices_sql(src: str, key: str = "vec_id") -> str:
@@ -885,9 +880,9 @@ def _pq_assign_sql(book: str) -> str:
   ) t WHERE r = 1"""
 
 
-def _pq_cte_chain(iters: int = PQ_ITERS, include_base: bool = True, src: str = "base") -> str:
+def _pq_cte_chain(include_base: bool = True, src: str = "base") -> str:
     """base + sub + unrolled per-subspace Lloyd CTEs ending at
-    ``pc{iters}`` (m, cent_id, c). ``include_base=False`` composes with
+    ``pc{PQ_ITERS}`` (m, cent_id, c). ``include_base=False`` composes with
     a caller that already defined ``base`` (the IVF+PQ oracle); ``src``
     selects the (vec_id, emb) table the subvectors slice (the residual
     oracle points it at the residual CTE)."""
@@ -900,7 +895,7 @@ def _pq_cte_chain(iters: int = PQ_ITERS, include_base: bool = True, src: str = "
             0,
             "base AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)",
         )
-    for i in range(1, iters + 1):
+    for i in range(1, PQ_ITERS + 1):
         parts.append(f"pa{i} AS MATERIALIZED ({_pq_assign_sql(f'pc{i - 1}')})")
         parts.append(
             f"""pc{i} AS MATERIALIZED (
@@ -915,25 +910,22 @@ def _pq_cte_chain(iters: int = PQ_ITERS, include_base: bool = True, src: str = "
     return ",\n".join(parts)
 
 
-def pq_codes_sql(iters: int = PQ_ITERS) -> str:
-    return f"""WITH {_pq_cte_chain(iters)}
+def pq_codes_sql() -> str:
+    return f"""WITH {_pq_cte_chain()}
 SELECT vec_id, CAST(m AS BIGINT) AS sub, CAST(code AS BIGINT) AS code,
        round(d, 6) AS err
-FROM ({_pq_assign_sql(f"pc{iters}")}) final ORDER BY vec_id, sub
+FROM ({_pq_assign_sql(f"pc{PQ_ITERS}")}) final ORDER BY vec_id, sub
 """
 
 
-def _adc_knn_sql(
-    k: int, nprobe: int | None = None, residual: bool = False,
-    c: int = IVF_CENTROIDS, kmeans_iters: int = KMEANS_ITERS, pq_iters: int = PQ_ITERS,
-) -> str:
+def _adc_knn_sql(nprobe: int | None = None, residual: bool = False) -> str:
     """The SQL twin of ``_adc_knn``: the unrolled fits, the codes, the
     query's distance table(s), and the top-k over the summed lookups."""
-    book, ivf = f"pc{pq_iters}", nprobe is not None
+    book, ivf = f"pc{PQ_ITERS}", nprobe is not None
     ctes = []
     if ivf:
-        cents = f"c{kmeans_iters}"
-        ctes += [_kmeans_cte_chain(c, kmeans_iters), _assign_sql(cents, nprobe=nprobe)]
+        cents = f"c{KMEANS_ITERS}"
+        ctes += [_kmeans_cte_chain(), _assign_sql(cents, nprobe=nprobe)]
     if residual:
         minus = f"list_transform(range(1, {DIM + 1}), i -> {{}}.emb[i] - c.c[i])"
         ctes.append(f"""res AS MATERIALIZED (
@@ -942,7 +934,7 @@ def _adc_knn_sql(
   JOIN assigned a ON a.vec_id = e.vec_id
   JOIN {cents} c ON c.cent_id = a.cell
 )""")
-    ctes.append(_pq_cte_chain(pq_iters, not ivf, "res" if residual else "base"))
+    ctes.append(_pq_cte_chain(not ivf, "res" if residual else "base"))
     ctes.append(f"codes AS MATERIALIZED ({_pq_assign_sql(book)})")
     if residual:
         ctes.append(f"""qres AS (
@@ -976,22 +968,20 @@ def _adc_knn_sql(
 SELECT CAST(rank AS BIGINT) AS rank, vec_id, {out_cell}CAST(adist_micro AS BIGINT) AS adist_micro
 FROM (
   SELECT *, row_number() OVER (ORDER BY adist_micro, vec_id) AS rank FROM adist
-) r WHERE rank <= {k} ORDER BY rank
+) r WHERE rank <= {IVF_TOP_K} ORDER BY rank
 """
 
 
-def knn_pq_adc_sql(k: int = IVF_TOP_K, iters: int = PQ_ITERS) -> str:
-    return _adc_knn_sql(k, pq_iters=iters)
+def knn_pq_adc_sql() -> str:
+    return _adc_knn_sql()
 
 
-def knn_ivf_pq_sql(k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE, c: int = IVF_CENTROIDS,
-                   kmeans_iters: int = KMEANS_ITERS, pq_iters: int = PQ_ITERS) -> str:
-    return _adc_knn_sql(k, nprobe, False, c, kmeans_iters, pq_iters)
+def knn_ivf_pq_sql() -> str:
+    return _adc_knn_sql(IVF_NPROBE)
 
 
-def knn_ivf_pq_residual_sql(k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE, c: int = IVF_CENTROIDS,
-                            kmeans_iters: int = KMEANS_ITERS, pq_iters: int = PQ_ITERS) -> str:
-    return _adc_knn_sql(k, nprobe, True, c, kmeans_iters, pq_iters)
+def knn_ivf_pq_residual_sql() -> str:
+    return _adc_knn_sql(IVF_NPROBE, residual=True)
 
 
 # --- SemDeDup: semantic deduplication over embedding clusters ----------
@@ -1004,14 +994,10 @@ def knn_ivf_pq_residual_sql(k: int = IVF_TOP_K, nprobe: int = IVF_NPROBE, c: int
 SEMDEDUP_EPS = COSINE_DUP_THRESHOLD
 
 
-def semantic_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    eps: float = SEMDEDUP_EPS,
-) -> DataFrame:
+def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means-cluster
     the embedding space, then inside each cluster drop every vector
-    that is eps-cosine-close to a vector ranked BEFORE it. Rank order
+    that is eps-cosine-close (eps = SEMDEDUP_EPS) to a vector ranked BEFORE it. Rank order
     follows the paper: ascending cosine-to-centroid (the most atypical
     member of each semantic group survives), ties by vec_id. The rule
     is the paper's released implementation — "dominated by any
@@ -1060,7 +1046,7 @@ def semantic_dedup(
     )
     dominated = (
         _cell_pairs(ranked, strategy, "rnk")
-        .where(_pair_cos("nn") >= F.lit(eps))
+        .where(_pair_cos("nn") >= F.lit(SEMDEDUP_EPS))
         .select(later.alias("vec_id"))
         .distinct()
     )
@@ -1078,15 +1064,11 @@ def semantic_dedup(
     )
 
 
-def semantic_dedup_sql(
-    eps: float = SEMDEDUP_EPS,
-    k: int = IVF_CENTROIDS,
-    iters: int = KMEANS_ITERS,
-) -> str:
+def semantic_dedup_sql() -> str:
     pdot = _dot_sql("i.emb", "j.emb")
     return f"""
-WITH {_kmeans_cte_chain(k, iters)},
-{_assign_sql(f"c{iters}", emb=True, ccos=", round(ccos, 6) AS ccos")},
+WITH {_kmeans_cte_chain()},
+{_assign_sql(f"c{KMEANS_ITERS}", emb=True, ccos=", round(ccos, 6) AS ccos")},
 ranked AS MATERIALIZED (
   SELECT *, row_number() OVER (PARTITION BY cell ORDER BY ccos ASC, vec_id) AS rnk,
          sqrt({_dot_sql('emb', 'emb')}) AS nn
@@ -1096,7 +1078,7 @@ dominated AS (
   SELECT DISTINCT j.vec_id
   FROM ranked i JOIN ranked j
     ON j.cell = i.cell AND i.rnk < j.rnk
-   AND round({pdot} / greatest(i.nn * j.nn, 1e-300), 6) >= {eps}
+   AND round({pdot} / greatest(i.nn * j.nn, 1e-300), 6) >= {SEMDEDUP_EPS}
 )
 SELECT r.vec_id, CAST(r.cell AS BIGINT) AS cell, r.ccos,
        (d.vec_id IS NULL) AS kept

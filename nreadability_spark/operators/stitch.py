@@ -97,8 +97,11 @@ def _page_html(conv_id, page_no, n_pages, body_text):
     )
 
 
-def stitched_documents(spark: SparkSession, sf_dir: str, pages_per_conv: int = 3) -> DataFrame:
-    """Documents regrouped as paginated crawls: every ``pages_per_conv``
+PAGES_PER_CONV = 3
+
+
+def stitched_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents regrouped as paginated crawls: every ``PAGES_PER_CONV``
     consecutive docs form one multi-page article; pages are stitched
     per conversation (rows-only check — the stitcher is pure Python).
 
@@ -109,11 +112,11 @@ def stitched_documents(spark: SparkSession, sf_dir: str, pages_per_conv: int = 3
     docs = load_documents(spark, sf_dir).repartition(
         2 * spark.sparkContext.defaultParallelism, F.xxhash64("doc_id")
     )
-    n = F.lit(pages_per_conv)
+    n = F.lit(PAGES_PER_CONV)
     conv = F.concat(F.lit("conv"), (F.col("doc_id") / n).cast("long").cast("string"))
     page_no = (F.col("doc_id") % n + 1).cast("int")
     next_link = F.when(
-        page_no < pages_per_conv,
+        page_no < PAGES_PER_CONV,
         F.concat(
             F.lit('<div class="pagination"><a href="http://synth.example/'),
             conv,

@@ -289,27 +289,26 @@ ORDER BY d.doc_id
 # --- bottom-k sketch + containment estimation --------------------------
 
 K_BOTTOM = 8  # sketch slots; fingerprints' bottom_shingle_hash is k=1
+BOTTOMK_NGRAM = 3
 
 
-def bottomk_sketches(docs: DataFrame, n: int = 3, k: int = K_BOTTOM) -> DataFrame:
-    """(doc_id, sketch): the k smallest distinct shingle hashes per
+def bottomk_sketches(docs: DataFrame) -> DataFrame:
+    """(doc_id, sketch): the K_BOTTOM smallest distinct shingle hashes per
     document — the bottom-k generalization of ``fingerprints``' 1-slot
     sketch. Built with a bounded per-key window (row_number <= k), not
     a full per-doc set collect, so executor memory per document is k
     longs regardless of document size."""
-    sh = tx.hashed_shingles(docs, n=n)
+    sh = tx.hashed_shingles(docs, BOTTOMK_NGRAM)
     w = Window.partitionBy("doc_id").orderBy("sh60")
     return (
         sh.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= k)
+        .where(F.col("r") <= K_BOTTOM)
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("sh60")).alias("sketch"))
     )
 
 
-def bottomk_containment(
-    spark: SparkSession, sf_dir: str, n: int = 3, k: int = K_BOTTOM
-) -> DataFrame:
+def bottomk_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment/Jaccard ESTIMATES from bottom-k sketches, for the
     candidate pairs that share their bottom-1 hash (the fingerprint
     bucket — the natural blocking key, since near-containing documents
@@ -323,7 +322,7 @@ def bottomk_containment(
     sketch table is the only thing shuffled (k longs per doc, corpus
     never re-scanned for estimation)."""
     docs = load_documents(spark, sf_dir)
-    sk = bottomk_sketches(docs, n=n, k=k)
+    sk = bottomk_sketches(docs)
     a = sk.select(F.col("doc_id").alias("doc_a"), F.col("sketch").alias("sk_a"))
     b = sk.select(F.col("doc_id").alias("doc_b"), F.col("sketch").alias("sk_b"))
     pairs = a.join(
@@ -331,7 +330,7 @@ def bottomk_containment(
         (F.element_at("sk_a", 1) == F.element_at("sk_b", 1))
         & (F.col("doc_a") < F.col("doc_b")),
     )
-    union_k = F.slice(F.array_sort(F.array_union("sk_a", "sk_b")), 1, k)
+    union_k = F.slice(F.array_sort(F.array_union("sk_a", "sk_b")), 1, K_BOTTOM)
     calc = pairs.select(
         "doc_a",
         "doc_b",
@@ -355,9 +354,10 @@ def bottomk_containment(
     )
 
 
-def bottomk_containment_sql(n: int = 3, k: int = K_BOTTOM) -> str:
+def bottomk_containment_sql() -> str:
+    k = K_BOTTOM
     return f"""
-WITH sh AS ({tx.hashed_shingles_sql('documents', n)}),
+WITH sh AS ({tx.hashed_shingles_sql('documents', BOTTOMK_NGRAM)}),
 ranked AS (
   SELECT doc_id, sh60, row_number() OVER (PARTITION BY doc_id ORDER BY sh60) AS r
   FROM sh
@@ -393,14 +393,9 @@ DECON_NGRAM = 8
 DECON_BENCH_EVERY = 50  # every 50th doc plays the "evaluation set"
 
 
-def decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = DECON_NGRAM,
-    bench_every: int = DECON_BENCH_EVERY,
-) -> DataFrame:
+def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-overlap decontamination: flag training documents that
-    share any ``n``-gram with the held-out evaluation set (here a
+    share any ``DECON_NGRAM``-gram with the held-out evaluation set (here a
     deterministic 2% slice standing in for a real benchmark corpus).
     Returns (doc_id, n_overlapping_shingles) for contaminated docs.
 
@@ -410,12 +405,12 @@ def decontaminate(
     broadcast semi-join — no shuffle of the corpus. The 8-gram grain is
     the published standard for benchmark decontamination."""
     docs = load_documents(spark, sf_dir)
-    sh = tx.hashed_shingles(docs, n=n)
+    sh = tx.hashed_shingles(docs, DECON_NGRAM)
     bench = (
-        sh.where(F.col("doc_id") % bench_every == 0).select("sh60").distinct()
+        sh.where(F.col("doc_id") % DECON_BENCH_EVERY == 0).select("sh60").distinct()
     )
     return (
-        sh.where(F.col("doc_id") % bench_every != 0)
+        sh.where(F.col("doc_id") % DECON_BENCH_EVERY != 0)
         .join(F.broadcast(bench), "sh60")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlapping_shingles"))
@@ -423,13 +418,13 @@ def decontaminate(
     )
 
 
-def decontaminate_sql(n: int = DECON_NGRAM, bench_every: int = DECON_BENCH_EVERY) -> str:
+def decontaminate_sql() -> str:
     return f"""
-WITH sh AS ({tx.hashed_shingles_sql('documents', n)}),
-bench AS (SELECT DISTINCT sh60 FROM sh WHERE doc_id % {bench_every} = 0)
+WITH sh AS ({tx.hashed_shingles_sql('documents', DECON_NGRAM)}),
+bench AS (SELECT DISTINCT sh60 FROM sh WHERE doc_id % {DECON_BENCH_EVERY} = 0)
 SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_overlapping_shingles
 FROM sh s JOIN bench b ON s.sh60 = b.sh60
-WHERE s.doc_id % {bench_every} != 0
+WHERE s.doc_id % {DECON_BENCH_EVERY} != 0
 GROUP BY s.doc_id
 ORDER BY s.doc_id
 """
@@ -441,29 +436,24 @@ BLOOM_BITS = 4096
 BLOOM_HASHES = 3
 
 
-def _bloom_positions(df: DataFrame, m: int, k: int) -> DataFrame:
-    """Explode each shingle hash into its k Bloom bit positions via
-    Kirsch-Mitzenmacher double hashing: pos_i = (h1 + i*h2) mod m.
-    All arithmetic on the nonnegative 60-bit hash — portable BIGINT ops
-    on both engines."""
+def _bloom_positions(df: DataFrame) -> DataFrame:
+    """Explode each shingle hash into its k = BLOOM_HASHES Bloom bit
+    positions via Kirsch-Mitzenmacher double hashing: pos_i = (h1 +
+    i*h2) mod m, m = BLOOM_BITS. All arithmetic on the nonnegative
+    60-bit hash — portable BIGINT ops on both engines."""
+    m = BLOOM_BITS
     h1 = F.pmod(F.col("sh60"), F.lit(m))
     h2 = F.lit(1) + F.pmod(F.shiftright(F.col("sh60"), 20), F.lit(m - 1))
-    poss = F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m)) for i in range(k)])
+    poss = F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m)) for i in range(BLOOM_HASHES)])
     return df.withColumn("pos", F.explode(poss))
 
 
-def _bloom_positions_sql(i: int, m: int) -> str:
+def _bloom_positions_sql(i: int) -> str:
+    m = BLOOM_BITS
     return f"((sh60 % {m}) + {i} * (1 + ((sh60 >> 20) % {m - 1}))) % {m}"
 
 
-def decontaminate_bloom(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = DECON_NGRAM,
-    bench_every: int = DECON_BENCH_EVERY,
-    m: int = BLOOM_BITS,
-    k: int = BLOOM_HASHES,
-) -> DataFrame:
+def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination against a BLOOM FILTER of the eval set's n-gram
     hashes — the shape for when the held-out set is too large to
     broadcast as an exact hash table (the exact variant,
@@ -486,16 +476,16 @@ def decontaminate_bloom(
     bit positions per shingle, and probes the broadcast bitmap — zero
     corpus shuffles before the per-doc count."""
     docs = load_documents(spark, sf_dir)
-    sh = tx.hashed_shingles(docs, n=n)
-    bench = sh.where(F.col("doc_id") % bench_every == 0).select("sh60").distinct()
-    bits = _bloom_positions(bench, m, k).select("pos").distinct()
-    corpus = sh.where(F.col("doc_id") % bench_every != 0)
+    sh = tx.hashed_shingles(docs, DECON_NGRAM)
+    bench = sh.where(F.col("doc_id") % DECON_BENCH_EVERY == 0).select("sh60").distinct()
+    bits = _bloom_positions(bench).select("pos").distinct()
+    corpus = sh.where(F.col("doc_id") % DECON_BENCH_EVERY != 0)
     flagged = (
-        _bloom_positions(corpus, m, k)
+        _bloom_positions(corpus)
         .join(F.broadcast(bits), "pos")
         .groupBy("doc_id", "sh60")
         .agg(F.count(F.lit(1)).alias("nhit"))
-        .where(F.col("nhit") == k)
+        .where(F.col("nhit") == BLOOM_HASHES)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_flagged"))
     )
@@ -515,25 +505,21 @@ def decontaminate_bloom(
     )
 
 
-def decontaminate_bloom_sql(
-    n: int = DECON_NGRAM,
-    bench_every: int = DECON_BENCH_EVERY,
-    m: int = BLOOM_BITS,
-    k: int = BLOOM_HASHES,
-) -> str:
+def decontaminate_bloom_sql() -> str:
+    k, every = BLOOM_HASHES, DECON_BENCH_EVERY
     pos_union = " UNION ALL ".join(
-        f"SELECT doc_id, sh60, {_bloom_positions_sql(i, m)} AS pos FROM side"
+        f"SELECT doc_id, sh60, {_bloom_positions_sql(i)} AS pos FROM side"
         for i in range(k)
     )
     return f"""
-WITH sh AS MATERIALIZED ({tx.hashed_shingles_sql('documents', n)}),
-bench AS (SELECT DISTINCT sh60 FROM sh WHERE doc_id % {bench_every} = 0),
+WITH sh AS MATERIALIZED ({tx.hashed_shingles_sql('documents', DECON_NGRAM)}),
+bench AS (SELECT DISTINCT sh60 FROM sh WHERE doc_id % {every} = 0),
 bits AS (
   SELECT DISTINCT pos FROM (
-    {" UNION ALL ".join(f"SELECT {_bloom_positions_sql(i, m)} AS pos FROM bench" for i in range(k))}
+    {" UNION ALL ".join(f"SELECT {_bloom_positions_sql(i)} AS pos FROM bench" for i in range(k))}
   ) p
 ),
-side AS (SELECT doc_id, sh60 FROM sh WHERE doc_id % {bench_every} != 0),
+side AS (SELECT doc_id, sh60 FROM sh WHERE doc_id % {every} != 0),
 cand AS ({pos_union}),
 flagged AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS n_flagged FROM (
@@ -566,17 +552,12 @@ CMS_DEPTH = 3
 CMS_PROBE_TOP = 20
 
 
-def _cms_pos_sql(i: int, w: int, h: str) -> str:
+def _cms_pos_sql(i: int, h: str) -> str:
+    w = CMS_WIDTH
     return f"((({h}) % {w}) + {i} * (1 + ((({h}) >> 20) % {w - 1}))) % {w}"
 
 
-def token_cms(
-    spark: SparkSession,
-    sf_dir: str,
-    w: int = CMS_WIDTH,
-    d: int = CMS_DEPTH,
-    probe_top: int = CMS_PROBE_TOP,
-) -> DataFrame:
+def token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch of corpus token frequencies, probed against the
     exact counts (Cormode & Muthukrishnan 2005) — the mergeable-sketch
     shape for frequency estimation when the distinct-token table itself
@@ -607,6 +588,7 @@ def token_cms(
     # embedded md5 subtree (the HOF-lambda pitfall, same fix — measured
     # 18.5s -> ~2s cold at sf0.1)
     hashed = toks.select(hashing.h60(F.col("tok")).alias("h"))
+    w, d = CMS_WIDTH, CMS_DEPTH
     h1 = F.pmod(F.col("h"), F.lit(w))
     h2 = F.lit(1) + F.pmod(F.shiftright(F.col("h"), 20), F.lit(w - 1))
     pairs = hashed.select(
@@ -629,7 +611,7 @@ def token_cms(
     wtop = Window.orderBy(F.desc("exact_cnt"), F.asc("tok"))
     probe = (
         exact.withColumn("r", F.row_number().over(wtop))
-        .where(F.col("r") <= probe_top)
+        .where(F.col("r") <= CMS_PROBE_TOP)
         .drop("r")
     )
     probe = probe.select("tok", "exact_cnt", hashing.h60(F.col("tok")).alias("h"))
@@ -664,17 +646,15 @@ def token_cms(
     )
 
 
-def token_cms_sql(
-    w: int = CMS_WIDTH, d: int = CMS_DEPTH, probe_top: int = CMS_PROBE_TOP
-) -> str:
+def token_cms_sql() -> str:
     toks = tx.exploded_tokens_sql("documents")
     h = hashing.h60_sql("tok")
     pair_union = " UNION ALL ".join(
-        f"SELECT {i} AS row, {_cms_pos_sql(i, w, h)} AS pos FROM t" for i in range(d)
+        f"SELECT {i} AS row, {_cms_pos_sql(i, h)} AS pos FROM t" for i in range(CMS_DEPTH)
     )
     probe_union = " UNION ALL ".join(
-        f"SELECT tok, exact_cnt, {i} AS row, {_cms_pos_sql(i, w, h)} AS pos FROM probe"
-        for i in range(d)
+        f"SELECT tok, exact_cnt, {i} AS row, {_cms_pos_sql(i, h)} AS pos FROM probe"
+        for i in range(CMS_DEPTH)
     )
     return f"""
 WITH t AS MATERIALIZED (SELECT tok FROM ({toks}) e),
@@ -688,7 +668,7 @@ probe AS (
     SELECT tok, exact_cnt,
            row_number() OVER (ORDER BY exact_cnt DESC, tok) AS r
     FROM exact
-  ) x WHERE r <= {probe_top}
+  ) x WHERE r <= {CMS_PROBE_TOP}
 ),
 est AS (
   SELECT pp.tok, pp.exact_cnt, min(c.counter) AS est_cnt
@@ -706,12 +686,10 @@ FROM est ORDER BY tok
 FH_DIM = 64
 
 
-def hashed_embeddings(
-    spark: SparkSession, sf_dir: str, dim: int = FH_DIM
-) -> DataFrame:
+def hashed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document embeddings via feature hashing (Weinberger et al. 2009,
     "Feature Hashing for Large Scale Multitask Learning"): each token
-    maps to dimension ``h % dim`` with a deterministic ±1 sign from the
+    maps to dimension ``h % FH_DIM`` with a deterministic ±1 sign from the
     next hash bit, counts accumulate, and the vector is L2-normalized.
     This is how you get a fixed-width embedding column out of raw text
     with NO learned vocabulary and NO Python — the cheap text-side
@@ -724,7 +702,7 @@ def hashed_embeddings(
     engines (integer sums make the norm itself exact).
 
     Scale shape: one map-side explode to (doc, dim, sign) and ONE hash
-    aggregate keyed by (doc_id, dim) — at most ``dim`` rows per
+    aggregate keyed by (doc_id, dim) — at most ``FH_DIM`` rows per
     document regardless of length; the norm is a window-free in-group
     aggregate reusing the same partitioning."""
     docs = load_documents(spark, sf_dir).repartition(
@@ -735,7 +713,7 @@ def hashed_embeddings(
     hashed = toks.select("doc_id", hashing.h60(F.col("tok")).alias("h"))
     coords = hashed.select(
         "doc_id",
-        F.pmod(F.col("h"), F.lit(dim)).alias("dim"),
+        F.pmod(F.col("h"), F.lit(FH_DIM)).alias("dim"),
         # sign bit: one hash bit ABOVE the dimension bits, so sign and
         # dimension are independent
         (F.lit(1) - F.lit(2) * F.pmod(F.shiftright(F.col("h"), 20), F.lit(2))).alias(
@@ -760,12 +738,12 @@ def hashed_embeddings(
     )
 
 
-def hashed_embeddings_sql(dim: int = FH_DIM) -> str:
+def hashed_embeddings_sql() -> str:
     toks = tx.exploded_tokens_sql("documents")
     h = hashing.h60_sql("tok")
     return f"""
 WITH coords AS (
-  SELECT doc_id, ({h}) % {dim} AS dim,
+  SELECT doc_id, ({h}) % {FH_DIM} AS dim,
          1 - 2 * ((({h}) >> 20) % 2) AS sign
   FROM ({toks}) t
 ),
@@ -790,12 +768,7 @@ SPLIT_TRAIN_PCT = 90
 SPLIT_VAL_PCT = 5  # remainder is test
 
 
-def train_val_split(
-    spark: SparkSession,
-    sf_dir: str,
-    train_pct: int = SPLIT_TRAIN_PCT,
-    val_pct: int = SPLIT_VAL_PCT,
-) -> DataFrame:
+def train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-hash split assignment: bucket = h60(normalized text) mod
     100 -> train/val/test. Hashing the CONTENT (not the id) keeps exact
     duplicates in the same split — the property that prevents
@@ -806,8 +779,8 @@ def train_val_split(
     docs = load_documents(spark, sf_dir)
     bucket = hashing.h60(_norm_text(F.col("text"))) % F.lit(100)
     split = (
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
+        F.when(bucket < SPLIT_TRAIN_PCT, "train")
+        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
         .otherwise("test")
     )
     return (
@@ -818,14 +791,12 @@ def train_val_split(
     )
 
 
-def train_val_split_sql(
-    train_pct: int = SPLIT_TRAIN_PCT, val_pct: int = SPLIT_VAL_PCT
-) -> str:
+def train_val_split_sql() -> str:
     bucket = f"({hashing.h60_sql(_norm_text_sql('text'))} % 100)"
     return f"""
 SELECT lang,
-       CASE WHEN {bucket} < {train_pct} THEN 'train'
-            WHEN {bucket} < {train_pct + val_pct} THEN 'val'
+       CASE WHEN {bucket} < {SPLIT_TRAIN_PCT} THEN 'train'
+            WHEN {bucket} < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
             ELSE 'test' END AS split,
        CAST(count(*) AS BIGINT) AS n_docs
 FROM documents
@@ -836,7 +807,10 @@ ORDER BY lang, split
 
 # --- intra-document repetition (Gopher-style quality signal) -----------
 
-def repetition_scores(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
+REPETITION_NGRAM = 3
+
+
+def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-n-gram ratio per document: 1 - distinct/total 3-gram
     occurrences — the published repetition filter for generated/spammy
     text (a page repeating one sentence scores near 1). Entirely
@@ -844,15 +818,8 @@ def repetition_scores(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame
     in-array, counted with and without array_distinct; no shuffle."""
     docs = load_documents(spark, sf_dir)
     toks = tx.tokens(F.col("text"))
-    pre = docs.select("doc_id", toks.alias("toks")).where(F.size("toks") >= n)
-    positions = F.sequence(F.lit(0), F.size("toks") - n)
-
-    def hash_at(i):
-        return hashing.h60(
-            F.concat_ws(" ", *[F.element_at(F.col("toks"), i + k + 1) for k in range(n)])
-        )
-
-    hashes = F.transform(positions, hash_at)
+    pre = docs.select("doc_id", toks.alias("toks")).where(F.size("toks") >= REPETITION_NGRAM)
+    hashes = tx.shingle_hashes(REPETITION_NGRAM)
     return (
         pre.select(
             "doc_id",
@@ -869,25 +836,14 @@ def repetition_scores(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame
     )
 
 
-def repetition_scores_sql(n: int = 3) -> str:
-    # non-distinct shingles: the window construction without DISTINCT
-    toks = tx.exploded_tokens_sql("documents")
-    leads = ["tok"] + [
-        f"lead(tok, {i}) OVER (PARTITION BY doc_id ORDER BY pos)" for i in range(1, n)
-    ]
-    lead_cols = ", ".join(f"{e} AS t{j}" for j, e in enumerate(leads))
-    non_null = " AND ".join(f"t{j} IS NOT NULL" for j in range(1, n))
-    concat = " || ' ' || ".join(f"t{j}" for j in range(n))
+def repetition_scores_sql() -> str:
+    # non-distinct shingles: one row per position
     return f"""
-WITH grams AS (
-  SELECT doc_id, {hashing.h60_sql(f"({concat})")} AS g
-  FROM (SELECT doc_id, pos, {lead_cols} FROM ({toks}) base) leads
-  WHERE {non_null}
-)
+WITH grams AS ({tx.positional_shingle_hashes_sql('documents', REPETITION_NGRAM)})
 SELECT doc_id,
        CAST(count(*) AS BIGINT) AS n_ngrams,
-       CAST(count(DISTINCT g) AS BIGINT) AS n_distinct,
-       round(1 - count(DISTINCT g) / count(*), 4) AS dup_ngram_ratio
+       CAST(count(DISTINCT sh60) AS BIGINT) AS n_distinct,
+       round(1 - count(DISTINCT sh60) / count(*), 4) AS dup_ngram_ratio
 FROM grams
 GROUP BY doc_id
 ORDER BY doc_id
@@ -900,12 +856,7 @@ PACK_BUDGET = 2048  # tokens per training sequence
 PACK_BLOCK = 1024  # docs per prefix-sum block
 
 
-def sequence_packing(
-    spark: SparkSession,
-    sf_dir: str,
-    budget: int = PACK_BUDGET,
-    block_size: int = PACK_BLOCK,
-) -> DataFrame:
+def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contiguous-fill sequence packing: documents in deterministic
     doc_id order are laid head-to-tail into fixed-token-budget packs
     (the layout step a pretokenization writer runs); each doc reports
@@ -919,7 +870,7 @@ def sequence_packing(
     toks = docs.select(
         "doc_id", tx.token_count(F.col("text")).cast("long").alias("n_tokens")
     )
-    return _packed(toks, "doc_id", "n_tokens", budget, block_size)
+    return _packed(toks, "doc_id", "n_tokens", PACK_BUDGET, PACK_BLOCK)
 
 
 def _packed(df: DataFrame, key: str, len_col: str, budget: int, block_size: int) -> DataFrame:
@@ -946,7 +897,8 @@ def _packed(df: DataFrame, key: str, len_col: str, budget: int, block_size: int)
     ).orderBy(key)
 
 
-def sequence_packing_sql(budget: int = PACK_BUDGET) -> str:
+def sequence_packing_sql() -> str:
+    budget = PACK_BUDGET
     return f"""
 WITH toks AS (
   SELECT doc_id, CAST({tx.token_count_sql('text')} AS BIGINT) AS n_tokens
@@ -1071,9 +1023,9 @@ LM_VOCAB_SIZE = 40  # top-V corpus tokens kept as the unigram model
 LM_MICRO = 1_000_000  # fixed-point grain: log10-prob in millionths
 
 
-def _unigram_model(toks: DataFrame, vocab_size: int):
+def _unigram_model(toks: DataFrame):
     """The unigram LM both scorers fit on ``toks`` (one row per token):
-    ``vocab`` (tok, logp_micro), the top-V tokens by count (ties by
+    ``vocab`` (tok, logp_micro), the top-LM_VOCAB_SIZE tokens by count (ties by
     token) with their log10 probability, and ``oov`` (oov_micro), the
     one-row 0.5/total floor. The top-V runs through
     TakeOrderedAndProject, never a global sort."""
@@ -1082,7 +1034,7 @@ def _unigram_model(toks: DataFrame, vocab_size: int):
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("tok"))
-        .limit(vocab_size)
+        .limit(LM_VOCAB_SIZE)
         .crossJoin(F.broadcast(totals))
         .select(
             "tok",
@@ -1124,7 +1076,7 @@ def _per_doc_logp(docs: DataFrame, scored: DataFrame, counted: str) -> DataFrame
     )
 
 
-def _unigram_model_sql(vocab_size: int) -> str:
+def _unigram_model_sql() -> str:
     """The SQL twin of ``_unigram_model``: CTEs ``toks`` (doc_id, pos,
     tok), ``totals``, ``vocab`` and ``oov``."""
     toks = tx.exploded_tokens_sql("documents")
@@ -1134,7 +1086,7 @@ vocab AS MATERIALIZED (
   SELECT tok,
          CAST(round(log10(cnt / total_toks) * {LM_MICRO}) AS BIGINT) AS logp_micro
   FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
-        ORDER BY cnt DESC, tok LIMIT {vocab_size}) v
+        ORDER BY cnt DESC, tok LIMIT {LM_VOCAB_SIZE}) v
   CROSS JOIN totals
 ),
 oov AS (
@@ -1157,9 +1109,7 @@ ORDER BY d.doc_id
 """
 
 
-def unigram_logprob(
-    spark: SparkSession, sf_dir: str, vocab_size: int = LM_VOCAB_SIZE
-) -> DataFrame:
+def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style model-based quality scoring, as fit + apply: fit a
     unigram LM over the corpus (top-V tokens by frequency, log10
     probabilities), then score every document by its mean token
@@ -1180,7 +1130,7 @@ def unigram_logprob(
     thanks to column pruning."""
     docs = load_documents(spark, sf_dir)
     toks = tx.exploded_tokens(docs).select("doc_id", "tok")
-    vocab, oov = _unigram_model(toks, vocab_size)
+    vocab, oov = _unigram_model(toks)
     scored = (
         toks.join(F.broadcast(vocab), "tok", "left")
         .crossJoin(F.broadcast(oov))
@@ -1199,9 +1149,9 @@ def unigram_logprob(
     return _per_doc_logp(docs, scored, "n_oov")
 
 
-def unigram_logprob_sql(vocab_size: int = LM_VOCAB_SIZE) -> str:
+def unigram_logprob_sql() -> str:
     return f"""
-WITH {_unigram_model_sql(vocab_size)},
+WITH {_unigram_model_sql()},
 scored AS (
   SELECT t.doc_id,
          CAST(count(*) AS BIGINT) AS n_tokens,
@@ -1221,9 +1171,7 @@ BLM_BACKOFF = 0.4  # Brants et al. 2007 "Large Language Models in MT"
 BLM_BACKOFF_MICRO = int(round(_math.log10(BLM_BACKOFF) * LM_MICRO))
 
 
-def bigram_logprob(
-    spark: SparkSession, sf_dir: str, vocab_size: int = LM_VOCAB_SIZE
-) -> DataFrame:
+def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram language-model scoring with STUPID BACKOFF (Brants et
     al. 2007, the web-scale choice: no discounting mass to normalize,
     so the model distributes as plain count tables): position 0 scores
@@ -1242,7 +1190,7 @@ def bigram_logprob(
     doc_id ends the plan."""
     docs = load_documents(spark, sf_dir)
     toks = tx.exploded_tokens(docs).select("doc_id", "pos", "tok")
-    vocab, oov = _unigram_model(toks, vocab_size)
+    vocab, oov = _unigram_model(toks)
 
     # map-side adjacent pairs from the materialized token array
     # (lambda-CSE-safe: toks column first, element_at in the transform)
@@ -1313,9 +1261,9 @@ def bigram_logprob(
     return _per_doc_logp(docs, scored, "n_bigram_hits")
 
 
-def bigram_logprob_sql(vocab_size: int = LM_VOCAB_SIZE) -> str:
+def bigram_logprob_sql() -> str:
     return f"""
-WITH {_unigram_model_sql(vocab_size)},
+WITH {_unigram_model_sql()},
 pairs AS MATERIALIZED (
   SELECT doc_id, prev, tok AS cur FROM (
     SELECT doc_id, lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS prev, tok
@@ -1446,20 +1394,16 @@ def _rendered_lines(docs: DataFrame) -> DataFrame:
     )
 
 
-def line_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    min_docs: int = LINE_BOILER_MIN_DOCS,
-) -> DataFrame:
+def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet/RefinedWeb-style cross-document line deduplication: a line
-    whose distinct-document frequency reaches ``min_docs`` is
+    whose distinct-document frequency reaches ``LINE_BOILER_MIN_DOCS`` is
     boilerplate (nav, promos, copyright footers) and is dropped from
     every document; the cleaned text is rebuilt in line order.
 
     Scale shape (100 TB): lines key by their 60-bit hash, never the
     string. Doc-frequency is distinct (line_h, doc_id) pairs (map-side
     partial dedup) then one count per line_h. The tag-back join runs
-    against only the BOILERPLATE keys (``doc_freq >= min_docs``), not
+    against only the BOILERPLATE keys (``doc_freq >= LINE_BOILER_MIN_DOCS``), not
     the full frequency table — downstream needs just the boolean. That
     changes the skew story materially (docs/SKEW.md section B measured the
     previous shape's claim and found it false):
@@ -1492,7 +1436,7 @@ def line_dedup(
         .groupBy("line_h")
         .agg(F.count(F.lit(1)).alias("doc_freq"))
     )
-    boiler = freq.where(F.col("doc_freq") >= F.lit(min_docs)).select(
+    boiler = freq.where(F.col("doc_freq") >= F.lit(LINE_BOILER_MIN_DOCS)).select(
         "line_h", F.lit(True).alias("_boiler")
     )
     tagged = e.join(boiler, "line_h", "left").withColumn(
@@ -1529,7 +1473,7 @@ def line_dedup(
     )
 
 
-def line_dedup_sql(min_docs: int = LINE_BOILER_MIN_DOCS) -> str:
+def line_dedup_sql() -> str:
     c = LINE_CHUNK
     return f"""
 WITH toks AS (
@@ -1560,7 +1504,7 @@ freq AS (
   GROUP BY line_h
 ),
 tagged AS (
-  SELECT eh.doc_id, eh.pos, eh.line, (f.doc_freq >= {min_docs}) AS is_boiler
+  SELECT eh.doc_id, eh.pos, eh.line, (f.doc_freq >= {LINE_BOILER_MIN_DOCS}) AS is_boiler
   FROM eh JOIN freq f ON eh.line_h = f.line_h
 )
 SELECT doc_id,
@@ -1582,7 +1526,7 @@ ORDER BY doc_id
 SPAN_NGRAM = 8  # span grain: a position is duplicated if its 8-gram recurs
 
 
-def span_dedup(spark: SparkSession, sf_dir: str, n: int = SPAN_NGRAM) -> DataFrame:
+def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-SUBSTRING detection across documents (the
     span-level counterpart of document dedup, after Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better" — their
@@ -1603,7 +1547,7 @@ def span_dedup(spark: SparkSession, sf_dir: str, n: int = SPAN_NGRAM) -> DataFra
     per-doc aggregate reuses exchange-free. Span coverage is computed
     from position gaps — ``min(n, pos - prev_pos)`` — so memory per
     document is O(1) regardless of how much of it is duplicated."""
-    return span_dedup_frame(load_documents(spark, sf_dir), n=n)
+    return span_dedup_frame(load_documents(spark, sf_dir), n=SPAN_NGRAM)
 
 
 def span_dedup_frame(docs: DataFrame, n: int = SPAN_NGRAM) -> DataFrame:
@@ -1650,7 +1594,8 @@ def span_dedup_frame(docs: DataFrame, n: int = SPAN_NGRAM) -> DataFrame:
     )
 
 
-def span_dedup_sql(n: int = SPAN_NGRAM) -> str:
+def span_dedup_sql() -> str:
+    n = SPAN_NGRAM
     return f"""
 WITH posting AS (
   {tx.positional_shingle_hashes_sql('documents', n)}
@@ -1693,9 +1638,7 @@ TFIDF_TOP_K = 3
 TFIDF_MICRO = 1_000_000  # fixed-point grain for the idf (ln) factor
 
 
-def tfidf_keywords(
-    spark: SparkSession, sf_dir: str, k: int = TFIDF_TOP_K
-) -> DataFrame:
+def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF (smoothed idf
     = ln((N+1)/(df+1)) + 1, sklearn's convention). The transcendental
     idf factor is rounded to MICRO fixed-point as part of the algorithm
@@ -1710,7 +1653,7 @@ def tfidf_keywords(
     twice); the doc-count is a broadcast scalar and the idf table joins
     by term. The final top-k is a bounded per-document window — skew-
     safe because a document's term list is capped by its own length."""
-    return tfidf_keywords_frame(load_documents(spark, sf_dir), k=k)
+    return tfidf_keywords_frame(load_documents(spark, sf_dir), k=TFIDF_TOP_K)
 
 
 def tfidf_keywords_frame(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
@@ -1753,7 +1696,7 @@ def tfidf_keywords_frame(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     )
 
 
-def tfidf_keywords_sql(k: int = TFIDF_TOP_K) -> str:
+def tfidf_keywords_sql() -> str:
     toks = tx.exploded_tokens_sql("documents")
     return f"""
 WITH tf AS (
@@ -1778,7 +1721,7 @@ ranked AS (
   FROM scored
 )
 SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, df_docs, score_micro
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {TFIDF_TOP_K}
 ORDER BY doc_id, rank
 """
 
@@ -1789,18 +1732,15 @@ SAMPLE_PER_STRATUM = 10
 SAMPLE_SALTS = 8
 
 
-def stratified_sample(
-    spark: SparkSession, sf_dir: str, k: int = SAMPLE_PER_STRATUM,
-    salts: int = SAMPLE_SALTS,
-) -> DataFrame:
-    """Deterministic uniform sample of k documents per source stratum:
+def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic uniform sample of k = SAMPLE_PER_STRATUM documents per source stratum:
     rows are ranked by a content-independent hash of the doc id (a
     fixed pseudo-random permutation, reproducible across runs and
     engines) and the first k per stratum win.
 
     Skew-proof two-phase top-k (the sequence-packing pattern): phase 1
     ranks within (stratum, salt) shards — each shard's window sees at
-    most 1/S of a hot stratum — and keeps k per shard; phase 2 ranks
+    most 1/S of a hot stratum, S = SAMPLE_SALTS — and keeps k per shard; phase 2 ranks
     the <= S*k survivors per stratum. Exact: the global top-k by hash
     order is always contained in the union of per-shard top-k. The
     oracle is the single-phase window, which must produce the identical
@@ -1812,24 +1752,24 @@ def stratified_sample(
         hashing.h60(F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))).alias(
             "samp_h"
         ),
-        F.pmod(F.col("doc_id"), F.lit(salts)).alias("salt"),
+        F.pmod(F.col("doc_id"), F.lit(SAMPLE_SALTS)).alias("salt"),
     )
     w1 = Window.partitionBy("source", "salt").orderBy("samp_h", "doc_id")
     survivors = (
         ranked.withColumn("r1", F.row_number().over(w1))
-        .where(F.col("r1") <= k)
+        .where(F.col("r1") <= SAMPLE_PER_STRATUM)
         .drop("r1", "salt")
     )
     w2 = Window.partitionBy("source").orderBy("samp_h", "doc_id")
     return (
         survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= SAMPLE_PER_STRATUM)
         .select("doc_id", "source", F.col("rank").cast("long").alias("rank"))
         .orderBy("source", "rank")
     )
 
 
-def stratified_sample_sql(k: int = SAMPLE_PER_STRATUM) -> str:
+def stratified_sample_sql() -> str:
     h = hashing.h60_sql("('sample:' || CAST(doc_id AS VARCHAR))")
     return f"""
 SELECT doc_id, source, CAST(rank AS BIGINT) AS rank FROM (
@@ -1837,7 +1777,7 @@ SELECT doc_id, source, CAST(rank AS BIGINT) AS rank FROM (
          row_number() OVER (PARTITION BY source
                             ORDER BY {h}, doc_id) AS rank
   FROM documents
-) r WHERE rank <= {k}
+) r WHERE rank <= {SAMPLE_PER_STRATUM}
 ORDER BY source, rank
 """
 
@@ -1850,12 +1790,7 @@ DSIR_TOP_K = 64           # deterministic selection size
 DSIR_MICRO = 1_000_000    # fixed-point grain (log10 in millionths)
 
 
-def dsir_bucket_model(
-    spark: SparkSession,
-    sf_dir: str,
-    target_source: str = DSIR_TARGET_SOURCE,
-    buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
+def dsir_bucket_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fit half of DSIR: the COMPLETE B-row (b, lw_micro)
     importance-weight table — ``jobs/fit_models.py`` persists it as a
     parquet model table (the model is DATA; apply broadcasts it).
@@ -1868,16 +1803,10 @@ def dsir_bucket_model(
     join would silently drop those occurrences and the score would
     diverge from the model."""
     docs = load_documents(spark, sf_dir)
-    uni = tx.positional_shingle_hashes(docs, n=1)
-    bi = tx.positional_shingle_hashes(docs, n=2)
-    feats = (
-        uni.select("doc_id", "sh60")
-        .unionByName(bi.select("doc_id", "sh60"))
-        .select("doc_id", F.pmod("sh60", F.lit(buckets)).alias("b"))
-    )
-    flagged = feats.join(
+    buckets = DSIR_BUCKETS
+    flagged = _dsir_features(docs).join(
         docs.select(
-            "doc_id", (F.col("source") == target_source).alias("is_t")
+            "doc_id", (F.col("source") == DSIR_TARGET_SOURCE).alias("is_t")
         ),
         "doc_id",
     )
@@ -1922,23 +1851,26 @@ def dsir_bucket_model(
     return model
 
 
-def dsir_score_frame(
-    df: DataFrame, model: DataFrame, buckets: int = DSIR_BUCKETS
-) -> DataFrame:
+def _dsir_features(df: DataFrame) -> DataFrame:
+    """(doc_id, b): the unigram and bigram hash of every token position
+    of ``df``, bucketed mod DSIR_BUCKETS."""
+    uni = tx.positional_shingle_hashes(df, n=1)
+    bi = tx.positional_shingle_hashes(df, n=2)
+    return (
+        uni.select("doc_id", "sh60")
+        .unionByName(bi.select("doc_id", "sh60"))
+        .select("doc_id", F.pmod("sh60", F.lit(DSIR_BUCKETS)).alias("b"))
+    )
+
+
+def dsir_score_frame(df: DataFrame, model: DataFrame) -> DataFrame:
     """Score a (doc_id, text) frame against a fitted (b, lw_micro)
     bucket model -> (doc_id, n_ngrams, dsir_micro): ``dsir_select``
     composes it after the in-query fit, and it applies as well to the
     model table ``jobs/fit_models.py`` persists. Map-side features,
     broadcast B-row model, one hash agg keyed by doc_id."""
-    uni = tx.positional_shingle_hashes(df, n=1)
-    bi = tx.positional_shingle_hashes(df, n=2)
-    feats = (
-        uni.select("doc_id", "sh60")
-        .unionByName(bi.select("doc_id", "sh60"))
-        .select("doc_id", F.pmod("sh60", F.lit(buckets)).alias("b"))
-    )
     return (
-        feats.join(F.broadcast(model), "b")
+        _dsir_features(df).join(F.broadcast(model), "b")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_ngrams"),
@@ -1947,20 +1879,14 @@ def dsir_score_frame(
     )
 
 
-def dsir_select(
-    spark: SparkSession,
-    sf_dir: str,
-    target_source: str = DSIR_TARGET_SOURCE,
-    buckets: int = DSIR_BUCKETS,
-    top_k: int = DSIR_TOP_K,
-) -> DataFrame:
+def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR (Xie et al. 2023, arXiv:2302.03169, "Data Selection for
     Language Models via Importance Resampling"): score every raw
     document by how much its hashed n-gram profile looks like a TARGET
     distribution rather than the raw corpus, then keep the top-k.
 
     Features are per-occurrence unigram+bigram 60-bit hashes bucketed
-    mod ``buckets``. Bucket models are add-1-smoothed: the importance
+    mod ``DSIR_BUCKETS``. Bucket models are add-1-smoothed: the importance
     weight of bucket b is log10((t_b+1)/(T+B)) - log10((r_b+1)/(R+B)),
     each log rounded to MICRO fixed point (the proven unigram-LM
     pattern, applied twice) so the per-document score is an exact
@@ -1979,13 +1905,11 @@ def dsir_select(
     the B-row model broadcasts; scoring is one hash agg keyed by
     doc_id. Nothing scales with corpus size except the two keyed
     shuffles Spark needs anyway."""
-    model = dsir_bucket_model(
-        spark, sf_dir, target_source=target_source, buckets=buckets
-    )
-    scored = dsir_score_frame(load_documents(spark, sf_dir), model, buckets)
+    model = dsir_bucket_model(spark, sf_dir)
+    scored = dsir_score_frame(load_documents(spark, sf_dir), model)
     kth = (
         scored.orderBy(F.col("dsir_micro").desc(), F.col("doc_id"))
-        .limit(top_k)
+        .limit(DSIR_TOP_K)
         .orderBy(F.col("dsir_micro").asc(), F.col("doc_id").desc())
         .limit(1)
         .select(
@@ -2011,14 +1935,10 @@ def dsir_select(
     )
 
 
-def dsir_select_sql(
-    target_source: str = DSIR_TARGET_SOURCE,
-    buckets: int = DSIR_BUCKETS,
-    top_k: int = DSIR_TOP_K,
-) -> str:
+def dsir_select_sql() -> str:
     u1 = tx.positional_shingle_hashes_sql("documents", n=1)
     u2 = tx.positional_shingle_hashes_sql("documents", n=2)
-    m = DSIR_MICRO
+    m, buckets = DSIR_MICRO, DSIR_BUCKETS
     return f"""
 WITH feats AS MATERIALIZED (
   SELECT doc_id, sh60 % {buckets} AS b FROM ({u1}) f1
@@ -2027,7 +1947,7 @@ WITH feats AS MATERIALIZED (
 ),
 seen AS (
   SELECT b, count(*) AS r_cnt,
-         sum(CASE WHEN d.source = '{target_source}' THEN 1 ELSE 0 END) AS t_cnt
+         sum(CASE WHEN d.source = '{DSIR_TARGET_SOURCE}' THEN 1 ELSE 0 END) AS t_cnt
   FROM feats JOIN documents d USING (doc_id)
   GROUP BY b
 ),
@@ -2057,7 +1977,7 @@ scored AS MATERIALIZED (
 ),
 kth AS (
   SELECT dsir_micro AS kth_micro, doc_id AS kth_doc FROM (
-    SELECT * FROM scored ORDER BY dsir_micro DESC, doc_id LIMIT {top_k}
+    SELECT * FROM scored ORDER BY dsir_micro DESC, doc_id LIMIT {DSIR_TOP_K}
   ) t ORDER BY dsir_micro ASC, doc_id DESC LIMIT 1
 )
 SELECT s.doc_id, s.n_ngrams, s.dsir_micro,

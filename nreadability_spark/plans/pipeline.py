@@ -34,11 +34,7 @@ from nreadability_spark.operators.textops import _norm_text, _norm_text_sql, loa
 MIN_TOKENS = 30  # quality gate
 
 
-def clean_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    min_tokens: int = MIN_TOKENS,
-) -> DataFrame:
+def clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-gated, exact-deduplicated documents with the greedy
     near-dup prune: drop the higher doc_id of each verified MinHash-LSH
     pair whose two docs both survived exact dedup — one join pass,
@@ -48,7 +44,7 @@ def clean_corpus(
         "doc_id",
         hashing.h60(_norm_text(F.col("text"))).alias("fp60"),
         tx.token_count(F.col("text")).cast("long").alias("n_tokens"),
-    ).where(F.col("n_tokens") >= min_tokens)
+    ).where(F.col("n_tokens") >= MIN_TOKENS)
 
     reps = quality.groupBy("fp60").agg(F.min("doc_id").alias("doc_id"))
     rep_rows = quality.join(reps.select("doc_id"), "doc_id")
@@ -69,7 +65,7 @@ def clean_corpus(
     )
 
 
-def _clean_corpus_ctes(min_tokens: int = MIN_TOKENS) -> str:
+def _clean_corpus_ctes() -> str:
     """The clean-corpus CTE chain ending at ``survivors`` (doc_id,
     fp60, n_tokens) — shared by the clean-corpus oracle and the
     training-ready composition's oracle."""
@@ -79,7 +75,7 @@ def _clean_corpus_ctes(min_tokens: int = MIN_TOKENS) -> str:
          {hashing.h60_sql(_norm_text_sql('text'))} AS fp60,
          CAST({tx.token_count_sql('text')} AS BIGINT) AS n_tokens
   FROM documents
-  WHERE {tx.token_count_sql('text')} >= {min_tokens}
+  WHERE {tx.token_count_sql('text')} >= {MIN_TOKENS}
 ),
 reps AS (
   SELECT q.doc_id, q.fp60, q.n_tokens
@@ -101,9 +97,9 @@ survivors AS (
 )"""
 
 
-def clean_corpus_sql(min_tokens: int = MIN_TOKENS) -> str:
+def clean_corpus_sql() -> str:
     return f"""
-WITH {_clean_corpus_ctes(min_tokens)}
+WITH {_clean_corpus_ctes()}
 SELECT doc_id, fp60, n_tokens FROM survivors
 ORDER BY doc_id
 """
@@ -111,14 +107,12 @@ ORDER BY doc_id
 
 # --- training-ready composition ----------------------------------------
 
-def training_ready(
-    spark: SparkSession, sf_dir: str, min_tokens: int = MIN_TOKENS
-) -> DataFrame:
+def training_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full corpus-preparation chain a training job reads, end to
     end as one lazy plan:
 
         clean_corpus (quality + exact dedup + near-dup prune)
-          -> drop the evaluation slice itself (doc_id % bench_every)
+          -> drop the evaluation slice itself (doc_id % DECON_BENCH_EVERY)
           -> drop contaminated docs (8-gram overlap with the eval set;
              anti-join on doc_id — AQE picks broadcast at runtime when
              the contaminated set proves small)
@@ -131,7 +125,7 @@ def training_ready(
     composition test: any drift in a stage breaks this oracle too."""
     from nreadability_spark.operators import textops
 
-    survivors = clean_corpus(spark, sf_dir, min_tokens=min_tokens)
+    survivors = clean_corpus(spark, sf_dir)
     contaminated = textops.decontaminate(spark, sf_dir).select("doc_id")
     bucket = F.col("fp60") % F.lit(100)
     split = (
@@ -152,13 +146,13 @@ def training_ready(
     )
 
 
-def training_ready_sql(min_tokens: int = MIN_TOKENS) -> str:
+def training_ready_sql() -> str:
     from nreadability_spark.operators import textops
 
     n, every = textops.DECON_NGRAM, textops.DECON_BENCH_EVERY
     bucket = "(fp60 % 100)"
     return f"""
-WITH {_clean_corpus_ctes(min_tokens)},
+WITH {_clean_corpus_ctes()},
 sh AS ({tx.hashed_shingles_sql('documents', n)}),
 bench AS (SELECT DISTINCT sh60 FROM sh WHERE doc_id % {every} = 0),
 contaminated AS (
@@ -180,12 +174,10 @@ CLUSTER_TOPIC_K = 5
 CLUSTER_TOPIC_MICRO = 1_000_000
 
 
-def cluster_topics(
-    spark: SparkSession, sf_dir: str, k: int = CLUSTER_TOPIC_K
-) -> DataFrame:
+def cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus exploration composition ("topic modeling lite"): k-means
     cells over the embedding column x TF-IDF over the text column —
-    per cluster, its document count and its top-k characteristic terms
+    per cluster, its document count and its top-CLUSTER_TOPIC_K characteristic terms
     where the cluster (not the document) is the TF-IDF document unit.
     The standard first look at an unlabeled web corpus: what is each
     semantic cluster ABOUT.
@@ -247,7 +239,7 @@ def cluster_topics(
             (F.col("tf") * F.col("idf_micro")).cast("long").alias("score_micro"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= CLUSTER_TOPIC_K)
         .join(sizes, "cell")
         .select(
             "cell", "n_docs", F.col("rank").cast("long").alias("rank"),
@@ -257,7 +249,7 @@ def cluster_topics(
     )
 
 
-def cluster_topics_sql(k: int = CLUSTER_TOPIC_K) -> str:
+def cluster_topics_sql() -> str:
     from nreadability_spark.operators.similarity import (
         KMEANS_ITERS, _assign_sql, _kmeans_cte_chain,
     )
@@ -292,7 +284,7 @@ SELECT r.cell, s.n_docs, CAST(r.rank AS BIGINT) AS rank, r.term,
        CAST(r.tf AS BIGINT) AS tf, CAST(r.df_cells AS BIGINT) AS df_cells,
        CAST(r.score_micro AS BIGINT) AS score_micro
 FROM ct_ranked r JOIN ct_sizes s USING (cell)
-WHERE r.rank <= {k}
+WHERE r.rank <= {CLUSTER_TOPIC_K}
 ORDER BY r.cell, r.rank
 """
 
@@ -301,12 +293,7 @@ SFT_PACK_BUDGET = 4096  # rendered characters per training sequence
 SFT_PACK_BLOCK = 1024  # conversations per prefix-sum block
 
 
-def sft_packed(
-    spark: SparkSession,
-    sf_dir: str,
-    budget: int = SFT_PACK_BUDGET,
-    block_size: int = SFT_PACK_BLOCK,
-) -> DataFrame:
+def sft_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end SFT layout path as ONE lazy plan: conversations
     render to chat-template examples (the `text_sft_spans` arithmetic)
     and the examples lay head-to-tail into fixed-budget training
@@ -343,13 +330,13 @@ def sft_packed(
         .groupBy("conv_id")
         .agg(F.sum("turn_len").cast("long").alias("example_len"))
     )
-    return _packed(conv, "conv_id", "example_len", budget, block_size)
+    return _packed(conv, "conv_id", "example_len", SFT_PACK_BUDGET, SFT_PACK_BLOCK)
 
 
-def sft_packed_sql(budget: int = SFT_PACK_BUDGET) -> str:
+def sft_packed_sql() -> str:
     from nreadability_spark.operators.textops import SFT_END
 
-    end_len = len(SFT_END)
+    end_len, budget = len(SFT_END), SFT_PACK_BUDGET
     return f"""
 WITH conv AS (
   SELECT user_id AS conv_id,

@@ -106,7 +106,10 @@ ORDER BY region_name, nation_name
 
 # --- top-k orders (join + global top-k) --------------------------------
 
-def top_orders(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+TOP_ORDERS_K = 10
+
+
+def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
     w = Window.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -115,28 +118,31 @@ def top_orders(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
         orders.join(cust.select("c_custkey", "c_name"),
                     orders.o_custkey == cust.c_custkey)
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_ORDERS_K)
         .select("rank", "o_orderkey", "c_name",
                 F.round("o_totalprice", 2).alias("total_price"))
         .orderBy("rank")
     )
 
 
-TOP_ORDERS_SQL = """
+TOP_ORDERS_SQL = f"""
 SELECT rank, o_orderkey, c_name, round(o_totalprice, 2) AS total_price
 FROM (
   SELECT o.o_orderkey, c.c_name, o.o_totalprice,
          row_number() OVER (ORDER BY o.o_totalprice DESC, o.o_orderkey) AS rank
   FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 ) t
-WHERE rank <= 10
+WHERE rank <= {TOP_ORDERS_K}
 ORDER BY rank
 """
 
 
 # --- windowed event sequences (partitioned window fns) -----------------
 
-def user_event_sequences(spark: SparkSession, sf_dir: str, first_n: int = 3) -> DataFrame:
+EVENT_SEQ_FIRST_N = 3
+
+
+def user_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cum = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
@@ -145,13 +151,13 @@ def user_event_sequences(spark: SparkSession, sf_dir: str, first_n: int = 3) -> 
     return (
         ev.withColumn("seq", F.row_number().over(w))
         .withColumn("running_value", F.round(F.sum("value").over(cum), 4))
-        .where(F.col("seq") <= first_n)
+        .where(F.col("seq") <= EVENT_SEQ_FIRST_N)
         .select("user_id", "seq", "event_id", "event_type", "running_value")
         .orderBy("user_id", "seq")
     )
 
 
-USER_EVENT_SEQUENCES_SQL = """
+USER_EVENT_SEQUENCES_SQL = f"""
 SELECT user_id, seq, event_id, event_type, running_value
 FROM (
   SELECT user_id, event_id, event_type,
@@ -160,7 +166,7 @@ FROM (
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value
   FROM events
 ) t
-WHERE seq <= 3
+WHERE seq <= {EVENT_SEQ_FIRST_N}
 ORDER BY user_id, seq
 """
 
@@ -332,9 +338,12 @@ ORDER BY side, nationkey
 
 # --- sessionization (gap-based; lag + running session counter) ---------
 
-def event_sessions(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -> DataFrame:
+SESSION_GAP_MINUTES = 30
+
+
+def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic gap-based sessionization: a new session starts when the
-    user's inter-event gap exceeds ``gap_minutes``. lag() + a running
+    user's inter-event gap exceeds ``SESSION_GAP_MINUTES``. lag() + a running
     sum of session starts — two window passes over one shuffle."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -345,7 +354,7 @@ def event_sessions(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -> D
     # boundary-crossing semantics, matching SQL date_diff('second',..)
     ts_s = F.date_trunc("second", F.col("ts"))
     gap = F.timestamp_diff("SECOND", F.lag(ts_s).over(w), ts_s)
-    new_session = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    new_session = F.when(gap.isNull() | (gap > SESSION_GAP_MINUTES * 60), 1).otherwise(0)
     sess = ev.withColumn("new_s", new_session).withColumn(
         "session_idx",
         F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("long"),
@@ -360,12 +369,11 @@ def event_sessions(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -> D
     )
 
 
-def _event_sessions_sql(gap_minutes: int = 30) -> str:
-    return f"""
+EVENT_SESSIONS_SQL = f"""
 WITH flagged AS (
   SELECT user_id, event_id, value,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR date_diff('second', lag(ts) OVER w, ts) > {gap_minutes * 60}
+                OR date_diff('second', lag(ts) OVER w, ts) > {SESSION_GAP_MINUTES * 60}
               THEN 1 ELSE 0 END AS new_s,
          ts
   FROM events
@@ -384,9 +392,6 @@ FROM sessions
 GROUP BY user_id, session_idx
 ORDER BY user_id, session_idx
 """
-
-
-EVENT_SESSIONS_SQL = _event_sessions_sql()
 
 
 # --- as-of join (latest order at or before each event) -----------------
@@ -477,7 +482,10 @@ ORDER BY priority, status
 
 # --- semi join + HAVING ------------------------------------------------
 
-def big_spenders(spark: SparkSession, sf_dir: str, min_total: float = 300000.0) -> DataFrame:
+BIG_SPENDER_MIN_TOTAL = 300000.0
+
+
+def big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers having aggregate order value above a threshold who
     also placed at least one urgent order (semi join + HAVING)."""
     orders = _t(spark, sf_dir, "orders")
@@ -488,7 +496,7 @@ def big_spenders(spark: SparkSession, sf_dir: str, min_total: float = 300000.0) 
         .groupBy("o_custkey")
         .agg(F.round(F.sum("o_totalprice"), 2).alias("total_spent"),
              F.count(F.lit(1)).alias("n_orders"))
-        .where(F.col("total_spent") > min_total)
+        .where(F.col("total_spent") > BIG_SPENDER_MIN_TOTAL)
     )
     # customer is O(SF) — no broadcast hint (see revenue_by_nation)
     return (
@@ -499,7 +507,7 @@ def big_spenders(spark: SparkSession, sf_dir: str, min_total: float = 300000.0) 
     )
 
 
-BIG_SPENDERS_SQL = """
+BIG_SPENDERS_SQL = f"""
 SELECT c.c_custkey, c.c_name, t.total_spent, t.n_orders
 FROM (
   SELECT o_custkey,
@@ -509,7 +517,7 @@ FROM (
   WHERE EXISTS (SELECT 1 FROM orders u
                 WHERE u.o_custkey = o.o_custkey AND u.o_orderpriority = '1-URGENT')
   GROUP BY o_custkey
-  HAVING round(sum(o_totalprice), 2) > 300000.0
+  HAVING round(sum(o_totalprice), 2) > {BIG_SPENDER_MIN_TOTAL}
 ) t
 JOIN customer c ON t.o_custkey = c.c_custkey
 ORDER BY c.c_custkey
@@ -585,9 +593,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 APPROX_QUANTILE_ACC = 100  # rank error bound: 1/accuracy of the group size
 
 
-def order_price_quantiles_approx(
-    spark: SparkSession, sf_dir: str, accuracy: int = APPROX_QUANTILE_ACC
-) -> DataFrame:
+def order_price_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``approx_percentile`` (mergeable sketch — map-side partials, no
     per-group full sort) with its rank-error guarantee ASSERTED against
     the exact data: for each group and each q, the estimate's true rank
@@ -603,7 +609,8 @@ def order_price_quantiles_approx(
     qs = ((0.25, "p25"), (0.5, "p50"), (0.9, "p90"))
     est = od.groupBy("o_orderpriority").agg(
         *[
-            F.expr(f"approx_percentile(o_totalprice, {q}, {accuracy})").alias(f"est_{n}")
+            F.expr(f"approx_percentile(o_totalprice, {q}, {APPROX_QUANTILE_ACC})")
+            .alias(f"est_{n}")
             for q, n in qs
         ]
     )
@@ -617,7 +624,7 @@ def order_price_quantiles_approx(
             F.sum((F.col("o_totalprice") <= F.col(f"est_{n}")).cast("long")).alias(f"le_{n}")
         )
     ranks = joined.groupBy("o_orderpriority").agg(*aggs)
-    err = 1.0 / accuracy
+    err = 1.0 / APPROX_QUANTILE_ACC
     checks = []
     for q, n in qs:
         lo_ok = F.col(f"le_{n}") >= F.floor((F.lit(q) - F.lit(err)) * F.col("n"))
@@ -636,9 +643,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 APPROX_DISTINCT_RSD = 0.05
 
 
-def approx_distinct_customers(
-    spark: SparkSession, sf_dir: str, rsd: float = APPROX_DISTINCT_RSD
-) -> DataFrame:
+def approx_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``approx_count_distinct`` (HyperLogLog++ — a mergeable fixed-size
     sketch, map-side partials, no distinct-expand shuffle) with its
     error guarantee ASSERTED against the exact cardinality: per order
@@ -650,12 +655,12 @@ def approx_distinct_customers(
     the 100 TB swap for exact countDistinct, whose expand+re-aggregate
     doubles the shuffle volume per distinct column."""
     od = _t(spark, sf_dir, "orders")
-    margin = 3.0 * rsd
+    margin = 3.0 * APPROX_DISTINCT_RSD
     return (
         od.groupBy("o_orderpriority")
         .agg(
             F.countDistinct("o_custkey").alias("n_customers"),
-            F.approx_count_distinct("o_custkey", rsd).alias("est"),
+            F.approx_count_distinct("o_custkey", APPROX_DISTINCT_RSD).alias("est"),
         )
         .select(
             "o_orderpriority",

@@ -58,17 +58,24 @@ def test_knn_self_excluded_and_ranked(walk):
     assert sims == sorted(sims, reverse=True)
 
 
-def test_ivf_is_subset_of_brute_force_space(spark):
+def _all_cosines(spark, monkeypatch):
+    """vec_id -> cos_sim of every vector to the query vector: the
+    brute-force ranking with no rank cut."""
+    from nreadability_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "TOP_K", 10**6)
+    return {
+        r["vec_id"]: r["cos_sim"]
+        for r in similarity.knn_brute_force(spark, SF_DIR).collect()
+    }
+
+
+def test_ivf_is_subset_of_brute_force_space(spark, walk, monkeypatch):
     """IVF results must be genuine vectors with correct cosine values:
     every IVF hit appears in the brute-force ranking with the same
     cosine (IVF may *miss* neighbors, never invent them)."""
-    from nreadability_spark.operators import similarity
-
-    brute = {
-        r["vec_id"]: r["cos_sim"]
-        for r in similarity.knn_brute_force(spark, SF_DIR, k=10**6).collect()
-    }
-    for r in similarity.knn_ivf(spark, SF_DIR).collect():
+    brute = _all_cosines(spark, monkeypatch)
+    for r in walk["sim_knn_ivf_pinned"].rows:
         assert r["vec_id"] in brute
         assert abs(brute[r["vec_id"]] - r["cos_sim"]) < 1e-9
 
@@ -235,16 +242,16 @@ def test_adpcm_decode_vs_independent_implementation():
     assert max(want) == 32767 and min(want) == -32768
 
 
-def test_sft_spans_slice_the_rendered_conversation(spark):
+def test_sft_spans_slice_the_rendered_conversation(walk):
     """The emitted [span_start, span_end) offsets must actually index
     the assistant PAYLOAD inside the rendered example — verified by
     re-rendering each conversation independently in plain Python
     (sorted turns, '<|role|>' + text + '<|end|>' concatenation) and
     slicing: every span recovers exactly its turn's text, never a
     header or end marker."""
-    from nreadability_spark.operators.textops import SFT_END, SFT_ROLES, sft_spans
+    from nreadability_spark.operators.textops import SFT_END, SFT_ROLES
 
-    rows = sft_spans(spark, SF_DIR).collect()
+    rows = walk["text_sft_spans"].rows
     assert rows
     con = duckdb.connect()
     ev = con.execute(
@@ -711,10 +718,10 @@ def test_gif_lzw_rejects_min_code_size_outside_spec():
     assert gif_frame_pixels(bytes(gif)) == []
 
 
-def test_lang_id_predicts_only_known_labels(spark):
+def test_lang_id_predicts_only_known_labels(walk):
     from nreadability_spark.operators import textops
 
-    rows = textops.lang_id(spark, SF_DIR).collect()
+    rows = walk["text_lang_id"].rows
     allowed = set(textops.LANG_ORDER) | {"unknown"}
     assert all(r["pred_lang"] in allowed for r in rows)
 
@@ -796,28 +803,24 @@ def test_span_dedup_matches_bruteforce_on_random_corpora(spark, seed):
     assert got == expected
 
 
-def test_quality_classifier_learns_planted_signal(spark):
+def test_quality_classifier_learns_planted_signal(walk):
     """Full-batch GD must separate the planted prose/spam tails far
     above the 2/3 base rate (measured 100% at sf0.001/0.01)."""
-    from nreadability_spark.operators.classifier import quality_classifier_apply
-
-    rows = quality_classifier_apply(spark, SF_DIR).collect()
+    rows = walk["text_quality_classifier_apply"].rows
     acc = sum(r["pred"] == r["y"] for r in rows) / len(rows)
     assert acc > 0.95
     # the stopword-ratio weight must carry the signal (positive, largest)
-    from nreadability_spark.operators.classifier import quality_classifier_fit
-
     w = {r["feature"]: r["weight"]
-         for r in quality_classifier_fit(spark, SF_DIR).collect() if r["iter"] == 12}
+         for r in walk["text_quality_classifier_fit"].rows if r["iter"] == 12}
     assert w[1] > 0 and w[1] == max(abs(v) for v in w.values())
 
 
-def test_pq_codes_shape_and_bounds(spark):
+def test_pq_codes_shape_and_bounds(walk):
     """Every vector gets exactly PQ_M codes, each in [0, PQ_K), with a
     non-negative reconstruction residual."""
     from nreadability_spark.operators import similarity as S
 
-    rows = S.pq_codes(spark, SF_DIR).collect()
+    rows = walk["sim_pq_codes"].rows
     per_vec = {}
     for r in rows:
         assert 0 <= r["code"] < S.PQ_K and r["err"] >= 0.0
@@ -825,13 +828,13 @@ def test_pq_codes_shape_and_bounds(spark):
     assert all(subs == set(range(S.PQ_M)) for subs in per_vec.values())
 
 
-def test_pq_adc_top10_beats_corpus_mean_distance(spark, duck):
+def test_pq_adc_top10_beats_corpus_mean_distance(walk, duck):
     """Isotropic random vectors concentrate distances, so strict
     recall@10 is noisy — the robust property is that ADC's top-10 are
     substantially closer (exact L2) than the average vector."""
     from nreadability_spark.operators import similarity as S
 
-    ids = [r["vec_id"] for r in S.knn_pq_adc(spark, SF_DIR, k=10).collect()]
+    ids = [r["vec_id"] for r in walk["sim_knn_pq"].rows]
     l2 = "(" + " + ".join(
         f"(e.emb[{i}] - q.emb[{i}])*(e.emb[{i}] - q.emb[{i}])" for i in range(1, S.DIM + 1)
     ) + ")"
@@ -844,30 +847,26 @@ def test_pq_adc_top10_beats_corpus_mean_distance(spark, duck):
     assert adc_mean < 0.9 * all_mean
 
 
-def test_token_cms_never_underestimates_and_collides(spark):
+def test_token_cms_never_underestimates_and_collides(walk):
     """CMS one-sided guarantee: every estimate >= the exact count; at
     the deliberately narrow sandbox width at least one probe must
     actually overcount (otherwise the sketch path is untested)."""
-    from nreadability_spark.operators.textops import token_cms
-
-    rows = token_cms(spark, SF_DIR).collect()
+    rows = walk["text_token_cms"].rows
     assert len(rows) == 20
     assert all(r["est_cnt"] >= r["exact_cnt"] for r in rows)
     assert any(r["overcount"] > 0 for r in rows)
 
 
-def test_bloom_decontaminate_is_a_superset_of_exact(spark):
+def test_bloom_decontaminate_is_a_superset_of_exact(walk):
     """Bloom filters err only toward over-removal: every exact overlap
     must be flagged (n_flagged >= n_exact per doc, every contaminated
     doc present), and at the deliberately small sandbox parameters the
     filter must actually produce false positives (otherwise the query
     degenerates into the exact variant and tests nothing)."""
-    from nreadability_spark.operators.textops import decontaminate, decontaminate_bloom
-
     bloom = {r["doc_id"]: (r["n_flagged"], r["n_exact"])
-             for r in decontaminate_bloom(spark, SF_DIR).collect()}
+             for r in walk["text_decontaminate_bloom"].rows}
     exact = {r["doc_id"]: r["n_overlapping_shingles"]
-             for r in decontaminate(spark, SF_DIR).collect()}
+             for r in walk["text_decontaminate"].rows}
     for d, n in exact.items():
         assert d in bloom and bloom[d][0] >= n and bloom[d][1] == n
     assert sum(f - e for f, e in bloom.values()) > 0  # real FPs
@@ -964,16 +963,18 @@ def test_bpe_merge_counts_non_increasing(spark):
     """Classic BPE invariant: the winning pair count never increases
     round over round (every post-merge pair occurrence maps to a
     pre-merge occurrence of a destroyed pair)."""
-    from nreadability_spark.operators.bpe import bpe_fit
+    from nreadability_spark.operators.bpe import fit_merges, word_table
+    from nreadability_spark.operators.textops import load_documents
 
-    counts = [r["pair_count"] for r in bpe_fit(spark, SF_DIR, rounds=6).collect()]
+    merges, _ = fit_merges(word_table(load_documents(spark, SF_DIR)), rounds=6)
+    counts = [pair_count for _rank, _l, _r, _merged, pair_count in merges]
     assert len(counts) == 6
     assert all(a >= b for a, b in zip(counts, counts[1:]))
 
 
 # --- plan-shape assertions (scale contracts) ---------------------------
 
-def test_bpe_encode_never_broadcasts_word_table(spark):
+def test_bpe_encode_never_broadcasts_word_table(spark, monkeypatch):
     """Encode must never PLAN a broadcast of the vocabulary: the
     distinct-word table grows ~Heaps-law with the corpus (unbounded at
     100 TB). The sanctioned shape is a co-partitioned SHUFFLE join on
@@ -981,9 +982,10 @@ def test_bpe_encode_never_broadcasts_word_table(spark):
     per distinct word); assert pre-AQE — at tiny scale AQE may still
     legitimately convert the exchange to a runtime broadcast once
     stats prove the vocab fits, which is size-gating, not a hint."""
-    from nreadability_spark.operators.bpe import bpe_encode
+    from nreadability_spark.operators import bpe
 
-    df = bpe_encode(spark, SF_DIR, rounds=3)
+    monkeypatch.setattr(bpe, "BPE_ROUNDS", 3)
+    df = bpe.bpe_encode(spark, SF_DIR)
     # the contract is "no FORCED broadcast": the logical plan must
     # carry no broadcast hint. The physical join strategy is then the
     # planner's stats-based pick — at test scale the checkpointed vocab
@@ -1111,13 +1113,14 @@ def test_near_dup_block_pairs_no_duplicate_pairs(spark, monkeypatch):
     monkeypatch.setattr(similarity, "BROADCAST_PAIR_JOIN_MAX_BYTES", 0)
     monkeypatch.setattr(similarity, "NEAR_DUP_SALTS", 3)
     # threshold -1: keep ALL same-cell pairs, so double-matching shows
-    rows = similarity.embedding_near_dups(spark, SF_DIR, threshold=-1.0).collect()
+    monkeypatch.setattr(similarity, "COSINE_DUP_THRESHOLD", -1.0)
+    rows = similarity.embedding_near_dups(spark, SF_DIR).collect()
     pairs = [(r["vec_a"], r["vec_b"]) for r in rows]
     assert len(pairs) == len(set(pairs))
     assert all(a < b for a, b in pairs)
 
 
-def test_ivf_reads_fitted_centroids(spark):
+def test_ivf_reads_fitted_centroids(spark, walk, monkeypatch):
     """Production wiring: the k-means fit job's centroid table feeds the
     IVF build. Results must still be genuine vectors with exact cosines
     (never invented), and the fit must preserve centroid count here
@@ -1126,11 +1129,8 @@ def test_ivf_reads_fitted_centroids(spark):
 
     cents = similarity.fit_centroids(similarity._vectors(spark, SF_DIR))
     assert cents.count() == similarity.IVF_CENTROIDS
-    brute = {
-        r["vec_id"]: r["cos_sim"]
-        for r in similarity.knn_brute_force(spark, SF_DIR, k=10**6).collect()
-    }
-    rows = similarity.knn_ivf_fitted(spark, SF_DIR).collect()
+    brute = _all_cosines(spark, monkeypatch)
+    rows = walk["sim_knn_ivf"].rows
     assert rows, "fitted-centroid IVF returned nothing"
     for r in rows:
         assert r["vec_id"] in brute
@@ -1255,10 +1255,8 @@ def test_pii_scan_finds_planted_patterns(spark, tmp_path):
     assert rows[2]["n_ssns"] == 1
 
 
-def test_quantize_int8_codes_in_range(spark):
-    from nreadability_spark.operators import similarity
-
-    rows = similarity.quantize_int8(spark, SF_DIR).collect()
+def test_quantize_int8_codes_in_range(walk):
+    rows = walk["sim_quantize_int8"].rows
     assert rows
     for r in rows:
         assert -127 <= r["q_min"] <= r["q_max"] <= 127
@@ -1337,7 +1335,7 @@ def test_simhash_64bit_keyspace_bounds_buckets(spark, tmp_path):
 
     def max_bucket(bits):
         sims = dedup.simhash_values(docs, bits=bits)
-        ch = dedup._simhash_chunk_table(sims, bits, dedup.SIMHASH_CHUNKS)
+        ch = dedup._simhash_chunk_table(sims, bits)
         return (
             ch.groupBy("chunk", "chunk_key")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -1353,7 +1351,7 @@ def test_simhash_64bit_keyspace_bounds_buckets(spark, tmp_path):
     assert m64 < m32
 
 
-def test_simhash_hamming_still_exact_at_64bit(spark, tmp_path):
+def test_simhash_hamming_still_exact_at_64bit(spark, tmp_path, monkeypatch):
     """A one-token edit of a 40-token doc must surface as a candidate
     pair with a small, exactly-verified Hamming distance at 64 bits."""
     from nreadability_spark.operators import dedup
@@ -1361,7 +1359,8 @@ def test_simhash_hamming_still_exact_at_64bit(spark, tmp_path):
     base = " ".join(f"tok{j}" for j in range(40))
     texts = [base, base.replace("tok7", "changed"), "wholly different text entirely"]
     _write_docs(spark, str(tmp_path), texts)
-    rows = dedup.simhash_pairs(spark, str(tmp_path), max_dist=16).collect()
+    monkeypatch.setattr(dedup, "SIMHASH_MAX_DIST", 16)
+    rows = dedup.simhash_pairs(spark, str(tmp_path)).collect()
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
     assert (0, 1) in pairs and pairs[(0, 1)] <= 16
     assert (0, 2) not in pairs
@@ -1402,15 +1401,16 @@ def test_components_round_plan_depth_constant(spark):
     edges.unpersist()
 
 
-def test_components_nonconvergence_raises(spark, tmp_path):
-    """No silent caps: exhausting max_iters without convergence must
+def test_components_nonconvergence_raises(spark, tmp_path, monkeypatch):
+    """No silent caps: exhausting CC_MAX_ITERS without convergence must
     raise, not return partial labels that diverge from the oracle."""
     from nreadability_spark.operators import dedup
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     _write_docs(spark, str(tmp_path), [base, base + " tail", "unrelated other words here now"])
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.duplicate_components(spark, str(tmp_path), max_iters=0)
+        dedup.duplicate_components(spark, str(tmp_path))
 
 
 def _planted_parity(spark, path, table, rows, build, sql):
@@ -1488,12 +1488,10 @@ def _write_docs_lang(spark, path, texts):
     ).coalesce(1).write.parquet(f"{path}/documents.parquet")
 
 
-def test_approx_quantiles_within_rank_bound(spark):
+def test_approx_quantiles_within_rank_bound(walk):
     """Every group's approx-percentile estimate must satisfy the
     sketch's published rank-error guarantee against the exact data."""
-    from nreadability_spark.plans import relational
-
-    rows = relational.order_price_quantiles_approx(spark, SF_DIR).collect()
+    rows = walk["rel_price_quantiles_approx"].rows
     assert rows
     for r in rows:
         assert (r["ok_p25"], r["ok_p50"], r["ok_p90"]) == (1, 1, 1)
@@ -1776,16 +1774,17 @@ def test_wav_metadata_decode_is_real():
         assert fmt == "unknown" and all(v is None for v in rest)
 
 
-def test_sequence_packing_offsets_and_spans(spark, tmp_path):
+def test_sequence_packing_offsets_and_spans(spark):
     """Two-phase global prefix sum must equal the sequential layout:
     contiguous offsets in doc_id order, pack arithmetic consistent,
     docs spanning a budget boundary counted correctly."""
-    from nreadability_spark.operators import textops
+    from nreadability_spark.operators.textops import _packed
 
-    texts = [" ".join(f"t{j}" for j in range(n)) for n in (5, 10, 3, 20, 7, 0, 9)]
-    _write_docs(spark, str(tmp_path), texts)
+    lens = spark.createDataFrame(
+        list(enumerate((5, 10, 3, 20, 7, 0, 9))), "doc_id: long, n_tokens: long"
+    )
     rows = sorted(
-        textops.sequence_packing(spark, str(tmp_path), budget=16, block_size=2).collect(),
+        _packed(lens, "doc_id", "n_tokens", 16, 2).collect(),
         key=lambda r: r["doc_id"],
     )
     cum = 0
@@ -1800,7 +1799,7 @@ def test_sequence_packing_offsets_and_spans(spark, tmp_path):
     assert rows[3]["n_packs_spanned"] == 2
 
 
-def test_sft_packed_layout_is_sequential_and_consistent(spark):
+def test_sft_packed_layout_is_sequential_and_consistent(spark, monkeypatch):
     """The composed SFT layout (render arithmetic -> two-phase global
     prefix sum) must be a gapless sequential layout: offsets are the
     running sum of example lengths in conv_id order, pack arithmetic
@@ -1808,10 +1807,12 @@ def test_sft_packed_layout_is_sequential_and_consistent(spark):
     conversation's actual character count (cross-checked against the
     sft_spans rendering invariant's ground truth)."""
     from nreadability_spark.operators.textops import SFT_END, SFT_ROLES
-    from nreadability_spark.plans.pipeline import sft_packed
+    from nreadability_spark.plans import pipeline
 
+    monkeypatch.setattr(pipeline, "SFT_PACK_BUDGET", 512)
+    monkeypatch.setattr(pipeline, "SFT_PACK_BLOCK", 16)
     rows = sorted(
-        sft_packed(spark, SF_DIR, budget=512, block_size=16).collect(),
+        pipeline.sft_packed(spark, SF_DIR).collect(),
         key=lambda r: r["conv_id"],
     )
     assert rows
@@ -1847,7 +1848,7 @@ def _write_src_docs(spark, path, rows):
     ).coalesce(1).write.parquet(f"{path}/documents.parquet")
 
 
-def test_unigram_logprob_ranks_oov_docs_lower(spark, tmp_path):
+def test_unigram_logprob_ranks_oov_docs_lower(spark, tmp_path, monkeypatch):
     """A document made of corpus-frequent tokens must out-score a
     document of singletons (all OOV below the top-V cut): the model
     filter's whole point."""
@@ -1856,9 +1857,10 @@ def test_unigram_logprob_ranks_oov_docs_lower(spark, tmp_path):
     common = "alpha beta gamma delta " * 30           # dominates the corpus
     rare = " ".join(f"zq{i}x" for i in range(40))      # 40 singletons
     _write_docs(spark, str(tmp_path), [common, common, common, rare])
+    monkeypatch.setattr(textops, "LM_VOCAB_SIZE", 4)
     rows = {
         r["doc_id"]: r
-        for r in textops.unigram_logprob(spark, str(tmp_path), vocab_size=4).collect()
+        for r in textops.unigram_logprob(spark, str(tmp_path)).collect()
     }
     assert rows[3]["n_oov"] == 40
     assert rows[0]["n_oov"] == 0
@@ -1938,7 +1940,7 @@ def test_dsir_model_is_complete_and_scores_novel_docs(spark):
     assert r["n_ngrams"] == 7
 
 
-def test_dsir_select_prefers_target_distribution(spark):
+def test_dsir_select_prefers_target_distribution(spark, walk):
     """Importance weights must actually pull toward the target: the
     target source's own documents (drawn FROM the target distribution)
     should be over-represented in the selected set relative to their
@@ -1946,7 +1948,7 @@ def test_dsir_select_prefers_target_distribution(spark):
     resolved by doc_id)."""
     from nreadability_spark.operators import textops
 
-    rows = textops.dsir_select(spark, SF_DIR).collect()
+    rows = walk["text_dsir_select"].rows
     sel = [r for r in rows if r["selected"]]
     assert len(sel) == textops.DSIR_TOP_K
     docs = {r["doc_id"]: r for r in rows}

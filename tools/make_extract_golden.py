@@ -42,7 +42,7 @@ if _REPO_DIR not in sys.path:
 from nreadability_spark.core.pdf import extract_pdf, looks_like_pdf  # noqa: E402
 from nreadability_spark.core.transcoder import extract  # noqa: E402
 
-PAGES_PER_CONV = 3  # operators/stitch.py stitched_documents default
+PAGES_PER_CONV = 3  # operators/stitch.py PAGES_PER_CONV
 
 
 def _read_documents(sf_dir):
