@@ -43,7 +43,7 @@ def main():
 
     from pyspark.sql import functions as F
 
-    from nreadability_spark.operators import bpe, classifier, similarity
+    from nreadability_spark.operators import bpe, classifier, similarity, textops
     from nreadability_spark.session import get_spark
 
     spark = get_spark(app_name="nreadability-fit-models")
@@ -55,10 +55,7 @@ def main():
     cents.write.mode("overwrite").parquet(f"{args.out}/centroids")
     counts["centroids"] = spark.read.parquet(f"{args.out}/centroids").count()
 
-    emb = similarity.load_embeddings(spark, args.sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    book = similarity.fit_pq_codebook(emb).select(
+    book = similarity.fit_pq_codebook(similarity._vectors(spark, args.sf_dir)).select(
         F.col("m").cast("long").alias("sub"),
         F.col("cent_id").cast("long").alias("code"),
         F.posexplode("c").alias("dim", "val"),
@@ -72,17 +69,13 @@ def main():
     counts["bpe_merges"] = spark.read.parquet(f"{args.out}/bpe_merges").count()
 
     feats = classifier.feature_frame(
-        classifier.labeled_corpus(
-            spark.read.parquet(f"{args.sf_dir}/documents.parquet")
-        )
+        classifier.labeled_corpus(textops.load_documents(spark, args.sf_dir))
     )
     w = classifier.fit_logreg(feats)[-1][1]
     spark.createDataFrame(
         list(enumerate(w)), "feature: long, weight: double"
     ).write.mode("overwrite").parquet(f"{args.out}/quality_lr")
     counts["quality_lr"] = spark.read.parquet(f"{args.out}/quality_lr").count()
-
-    from nreadability_spark.operators import textops
 
     dsir = textops.dsir_bucket_model(spark, args.sf_dir)
     dsir.write.mode("overwrite").parquet(f"{args.out}/dsir_buckets")

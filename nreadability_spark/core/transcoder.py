@@ -911,6 +911,11 @@ def _stage_walk(element, trigger_prefixes):
 
     - no ``script``/``style`` descendants — rawtext parses as CDATA
       while serialization escapes it;
+    - no ``html`` descendants — a fragment that opens with ``<html>``
+      gets it as the temp document's root, whose children alone
+      ``set_inner_html`` copies, and ``build_document`` cuts its input
+      after the last ``</html>`` (``<body><html>text`` builds such a
+      tree);
     - no parent->child element edge *inside* the forest is an implied
       end tag (``CLOSED_BY``): pipeline mutations such as the div->p
       rename (NRT:812) can build trees like ``<p><li>`` that a reparse
@@ -947,7 +952,7 @@ def _stage_walk(element, trigger_prefixes):
             if stable:
                 if kind is Element:
                     name = node.name
-                    stable = name not in closed_by and name not in ("script", "style")
+                    stable = name not in closed_by and name not in ("script", "style", "html")
                 elif kind is Text:
                     stable = not prev_was_text and node.value.strip(XML_WHITESPACE) != ""
                 prev_was_text = kind is Text

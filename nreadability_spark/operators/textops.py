@@ -552,6 +552,22 @@ CMS_DEPTH = 3
 CMS_PROBE_TOP = 20
 
 
+def _cms_positions(df: DataFrame) -> DataFrame:
+    """``df`` plus (row, pos): the CMS_DEPTH counter positions of each
+    row's hash column ``h``, one output row per sketch row — the double
+    hashing ``_cms_pos_sql`` writes for DuckDB."""
+    w = CMS_WIDTH
+    h1 = F.pmod(F.col("h"), F.lit(w))
+    h2 = F.lit(1) + F.pmod(F.shiftright(F.col("h"), 20), F.lit(w - 1))
+    poss = F.array(
+        *[
+            F.struct(F.lit(i).alias("row"), F.pmod(h1 + F.lit(i) * h2, F.lit(w)).alias("pos"))
+            for i in range(CMS_DEPTH)
+        ]
+    )
+    return df.withColumn("p", F.explode(poss)).select(*df.columns, "p.row", "p.pos")
+
+
 def _cms_pos_sql(i: int, h: str) -> str:
     w = CMS_WIDTH
     return f"((({h}) % {w}) + {i} * (1 + ((({h}) >> 20) % {w - 1}))) % {w}"
@@ -588,23 +604,7 @@ def token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embedded md5 subtree (the HOF-lambda pitfall, same fix — measured
     # 18.5s -> ~2s cold at sf0.1)
     hashed = toks.select(hashing.h60(F.col("tok")).alias("h"))
-    w, d = CMS_WIDTH, CMS_DEPTH
-    h1 = F.pmod(F.col("h"), F.lit(w))
-    h2 = F.lit(1) + F.pmod(F.shiftright(F.col("h"), 20), F.lit(w - 1))
-    pairs = hashed.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        F.pmod(h1 + F.lit(i) * h2, F.lit(w)).alias("pos"),
-                    )
-                    for i in range(d)
-                ]
-            )
-        ).alias("p")
-    )
-    counters = pairs.groupBy(F.col("p.row").alias("row"), F.col("p.pos").alias("pos")).agg(
+    counters = _cms_positions(hashed).groupBy("row", "pos").agg(
         F.count(F.lit(1)).alias("counter")
     )
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
@@ -614,24 +614,7 @@ def token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("r") <= CMS_PROBE_TOP)
         .drop("r")
     )
-    probe = probe.select("tok", "exact_cnt", hashing.h60(F.col("tok")).alias("h"))
-    ph1 = F.pmod(F.col("h"), F.lit(w))
-    ph2 = F.lit(1) + F.pmod(F.shiftright(F.col("h"), 20), F.lit(w - 1))
-    probe_pos = probe.select(
-        "tok",
-        "exact_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        F.pmod(ph1 + F.lit(i) * ph2, F.lit(w)).alias("pos"),
-                    )
-                    for i in range(d)
-                ]
-            )
-        ).alias("p"),
-    ).select("tok", "exact_cnt", F.col("p.row").alias("row"), F.col("p.pos").alias("pos"))
+    probe_pos = _cms_positions(probe.withColumn("h", hashing.h60(F.col("tok"))))
     return (
         probe_pos.join(F.broadcast(counters), ["row", "pos"])
         .groupBy("tok", "exact_cnt")
@@ -2001,11 +1984,11 @@ def sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     end markers and non-assistant turns masked out). The events table
     stands in as conversations (conv = user_id, stable order =
     (ts, event_id), role planted by event_id % 3, text =
-    event_type ':' props, a NULL part rendering as '' as in the
-    streaming twin); emits one row per assistant turn with its
-    absolute [span_start, span_end) character offsets in the rendered
-    example plus the example's total length — the (offsets, text)
-    contract downstream packing/tokenization consumes.
+    event_type ':' props, a NULL part rendering as ''); emits one row
+    per assistant turn with its absolute [span_start, span_end)
+    character offsets in the rendered example plus the example's total
+    length — the (offsets, text) contract downstream
+    packing/tokenization consumes.
 
     Scale shape: built-ins only — one shuffle on the conversation key
     feeds both window passes (running start via an UNBOUNDED

@@ -149,16 +149,11 @@ def training_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
 def training_ready_sql() -> str:
     from nreadability_spark.operators import textops
 
-    n, every = textops.DECON_NGRAM, textops.DECON_BENCH_EVERY
+    every = textops.DECON_BENCH_EVERY
     bucket = "(fp60 % 100)"
     return f"""
 WITH {_clean_corpus_ctes()},
-sh AS ({tx.hashed_shingles_sql('documents', n)}),
-bench AS (SELECT DISTINCT sh60 FROM sh WHERE doc_id % {every} = 0),
-contaminated AS (
-  SELECT DISTINCT s.doc_id FROM sh s JOIN bench b ON s.sh60 = b.sh60
-  WHERE s.doc_id % {every} != 0
-)
+contaminated AS (SELECT doc_id FROM ({textops.decontaminate_sql()}) d)
 SELECT doc_id, n_tokens,
        CASE WHEN {bucket} < {textops.SPLIT_TRAIN_PCT} THEN 'train'
             WHEN {bucket} < {textops.SPLIT_TRAIN_PCT + textops.SPLIT_VAL_PCT} THEN 'val'

@@ -150,6 +150,22 @@ def test_leading_comment_elision_matches_reparse():
         assert fast.html == slow.html, soup
 
 
+def test_html_element_elision_matches_reparse():
+    """Deterministic regression: ``<body><html>`` builds an ``html``
+    element inside the body. Reparsing a subtree that holds it makes it
+    the temp document's root, or cuts the input after its ``</html>``,
+    so the elided fast path must take the real reparse too."""
+    body = "Readable sentence, with commas, that scores well in the pass. " * 10
+    for soup in (
+        f"<body><html>{body}",
+        f"<body><html a=1><p>{body}</p></html><p>{body}</p>",
+    ):
+        fast = extract(soup)
+        slow = _extract_unelided(soup)
+        assert fast.content_html == slow.content_html, soup[:40]
+        assert fast.html == slow.html, soup[:40]
+
+
 def test_regex_stage_elision_matches_reparse():
     """Deterministic shapes on which each serialized regex stage has
     work to do (double <br> and <font> in the body, <br> runs and a <br>

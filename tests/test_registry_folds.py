@@ -16,6 +16,9 @@ No Spark is started.
   registry builder at ``(spark, sf_dir)`` and every public ``*_sql``
   twin free of defaulted parameters: a query's parameter is one module
   constant that both sides read.
+- ``test_training_ready_twin_composes_decontaminate`` keeps a composed
+  DuckDB twin built from the twin of each query its Spark side
+  composes, so a rule is written once per side.
 """
 
 import collections
@@ -201,3 +204,10 @@ def test_registry_queries_take_only_spark_and_sf_dir():
             extra = [p for p, v in params.items() if v.default is not inspect.Parameter.empty]
         settable += [f"{fn.__module__}.{fn.__name__}({p})" for p in extra]
     assert not settable, f"{len(settable)} settable values:\n" + "\n".join(sorted(settable))
+
+
+def test_training_ready_twin_composes_decontaminate():
+    from nreadability_spark.operators import textops
+    from nreadability_spark.plans import pipeline
+
+    assert textops.decontaminate_sql() in pipeline.training_ready_sql()

@@ -1,6 +1,8 @@
 """Structured Streaming tests: the batch extraction operator must work
-unchanged over a stream, streaming results must equal the batch results
-on the same rows, and the windowed metrics must respect event time.
+unchanged over a stream, and the stream must write the batch job's table
+on the same rows, across micro-batches, restarts and out-of-order or
+repeated turns. The conversation-offset state runs without Spark too,
+through ``_FakeState``.
 
 Every query runs with an ``availableNow`` trigger through ``_await``:
 one that has not finished within ``STREAM_TIMEOUT_S`` fails the test,
@@ -242,23 +244,6 @@ def test_stream_bucket_files_are_ordered_and_manifested(spark, tmp_path):
         assert {b: m["rows"] for b, m in manifests.items()} == rows, batch_dir
 
 
-def test_windowed_metrics_by_event_time(spark, tmp_path, transcript_files):
-    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
-    from nreadability_spark.streaming import windowed_turn_metrics
-
-    src, batch_df = transcript_files
-    stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(src)
-    rows = _drain(windowed_turn_metrics(stream, window_duration="1 minute"), "turn_metrics")
-    # watermark closes all but the trailing window(s); every emitted
-    # window must be consistent and non-overlapping
-    assert rows, "expected at least one closed window"
-    for r in rows:
-        assert r["turns"] >= r["extracted_turns"] >= 0
-        assert (r["window_end"] - r["window_start"]).total_seconds() == 60
-    starts = [r["window_start"] for r in rows]
-    assert len(starts) == len(set(starts))
-
-
 def _batch_offsets(spark, src):
     from nreadability_spark.plans.extract_job import extract_transcripts
 
@@ -267,23 +252,6 @@ def _batch_offsets(spark, src):
     )
 
 
-def test_stateful_conv_offsets_across_batches(spark, tmp_path):
-    """conv_offset computed with applyInPandasWithState over a stream
-    (conversations split across micro-batches) must equal the batch
-    window's conv_offset."""
-    from nreadability_spark.sources.synth import transcripts_df
-    from nreadability_spark.streaming import extract_stream
-
-    src = str(tmp_path / "split_src")
-    df = transcripts_df(spark, 10)
-    # split every conversation across two files at turn_idx 3: state
-    # must carry the running total across the batch boundary
-    df.where("turn_idx < 3").coalesce(1).write.parquet(src)
-    df.where("turn_idx >= 3").coalesce(1).write.mode("append").parquet(src)
-
-    rows = _drain(extract_stream(_file_stream(spark, src), include_html=False), "conv_offsets")
-    got = _keyed(rows, "conv_offset")
-    assert got == _batch_offsets(spark, src) and len(got) > 0
 class _FakeState:
     """Minimal stand-in for GroupState (unit tests, no Spark)."""
 
@@ -311,27 +279,11 @@ class _FakeState:
         self.timeout_ms = ms
 
 
-class _FakeGrouped:
-    """Stand-in for a grouped DataFrame: hands back the per-group
-    function that ``apply_with_state`` would run."""
-
-    def applyInPandasWithState(self, fn, **_):
-        return fn
-
-
-def _shell(step, idle_timeout_ms=None):
-    from nreadability_spark.streaming.stateful import apply_with_state
-
-    return apply_with_state(_FakeGrouped(), step, None, None, idle_timeout_ms)
-
-
-def _step(max_disorder):
-    """The offset step over ``_turns`` frames."""
+def _row_schema():
+    """The Arrow schema of ``_turns`` frames."""
     import pyarrow as pa
 
-    from nreadability_spark.streaming.stateful import offsets_step
-
-    schema = pa.schema(
+    return pa.schema(
         [
             ("conv_id", pa.string()),
             ("turn_idx", pa.int32()),
@@ -339,7 +291,26 @@ def _step(max_disorder):
             ("extracted", pa.bool_()),
         ]
     )
-    return partial(offsets_step, row_schema=schema, max_disorder=max_disorder)
+
+
+def _group(max_disorder, idle_timeout_ms):
+    """The per-group function ``extract_stream`` hands to
+    ``applyInPandasWithState``, over ``_turns`` frames."""
+    from nreadability_spark.streaming import _offsets_group
+
+    return partial(
+        _offsets_group,
+        row_schema=_row_schema(),
+        max_disorder=max_disorder,
+        idle_timeout_ms=idle_timeout_ms,
+    )
+
+
+def _step(max_disorder):
+    """The offset step over ``_turns`` frames."""
+    from nreadability_spark.streaming import _offsets_step
+
+    return partial(_offsets_step, row_schema=_row_schema(), max_disorder=max_disorder)
 
 
 def _turns(rows):
@@ -358,11 +329,12 @@ def _turns(rows):
 
 
 def test_apply_with_state_protocol():
-    """The one group-state shell: a live group's chunks reach the step
-    concatenated whatever their order, the state is updated and the TTL
-    armed; on a timeout the step's rows (here the pending turns, flushed
-    in turn order) are emitted and the state is removed."""
-    fn = _shell(_step(64), 60_000)
+    """The per-group function speaks Spark's group-state protocol: a
+    live group's chunks reach the step concatenated whatever their
+    order, the state is updated and the TTL armed; on a timeout the
+    pending turns are emitted, flushed in turn order, and the state is
+    removed."""
+    fn = _group(64, 60_000)
     state = _FakeState()
     assert list(fn(("c",), iter([_turns([(5, "ff")]), _turns([(3, "ddd")])]), state)) == []
     assert state.timeout_ms == 60_000
@@ -386,7 +358,7 @@ def test_offsets_fn_sorts_across_arrow_chunks():
 
     # chunks deliberately out of order: [4,5] before [0..3], plus interleave
     pdf = pd.concat([chunk([4, 5]), chunk([1, 3]), chunk([0, 2])], ignore_index=True)
-    out, state = _step(0)(("c0",), pdf, None)
+    out, state = _step(0)(pdf, None)
     out = out.sort_values("turn_idx", ignore_index=True)
     # expected cumulative offsets over lengths 1..6 in turn order
     lens = [i + 1 for i in range(6)]
@@ -436,15 +408,15 @@ def test_ordered_fn_buffers_out_of_order_and_dedupes():
     cumulative offsets; duplicates and beyond-bound late rows drop."""
     step = _step(2)  # D=2
     # batch 1: turns 2 and 4 -> watermark 4-2=2 -> only turn 2 emits
-    out1, state = step(("c",), _turns([(2, "cc"), (4, "eeee")]), None)
+    out1, state = step(_turns([(2, "cc"), (4, "eeee")]), None)
     assert list(out1["turn_idx"]) == [2]
     assert list(out1["conv_offset"]) == [0]
     # batch 2: turn 0 is later than the bound (already emitted past it)
     # -> dropped; duplicate 4 dropped; turn 3 buffers (watermark still 2)
-    out2, state = step(("c",), _turns([(0, "x"), (3, "ddd"), (4, "DUP")]), state)
+    out2, state = step(_turns([(0, "x"), (3, "ddd"), (4, "DUP")]), state)
     assert out2.empty
     # batch 3: turn 6 -> watermark 4 -> 3 and 4 emit with exact offsets
-    out3, state = step(("c",), _turns([(6, "gg")]), state)
+    out3, state = step(_turns([(6, "gg")]), state)
     assert list(out3["turn_idx"]) == [3, 4]
     assert list(out3["conv_offset"]) == [2, 5]
     assert list(out3["content_text"]) == ["ddd", "eeee"]  # first copy kept
@@ -454,12 +426,12 @@ def test_ordered_fn_timeout_flushes_pending_in_order():
     """Unit: a timeout (``pdf`` None) emits the pending turns in turn
     order; with nothing pending it emits nothing."""
     step = _step(64)
-    out, state = step(("c",), _turns([(5, "fffff"), (3, "ddd")]), None)
+    out, state = step(_turns([(5, "fffff"), (3, "ddd")]), None)
     assert out.empty
-    flushed, _ = step(("c",), None, state)
+    flushed, _ = step(None, state)
     assert list(flushed["turn_idx"]) == [3, 5]
     assert list(flushed["conv_offset"]) == [0, 3]
-    assert step(("c",), None, (42, 7, None))[0].empty
+    assert step(None, (42, 7, None))[0].empty
 
 
 @settings(max_examples=300, deadline=None)
@@ -467,10 +439,10 @@ def test_ordered_fn_timeout_flushes_pending_in_order():
 def test_offsets_step_equals_sorted_cumsum_over_first_seen(data):
     """Property, no Spark: a conversation's turns, repeated turns and
     NULL texts included, arrive in random micro-batches out of order by
-    less than ``max_disorder`` (in order at 0); what the shell emits,
-    a final timeout flush included, is the turns' running character sum
-    in turn order over each turn's first-seen row, which passes through
-    whole."""
+    less than ``max_disorder`` (in order at 0); what the per-group
+    function emits, a final timeout flush included, is the turns'
+    running character sum in turn order over each turn's first-seen
+    row, which passes through whole."""
     import pandas as pd
 
     d = data.draw(st.integers(0, 8), label="max_disorder")
@@ -498,7 +470,7 @@ def test_offsets_step_equals_sorted_cumsum_over_first_seen(data):
             }
         )
 
-    fn = _shell(_step(d), 1_000)
+    fn = _group(d, 1_000)
     state = _FakeState()
     outs = []
     for lo, hi in zip(bounds, bounds[1:]):
@@ -520,36 +492,6 @@ def test_offsets_step_equals_sorted_cumsum_over_first_seen(data):
         want.append(("c", i, t, cum, e))
         cum += len(t or "")
     assert got == want
-
-
-def test_stream_ordered_offsets_out_of_order_batches(spark, tmp_path):
-    """End-to-end: later turns land in the FIRST micro-batch, earlier
-    turns in the second. A third batch of high-turn sentinel rows
-    advances the disorder watermark past every buffered row, releasing
-    the whole backlog — the result must equal the batch window's
-    offsets exactly (the sentinels stay buffered: nothing follows
-    them)."""
-    from nreadability_spark.sources.synth import transcripts_df
-    from nreadability_spark.streaming import extract_stream
-
-    src = str(tmp_path / "ooo_src")
-    # conv 0 is the 600-turn skewed conversation: its front-to-back
-    # inversion (gap ~599) exceeds any reasonable disorder bound, so a
-    # bounded-disorder reorderer must drop its early turns — use only
-    # short conversations (gap <= 12 < D=16) for the exact-equality check
-    df = transcripts_df(spark, 7).where("conv_id != 'conv00000000'")
-    # arrival order: turns >= 3, then turns < 3, then the sentinels
-    df.where("turn_idx >= 3").coalesce(1).write.parquet(src)
-    df.where("turn_idx < 3").coalesce(1).write.mode("append").parquet(src)
-    _sentinels(df).coalesce(1).write.mode("append").parquet(src)
-
-    rows = _drain(
-        extract_stream(_file_stream(spark, src), include_html=False, max_disorder=16),
-        "ooo_offsets",
-    )
-    got = _keyed(rows, "conv_offset")
-    want = {k: v for k, v in _batch_offsets(spark, src).items() if k[1] != SENTINEL_TURN}
-    assert got == want and len(got) > 0
 
 
 def test_stream_emits_a_repeated_turn_once(spark, tmp_path):
@@ -574,189 +516,3 @@ def test_stream_emits_a_repeated_turn_once(spark, tmp_path):
     rows = _drain(extract_stream(_file_stream(spark, src), include_html=False), "repeat_offsets")
     got = _keyed(rows, "conv_offset")
     assert got == _batch_offsets(spark, src) and len(got) == 3
-
-
-def test_dedup_fn_first_seen_wins_and_ttl():
-    """Unit: the keyed first-seen filter — within a batch the minimum
-    (conv_id, turn_idx) is canonical; a seen fingerprint drops all later
-    arrivals; a timeout emits nothing (the shell then evicts)."""
-    import pandas as pd
-
-    from nreadability_spark.streaming.dedup_stream import dedup_step
-
-    def batch(rows):
-        return pd.DataFrame(
-            {"conv_id": [r[0] for r in rows], "turn_idx": [r[1] for r in rows]}
-        )
-
-    out, state = dedup_step((77,), batch([("c2", 5), ("c1", 3), ("c1", 1)]), None)
-    assert list(out.itertuples(index=False, name=None)) == [(77, "c1", 1)]
-    assert state == ("c1", 1)
-    # second batch, same fingerprint: everything is a duplicate
-    out2, state = dedup_step((77,), batch([("c0", 0)]), state)
-    assert out2.empty
-    assert state == ("c1", 1)  # canonical unchanged
-    assert dedup_step((9,), None, ("c", 0))[0].empty
-
-
-def test_stream_dedup_across_micro_batches(spark, tmp_path):
-    """End-to-end: duplicates split across two micro-batches — the
-    first batch's occurrence is canonical, later duplicates (same batch
-    or later batches) are dropped, distinct rows all pass."""
-    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
-    from nreadability_spark.streaming.dedup_stream import dedup_stream
-
-    src = str(tmp_path / "dedup_src")
-    dup = "Shared boilerplate page, repeated across the crawl, again."
-    uniq = [f"unique document number {i} with its own words" for i in range(4)]
-    batch1 = [("a0", 0, "user", dup, None, None),
-              ("a1", 0, "user", uniq[0], None, None),
-              ("a1", 1, "user", dup, None, None)]     # within-batch dup
-    batch2 = [("b0", 0, "user", dup, None, None),      # cross-batch dup
-              ("b1", 0, "user", uniq[1], None, None),
-              ("b2", 0, "user", "  shared   BOILERPLATE page, repeated across the crawl, again.".replace("BOILERPLATE", "boilerplate"), None, None),
-              ("b3", 0, "user", uniq[2], None, None)]
-    spark.createDataFrame(batch1, TRANSCRIPTS_SCHEMA).coalesce(1).write.parquet(src)
-    spark.createDataFrame(batch2, TRANSCRIPTS_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-
-    rows = _drain(dedup_stream(_file_stream(spark, src)), "dedup_out")
-    by_conv = {(r["conv_id"], r["turn_idx"]) for r in rows}
-    # one row per distinct normalized content: dup family canonicalized
-    # at its minimum first-batch occurrence ("a0", 0); b2's whitespace/
-    # case variant normalizes to the same fingerprint and is dropped
-    assert ("a0", 0) in by_conv
-    assert not {("a1", 1), ("b0", 0), ("b2", 0)} & by_conv
-    assert {("a1", 0), ("b1", 0), ("b3", 0)} <= by_conv
-    assert len(rows) == 4  # dup family once + 3 uniques
-
-
-def test_stream_dedup_state_survives_restart(spark, tmp_path):
-    """Keyed dedup state must persist through the checkpoint: after the
-    first run finishes, a restarted query over newly arrived files must
-    still drop duplicates of fingerprints seen BEFORE the restart."""
-    from nreadability_spark.sources.synth import TRANSCRIPTS_SCHEMA
-    from nreadability_spark.streaming.dedup_stream import dedup_stream
-
-    src = str(tmp_path / "restart_src")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    dup = "Boilerplate seen before the restart, identical bytes."
-
-    def run():
-        def write_batch(bdf, _bid):
-            bdf.write.mode("append").parquet(out)
-
-        _await(
-            dedup_stream(_file_stream(spark, src))
-            .writeStream.foreachBatch(write_batch)  # memory sink can't recover
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    spark.createDataFrame(
-        [("a0", 0, "user", dup, None, None),
-         ("a1", 0, "user", "first-run unique words here", None, None)],
-        TRANSCRIPTS_SCHEMA,
-    ).coalesce(1).write.parquet(src)
-    run()
-    first = {(r["conv_id"], r["turn_idx"]) for r in spark.read.parquet(out).collect()}
-    assert first == {("a0", 0), ("a1", 0)}
-
-    # new files arrive AFTER the first query terminated; the restarted
-    # query recovers keyed state from the checkpoint
-    spark.createDataFrame(
-        [("b0", 0, "user", dup, None, None),                      # dup of pre-restart row
-         ("b1", 0, "user", "second-run unique other words", None, None)],
-        TRANSCRIPTS_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    total = {(r["conv_id"], r["turn_idx"]) for r in spark.read.parquet(out).collect()}
-    assert ("b1", 0) in total           # new unique passes
-    assert ("b0", 0) not in total       # pre-restart state still drops the dup
-    assert total == {("a0", 0), ("a1", 0), ("b1", 0)}
-
-
-def test_stream_sft_spans_equals_batch(spark, tmp_path):
-    """Loss-mask spans computed with applyInPandasWithState over a
-    stream (every conversation split across two micro-batches at a
-    global ts cutoff — the running render offset must carry across
-    the batch boundary) must equal the batch operator's spans. One
-    planted assistant turn has a NULL event_type: both paths must render
-    it as '' and carry its length into the later offsets."""
-    from nreadability_spark.operators.textops import sft_spans
-    from nreadability_spark.streaming.sft_stream import (
-        EVENTS_SCHEMA,
-        stream_sft_spans,
-    )
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    sf_dir = "/root/testdata/sf0.001"
-    base = spark.read.parquet(f"{sf_dir}/events.parquet")
-    first = base.orderBy("user_id", "ts", "event_id").first()
-    next_id = base.agg(F.max("event_id")).first()[0] + 1
-    null_id = next_id + (1 - next_id % 3) % 3  # event_id % 3 == 1: assistant
-    null_row = spark.createDataFrame(
-        [(null_id, first["ts"], first["user_id"], None, 0.0, None)],
-        base.schema,
-    )
-    planted_dir = str(tmp_path / "planted")
-    base.unionByName(null_row).write.parquet(f"{planted_dir}/events.parquet")
-    ev = spark.read.parquet(f"{planted_dir}/events.parquet")
-    # split every conversation at its own midpoint in (ts, event_id)
-    # order: per conversation every file-1 row precedes every file-2
-    # row — the monotone-arrival contract
-    ranked = ev.withColumn(
-        "rn",
-        F.row_number().over(Window.partitionBy("user_id").orderBy("ts", "event_id")),
-    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("user_id")))
-    src = str(tmp_path / "events_feed")
-    ranked.where("rn * 2 <= n").drop("rn", "n").coalesce(1).write.parquet(src)
-    ranked.where("rn * 2 > n").drop("rn", "n").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    got = {
-        (r["conv_id"], r["turn_id"]): (r["span_start"], r["span_end"])
-        for r in _drain(stream_sft_spans(stream), "sft_spans_stream")
-    }
-    want = {
-        (r["conv_id"], r["turn_id"]): (r["span_start"], r["span_end"])
-        for r in sft_spans(spark, planted_dir).collect()
-    }
-    assert got == want and len(got) > 0
-    assert want[(first["user_id"], null_id)][1] is not None
-
-
-def test_sft_fn_state_carries_across_batches():
-    """Unit check of the state machine without Spark: feeding a
-    conversation's turns in two calls must yield the same spans as one
-    call — the second call's offsets start from the carried total."""
-    import pandas as pd
-
-    from nreadability_spark.streaming.sft_stream import sft_step
-
-    def rows(ids):
-        return pd.DataFrame(
-            {
-                "event_id": ids,
-                "ts": pd.to_datetime([1_000_000 * i for i in ids]),
-                "user_id": 7,
-                "event_type": [f"t{i}" for i in ids],
-                "props": [None if i % 2 else f"p{i}" for i in ids],
-            }
-        )
-
-    full, one = sft_step((7,), rows([0, 1, 2, 3, 4]), None)
-    a, two = sft_step((7,), rows([0, 1, 2]), None)
-    b, two = sft_step((7,), rows([3, 4]), two)
-    split = pd.concat([a, b], ignore_index=True)
-    assert full.reset_index(drop=True).equals(split)
-    assert one == two  # same final running total
