@@ -121,9 +121,7 @@ def _extract_query(source: Callable[[SparkSession, str], DataFrame]) -> Callable
         from nreadability_spark.functions.ordering import ordered_small
         from nreadability_spark.operators.extract import extract_columns
         from nreadability_spark.plans.extract_job import salted
-        from nreadability_spark.session import ARROW_BATCH_ROWS
 
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         docs = source(spark, sf_dir)
         out = extract_columns(salted(docs, "doc_id"), include_html=False)
         kind = ["kind"] if "kind" in docs.columns else []
@@ -149,10 +147,8 @@ def _extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same on every machine) -> Arrow-batched extraction UDF ->
     conversation window offsets (rows-only check; sf_dir sets scale)."""
     from nreadability_spark.plans.extract_job import extract_transcripts
-    from nreadability_spark.session import ARROW_BATCH_ROWS
     from nreadability_spark.sources.synth import transcripts_df
 
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
     n_convs = 60 if "0.001" in sf_dir else 200
     src = transcripts_df(spark, n_convs=n_convs)
     out = extract_transcripts(src, include_html=False)

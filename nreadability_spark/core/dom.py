@@ -334,6 +334,9 @@ class _Container(Node):
     def value(self):
         """Concatenated descendant text (XElement.Value semantics:
         comments excluded)."""
+        children = self.children
+        if len(children) == 1 and type(children[0]) is Text:
+            return children[0].value  # the common leaf
         parts = []
         stack = self.children[::-1]
         while stack:
@@ -474,15 +477,20 @@ class Element(_Container):
 class Document(_Container):
     """Document node; at most one Element child (the root), plus comments.
 
-    ``parsed_text_length`` is the total length of the Text nodes the
-    parser built (0 for a document built any other way); later mutations
-    do not update it."""
+    What the parser built, 0 or empty for a document built any other way;
+    later mutations do not update these:
 
-    __slots__ = ("parsed_text_length",)
+    - ``parsed_text_length``, the total length of the Text nodes;
+    - ``parsed_names``, the set of names of the elements below the root;
+    - ``parsed_comments``, the number of comments."""
+
+    __slots__ = ("parsed_text_length", "parsed_names", "parsed_comments")
 
     def __init__(self):
         super().__init__()
         self.parsed_text_length = 0
+        self.parsed_names = set()
+        self.parsed_comments = 0
 
     @property
     def root(self):
@@ -597,13 +605,20 @@ def clone_node(node):
     stack = [(node, root)]
     while stack:
         src, dst = stack.pop()
+        kids = dst.children
         for child in src.children:
-            fresh = _shallow_clone(child)
+            kind = type(child)
+            if kind is Element:
+                fresh = Element(child.name, child.attrs)
+                if child.children:
+                    stack.append((child, fresh))
+            elif kind is Text:
+                fresh = Text(child.value)
+            else:
+                fresh = _shallow_clone(child)
             fresh.parent = dst
-            fresh._pos = len(dst.children)
-            dst.children.append(fresh)
-            if isinstance(child, Element):
-                stack.append((child, fresh))
+            fresh._pos = len(kids)
+            kids.append(fresh)
     return root
 
 
@@ -677,9 +692,18 @@ _MS_MARKED_SECTION_CLOSE = re.compile(r"]\s*>")
 _CDATA_CLOSE = {
     name: re.compile(r"</\s*%s\s*>" % name, re.I) for name in ("script", "style")
 }
-# the fast path: an attribute-free start tag or a plain end tag, which
-# every general path above tokenizes to exactly this event
-_PLAIN_TAG = re.compile(r"<(?:([a-zA-Z][^\t\n\r\f />\x00]*)|/([a-zA-Z][-.a-zA-Z0-9:_]*))>")
+# the fast path (see ``Tokenizer``): the text up to the next ``<`` and
+# the tag there, when it is a plain end tag or a start tag whose
+# attributes are all ``name="value"`` with a lowercase ASCII name and no
+# ``&``, ``<`` or ``>`` in the value; group 1 is the text, 2 the tag
+# name, 3 the attributes, 4 the ``/`` of ``/>`` and 5 the end tag's name
+_FAST_TAG = re.compile(
+    r'([^<]*)<(?:([a-zA-Z][^\t\n\r\f />\x00]*)'
+    r'((?:[ \t\n\r\f]+[a-z_:][-.a-z0-9_:]*="[^"&<>]*")*)[ \t\n\r\f]*(/?)'
+    r"|/([a-zA-Z][-.a-zA-Z0-9:_]*))>"
+)
+# the (name, value) pairs of the fast path's group 3
+_QUOTED_ATTR = re.compile(r'([a-z_:][-.a-z0-9_:]*)="([^"]*)"')
 _LETTERS_EQ_SLASH = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
 
@@ -699,6 +723,22 @@ class Tokenizer:
     ``handle_startendtag(tag, attrs)``, ``handle_endtag(tag)``,
     ``handle_data(data)``, ``handle_comment(data)``, ``handle_decl(decl)``,
     ``handle_pi(data)`` and ``unknown_decl(data)``.
+
+    Fast path. Outside script/style raw text, one match of
+    ``_FAST_TAG`` takes the text up to the next ``<`` and the tag there
+    when that tag is ``</name>`` or a start tag whose attributes are all
+    ``name="value"``: a lowercase ASCII name, a double-quoted value with
+    no ``&``, ``<`` or ``>``, spaces, tabs, LF, CR or FF between them, and an
+    optional ``/`` right before the ``>``. The general paths give such a
+    tag exactly the fast path's event: ``_LOCATE_STARTTAG_END`` ends it
+    at its ``>``, ``_TAGFIND`` reads the same name (the name stops at the
+    first whitespace or ``/``), each ``_ATTRFIND`` match is one
+    ``name="value"`` pair with the quotes stripped, ``unescape`` returns
+    a value without ``&`` unchanged, and what is left before ``>`` is
+    ``>`` or ``/>``. Any other tag, such as one with a single-quoted,
+    bare or entity-bearing value, an uppercase attribute name or other
+    whitespace, takes the general paths.
+    ``tests/test_tokenizer.py`` checks both ways agree.
     """
 
     def tokenize(self, rawdata):
@@ -707,7 +747,8 @@ class Tokenizer:
         handle_data = self.handle_data
         handle_starttag = self.handle_starttag
         handle_endtag = self.handle_endtag
-        plain_tag = _PLAIN_TAG.match
+        fast_tag = _FAST_TAG.match
+        quoted_attrs = _QUOTED_ATTR.findall
         find = rawdata.find
         startswith = rawdata.startswith
         n = len(rawdata)
@@ -715,23 +756,30 @@ class Tokenizer:
         while i < n:
             cdata_elem = self.cdata_elem
             if cdata_elem is None:
+                m = fast_tag(rawdata, i)
+                if m is not None:
+                    text, tag, attrs, slash, end_tag = m.groups()
+                    if text:
+                        handle_data(unescape(text) if "&" in text else text)
+                    if end_tag is not None:
+                        handle_endtag(end_tag.lower())
+                    else:
+                        tag = tag.lower()
+                        attrs = quoted_attrs(attrs) if attrs else []
+                        if slash:
+                            self.handle_startendtag(tag, attrs)
+                        else:
+                            handle_starttag(tag, attrs)
+                            if tag in _CDATA_CLOSE:
+                                self.cdata_elem = tag
+                    i = m.end()
+                    continue
                 j = find("<", i)
                 if j < 0:
                     break  # trailing text, after the loop
                 if i < j:
-                    handle_data(unescape(rawdata[i:j]))
-                m = plain_tag(rawdata, j)
-                if m is not None:
-                    tag = m.group(1)
-                    if tag is None:
-                        handle_endtag(m.group(2).lower())
-                    else:
-                        tag = tag.lower()
-                        handle_starttag(tag, [])
-                        if tag in _CDATA_CLOSE:
-                            self.cdata_elem = tag
-                    i = m.end()
-                    continue
+                    text = rawdata[i:j]
+                    handle_data(unescape(text) if "&" in text else text)
             else:
                 m = _CDATA_CLOSE[cdata_elem].search(rawdata, i)
                 if m is None:
@@ -928,6 +976,10 @@ class _TreeBuilder(Tokenizer):
         self.document = Document()
         self.stack = [self.document]
         self._text_buf = []
+        # data goes straight to the buffer (an empty piece, such as
+        # ``&#1;`` unescaped, flushes to nothing)
+        self.handle_data = self._text_buf.append
+        self._names = self.document.parsed_names
 
     # -- text buffering (a contiguous run is one node; whitespace-only runs
     # are dropped, mirroring WhitespaceHandling.None) -------------------------
@@ -939,8 +991,10 @@ class _TreeBuilder(Tokenizer):
         if not data.strip(XML_WHITESPACE):
             return  # whitespace-only text node: dropped
         self.document.parsed_text_length += len(data)
-        self._ensure_root()
-        top = self.stack[-1]
+        stack = self.stack
+        if len(stack) == 1:
+            self._ensure_root()
+        top = stack[-1]
         kids = top.children
         if kids and type(kids[-1]) is Text:
             kids[-1].value += data
@@ -1006,11 +1060,15 @@ class _TreeBuilder(Tokenizer):
         stack = self.stack
         if len(stack) == 1 and self._open_root(tag, attrs):
             return
-        self._validate_content(tag)
+        top = stack[-1]
+        closed_by = CLOSED_BY.get(top.name)
+        if closed_by is not None and tag in closed_by:  # else nothing closes
+            self._validate_content(tag)
+            top = stack[-1]
+        self._names.add(tag)
         element = Element(tag)
         if attrs:
             element.attrs = _dedupe_attrs(attrs)
-        top = stack[-1]
         element.parent = top
         element._pos = len(top.children)
         top.children.append(element)
@@ -1024,6 +1082,7 @@ class _TreeBuilder(Tokenizer):
         if len(self.stack) == 1 and self._open_root(tag, attrs):
             return
         self._validate_content(tag)
+        self._names.add(tag)
         self.stack[-1].append(Element(tag, _dedupe_attrs(attrs)))
 
     def handle_endtag(self, tag):
@@ -1032,20 +1091,20 @@ class _TreeBuilder(Tokenizer):
         if tag in VOID_ELEMENTS:
             return
         stack = self.stack
+        if len(stack) > 1 and stack[-1].name == tag:  # the common case
+            del stack[-1]
+            return
         for i in range(len(stack) - 1, 0, -1):
             if stack[i].name == tag:
                 del stack[i:]
                 return
         # no matching open element: stray end tag, ignored
 
-    def handle_data(self, data):
-        if data:
-            self._text_buf.append(data)
-
     def handle_comment(self, data):
         if self._text_buf:
             self._flush_text()
         # comments may appear at document level (before any root)
+        self.document.parsed_comments += 1
         self.stack[-1].append(Comment(data))
 
     def handle_decl(self, decl):
@@ -1071,6 +1130,9 @@ class _TreeBuilder(Tokenizer):
 def _dedupe_attrs(attrs):
     """First occurrence wins; minimized attributes get their own name as
     value (SGML attribute minimization)."""
+    out = dict(attrs)
+    if len(out) == len(attrs) and None not in out.values():
+        return out  # no repeated and no minimized attribute
     out = {}
     for key, value in attrs:
         if key not in out:

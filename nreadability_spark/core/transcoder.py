@@ -25,6 +25,7 @@ inline). Differences by design:
 from __future__ import annotations
 
 import re
+from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, field
 
 from nreadability_spark.core import regexes, urls
@@ -159,6 +160,7 @@ def extract(html_content, url=None, options=None, outputs=SERIALIZED_OUTPUTS):
     run, document, article, title_element, next_page_url, content_text = transcode(
         html_content, url, opts
     )
+    spans = _article_spans(article, run.index)
 
     html = ""
     if "html" in outputs:
@@ -172,7 +174,7 @@ def extract(html_content, url=None, options=None, outputs=SERIALIZED_OUTPUTS):
         title=title_element.value if title_element is not None else None,
         extracted=bool(article.children),
         next_page_url=next_page_url,
-        spans=_article_spans(article),
+        spans=spans,
     )
 
 
@@ -227,16 +229,19 @@ def _document_text_upper_bound(document):
     return document.parsed_text_length
 
 
-def _article_spans(article):
+def _article_spans(article, index=None):
     """[start, end) offsets of each top-level child's text within the raw
-    concatenated article text (skipping empty contributions)."""
+    concatenated article text (skipping empty contributions); an element
+    child's text is read off ``index``, a ``_TreeIndex`` over ``article``,
+    when one is given."""
     spans = []
     cursor = 0
     for child in article.children:
-        if isinstance(child, Text):
+        kind = type(child)
+        if kind is Text:
             segment = len(child.value)
-        elif isinstance(child, Element):
-            segment = len(child.value)
+        elif kind is Element:
+            segment = len(child.value if index is None else index.value(child))
         else:
             segment = 0
         if segment:
@@ -253,6 +258,11 @@ class _Run:
         self.opts = options
         self.dont_strip_unlikelys = dont_strip_unlikelys
         self.scores = {}  # Element (identity) -> float; insertion-ordered
+        # the _TreeIndex of the stretch that is running (None in the
+        # stretches that change the document), and the body element the
+        # last search found while nothing since could have moved it
+        self.index = None
+        self._body = None
 
     # -- lifecycle (NRT:284-333) --------------------------------------------
 
@@ -271,7 +281,7 @@ class _Run:
 
         next_page_url = None
         if url is not None:
-            next_page_url = self.find_next_page_link(document.get_body(), url)
+            next_page_url = self.find_next_page_link(self._body_of(document), url)
 
         title_element = self.extract_article_title(document)
         article_content_element = self.extract_article_content(document)
@@ -281,52 +291,54 @@ class _Run:
     # -- document preparation (NRT:590-638) -----------------------------------
 
     def prepare_document(self, document):
-        document_body = get_or_create_body(document)
-        root_element = document.root
+        """NRT:590-638 on ``document`` as ``build_document`` returned it:
+        what the parser counted (``Document.parsed_names`` and
+        ``parsed_comments``) stands in for walks of the tree."""
+        self.index = None
+        document_body = self._body = get_or_create_body(document)
+        parsed_names = document.parsed_names
 
-        # one walk collecting all three target kinds; removal order is
-        # preserved (scripts NRT:604-615, stylesheets NRT:617-623,
-        # style tags NRT:625-628). Removals can't nest inside each
-        # other in any order-observable way: all three target sets are
-        # disjoint by element name.
-        by_name = root_element.elements_by_tag_name()
-        scripts = by_name.get("script", ())
-        links = by_name.get("link", ())
-        styles = by_name.get("style", ())
-
+        # removal order is preserved (scripts NRT:604-615, stylesheets
+        # NRT:617-623, style tags NRT:625-628). Removals can't nest inside
+        # each other in any order-observable way: all three target sets
+        # are disjoint by element name.
         to_remove = []
-        for script in scripts:
-            src = script.get_attribute_value("src", None)
-            if not src or "readability" not in src:
-                to_remove.append(script)
-        _remove_elements(to_remove)
-
-        _remove_elements(
-            [
+        if not parsed_names.isdisjoint(("script", "link", "style")):
+            by_name = document.root.elements_by_tag_name()
+            to_remove = [
+                script
+                for script in by_name.get("script", ())
+                if "readability" not in (script.get_attribute_value("src", None) or "")
+            ]
+            to_remove += [
                 el
-                for el in links
+                for el in by_name.get("link", ())
                 if el.get_attribute_value("rel", "").strip().lower() == "stylesheet"
                 and "readability" not in el.get_attribute_value("href", "")
             ]
-        )
-
-        _remove_elements(styles)
+            to_remove += by_name.get("style", ())
+            _remove_elements(to_remove)
 
         # double <br> -> <p>, <font> -> <span> on the serialized body, then
         # reparse (NRT:630-637)
+        prefixes = ("br", "font")
+        facts = None
+        if not to_remove and not document.parsed_comments:
+            facts = _parsed_stage_facts(parsed_names, prefixes)
         _serialized_regex_pass(
             document_body,
             [
                 (regexes.REPLACE_DOUBLE_BRS_RE, "<p></p>"),
                 (regexes.REPLACE_FONTS_RE, r"<\g<1>span>"),
             ],
-            ("br", "font"),
+            prefixes,
+            facts,
         )
 
     # -- title (NRT:640-691) ----------------------------------------------------
 
     def extract_article_title(self, document):
-        document_body = get_or_create_body(document)
+        document_body = self._body_of(document)
         document_title = document.get_title() or ""
         current_title = document_title
 
@@ -372,27 +384,34 @@ class _Run:
     # -- unlikely-candidate stripping (NRT:772-840) ---------------------------------
 
     def strip_unlikely_candidates(self, document):
+        self.index = None
         if self.dont_strip_unlikelys:
             return
         root = document.root
         if root is None:
             return
+        unlikely = regexes.UNLIKELY_CANDIDATES_RE.search
+        maybe_a_candidate = regexes.OK_MAYBE_ITS_A_CANDIDATE_RE.search
         # pre-order; an element's children are pushed after its visit, so
         # the paragraphs a div's stray text becomes are walked too
         stack = [root]
         while stack:
             element = stack.pop()
+            if type(element) is not Element:
+                continue
             element_name = (element.name or "").lower()
 
-            unlikely_match_string = element.get_class() + element.get_id()
+            attrs = element.attrs
+            unlikely_match_string = attrs.get("class", "") + attrs.get("id", "")
             if (
                 unlikely_match_string
                 and element_name != "body"
                 and element_name != "a"
-                and regexes.UNLIKELY_CANDIDATES_RE.search(unlikely_match_string)
-                and not regexes.OK_MAYBE_ITS_A_CANDIDATE_RE.search(unlikely_match_string)
+                and unlikely(unlikely_match_string)
+                and not maybe_a_candidate(unlikely_match_string)
             ):
                 element.remove()
+                self._body = None  # the body may have gone with it
                 continue  # nothing reads the detached subtree
 
             if element_name == "div":
@@ -408,12 +427,18 @@ class _Run:
                             para.set_class(READABILITY_STYLED_CSS_CLASS)
                             para.set_style("display: inline;")
                             child.replace_with(para)
-            stack.extend(c for c in reversed(element.children) if type(c) is Element)
+                            # the text may have parsed into a body element
+                            self._body = None
+            stack.extend(element.children[::-1])
 
     # -- candidate scoring (NRT:842-884) ----------------------------------------------
 
     def find_candidates_for_article_content(self, document):
-        para_elements = list(document.get_elements_by_tag_name("p"))
+        # nothing changes the document from here to the article build,
+        # so one index serves the three stages' inner texts and link
+        # densities
+        self.index = _TreeIndex(document, self._inner_text)
+        para_elements = self.index.get("p")
         candidate_elements = {}  # insertion-ordered set
 
         self.scores.clear()
@@ -459,7 +484,7 @@ class _Run:
             # fallback: synthesize a div holding clones of all body nodes
             # (NRT:907-915; XContainer.Add clones parented nodes)
             top_candidate = Element("div")
-            document_body = get_or_create_body(document)
+            document_body = self._body_of(document)
             top_candidate.add(*document_body.nodes())
 
         return top_candidate
@@ -526,12 +551,14 @@ class _Run:
     # -- post-clean (NRT:1025-1077) ---------------------------------------------------------------
 
     def prepare_article_content_element(self, article):
-        self.clean_styles(article)
-        self.kill_breaks(article)
+        # every stage below reads the article through one index: the
+        # styles go without changing the tree's shape, the break stage
+        # reads its facts off the index's walk, and the rest only remove
+        # (the index walks again after a removal or a reparse)
+        index = self.index = _TreeIndex(article, self._inner_text, ("br",))
+        self.clean_styles(index)
+        self.kill_breaks(index)
 
-        # every stage below only removes, and reads its elements off one
-        # name index of the article, rebuilt after a stage removed some
-        index = _NameIndex(article)
         self.clean(index, "form")
         self.clean(index, "object")
         self.clean(index, "h1")
@@ -552,29 +579,35 @@ class _Run:
         index.remove([
             para
             for para in index.get("p")
-            if not (para.value or "").strip()
+            if not index.value(para).strip()
             and not _has_descendant_named(para, ("img", "embed", "object"))
         ])
 
         # remove br's directly before paragraphs (NRT:1076)
-        _serialized_regex_pass(
-            article, [(regexes.BREAK_BEFORE_PARAGRAPH_RE, "<p")], ("br",)
-        )
+        if _serialized_regex_pass(
+            article, [(regexes.BREAK_BEFORE_PARAGRAPH_RE, "<p")], ("br",), index.stage_facts()
+        ):
+            index.invalidate()
 
     # -- metrics ---------------------------------------------------------------------------------
 
     def get_links_density(self, element):
         """NRT:1079-1095."""
-        return self._links_density(self.get_inner_text(element), element, None)
+        return self._links_density(self.get_inner_text(element), element)
 
-    def _links_density(self, inner_text, element, anchors):
-        """Links density of ``element`` given its inner text; ``anchors``
-        are its ``a`` descendants, found here when None."""
+    def _links_density(self, inner_text, element):
+        """Links density of ``element`` given its inner text: the summed
+        inner-text length of its ``a`` descendants over its own. When
+        ``element`` is in the run's index, the sum is the index's
+        (``_TreeIndex.anchor_text_length``, one bisection); otherwise the
+        anchors are found and read here."""
         length = len(inner_text)
         if length == 0:
             return 0.0
-        if anchors is None:
-            anchors = element.get_elements_by_tag_name("a")
+        index = self.index
+        if index is not None and index.has(element):
+            return index.anchor_text_length(element) / length
+        anchors = element.get_elements_by_tag_name("a")
         return sum(len(self.get_inner_text(anchor)) for anchor in anchors) / length
 
     def get_class_weight(self, element):
@@ -607,19 +640,36 @@ class _Run:
         no two spaces are adjacent and no other whitespace character
         occurs holds no match and comes back unchanged. Collapsing also
         cannot empty a trimmed non-empty text, so a test for emptiness
-        needs only the trim."""
+        needs only the trim.
+
+        The value is read off the run's index when ``node`` is in it
+        (``self.index``: the document's from the candidate search to the
+        article build, the article's from post-clean on) and walked for
+        otherwise, e.g. in the title stage or on a clone."""
+        if self.index is not None:
+            text = self.index.inner(node)
+            if text is not None:
+                return text
         if not isinstance(node, (Element, Document, Text)):
             raise TypeError(f"nodes of type {type(node).__name__} are not supported")
-        result = (node.value or "").strip()
+        return self._inner_text(node.value)
+
+    def _inner_text(self, value):
+        """``get_inner_text`` of a node whose value is ``value``."""
+        result = (value or "").strip()
         if self.opts.dont_normalize_spaces:
             return result
         return normalize_spaces(result)
 
     # -- cleaning ----------------------------------------------------------------------------------
 
-    def kill_breaks(self, element):
-        """NRT:1189-1192."""
-        _serialized_regex_pass(element, [(regexes.KILL_BREAKS_RE, "<br />")], ("br",))
+    def kill_breaks(self, index):
+        """NRT:1189-1192, on ``index.root``; ``index`` holds the stage's
+        facts (its trigger is ``br``)."""
+        if _serialized_regex_pass(
+            index.root, [(regexes.KILL_BREAKS_RE, "<br />")], ("br",), index.stage_facts()
+        ):
+            index.invalidate()
 
     def clean(self, index, element_name):
         """Remove descendants by tag, sparing youtube/vimeo embeds
@@ -652,10 +702,10 @@ class _Run:
             inner_text = self.get_inner_text(element)
 
             if get_segments_count(inner_text, ",") < MIN_COMMA_SEGMENTS:
-                ps_count, imgs_count, lis_count, inputs_count, embeds_count, anchors = (
-                    _census(element)
+                ps_count, imgs_count, lis_count, inputs_count, embeds_count = _census(
+                    index, element
                 )
-                links_density = self._links_density(inner_text, element, anchors)
+                links_density = self._links_density(inner_text, element)
                 inner_text_length = len(inner_text)
 
                 remove = (
@@ -702,21 +752,20 @@ class _Run:
             or self.get_links_density(header) > MAX_HEADER_LINKS_DENSITY
         ])
 
-    def clean_styles(self, root_element):
-        """NRT:1312-1327: strip style attrs except on readability-styled.
-        Removing an attribute never changes the tree's shape, so a plain
-        walk serves."""
-        stack = [root_element]
-        while stack:
-            element = stack.pop()
+    def clean_styles(self, index):
+        """NRT:1312-1327: strip style attrs except on readability-styled,
+        from ``index.root`` and every element below it. Removing an
+        attribute never changes the tree's shape, so the index stays
+        exact."""
+        for element in index.elements():
             if READABILITY_STYLED_CSS_CLASS not in element.get_class():
                 element.attrs.pop("style", None)
-            stack.extend(child for child in element.children if type(child) is Element)
 
     # -- glue (NRT:707-770) ----------------------------------------------------------------------------
 
     def glue_document(self, document, article_title_element, article_content_element):
-        document_body = get_or_create_body(document)
+        self.index = None
+        document_body = self._body_of(document)
 
         head_element = document.first_element_by_tag_name("head")
         if head_element is None:
@@ -856,7 +905,14 @@ class _Run:
 
         return None
 
-    # -- score table ------------------------------------------------------------------------------------------
+    # -- body and score table ---------------------------------------------------------------------------------
+
+    def _body_of(self, document):
+        """``get_or_create_body(document)``, searched for only when no
+        search since the last change that could move the body found it."""
+        if self._body is None:
+            self._body = get_or_create_body(document)
+        return self._body
 
     def _add_points(self, element, points):
         self.scores[element] = self.scores.get(element, 0.0) + points
@@ -868,7 +924,7 @@ class _Run:
 # --- module-level pure helpers ------------------------------------------------------
 
 
-def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
+def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes, facts=None):
     """Run serialize -> regex-substitute -> SetInnerHtml
     (DomExtensions.cs:238-263), eliding each step that provably changes
     nothing. The reference always reparses, and its reparse can
@@ -880,11 +936,14 @@ def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
     changed the text. On the elided path only RemoveAll's attribute
     clearing remains observable (e.g. the article div loses its id in
     KillBreaks).
+
+    ``facts`` are passed on to ``_stage_walk``. Returns True when the
+    subtree was reparsed.
     """
-    stable, may_match = _stage_walk(element, trigger_prefixes)
+    stable, may_match = _stage_walk(element, trigger_prefixes, facts)
     if stable and not may_match:
         element.attrs.clear()
-        return
+        return False
     inner = element.inner_html()
     new_inner = inner
     if may_match:
@@ -892,14 +951,14 @@ def _serialized_regex_pass(element, regex_repl_pairs, trigger_prefixes):
             new_inner = rx.sub(repl, new_inner)
     if stable and new_inner == inner:
         element.attrs.clear()
-        return
+        return False
     element.set_inner_html(new_inner)
+    return True
 
 
-def _stage_walk(element, trigger_prefixes):
+def _stage_walk(element, trigger_prefixes, facts=None):
     """``(stable, may_match)`` for a serialized regex stage over
-    ``element``, in one walk of its subtree that stops once both are
-    decided.
+    ``element``, decided in one walk of its subtree.
 
     ``may_match`` is False when the stage's regexes provably match
     nothing in the serialized subtree (``_may_trigger`` on every node).
@@ -931,36 +990,52 @@ def _stage_walk(element, trigger_prefixes):
       attaches pre-root comments to the temp Document, and
       ``set_inner_html`` copies only ``tmp.root.children`` — a real
       reparse drops them, so the elided path must not keep them.
+
+    ``facts``, when given, are these as already known for the subtree
+    (a ``_TreeIndex``'s, or ``_parsed_stage_facts``); otherwise a
+    ``_TreeIndex`` that indexes no text walks the subtree for them.
     """
-    stable = True
+    if facts is not None:
+        return facts
+    return _TreeIndex(element, None, trigger_prefixes).stage_facts()
+
+
+def _names_stage_facts(names, trigger_prefixes, stable):
+    """The stage facts once the rules on element names are applied to
+    ``names``, the names below the stage's element (or a superset: a name
+    it adds can only keep the stage's real work), given ``stable`` from
+    the rules on nodes; a comment that may trigger is the caller's."""
     may_match = False
-    for node in element.children:
-        if isinstance(node, Comment):
-            stable = False
+    for name in names:
+        if name.startswith(trigger_prefixes):
+            may_match = True
             break
-        if isinstance(node, (Element, Text)):
-            break
-    stack = [element]
-    while stack:
-        parent = stack.pop()
-        closed_by = () if parent is element else CLOSED_BY.get(parent.name, ())
-        prev_was_text = False
-        for node in parent.children:
-            if not may_match and _may_trigger(node, trigger_prefixes):
-                may_match = True
-            kind = type(node)
-            if stable:
-                if kind is Element:
-                    name = node.name
-                    stable = name not in closed_by and name not in ("script", "style", "html")
-                elif kind is Text:
-                    stable = not prev_was_text and node.value.strip(XML_WHITESPACE) != ""
-                prev_was_text = kind is Text
-            if may_match and not stable:
-                return False, True
-            if kind is Element and node.children:
-                stack.append(node)
+    stable = stable and not ("script" in names or "style" in names or "html" in names)
     return stable, may_match
+
+
+def _parsed_stage_facts(parsed_names, trigger_prefixes):
+    """``_stage_walk``'s facts for a stage over an element below the root
+    of a document as ``build_document`` returned it, when the parser
+    built no comment: ``parsed_names`` are the names of the elements it
+    built below the root. No node needs a look: the parser drops
+    whitespace-only text and merges adjacent text, and it attaches each
+    element to the open element that ``_validate_content`` left on top,
+    which the new one does not close, unless that is a BODY at depth 2;
+    no such BODY is below any element other than the root, and the
+    stage's own element is exempt."""
+    return _names_stage_facts(parsed_names, trigger_prefixes, True)
+
+
+def _leading_comment(element):
+    """True when a Comment precedes the first Element or Text child."""
+    for node in element.children:
+        kind = type(node)
+        if kind is Comment:
+            return True
+        if kind is Element or kind is Text:
+            return False
+    return False
 
 
 def _may_trigger(node, trigger_prefixes):
@@ -994,13 +1069,18 @@ def _div_inner_html_has_block_element(element):
     bodies can produce a ``<tag`` match. The regex itself is applied to
     both so prefix semantics (e.g. ``<abbr`` matching ``<a``) are
     preserved bit-for-bit."""
-    for node in element.descendant_nodes():
-        if isinstance(node, Element):
-            if regexes.DIV_TO_P_ELEMENTS_RE.match("<" + node.name):
+    block_tag = regexes.DIV_TO_P_ELEMENTS_RE
+    stack = element.children[::-1]
+    while stack:
+        node = stack.pop()
+        kind = type(node)
+        if kind is Element:
+            if block_tag.match("<" + node.name):
                 return True
-        elif isinstance(node, Comment):
-            if regexes.DIV_TO_P_ELEMENTS_RE.search(node.to_html()):
-                return True
+            if node.children:
+                stack.extend(node.children[::-1])
+        elif kind is Comment and block_tag.search(node.to_html()):
+            return True
     return False
 
 
@@ -1059,57 +1139,236 @@ def _remove_elements(elements):
         element.remove()
 
 
-class _NameIndex:
-    """``get(name)`` is ``root.get_elements_by_tag_name(name)`` for a run
-    of stages that change the subtree only through ``remove``: one walk
-    indexes every name, and a removal drops the index (the removed
-    subtrees' elements are in it), so the next ``get`` walks again."""
+class _TreeIndex:
+    """What a stretch of a pass that changes the subtree below ``root``
+    only through ``remove`` reads from it, taken in one document-order
+    walk:
 
-    __slots__ = ("root", "_index")
+    - ``get(name)`` is ``root.get_elements_by_tag_name(name)``;
+    - ``value(element)`` is ``element.value`` for ``root`` and the
+      elements below it, and ``inner(element)`` is ``inner_text`` of it:
+      an element's text is the contiguous slice ``[start, end)`` of the
+      concatenation of the subtree's Text nodes in document order, which
+      the walk records on entering and on leaving the element;
+    - ``count_below(element, name)`` and ``below(element, name)`` count
+      and list the ``name`` elements below ``element``, and
+      ``anchor_text_length(element)`` sums ``len(inner(a))`` over its
+      ``a`` descendants: the descendants of an element are the elements
+      whose pre-order number lies strictly between its own and the
+      number the walk reached on leaving it, so each is a bisection of
+      the name's bucket;
+    - ``stage_facts()`` is ``_stage_walk(root, trigger_prefixes)`` when
+      ``trigger_prefixes`` is given.
 
-    def __init__(self, root):
+    ``inner_text`` maps a raw value to the run's inner text; when it is
+    None, the walk skips the text and serves only ``get`` and
+    ``stage_facts``. ``remove`` and ``invalidate`` (after a reparse) drop
+    the walk's results; the next read walks again."""
+
+    __slots__ = (
+        "root", "inner_text", "trigger_prefixes", "_fresh", "_by_name", "_entries",
+        "_text", "_stage_facts", "_positions", "_anchor_sums", "_inners",
+    )
+
+    def __init__(self, root, inner_text, trigger_prefixes=None):
         self.root = root
-        self._index = None
+        self.inner_text = inner_text
+        self.trigger_prefixes = trigger_prefixes
+        self._fresh = False
 
     def get(self, name):
-        if self._index is None:
-            self._index = self.root.elements_by_tag_name()
-        return self._index.get(name, ())
+        if not self._fresh:
+            self._walk()
+        return self._by_name.get(name, ())
+
+    def elements(self):
+        """``root`` and every element below it, in document order."""
+        if not self._fresh:
+            self._walk()
+        return self._entries.keys()
+
+    def value(self, element):
+        """``element.value``, or None when ``element`` is not indexed."""
+        if not self._fresh:
+            self._walk()
+        entry = self._entries.get(element)
+        if entry is None:
+            return None
+        return self._text[entry[0]:entry[1]]
+
+    def inner(self, element):
+        """``inner_text(value(element))``, or None when ``element`` is
+        not indexed; elements with the same slice share one result."""
+        if not self._fresh:
+            self._walk()
+        entry = self._entries.get(element)
+        if entry is None:
+            return None
+        key = (entry[0], entry[1])
+        text = self._inners.get(key)
+        if text is None:
+            text = self._inners[key] = self.inner_text(self._text[entry[0]:entry[1]])
+        return text
+
+    def has(self, element):
+        if not self._fresh:
+            self._walk()
+        return element in self._entries
+
+    def below(self, element, name):
+        bucket = self.get(name)
+        if not bucket:
+            return ()
+        lo, hi = self._bucket_range(element, name, bucket)
+        return bucket[lo:hi]
+
+    def count_below(self, element, name):
+        bucket = self.get(name)
+        if not bucket:
+            return 0
+        lo, hi = self._bucket_range(element, name, bucket)
+        return hi - lo
+
+    def anchor_text_length(self, element):
+        anchors = self.get("a")
+        if not anchors:
+            return 0
+        lo, hi = self._bucket_range(element, "a", anchors)
+        sums = self._anchor_sums
+        if sums is None:
+            sums = self._anchor_sums = [0]
+            total = 0
+            for anchor in anchors:
+                total += len(self.inner(anchor))
+                sums.append(total)
+        return sums[hi] - sums[lo]
+
+    def stage_facts(self):
+        if not self._fresh:
+            self._walk()
+        return self._stage_facts
 
     def remove(self, elements):
         if elements:
             _remove_elements(elements)
-            self._index = None
+            self._fresh = False
+
+    def invalidate(self):
+        self._fresh = False
+
+    def _bucket_range(self, element, name, bucket):
+        """[lo, hi) of the entries of ``bucket``, the ``name`` elements,
+        that are below ``element``."""
+        positions = self._positions.get(name)
+        if positions is None:
+            entries = self._entries
+            positions = self._positions[name] = [entries[e][2] for e in bucket]
+        _start, _end, first, last = self._entries[element]
+        return bisect_right(positions, first), bisect_left(positions, last)
+
+    def _walk(self):
+        root = self.root
+        with_text = self.inner_text is not None
+        by_name = {}
+        root_entry = [0, 0, -1, 0]  # [start, end, pre-order number, end's]
+        entries = {root: root_entry}
+        parts = []
+        offset = 0
+        count = 0  # pre-order number of the next element
+        # the stage facts' rules on nodes (the rules and their reasons are
+        # _stage_walk's); those on element names are applied to the
+        # buckets afterwards
+        in_stage = self.trigger_prefixes is not None
+        stable = not (in_stage and _leading_comment(root))
+        comment_may_match = False
+        prev_text_parent = None  # parent of the node visited last, if a Text
+        stack = root.children[::-1]
+        pop = stack.pop
+        push = stack.append
+        while stack:
+            node = pop()
+            kind = type(node)
+            if kind is Text:
+                value = node.value
+                if with_text:
+                    parts.append(value)
+                    offset += len(value)
+                if in_stage and stable:
+                    stable = node.parent is not prev_text_parent and value.strip(XML_WHITESPACE)
+                prev_text_parent = node.parent
+                continue
+            prev_text_parent = None
+            if kind is Element:
+                name = node.name
+                bucket = by_name.get(name)
+                if bucket is None:
+                    by_name[name] = [node]
+                else:
+                    bucket.append(node)
+                children = node.children
+                if in_stage and stable and children:
+                    closed_by = CLOSED_BY.get(name)
+                    if closed_by is not None:
+                        for child in children:
+                            if type(child) is Element and child.name in closed_by:
+                                stable = False
+                                break
+                if with_text:
+                    entry = [offset, offset, count, count + 1]
+                    count += 1
+                    entries[node] = entry
+                if not children:
+                    continue
+                if len(children) == 1 and type(children[0]) is Text:
+                    # the common leaf: its one Text is read in place
+                    value = children[0].value
+                    if with_text:
+                        parts.append(value)
+                        offset += len(value)
+                        entry[1] = offset
+                    if in_stage and stable:
+                        stable = value.strip(XML_WHITESPACE)
+                    continue
+                if with_text:
+                    push(entry)  # leaving this element
+                stack.extend(children[::-1])
+            elif kind is list:
+                node[1] = offset
+                node[3] = count
+            elif in_stage and kind is Comment and not comment_may_match:
+                comment_may_match = _may_trigger(node, self.trigger_prefixes)
+        if with_text:
+            self._text = "".join(parts)
+            root_entry[1] = offset
+            root_entry[3] = count
+        self._by_name = by_name
+        self._entries = entries
+        self._stage_facts = None
+        if in_stage:
+            stable, may_match = _names_stage_facts(by_name, self.trigger_prefixes, bool(stable))
+            self._stage_facts = (stable, may_match or comment_may_match)
+        self._positions = {}
+        self._anchor_sums = None
+        self._inners = {}
+        self._fresh = True
 
 
-def _census(element):
+def _census(index, element):
     """What ``clean_conditionally`` counts below ``element``
-    (NRT:1247-1252), in one walk: the numbers of p, img, li and input
-    elements and of embeds whose src is not a video, and the anchors."""
-    ps = imgs = lis = inputs = embeds = 0
-    anchors = []
-    stack = element.children[::-1]
-    while stack:
-        node = stack.pop()
-        if type(node) is not Element:
-            continue
-        name = node.name
-        if name == "p":
-            ps += 1
-        elif name == "img":
-            imgs += 1
-        elif name == "li":
-            lis += 1
-        elif name == "input":
-            inputs += 1
-        elif name == "embed":
-            if not regexes.VIDEO_RE.search(node.attrs.get("src", "")):
-                embeds += 1
-        elif name == "a":
-            anchors.append(node)
-        if node.children:
-            stack.extend(node.children[::-1])
-    return ps, imgs, lis, inputs, embeds, anchors
+    (NRT:1247-1252), off ``index``: the numbers of p, img, li and input
+    elements and of embeds whose src is not a video."""
+    embeds = sum(
+        1
+        for embed in index.below(element, "embed")
+        if not regexes.VIDEO_RE.search(embed.attrs.get("src", ""))
+    )
+    return (
+        index.count_below(element, "p"),
+        index.count_below(element, "img"),
+        index.count_below(element, "li"),
+        index.count_below(element, "input"),
+        embeds,
+    )
 
 
 def _has_descendant_named(element, names):

@@ -880,29 +880,34 @@ def _packed(df: DataFrame, key: str, len_col: str, budget: int, block_size: int)
     ).orderBy(key)
 
 
+def packed_sql(source: str, key: str, len_col: str, budget: int) -> str:
+    """``_packed`` as DuckDB SQL over the CTE ``source``: the CTE
+    ``pre`` and the SELECT that ends the query."""
+    return f"""pre AS (
+  SELECT {key}, {len_col},
+         CAST(coalesce(sum({len_col}) OVER (ORDER BY {key}
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+           AS offset_global
+  FROM {source}
+)
+SELECT {key}, {len_col}, offset_global,
+       offset_global // {budget} AS pack_id,
+       offset_global % {budget} AS pack_offset,
+       CASE WHEN {len_col} = 0 THEN 1
+            ELSE (offset_global + {len_col} - 1) // {budget}
+                 - offset_global // {budget} + 1 END AS n_packs_spanned
+FROM pre
+ORDER BY {key}
+"""
+
+
 def sequence_packing_sql() -> str:
-    budget = PACK_BUDGET
     return f"""
 WITH toks AS (
   SELECT doc_id, CAST({tx.token_count_sql('text')} AS BIGINT) AS n_tokens
   FROM documents
 ),
-pre AS (
-  SELECT doc_id, n_tokens,
-         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS offset_global
-  FROM toks
-)
-SELECT doc_id, n_tokens, offset_global,
-       offset_global // {budget} AS pack_id,
-       offset_global % {budget} AS pack_offset,
-       CASE WHEN n_tokens = 0 THEN 1
-            ELSE (offset_global + n_tokens - 1) // {budget}
-                 - offset_global // {budget} + 1 END AS n_packs_spanned
-FROM pre
-ORDER BY doc_id
-"""
+{packed_sql('toks', 'doc_id', 'n_tokens', PACK_BUDGET)}"""
 
 
 # --- PII pattern scan ---------------------------------------------------
@@ -1975,6 +1980,33 @@ SFT_ROLES = ("user", "assistant", "tool")
 SFT_END = "<|end|>"
 
 
+def sft_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as chat turns (conv_id, turn_id, ts, role,
+    header_len, text_len, turn_len), the turn rules of ``sft_spans``
+    and ``pipeline.sft_packed``: a turn renders as ``<|role|>`` + text
+    + ``<|end|>``."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    role = F.element_at(
+        F.array(*[F.lit(r) for r in SFT_ROLES]),
+        (F.col("event_id") % 3 + 1).cast("int"),
+    )
+    text = F.concat(
+        F.coalesce(F.col("event_type"), F.lit("")),
+        F.lit(":"),
+        F.coalesce(F.col("props"), F.lit("")),
+    )
+    return ev.select(
+        F.col("user_id").alias("conv_id"),
+        F.col("event_id").alias("turn_id"),
+        "ts",
+        role.alias("role"),
+        (F.length(role) + F.lit(4)).alias("header_len"),  # <| |>
+        F.length(text).alias("text_len"),
+    ).withColumn(
+        "turn_len", F.col("header_len") + F.col("text_len") + F.lit(len(SFT_END))
+    )
+
+
 def sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chat-template rendering with loss-mask span offsets — the step
     that turns an ordered conversation into a supervised-finetuning
@@ -1996,29 +2028,9 @@ def sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame), no UDF, no collect. A conversation that outgrows a single
     window task takes the same two-phase blocked-offsets escape hatch
     the extraction job measures in docs/SKEW.md section C."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    role = F.element_at(
-        F.array(*[F.lit(r) for r in SFT_ROLES]),
-        (F.col("event_id") % 3 + 1).cast("int"),
-    )
-    text = F.concat(
-        F.coalesce(F.col("event_type"), F.lit("")),
-        F.lit(":"),
-        F.coalesce(F.col("props"), F.lit("")),
-    )
-    turns = ev.select(
-        F.col("user_id").alias("conv_id"),
-        F.col("event_id").alias("turn_id"),
-        "ts",
-        role.alias("role"),
-        (F.length(role) + F.lit(4)).alias("header_len"),  # <| |>
-        F.length(text).alias("text_len"),
-    ).withColumn(
-        "turn_len", F.col("header_len") + F.col("text_len") + F.lit(len(SFT_END))
-    )
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_id")
     return (
-        turns.withColumn(
+        sft_turns(spark, sf_dir).withColumn(
             "start",
             F.coalesce(
                 F.sum("turn_len").over(
@@ -2042,10 +2054,10 @@ def sft_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sft_spans_sql() -> str:
-    end_len = len(SFT_END)
-    return f"""
-WITH turns AS (
+def sft_turns_sql() -> str:
+    """``sft_turns`` as the DuckDB CTEs ``turns`` and ``sized``, which
+    the twins of its two callers compose."""
+    return f"""turns AS (
   SELECT user_id AS conv_id, event_id AS turn_id, ts,
          ['user','assistant','tool'][CAST(event_id % 3 AS INT) + 1] AS role,
          4 + length(['user','assistant','tool'][CAST(event_id % 3 AS INT) + 1])
@@ -2054,8 +2066,13 @@ WITH turns AS (
   FROM events
 ),
 sized AS (
-  SELECT *, header_len + text_len + {end_len} AS turn_len FROM turns
-),
+  SELECT *, header_len + text_len + {len(SFT_END)} AS turn_len FROM turns
+)"""
+
+
+def sft_spans_sql() -> str:
+    return f"""
+WITH {sft_turns_sql()},
 offs AS (
   SELECT conv_id, turn_id, role, header_len, text_len,
          COALESCE(SUM(turn_len) OVER (

@@ -301,27 +301,10 @@ def sft_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials), then the layout of ``sequence_packing``, whose global
     offset is a blocked prefix sum over conv_id — never a single
     corpus-wide window task."""
-    from nreadability_spark.operators.textops import SFT_END, SFT_ROLES, _packed
+    from nreadability_spark.operators.textops import _packed, sft_turns
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    role = F.element_at(
-        F.array(*[F.lit(r) for r in SFT_ROLES]),
-        (F.col("event_id") % 3 + 1).cast("int"),
-    )
-    turn_len = (
-        F.length(role)
-        + F.lit(4)
-        + F.length(
-            F.concat(
-                F.coalesce(F.col("event_type"), F.lit("")),
-                F.lit(":"),
-                F.coalesce(F.col("props"), F.lit("")),
-            )
-        )
-        + F.lit(len(SFT_END))
-    )
     conv = (
-        ev.select(F.col("user_id").alias("conv_id"), turn_len.alias("turn_len"))
+        sft_turns(spark, sf_dir)
         .groupBy("conv_id")
         .agg(F.sum("turn_len").cast("long").alias("example_len"))
     )
@@ -329,35 +312,16 @@ def sft_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sft_packed_sql() -> str:
-    from nreadability_spark.operators.textops import SFT_END
+    from nreadability_spark.operators.textops import packed_sql, sft_turns_sql
 
-    end_len, budget = len(SFT_END), SFT_PACK_BUDGET
     return f"""
-WITH conv AS (
-  SELECT user_id AS conv_id,
-         CAST(SUM(
-           4 + length(['user','assistant','tool'][CAST(event_id % 3 AS INT) + 1])
-             + length(COALESCE(event_type, '') || ':' || COALESCE(props, ''))
-             + {end_len}
-         ) AS BIGINT) AS example_len
-  FROM events
-  GROUP BY user_id
+WITH {sft_turns_sql()},
+conv AS (
+  SELECT conv_id, CAST(SUM(turn_len) AS BIGINT) AS example_len
+  FROM sized
+  GROUP BY conv_id
 ),
-pre AS (
-  SELECT conv_id, example_len,
-         CAST(coalesce(sum(example_len) OVER (ORDER BY conv_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS offset_global
-  FROM conv
-)
-SELECT conv_id, example_len, offset_global,
-       offset_global // {budget} AS pack_id,
-       CAST(offset_global % {budget} AS BIGINT) AS pack_offset,
-       CAST((offset_global + example_len - 1) // {budget}
-            - offset_global // {budget} + 1 AS BIGINT) AS n_packs_spanned
-FROM pre
-ORDER BY conv_id
-"""
+{packed_sql('conv', 'conv_id', 'example_len', SFT_PACK_BUDGET)}"""
 
 
 QUERIES = {

@@ -64,14 +64,11 @@ def walk(spark):
     entry built once at sf0.001 and checked against its oracle through
     ``check_oracles.check``. Oracle and plan tests read the outcome,
     behavioural tests the collected rows. The build jobs it records are
-    not asserted: the count moved on unchanged code. The Arrow batch
-    size some builders set is restored afterwards."""
+    not asserted: the count moved on unchanged code."""
     import __spark_entry__
     from tests.test_operators import SF_DIR
     from tools import check_oracles
 
-    arrow_batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    before = spark.conf.get(arrow_batch)
     results = _Walk()
     with pytest.MonkeyPatch.context() as mp, check_oracles.duck(SF_DIR) as con:
         # the extract_* golden oracles at the walk's scale factor
@@ -82,5 +79,4 @@ def walk(spark):
                 results[name] = check_oracles.check(build, oracles[name], spark, SF_DIR, con)
             except Exception as exc:  # noqa: BLE001 — fails this query's items only
                 results[name] = exc
-    spark.conf.set(arrow_batch, before)
     return results

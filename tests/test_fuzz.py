@@ -302,6 +302,35 @@ def test_reparse_elision_matches_always_reparse(soup):
     assert fast.spans == slow.spans
 
 
+@settings(max_examples=200, deadline=None)
+@given(st.one_of(_html_soup, _mutation_soup))
+def test_parsed_stage_facts_are_sound(soup):
+    """``prepare_document`` takes its br/font stage's facts from the
+    parser's counts when the parser built no comment and nothing was
+    removed. On a document as ``build_document`` returned it, for the
+    stage over any element below the root, those facts may claim a
+    match or an instability that a walk does not find, never miss one;
+    and the counts are the tree's."""
+    import nreadability_spark.core.transcoder as T
+    from nreadability_spark.core.dom import Comment
+
+    document = build_document(soup)
+    nodes = list(document.descendant_nodes())
+    assert document.parsed_comments == sum(type(n) is Comment for n in nodes)
+    root = document.root
+    if root is None:
+        return
+    assert document.parsed_names == {e.name for e in root.descendants()}
+    if document.parsed_comments:
+        return
+    for prefixes in (("br", "font"), ("br",)):
+        stable, may_match = T._parsed_stage_facts(document.parsed_names, prefixes)
+        for element in root.descendants():
+            walked_stable, walked_may_match = T._stage_walk(element, prefixes)
+            assert walked_stable or not stable, (soup, element.name)
+            assert may_match or not walked_may_match, (soup, element.name)
+
+
 # --- computing only the outputs a caller reads ----------------------------
 
 _PAGE_URL = "http://synth.example/conv00000001/page/1"

@@ -16,7 +16,8 @@ No Spark is started.
   registry builder at ``(spark, sf_dir)`` and every public ``*_sql``
   twin free of defaulted parameters: a query's parameter is one module
   constant that both sides read.
-- ``test_training_ready_twin_composes_decontaminate`` keeps a composed
+- ``test_training_ready_twin_composes_decontaminate`` and
+  ``test_sft_packed_twin_composes_turns_and_packing`` keep a composed
   DuckDB twin built from the twin of each query its Spark side
   composes, so a rule is written once per side.
 """
@@ -104,6 +105,7 @@ def oracle_digest(con, sql: str) -> str:
 DIGESTS = {
     "pipeline_cluster_topics": "2634fb95e7fbb5a23e69c5a3320b3812630c603aaa91f0c93dffb58e041b20c7",
     "pipeline_sft_packed": "bbc2503fa1baf64d574dc9649edb38f5673301ae1204715afc5c501154c9d369",
+    "text_sft_spans": "7e896860d5d24576a35f764a958d124442c7d9c4967a78ee7b765c65ae667b59",
     "text_sequence_packing": "a3f2ca7f28aa35a8d9cc6764ac6f72c0006b3c4423f514dcc3476dcd5e9b67c8",
     "sim_knn_ivf": "cc641f1e620ff760f8ba644052287827e899bf615b86a85caa28407190ba89da",
     "sim_knn_ivf_pinned": "d3478318fc403729325d7a2beaf141ff48493c681c6a4f1eaa73f85e7561a6e6",
@@ -211,3 +213,17 @@ def test_training_ready_twin_composes_decontaminate():
     from nreadability_spark.plans import pipeline
 
     assert textops.decontaminate_sql() in pipeline.training_ready_sql()
+
+
+def test_sft_packed_twin_composes_turns_and_packing():
+    from nreadability_spark.operators import textops
+    from nreadability_spark.plans import pipeline
+
+    turns = textops.sft_turns_sql()
+    assert turns in textops.sft_spans_sql() and turns in pipeline.sft_packed_sql()
+    assert textops.packed_sql("toks", "doc_id", "n_tokens", textops.PACK_BUDGET) in (
+        textops.sequence_packing_sql()
+    )
+    assert textops.packed_sql(
+        "conv", "conv_id", "example_len", pipeline.SFT_PACK_BUDGET
+    ) in pipeline.sft_packed_sql()

@@ -107,12 +107,9 @@ needs_sf = pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.0
 
 
 @pytest.fixture
-def registry(spark):
-    """The registry's builders; the Arrow batch size some builders set
-    is restored afterwards."""
-    before = spark.conf.get(ARROW_BATCH)
-    yield __spark_entry__.queries()
-    spark.conf.set(ARROW_BATCH, before)
+def registry():
+    """The registry's builders."""
+    return __spark_entry__.queries()
 
 
 def _cached_corpus_queries(registry):
@@ -162,6 +159,20 @@ def test_extract_job_write_runs_each_python_function_once(spark, tmp_path, monke
     run_extract_job(spark, transcripts_df(spark, 8), str(tmp_path / "out"), n_buckets=4)
     assert len(written) == 1
     assert python_functions_in_two_nodes(_initial_plan(written[0])) == []
+
+
+@needs_sf
+@pytest.mark.parametrize("name", ["extract_documents", "extract_transcripts"])
+def test_extract_query_leaves_the_arrow_batch_cap(spark, registry, name):
+    """An ``extract_*`` query reads the caller's Arrow batch cap and does
+    not rewrite it, at build or at collect (both builder kinds)."""
+    before = spark.conf.get(ARROW_BATCH)
+    spark.conf.set(ARROW_BATCH, "300")
+    try:
+        registry[name](spark, SF_DIR).collect()
+        assert spark.conf.get(ARROW_BATCH) == "300"
+    finally:
+        spark.conf.set(ARROW_BATCH, before)
 
 
 def test_materialize_removes_other_versions(tmp_path, monkeypatch):

@@ -9,12 +9,16 @@ from hypothesis import strategies as st
 
 from nreadability_spark.core.dom import Element, Text, build_document
 from nreadability_spark.core.regexes import NORMALIZE_SPACES_RE
+from nreadability_spark.core import dom
 from nreadability_spark.core.transcoder import (
     ASCII_SPACES_BUT_SPACE,
     NON_ASCII_SPACES,
     ExtractionOptions,
     SerializationOptions,
+    _article_spans,
+    _census,
     _Run,
+    _TreeIndex,
     extract,
     get_user_style_class,
     normalize_spaces,
@@ -494,3 +498,82 @@ def test_normalize_spaces_matches_the_regex(pieces):
     text = "".join(pieces)
     for s in (text, text.strip()):
         assert normalize_spaces(s) == NORMALIZE_SPACES_RE.sub(" ", s)
+
+
+# --- the text index against the per-call paths --------------------------------------
+
+_nested_pieces = st.sampled_from([
+    "<div>", "</div>", "<p>", "</p>", "<a href='#'>", "</a>", "<span>", "</span>",
+    "<ul><li>", "</li>", "<table><tr><td>", "</td>", "<img src=x>", "<input>",
+    "<embed src=x>", "<embed src='http://youtube.com/v'>", "<!--c-->", "<br>",
+    "words, ", "link text", " ", "  ", "\n", "\t", "\xa0", "&nbsp;", "x",
+])
+_nested_soup = st.lists(_nested_pieces, max_size=60).map("".join)
+_CENSUS_NAMES = ("p", "img", "li", "input")
+
+
+def _per_call_reads(run, element):
+    run.index = None
+    embeds = [
+        e for e in element.get_elements_by_tag_name("embed")
+        if "youtube" not in e.attrs.get("src", "")
+    ]
+    census = tuple(len(element.get_elements_by_tag_name(n)) for n in _CENSUS_NAMES)
+    return run.get_inner_text(element), run.get_links_density(element), census + (len(embeds),)
+
+
+def _index_reads(run, index, element):
+    run.index = index
+    return run.get_inner_text(element), run.get_links_density(element), _census(index, element)
+
+
+@settings(max_examples=150, deadline=None)
+@given(_nested_soup, st.booleans(), st.integers(min_value=0, max_value=2**31))
+def test_text_index_matches_per_call_reads(soup, normalize, seed):
+    """Inner text, link density and census counts off the index equal
+    the per-call walks, on every element, and again after the index
+    removed some elements (a removal makes it walk again)."""
+    import random
+
+    run = _Run(ExtractionOptions(dont_normalize_spaces=not normalize), dont_strip_unlikelys=True)
+    doc = build_document(soup)
+    index = _TreeIndex(doc, run._inner_text)
+    for removal in (False, True):
+        if removal:
+            elements = [e for e in doc.descendants()]
+            index.remove(random.Random(seed).sample(elements, len(elements) // 3))
+        for element in doc.descendants():
+            assert _index_reads(run, index, element) == _per_call_reads(run, element), soup
+        run.index = index
+        assert run.get_inner_text(doc) == run._inner_text(doc.value)
+    root = doc.root
+    if root is not None:
+        assert _article_spans(root, _TreeIndex(root, run._inner_text)) == _article_spans(root)
+
+
+def _nested_page(n):
+    """Direction 1's page: ``n`` nested ``<div><p>`` paragraphs with one
+    anchor each."""
+    para = "<div><p>Readable sentence, with commas, that scores well. <a href='/n'>a link</a></p>"
+    return "<html><body>" + para * n + "</div>" * n + "</body></html>"
+
+
+def test_text_node_visits_grow_linearly(monkeypatch):
+    """Extraction reads each Text node a bounded number of times, however
+    deep the page nests: the reads at 2n paragraphs are about twice
+    those at n (the per-call walks read each paragraph's text once per
+    enclosing div, about four times)."""
+    slot = dom.Text.__dict__["value"]
+    visits = [0]
+
+    def read(node):
+        visits[0] += 1
+        return slot.__get__(node)
+
+    monkeypatch.setattr(dom.Text, "value", property(read, slot.__set__))
+    counts = []
+    for n in (60, 120):
+        visits[0] = 0
+        assert extract(_nested_page(n), outputs=()).extracted
+        counts.append(visits[0])
+    assert counts[1] <= 2.2 * counts[0], counts

@@ -78,7 +78,9 @@ PHASES = (
 )
 
 # the constructs on which tokenizers differ across Python versions, the
-# stdlib's error and recovery cases, every kind of whitespace the
+# stdlib's error and recovery cases, start tags the tokenizer's fast path
+# takes and near misses it leaves to the general path, every kind of
+# whitespace the
 # inner-text normalization tells apart (ASCII and not, literal and as a
 # character reference), and enough prose to pass the 250-character
 # fallback threshold
@@ -90,6 +92,9 @@ SOUP_PIECES = (
     "<iframe>", "</iframe>", "<xmp>", "</xmp>", "<noembed>", "<noframes>", "<title>", "</title>",
     "<textarea>", "</textarea>", "<script>", "</script>", "<style>", "</style>", "</SCRIPT >",
     "<html>", "</html>", "<head>", "<body>", "</body>", "<!-- c -->", "<!-- c --!>", "<!--",
+    '<div id="main" class="post">', '<a href="#" title="">', '<p class="x"/>', '<A Href="X">',
+    '<span id="a" id="b">', '<script type="text/javascript">', '<style media="all">',
+    '<img src="i.png" alt="a&amp;b">', '<p\xa0class="x">',
     "<!>", "<!doctype html>", "<?pi>", "<![CDATA[x]]>", "<![if x]>", "<![endif]>", "<![foo[",
     "<a", "</a", "</ p>", "</>", "< p>", "<a/b>", "<a\x00b>", "\x00", "&amp;", "&copy", "&#65;",
     "&bogus;", "&", "<", ">", "='", '"', " ", "\n", "\t", "\r\n", "\x0b", "\x0c", "\x1c", "\xa0",
